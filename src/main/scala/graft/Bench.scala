@@ -130,7 +130,8 @@ object Bench {
     val loadavgStart =
       ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // Inter-query System.gc() (outside the measured region) isolates each
     // query from its predecessors' allocation debt; opt out with =0 to A/B.
     val interQueryGc = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "1") == "1"

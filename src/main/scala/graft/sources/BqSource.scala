@@ -997,11 +997,10 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
       // INNER only (under an outer join a WHERE on the null-extended
       // side would drop rows the join must null-extend, and the
       // preserved/extended split is not worth a second ON plumbing).
-      // A delegated ORDERED window (sort or offset consumed) must never
-      // gain a filter beneath it; under a consumed aggregate only
-      // GROUP-KEY pruning is sound — same rules as the bare statement.
+      // Under a consumed aggregate only GROUP-KEY pruning is sound —
+      // same rule as the bare statement.
       val rtCols: Seq[(String, String)] =
-        if (j.kind != "inner" || orders.nonEmpty || offset > 0) Nil
+        if (j.kind != "inner") Nil
         else agg match {
           case Some((gs, _)) => gs.map(i => (cols(i)._1, cols(i)._2))
           case None => outSchema.fieldNames.toSeq.map { n =>
@@ -1011,7 +1010,7 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
         }
       return new BqScan(ep, outSchema, renderJoin(Nil), None, pushed,
         aggMode = agg.isDefined, hint, extraRender = Some(renderJoin),
-        runtimeCols = rtCols)
+        runtimeCols = rtCols, delegatesOrderedWindow = orders.nonEmpty || offset > 0)
     }
     val whereSql = pushed.toSeq.flatMap(BqSql.render) match {
       case Nil => ""
@@ -1062,21 +1061,16 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
         val w = pushed.toSeq.flatMap(BqSql.render) ++ extras
         s"SELECT $selectSql FROM ${ep.table} WHERE ${w.mkString(" AND ")}"
       })
-    // runtime semi-join eligibility: a delegated ORDERED window (sort or
-    // offset consumed — Spark removed its own operators) must never gain
-    // a filter beneath it (the server would window the filtered subset —
-    // wrong rows); a plain LIMIT is safe (any n qualifying rows is a
-    // valid answer). Under COMPLETE agg pushdown only GROUP-KEY pruning
-    // is sound (whole groups the join above drops anyway).
-    val rtCols: Seq[(String, String)] =
-      if (orders.nonEmpty || offset > 0) Nil
-      else agg match {
-        case Some((gs, _)) =>
-          gs.map(i => (ep.schema.fieldNames(i), ep.schema.fieldNames(i)))
-        case None => outSchema.fieldNames.toSeq.map(n => (n, n))
-      }
+    // runtime semi-join eligibility: under COMPLETE agg pushdown only
+    // GROUP-KEY pruning is sound (whole groups the join above drops anyway)
+    val rtCols: Seq[(String, String)] = agg match {
+      case Some((gs, _)) =>
+        gs.map(i => (ep.schema.fieldNames(i), ep.schema.fieldNames(i)))
+      case None => outSchema.fieldNames.toSeq.map(n => (n, n))
+    }
     new BqScan(ep, outSchema, sql, sqlFor, pushed, agg.isDefined, hint,
-      extraRender = Some(renderFull), runtimeCols = rtCols)
+      extraRender = Some(renderFull), runtimeCols = rtCols,
+      delegatesOrderedWindow = orders.nonEmpty || offset > 0)
   }
 }
 
@@ -1084,57 +1078,30 @@ class BqScan(ep: BqEndpoint, out: StructType, sql: String,
     sqlFor: Option[Seq[String] => String], pushed: Array[Filter],
     aggMode: Boolean, hint: Option[Int] = None,
     extraRender: Option[Seq[String] => String] = None,
-    runtimeCols: Seq[(String, String)] = Nil)
-  extends Scan with Batch with SupportsRuntimeV2Filtering {
+    runtimeCols: Seq[(String, String)] = Nil,
+    protected val delegatesOrderedWindow: Boolean = false)
+  extends Scan with Batch with WireRuntimeFilter[String] {
 
-  // ---- runtime semi-join reduction (dynamic filtering) --------------------
-  // A broadcast dim's distinct join keys re-render as a SQL `IN (...)`
-  // conjunct ANDed into the full passthrough statement before partition
-  // planning — same contract as the Mongo/ES/CQL/BT connectors: purely
-  // an optimization (the join re-checks every key), declining on
-  // non-renderable literals or key sets past the cap is always safe.
-  // Eligibility (ordered-window and group-key rules) is decided by the
-  // BUILDER via `runtimeCols` (output name → SQL reference, which under
-  // a pushed join is the alias-qualified source column).
-
-  private val RuntimeInCap = 10000
+  // ---- runtime semi-join reduction ([[WireRuntimeFilter]]) ---------------
+  // each accepted key set re-renders as a SQL `IN (...)` conjunct; all
+  // of them AND into the full passthrough statement before partition
+  // planning. The builder picks the eligible
+  // `runtimeCols` (output name → SQL reference, which under a pushed
+  // join is the alias-qualified source column).
 
   @volatile private var runtimeConjuncts: Seq[String] = Nil
 
-  /** Last runtime conjuncts compiled (rendered), for wire asserts. */
-  @volatile private[graft] var runtimeFilterDesc: String = ""
+  override protected def runtimeFilterColumns: Seq[String] =
+    if (extraRender.isEmpty) Nil else runtimeCols.map(_._1)
 
-  override def filterAttributes(): Array[NamedReference] =
-    if (extraRender.isEmpty) Array.empty
-    else runtimeCols.map(c =>
-      org.apache.spark.sql.connector.expressions.Expressions.column(c._1)).toArray
+  override protected def renderRuntimeKey(key: Any): Option[String] = BqSql.renderLit(key)
 
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Unit = {
+  override protected def applyRuntimeFilter(sets: Seq[(String, Seq[String])]): String = {
     val byOut = runtimeCols.map(c => c._1.toLowerCase -> c._2).toMap
-    val conjuncts = predicates.toSeq.flatMap { p =>
-      if (p.name() != "IN" || p.children().isEmpty) None
-      else p.children()(0) match {
-        case ref: NamedReference if ref.fieldNames().length == 1 &&
-            byOut.contains(ref.fieldNames()(0).toLowerCase) =>
-          val target = byOut(ref.fieldNames()(0).toLowerCase)
-          val ls = p.children().drop(1).toSeq.map {
-            case lv: org.apache.spark.sql.connector.expressions.Literal[_] =>
-              try BqSql.renderLit(CatalystTypeConverters
-                .createToScalaConverter(lv.dataType)(lv.value))
-              catch { case scala.util.control.NonFatal(_) => None }
-            case _ => None
-          }
-          if (ls.size > RuntimeInCap || ls.exists(_.isEmpty)) None
-          else Some(s"$target IN (${ls.map(_.get).mkString(", ")})")
-        case _ => None
-      }
+    runtimeConjuncts = sets.map { case (name, keys) =>
+      s"${byOut(name.toLowerCase)} IN (${keys.mkString(", ")})"
     }
-    if (conjuncts.nonEmpty) {
-      runtimeConjuncts = conjuncts
-      runtimeFilterDesc = conjuncts.mkString(" AND ")
-    }
+    runtimeConjuncts.mkString(" AND ")
   }
 
   override def readSchema(): StructType = out

@@ -405,69 +405,32 @@ class BtScanBuilder(ep: BtEndpoint, hint: Option[Int] = None) extends ScanBuilde
 class BtScan(ep: BtEndpoint, required: StructType, rowSet: BtQuery.RowSet,
     limit: Int, pushed: Array[Filter], hint: Option[Int] = None,
     reversed: Boolean = false, sorted: Boolean = false)
-  extends Scan with Batch
-  with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
+  extends Scan with Batch with WireRuntimeFilter[String] {
 
-  // ---- runtime semi-join reduction (dynamic filtering) --------------------
+  // ---- runtime semi-join reduction ([[WireRuntimeFilter]]) ---------------
   // BigTable's explicit rowKeys row set IS the semi-join reducer: a
-  // broadcast dim's distinct join keys become one point-lookup batch
-  // instead of a sampled-range sweep. Only the ROW KEY column qualifies
-  // (everything else lives in cells the service cannot filter by), and
-  // the runtime keys INTERSECT the statically-compiled row set — a
-  // contradiction reads nothing at all. Purely an optimization: the
-  // join re-checks every key, so declining (non-key column, non-string
-  // literal, key set beyond the cap) is always safe. The pushed LIMIT
-  // is plain (no sort surface exists here) and partial — filtering
-  // first only changes WHICH valid LIMIT answer is returned.
-
-  private val RuntimeInCap = 10000
+  // broadcast dim's distinct join keys (the first predicate's) become one
+  // point-lookup batch instead of a sampled-range sweep. Only the ROW KEY
+  // column qualifies (everything else lives in cells the service cannot
+  // filter by), and the runtime keys INTERSECT the statically-compiled
+  // row set — a contradiction reads nothing at all.
 
   @volatile private var runtimeKeys: Option[Seq[String]] = None
 
-  /** Last runtime key set compiled (rendered), for plan/wire asserts. */
-  @volatile private[graft] var runtimeFilterDesc: String = ""
+  override protected def delegatesOrderedWindow: Boolean = sorted
 
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    // the ordered-window soundness rule: a pushed key sort must never
-    // gain a filter beneath it — Spark re-applies its Sort/Limit BELOW
-    // the join, so a runtime key set here would window the filtered
-    // subset (rows the true top-n excludes would join through)
-    if (sorted) return Array.empty
-    required.fieldNames.find(_.equalsIgnoreCase(ep.keyCol)) match {
-      case Some(n) =>
-        Array(org.apache.spark.sql.connector.expressions.Expressions.column(n))
-      case None => Array.empty
-    }
+  override protected def runtimeFilterColumns: Seq[String] =
+    required.fieldNames.find(_.equalsIgnoreCase(ep.keyCol)).toSeq
+
+  override protected def renderRuntimeKey(key: Any): Option[String] = key match {
+    case s: String => Some(s)
+    case _ => None
   }
 
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Unit = {
-    val keySets = predicates.toSeq.flatMap { p =>
-      if (p.name() != "IN" || p.children().isEmpty) None
-      else p.children()(0) match {
-        case ref: org.apache.spark.sql.connector.expressions.NamedReference
-            if ref.fieldNames().length == 1 &&
-              ref.fieldNames()(0).equalsIgnoreCase(ep.keyCol) =>
-          val ks = p.children().drop(1).toSeq.map {
-            case lv: org.apache.spark.sql.connector.expressions.Literal[_] =>
-              try CatalystTypeConverters.createToScalaConverter(
-                lv.dataType)(lv.value) match {
-                case s: String => Some(s)
-                case _ => None
-              } catch { case scala.util.control.NonFatal(_) => None }
-            case _ => None
-          }
-          if (ks.size > RuntimeInCap || ks.exists(_.isEmpty)) None
-          else Some(ks.map(_.get).distinct.sorted)
-        case _ => None
-      }
-    }
-    if (keySets.nonEmpty) {
-      runtimeKeys = Some(keySets.head)
-      runtimeFilterDesc = s"rowKeys[${keySets.head.size}]"
-    }
+  override protected def applyRuntimeFilter(sets: Seq[(String, Seq[String])]): String = {
+    val keys = sets.head._2.distinct.sorted
+    runtimeKeys = Some(keys)
+    s"rowKeys[${keys.size}]"
   }
 
   /** The static row set intersected with any runtime semi-join keys. */

@@ -1317,73 +1317,36 @@ class CqlScan(ep: CqlEndpoint, required: StructType, cols: Seq[String],
     where: Seq[String], limit: Int, pushed: Array[Filter],
     hint: Option[Int] = None, groupBy: Seq[String] = Nil,
     aggKinds: Seq[String] = Nil, orderBy: Seq[(String, Boolean)] = Nil)
-  extends Scan with Batch
-  with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
+  extends Scan with Batch with WireRuntimeFilter[String] {
 
-  // ---- runtime semi-join reduction (dynamic filtering) --------------------
+  // ---- runtime semi-join reduction ([[WireRuntimeFilter]]) ---------------
   // CQL's one legal IN shape — `pk IN (...)` on the full (single-column)
   // partition key — is exactly the semi-join reducer: a broadcast dim's
   // distinct join keys compile into one multi-partition read instead of
-  // a full token-ring sweep. Purely an optimization: the join re-checks
-  // every key, so declining (multi-column partition key, static key
-  // restriction already present, non-renderable literal, key set beyond
-  // the cap) is always safe. Under a grouped pushed aggregate the group
-  // rule guarantees the partition key IS a group column, so pruning
-  // partitions prunes exactly whole groups the join would drop.
-
-  private val RuntimeInCap = 10000
+  // a full token-ring sweep (the first predicate only). Under a grouped
+  // pushed aggregate the group rule guarantees the partition key IS a
+  // group column, so pruning partitions prunes exactly whole groups.
 
   @volatile private var runtimeIn: Option[String] = None
 
-  /** Last runtime IN compiled (rendered), for plan/wire asserts. */
-  @volatile private[graft] var runtimeFilterDesc: String = ""
+  // A pushed ORDER BY can never coexist with an unbound key (pushTopN
+  // requires the full pk EQ-bound ⇒ where is non-empty), but the rule is
+  // stated anyway: a sorted window must never gain a filter beneath it.
+  override protected def delegatesOrderedWindow: Boolean = orderBy.nonEmpty
 
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    // a static relation on the key already pins the scan (and CQL
-    // refuses a column restricted twice); a pushed plain LIMIT is safe
-    // (no sort exists on this surface — any n qualifying rows is a
-    // valid LIMIT answer). A pushed ORDER BY can never coexist with an
-    // unbound key (pushTopN requires the full pk EQ-bound ⇒ where is
-    // non-empty), but the guard is stated for the soundness rule: a
-    // sorted window must never gain a filter beneath it.
-    if (where.nonEmpty || orderBy.nonEmpty || ep.partitionKeys.size != 1)
-      return Array.empty
-    val pk = ep.partitionKeys.head
-    required.fieldNames.find(_.equalsIgnoreCase(pk)) match {
-      case Some(n) =>
-        Array(org.apache.spark.sql.connector.expressions.Expressions.column(n))
-      case None => Array.empty // pk not in output (e.g. global aggregate)
-    }
-  }
+  /** The single partition key, when it is in the output and no static
+    * relation already pins it (CQL refuses a column restricted twice). */
+  override protected def runtimeFilterColumns: Seq[String] =
+    if (where.nonEmpty || ep.partitionKeys.size != 1) Nil
+    else required.fieldNames.find(_.equalsIgnoreCase(ep.partitionKeys.head)).toSeq
 
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
-      : Unit = {
-    if (where.nonEmpty || orderBy.nonEmpty || ep.partitionKeys.size != 1) return
-    val pk = ep.partitionKeys.head
-    val rendered = predicates.toSeq.flatMap { p =>
-      if (p.name() != "IN" || p.children().isEmpty) None
-      else p.children()(0) match {
-        case ref: org.apache.spark.sql.connector.expressions.NamedReference
-            if ref.fieldNames().length == 1 &&
-              ref.fieldNames()(0).equalsIgnoreCase(pk) =>
-          val ls = p.children().drop(1).toSeq.map {
-            case lv: org.apache.spark.sql.connector.expressions.Literal[_] =>
-              try CqlGen.renderLiteral(CatalystTypeConverters
-                .createToScalaConverter(lv.dataType)(lv.value))
-              catch { case scala.util.control.NonFatal(_) => None }
-            case _ => None
-          }
-          if (ls.size > RuntimeInCap || ls.exists(_.isEmpty)) None
-          else Some(s"$pk IN (${ls.map(_.get).mkString(", ")})")
-        case _ => None
-      }
-    }
-    if (rendered.nonEmpty) {
-      runtimeIn = Some(rendered.head)
-      runtimeFilterDesc = rendered.head
-    }
+  override protected def renderRuntimeKey(key: Any): Option[String] =
+    CqlGen.renderLiteral(key)
+
+  override protected def applyRuntimeFilter(sets: Seq[(String, Seq[String])]): String = {
+    val in = s"${ep.partitionKeys.head} IN (${sets.head._2.mkString(", ")})"
+    runtimeIn = Some(in)
+    in
   }
 
   private def render(extra: Seq[String]): String = {

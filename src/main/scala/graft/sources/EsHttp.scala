@@ -699,7 +699,7 @@ class EsScan(ep: EsEndpoint, required: StructType, dslBody: String,
     pushed: Array[Filter], aggMode: Boolean, aggKinds: Seq[String],
     groupCount: Int, limit: Int, hint: Option[Int] = None,
     sorted: Boolean = false)
-  extends Scan with Batch with SupportsRuntimeV2Filtering {
+  extends Scan with Batch with WireRuntimeFilter[JsonNode] {
 
   override def readSchema(): StructType = required
 
@@ -710,22 +710,12 @@ class EsScan(ep: EsEndpoint, required: StructType, dslBody: String,
 
   override def toBatch: Batch = this
 
-  // ---- runtime semi-join reduction (dynamic filtering) --------------------
-  // Broadcast-join build-side keys flow back here before partition
-  // planning and AND onto the shipped query as a `terms` filter — the
-  // same contract as the Mongo connector's runtime `$in` (see
-  // MongoScan.filter): purely an optimization, the join re-checks every
-  // key, so declining (analyzed field without a keyword subfield,
-  // non-JSON-exact type, key set beyond the cap) is always safe. Under
-  // agg pushdown only GROUP-KEY pruning is offered (dropping whole
-  // buckets the join above would drop anyway).
-
-  private val RuntimeInCap = 10000
+  // ---- runtime semi-join reduction ([[WireRuntimeFilter]]) ---------------
+  // each accepted key set becomes a `terms` filter; all of them AND onto
+  // the shipped query. Under agg pushdown only GROUP-KEY pruning is
+  // offered (dropping whole buckets the join above would drop anyway).
 
   @volatile private var runtimeTerms: Seq[ObjectNode] = Nil
-
-  /** Last runtime terms filter compiled (rendered), for wire asserts. */
-  @volatile private[graft] var runtimeFilterDesc: String = ""
 
   /** Exact-value server target: the field itself, its `.keyword`
     * subfield for analyzed text, or None (decline — a terms filter on
@@ -736,12 +726,12 @@ class EsScan(ep: EsEndpoint, required: StructType, dslBody: String,
       case Some(kw) => kw
     }
 
-  override def filterAttributes(): Array[NamedReference] = {
-    // a pushed sorted window must never gain a filter beneath it: even
-    // under the PARTIAL contract Spark re-applies its Sort/Limit BELOW
-    // the join, so a runtime semi-join filter here would window the
-    // filtered subset — rows the true top-n excludes would join through
-    if (sorted) return Array.empty
+  // a pushed sorted window must never gain a filter beneath it: even
+  // under the PARTIAL contract Spark re-applies its Sort/Limit BELOW the
+  // join, so a runtime filter here would window the filtered subset
+  override protected def delegatesOrderedWindow: Boolean = sorted
+
+  override protected def runtimeFilterColumns: Seq[String] = {
     def jsonExact(dt: DataType): Boolean = dt match {
       case ShortType | IntegerType | LongType | FloatType | DoubleType |
            BooleanType | StringType => true
@@ -751,51 +741,34 @@ class EsScan(ep: EsEndpoint, required: StructType, dslBody: String,
       if (aggMode) required.fields.take(groupCount).toSeq else required.fields.toSeq
     candidates
       .filter(f => jsonExact(f.dataType) && serverTarget(f.name).isDefined)
-      .map(f => org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
-      .toArray
+      .map(_.name)
   }
 
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    if (sorted) return // defense in depth vs filterAttributes
-    val nodes = predicates.toSeq.flatMap { p =>
-      if (p.name() != "IN" || p.children().isEmpty) None
-      else p.children()(0) match {
-        case ref: NamedReference if ref.fieldNames().length == 1 =>
-          serverTarget(ref.fieldNames()(0)).flatMap { target =>
-            val vals = p.children().drop(1).toSeq.map {
-              case lv: org.apache.spark.sql.connector.expressions.Literal[_] =>
-                try Some(CatalystTypeConverters.createToScalaConverter(
-                  lv.dataType)(lv.value))
-                catch { case scala.util.control.NonFatal(_) => None }
-              case _ => None
-            }
-            if (vals.size > RuntimeInCap || vals.exists(_.isEmpty)) None
-            else {
-              val o = EsDsl.M.createObjectNode()
-              val arr = o.putObject("terms").putArray(target)
-              // null keys never survive the equi-join above, so they are
-              // droppable here (and a terms filter can't carry null anyway)
-              vals.flatten.filter(_ != null).foreach {
-                case b: java.lang.Boolean => arr.add(b.booleanValue())
-                case i: java.lang.Integer => arr.add(i.intValue())
-                case l: java.lang.Long => arr.add(l.longValue())
-                case d: java.lang.Double => arr.add(d.doubleValue())
-                case f: java.lang.Float => arr.add(f.doubleValue())
-                case s: java.lang.Short => arr.add(s.intValue())
-                case s: String => arr.add(s)
-                case other => arr.add(other.toString)
-              }
-              Some(o)
-            }
-          }
-        case _ => None
-      }
+  override protected def renderRuntimeKey(key: Any): Option[JsonNode] = {
+    val n = EsDsl.M.getNodeFactory
+    Some(key match {
+      case null => n.nullNode()
+      case b: java.lang.Boolean => n.booleanNode(b.booleanValue())
+      case i: java.lang.Integer => n.numberNode(i.intValue())
+      case l: java.lang.Long => n.numberNode(l.longValue())
+      case d: java.lang.Double => n.numberNode(d.doubleValue())
+      case f: java.lang.Float => n.numberNode(f.doubleValue())
+      case s: java.lang.Short => n.numberNode(s.intValue())
+      case s: String => n.textNode(s)
+      case other => n.textNode(other.toString)
+    })
+  }
+
+  override protected def applyRuntimeFilter(sets: Seq[(String, Seq[JsonNode])]): String = {
+    runtimeTerms = sets.map { case (name, keys) =>
+      val o = EsDsl.M.createObjectNode()
+      val arr = o.putObject("terms").putArray(serverTarget(name).get)
+      // null keys never survive the equi-join above, so they are
+      // droppable here (and a terms filter can't carry null anyway)
+      keys.filterNot(_.isNull).foreach(k => arr.add(k))
+      o
     }
-    if (nodes.nonEmpty) {
-      runtimeTerms = nodes
-      runtimeFilterDesc = nodes.map(_.toString).mkString(", ")
-    }
+    runtimeTerms.map(_.toString).mkString(", ")
   }
 
   /** [[dslBody]] with any runtime terms ANDed onto its query. */

@@ -1705,48 +1705,25 @@ class MongoScan(ep: MongoEndpoint, required: StructType, filter: BDoc,
     pushed: Array[Filter], hint: Option[Int] = None,
     aggPipeline: Option[Seq[BDoc]] = None, aggKinds: Seq[String] = Nil,
     groupFields: Seq[String] = Nil, skip: Int = -1, joined: Boolean = false)
-  extends Scan with Batch with SupportsRuntimeV2Filtering {
+  extends Scan with Batch with WireRuntimeFilter[Any] {
 
   override def readSchema(): StructType = required
 
-  // ---- runtime semi-join reduction (dynamic filtering) --------------------
-  // When this scan probes a broadcast equi-join, Spark's dynamic-pruning
-  // pass collects the BUILD side's distinct join-key values and hands them
-  // back here BEFORE partition planning; they compile into a `$in` ANDed
-  // onto the shipped filter, so the server only streams rows that can
-  // survive the join — Trino's "dynamic filtering" shape, and the lever
-  // that turns a 100 TB federated fact scan into a dim-sized one. Purely
-  // an optimization: the join re-checks every key, so declining (type not
-  // wire-exact, key set beyond the cap) is always safe; pruning is only
-  // applied with the EXACT key set, never approximated.
-
-  /** Beyond this many build-side keys the `$in` no longer pays for its
-    * request bloat (the classic dynamic-filter distinct-value cap). */
-  private val RuntimeInCap = 10000
+  // ---- runtime semi-join reduction ([[WireRuntimeFilter]]) ---------------
+  // each accepted key set compiles into a `$in`; all of them AND onto
+  // the shipped filter
 
   @volatile private var runtimeFilter: BDoc = BDoc.empty
 
-  /** Last runtime predicate compiled (rendered), for plan/wire asserts. */
-  @volatile private[graft] var runtimeFilterDesc: String = ""
+  override protected def delegatesOrderedWindow: Boolean = sort.isDefined || skip >= 0
 
   /** Under agg pushdown only GROUP-KEY pruning is sound (it removes whole
     * groups the join would drop anyway); otherwise any wire-exact output
-    * column is fair game.
-    *
-    * EXCEPT under a delegated ordered window: a pushed TopN sort or a
-    * pushed OFFSET is fully delegated (Spark removed its own Sort/Limit/
-    * Offset nodes), and the runtime `$in` would be ANDed into the SAME
-    * find — the server would window the filtered subset instead of
-    * filtering the windowed result, admitting rows the true answer
-    * cannot contain. Decline runtime filtering entirely there. A plain
-    * LIMIT without sort stays eligible: any n qualifying rows is a valid
-    * LIMIT answer, so pre-filtering only changes WHICH valid answer. */
-  override def filterAttributes(): Array[NamedReference] = {
-    if (sort.isDefined || skip >= 0) return Array.empty
-    // a joined pipeline's output names only exist AFTER the $project —
-    // a leading runtime $match on them would match nothing and wrongly
-    // empty the scan; decline runtime filtering on joined pipelines
-    if (joined) return Array.empty
+    * column is fair game. A joined pipeline's output names only exist
+    * AFTER the $project — a leading runtime $match on them would match
+    * nothing and wrongly empty the scan, so joined pipelines offer none. */
+  override protected def runtimeFilterColumns: Seq[String] = {
+    if (joined) return Nil
     def wireSafe(dt: DataType): Boolean = dt match {
       case ShortType | IntegerType | LongType | FloatType | DoubleType |
            BooleanType | StringType | TimestampType | TimestampNTZType => true
@@ -1755,37 +1732,16 @@ class MongoScan(ep: MongoEndpoint, required: StructType, filter: BDoc,
     val allowed: Set[String] =
       if (aggPipeline.isDefined) groupFields.toSet else required.fieldNames.toSet
     required.fields.toSeq
-      .filter(f => allowed.contains(f.name) && wireSafe(f.dataType))
-      .map(f => org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
-      .toArray
+      .filter(f => allowed.contains(f.name) && wireSafe(f.dataType)).map(_.name)
   }
 
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    if (sort.isDefined || skip >= 0) return // defense in depth vs filterAttributes
-    val docs = predicates.toSeq.flatMap { p =>
-      if (p.name() != "IN" || p.children().isEmpty) None
-      else p.children()(0) match {
-        case ref: NamedReference if ref.fieldNames().length == 1 =>
-          val name = ref.fieldNames()(0)
-          val vals = p.children().drop(1).toSeq.map {
-            case lv: org.apache.spark.sql.connector.expressions.Literal[_] =>
-              // best-effort: ANY conversion surprise declines the predicate
-              // (the join re-checks every key, so declining is always safe)
-              try MongoDsl.lit(CatalystTypeConverters.createToScalaConverter(
-                lv.dataType)(lv.value))
-              catch { case scala.util.control.NonFatal(_) => None }
-            case _ => None
-          }
-          if (vals.size > RuntimeInCap || vals.exists(_.isEmpty)) None
-          else Some(BDoc(Seq(name -> BDoc(Seq("$in" -> vals.map(_.get))))))
-        case _ => None
-      }
-    }
-    if (docs.nonEmpty) {
-      runtimeFilter = MongoDsl.compileAll(docs)
-      runtimeFilterDesc = runtimeFilter.render
-    }
+  override protected def renderRuntimeKey(key: Any): Option[Any] = MongoDsl.lit(key)
+
+  override protected def applyRuntimeFilter(sets: Seq[(String, Seq[Any])]): String = {
+    runtimeFilter = MongoDsl.compileAll(sets.map { case (name, vals) =>
+      BDoc(Seq(name -> BDoc(Seq("$in" -> vals))))
+    })
+    runtimeFilter.render
   }
 
   /** The static pushed filter ANDed with any runtime semi-join keys. */

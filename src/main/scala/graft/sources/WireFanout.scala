@@ -1,5 +1,12 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
+
 /** Partition fan-out for the protocol connectors.
   *
   * The reference's distributed mode runs one worker per table partition
@@ -86,3 +93,85 @@ trait WireScanTable
   * sorted interior split points (k points -> k+1 scan partitions). The
   * analogue of the reference's `Table.Partition{Keys, Partitions}`. */
 final case class WireSplits(key: String, points: Seq[Any])
+
+/** Runtime semi-join reduction (dynamic filtering) for the wire scans.
+  * When a scan probes a broadcast equi-join, Spark's dynamic-pruning
+  * pass collects the BUILD side's distinct join keys and hands them back
+  * as `col IN (...)` BEFORE partition planning; the scan ANDs them onto
+  * its shipped request (Mongo `$in`, ES `terms`, CQL partition-key `IN`,
+  * BigTable `rowKeys`, BQ rendered `IN`), so the server only streams
+  * rows that can survive the join — Trino's "dynamic filtering" shape,
+  * and the lever that turns a 100 TB federated fact scan into a
+  * dim-sized one. Purely an optimization: the join re-checks every key,
+  * so declining a predicate (a non-literal or unconvertible key, a key
+  * the backend cannot render exactly, a set beyond the cap) is always
+  * safe; pruning only ever applies the EXACT key set.
+  *
+  * The one soundness rule: a scan that delegated an ORDERED window (a
+  * pushed sort or offset, with Spark's own Sort/Limit/Offset removed or
+  * re-applied below the join) must never gain a filter beneath it.
+  * The server would window the filtered subset instead of filtering the
+  * windowed result, admitting rows the true answer cannot contain. A
+  * plain LIMIT without sort stays eligible: any n qualifying rows is a
+  * valid LIMIT answer, so pre-filtering only changes WHICH valid answer.
+  *
+  * Each scan supplies only what is per-backend: whether it delegated an
+  * ordered window, which output columns it can filter exactly, how one
+  * key renders for its wire, and how the accepted `(column, keys)` sets
+  * combine into its request. */
+trait WireRuntimeFilter[K] extends SupportsRuntimeV2Filtering {
+
+  /** True when a pushed sort or offset is answered by the server. */
+  protected def delegatesOrderedWindow: Boolean
+
+  /** Output columns whose keys the backend can apply exactly. */
+  protected def runtimeFilterColumns: Seq[String]
+
+  /** One decoded key in wire form; None declines its whole predicate. */
+  protected def renderRuntimeKey(key: Any): Option[K]
+
+  /** Stores the accepted `(column, rendered keys)` sets (never empty)
+    * for the request and returns their description. */
+  protected def applyRuntimeFilter(sets: Seq[(String, Seq[K])]): String
+
+  /** Last runtime filter applied (rendered), for plan/wire asserts. */
+  @volatile private[graft] var runtimeFilterDesc: String = ""
+
+  final override def filterAttributes(): Array[NamedReference] =
+    if (delegatesOrderedWindow) Array.empty
+    else runtimeFilterColumns.map(Expressions.column).toArray
+
+  final override def filter(predicates: Array[Predicate]): Unit = {
+    if (delegatesOrderedWindow) return
+    val offered = runtimeFilterColumns.map(_.toLowerCase).toSet
+    val sets = predicates.toSeq.flatMap { p =>
+      if (p.name() != "IN" || p.children().isEmpty) None
+      else p.children()(0) match {
+        case ref: NamedReference if ref.fieldNames().length == 1 &&
+            offered.contains(ref.fieldNames()(0).toLowerCase) =>
+          val keys = p.children().toSeq.drop(1)
+          if (keys.size > WireRuntimeFilter.RuntimeInCap) None
+          else {
+            val rendered = keys.map {
+              case lv: Literal[_] =>
+                try renderRuntimeKey(CatalystTypeConverters
+                  .createToScalaConverter(lv.dataType)(lv.value))
+                catch { case NonFatal(_) => None }
+              case _ => None
+            }
+            if (rendered.exists(_.isEmpty)) None
+            else Some(ref.fieldNames()(0) -> rendered.flatten)
+          }
+        case _ => None
+      }
+    }
+    if (sets.nonEmpty) runtimeFilterDesc = applyRuntimeFilter(sets)
+  }
+}
+
+object WireRuntimeFilter {
+
+  /** Beyond this many build-side keys the IN no longer pays for its
+    * request bloat (the classic dynamic-filter distinct-value cap). */
+  val RuntimeInCap = 10000
+}
