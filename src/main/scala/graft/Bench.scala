@@ -707,23 +707,52 @@ object Bench {
     // the byte budget in DESCENDING time order (the slow, interesting ones)
     // and the omitted remainder COUNTED and SUMMED — never dropped
     // silently. Every number also lives in the full artifact file.
+    // Where the full artifact goes is settled BEFORE the compact line is
+    // printed, so the line names the file this run actually writes. A
+    // load-rejected run is diverted to target/ so it can be inspected but
+    // never committed as the round artifact. Round 17: a full run at a
+    // DIFFERENT core count than the committed artifact's `cpus` is
+    // diverted to target/ too — an r16 8-core re-run silently replaced
+    // the accepted 32-core snapshot, losing its per-query data.
+    // An unreadable committed artifact counts as a clash (divert, never
+    // overwrite what could not be checked).
+    val repoDir = java.nio.file.Paths.get(sys.props("user.dir"))
+    val mainPath = repoDir.resolve("BENCH_FULL.json")
+    val cpusClash = only.isEmpty && !rejected &&
+      java.nio.file.Files.exists(mainPath) && scala.util.Try {
+        val prior = new String(
+          java.nio.file.Files.readAllBytes(mainPath), "UTF-8")
+        val rx = """"cpus":"?([0-9]+)"?""".r
+        // artifacts predating this field were all accepted at 32 cores
+        rx.findFirstMatchIn(prior).map(_.group(1)).getOrElse("32") != cpus
+      }.getOrElse(true)
+    // filtered A/B runs must not clobber the committed full snapshot
+    val artifact =
+      if (rejected) "target/BENCH_REJECTED.json"
+      else if (cpusClash) s"target/BENCH_FULL_c$cpus.json"
+      else if (only.isEmpty) "BENCH_FULL.json"
+      else "target/BENCH_FILTERED.json"
     val tailBudget = sys.env.get("SPARK_GRAFT_BENCH_TAIL_BYTES")
       .flatMap(_.toIntOption).getOrElse(2000)
     val compactLine = {
       def r3(v: Double): Double = math.round(v * 1000) / 1000.0
       val sorted = results.sortBy(-_._2)
-      val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":${jstr(sfDir)},"cpus":$cpus,"reps":$reps,"n_failed":${errors.size},"rejected_for_load":$rejected,"loadavg_start":${r3(loadavgStart)},"n_queries":${results.size},"full_artifact":"BENCH_FULL.json","compact":true"""
+      val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":${jstr(sfDir)},"cpus":$cpus,"reps":$reps,"n_failed":${errors.size},"rejected_for_load":$rejected,"loadavg_start":${r3(loadavgStart)},"n_queries":${results.size},"full_artifact":${jstr(artifact)},"compact":true"""
       // worst-case fixed tail: two counters + closing braces
       val reserve = 80
       val entries = Seq.newBuilder[String]
       var used = head.length + reserve + ""","queries":{}""".length
       var shown = 0
       var omittedSec = 0.0
+      // the shown set is a descending-time PREFIX: once one entry does not
+      // fit, every later (faster) one is omitted too
+      var fits = true
       sorted.foreach { case (k, v) =>
         val e = jstr(k) + ":" + r3(v)
         // -300: leave room for launcher trailer lines (sbt prints
         // "[success] ..." after the program's stdout) inside the tail
-        if (used + e.length + 1 <= tailBudget - 300) {
+        fits = fits && used + e.length + 1 <= tailBudget - 300
+        if (fits) {
           entries += e; used += e.length + 1; shown += 1
         } else omittedSec += math.max(v, 0.0)
       }
@@ -732,32 +761,12 @@ object Bench {
     println(compactLine)
     // truncation-proof copy: the stdout line is captured by a consumer that
     // has historically kept only a prefix; the file keeps every number.
-    // A load-rejected run is diverted to target/ so it can be inspected
-    // but never committed as the round artifact. Round 17: a full run at a
-    // DIFFERENT core count than the committed artifact's `cpus` is diverted
-    // to target/ too — the r16 driver's 8-core re-run silently replaced the
-    // accepted 32-core snapshot, losing its per-query data.
     try {
-      val mainPath = java.nio.file.Paths.get("/root/repo/BENCH_FULL.json")
-      val cpusClash = only.isEmpty && !rejected &&
-        java.nio.file.Files.exists(mainPath) && {
-          val prior = new String(
-            java.nio.file.Files.readAllBytes(mainPath), "UTF-8")
-          val rx = """"cpus":"?([0-9]+)"?""".r
-          // artifacts predating this field were all accepted at 32 cores
-          rx.findFirstMatchIn(prior).map(_.group(1)).getOrElse("32") != cpus
-        }
       if (cpusClash) System.err.println(
         s"[bench] BENCH_FULL.json was recorded at a different core count; " +
-          s"writing this cpus=$cpus run to target/BENCH_FULL_c$cpus.json " +
+          s"writing this cpus=$cpus run to $artifact " +
           "instead (delete the committed artifact to replace it)")
-      java.nio.file.Files.write(
-        // filtered A/B runs must not clobber the committed full snapshot
-        java.nio.file.Paths.get(
-          if (rejected) "/root/repo/target/BENCH_REJECTED.json"
-          else if (cpusClash) s"/root/repo/target/BENCH_FULL_c$cpus.json"
-          else if (only.isEmpty) "/root/repo/BENCH_FULL.json"
-          else "/root/repo/target/BENCH_FILTERED.json"),
+      java.nio.file.Files.write(repoDir.resolve(artifact),
         (line + "\n").getBytes("UTF-8"))
       if (rejected) System.err.println(
         s"[bench] REFUSED to write BENCH_FULL.json: ${violations.size} " +

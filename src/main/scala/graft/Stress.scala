@@ -134,7 +134,7 @@ object Stress {
           val pts: Seq[Any] = (WireStride until keys.length by WireStride)
             .map(keys(_): Any)
           val (h, p) = LoopbackMongoServer.ensureStarted()
-          MongoEndpoints.register(MongoEndpoint("stresswire", coll, wireSchema,
+          WireEndpoints.register(MongoEndpoint("stresswire", coll, wireSchema,
             MongoEndpointSpec(h, p, LoopbackMongoServer.Db, coll,
               MongoClientConfig(batchSize = 1024)),
             splits = Some(WireSplits("doc_id", pts))))
@@ -163,7 +163,7 @@ object Stress {
           LoopbackRestServer.register(idx, wireSchema, seed.toSeq)
           val base = LoopbackRestServer.ensureStarted()
           val slices = math.max(1, seed.length / WireStride)
-          EsEndpoints.register(EsEndpoint("stresswirees", idx, wireSchema,
+          WireEndpoints.register(EsEndpoint("stresswirees", idx, wireSchema,
             EsEndpointSpec(base, idx,
               HttpRestConfig(pageSize = 1024, retryBackoffMs = 5), slices = slices)))
           if (SourceRegistry.get("stresswirees").isEmpty)

@@ -389,31 +389,30 @@ class GraftEngine(val spark: SparkSession) {
     import graft.sources.PartFileRewrite
     val parts = tbl.replace("`", "").split('.')
     require(parts.length == 3, s"UPDATE expects graft.<source>.<table>, got $tbl")
-    // Mongo-wire tables: UPDATE ships as ONE OP_MSG update command —
-    // the WHERE compiles to a filter document, the SET to {$set: ...}
-    // (literal RHS only; the wire has no row-referencing expressions).
-    graft.sources.MongoEndpoints.get(parts(1), parts(2)).foreach { ep =>
-      return mongoWireUpdate(ep, sets, cond, tbl)
-    }
-    // BQ-wire tables: UPDATE renders to ONE standard-SQL DML job
-    // (the service's own surface; WHERE must render exactly or abort).
-    graft.sources.BqEndpoints.get(parts(1), parts(2)).foreach { ep =>
-      return bqWireUpdate(ep, sets, cond, tbl)
-    }
-    // Datastore-wire tables: read-modify-write — fetch the matching
-    // entities, merge the SETs, re-Put as upsert mutations (the
-    // reference's exact UPDATE recipe, sql_to_datastore.go:258-278
-    // getEntity-then-Put).
-    graft.sources.DsEndpoints.get(parts(1), parts(2)).foreach { ep =>
-      return dsWireUpdate(ep, sets, cond, tbl)
-    }
-    // BigTable: the reference's mutator supports INSERT only
-    // (sql_to_bt.go:268-273 answers "not yet supported" for any other
-    // statement); mirror the refusal rather than invent semantics.
-    graft.sources.BtEndpoints.get(parts(1), parts(2)).foreach { ep =>
-      throw new IllegalArgumentException(
-        s"UPDATE $tbl: not supported on a BigTable backend " +
-          "(write the full row: INSERT is an upsert on the row key)")
+    graft.sources.WireEndpoints.get(parts(1), parts(2)) match {
+      // Mongo-wire tables: UPDATE ships as ONE OP_MSG update command —
+      // the WHERE compiles to a filter document, the SET to {$set: ...}
+      // (literal RHS only; the wire has no row-referencing expressions).
+      case Some(ep: graft.sources.MongoEndpoint) =>
+        return mongoWireUpdate(ep, sets, cond, tbl)
+      // BQ-wire tables: UPDATE renders to ONE standard-SQL DML job
+      // (the service's own surface; WHERE must render exactly or abort).
+      case Some(ep: graft.sources.BqEndpoint) =>
+        return bqWireUpdate(ep, sets, cond, tbl)
+      // Datastore-wire tables: read-modify-write — fetch the matching
+      // entities, merge the SETs, re-Put as upsert mutations (the
+      // reference's exact UPDATE recipe, sql_to_datastore.go:258-278
+      // getEntity-then-Put).
+      case Some(ep: graft.sources.DsEndpoint) =>
+        return dsWireUpdate(ep, sets, cond, tbl)
+      // BigTable: the reference's mutator supports INSERT only
+      // (sql_to_bt.go:268-273 answers "not yet supported" for any other
+      // statement); mirror the refusal rather than invent semantics.
+      case Some(_: graft.sources.BtEndpoint) =>
+        throw new IllegalArgumentException(
+          s"UPDATE $tbl: not supported on a BigTable backend " +
+            "(write the full row: INSERT is an upsert on the row key)")
+      case _ => // every other kind takes the file path below
     }
     val src = graft.sources.SourceRegistry.get(parts(1))
       .getOrElse(throw new IllegalArgumentException(s"unknown source ${parts(1)}"))

@@ -5,13 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{GQuery, Tables}
 import graft.engine.GraftEngine
-import graft.sources.{BqEndpoint, BqEndpointSpec, BqEndpoints,
-  BtEndpoint, BtEndpointSpec, BtEndpoints, CqlClientConfig, CqlEndpoint,
-  CqlEndpointSpec, CqlEndpoints, DsEndpoint, DsEndpointSpec, DsEndpoints,
-  EsDiscovery, EsEndpoint, EsEndpointSpec, EsEndpoints, FedData,
-  HttpRestClient, HttpRestConfig, LoopbackCqlServer, LoopbackMongoServer,
-  LoopbackRestServer, MongoClientConfig, MongoEndpoint, MongoEndpointSpec,
-  MongoEndpoints, SourceRegistry}
+import graft.sources.{BqEndpoint, BqEndpointSpec, BtEndpoint, BtEndpointSpec,
+  CqlClientConfig, CqlEndpoint, CqlEndpointSpec, DsEndpoint, DsEndpointSpec,
+  EsDiscovery, EsEndpoint, EsEndpointSpec, FedData, HttpRestClient,
+  HttpRestConfig, LoopbackCqlServer, LoopbackMongoServer, LoopbackRestServer,
+  MongoClientConfig, MongoEndpoint, MongoEndpointSpec, SourceRegistry,
+  WireEndpoints}
 
 /** Federation surface: queries over the DSv2 file connector
   * (graft.sources.*) — the Spark-native equivalent of the reference's
@@ -568,7 +567,7 @@ object Federation {
         |GROUP BY c_mktsegment
         |ORDER BY c_mktsegment""".stripMargin) { (s, d) =>
       fed(s, d)
-      if (graft.sources.EsEndpoints.get(FedData.EsSourceName, "customer_txt").isEmpty) {
+      if (WireEndpoints.get(FedData.EsSourceName, "customer_txt").isEmpty) {
         val customer = Tables.load(s, d, "customer")
           .select("c_custkey", "c_name", "c_mktsegment")
         LoopbackRestServer.registerEsText("customer_txt", customer.schema,
@@ -576,7 +575,7 @@ object Federation {
           Map("c_name" -> true, "c_mktsegment" -> false))
         val url = LoopbackRestServer.ensureStarted()
         val meta = EsDiscovery.mappingMeta(new HttpRestClient(url), "customer_txt")
-        EsEndpoints.register(EsEndpoint(FedData.EsSourceName, "customer_txt",
+        WireEndpoints.register(EsEndpoint(FedData.EsSourceName, "customer_txt",
           meta.schema, EsEndpointSpec(url, "customer_txt", HttpRestConfig()),
           analyzed = meta.analyzed))
       }
@@ -678,7 +677,7 @@ object Federation {
         |WHERE s_acctbal > 1000.0
         |ORDER BY s_suppkey""".stripMargin) { (s, d) =>
       fed(s, d)
-      if (graft.sources.EsEndpoints.get("es_rt", "supplier_rt").isEmpty) {
+      if (WireEndpoints.get("es_rt", "supplier_rt").isEmpty) {
         val sup = Tables.load(s, d, "supplier")
           .select("s_suppkey", "s_name", "s_acctbal")
         LoopbackRestServer.registerEs("supplier_rt", sup.schema,
@@ -708,7 +707,7 @@ object Federation {
         |WHERE r_regionkey = 2 OR r_regionkey = 0
         |ORDER BY r_regionkey""".stripMargin) { (s, d) =>
       fed(s, d)
-      if (graft.sources.RestEndpoints.get("rest_rt", "region_api").isEmpty) {
+      if (WireEndpoints.get("rest_rt", "region_api").isEmpty) {
         val reg = Tables.load(s, d, "region").select("r_regionkey", "r_name")
         LoopbackRestServer.registerRestApi("region_api", reg.schema,
           Set("r_regionkey"), reg.collect().map(_.toSeq.toArray).toSeq)
@@ -1579,7 +1578,7 @@ object Federation {
       // fresh mutable collection each run (the driver repeats queries)
       LoopbackMongoServer.register("dml_mongo", schema, Seq.empty)
       val (host, port) = LoopbackMongoServer.ensureStarted()
-      MongoEndpoints.register(MongoEndpoint(FedData.MongoSourceName, "dml_mongo",
+      WireEndpoints.register(MongoEndpoint(FedData.MongoSourceName, "dml_mongo",
         schema, MongoEndpointSpec(host, port, LoopbackMongoServer.Db,
           "dml_mongo", MongoClientConfig())))
       val t = s"$C.${FedData.MongoSourceName}.dml_mongo"
@@ -1659,7 +1658,7 @@ object Federation {
       LoopbackCqlServer.register("dml_cql", schema,
         partitionKeys = Seq("seg"), clusteringKeys = Seq("k"), rows = Seq.empty)
       val (host, port) = LoopbackCqlServer.ensureStarted()
-      CqlEndpoints.register(CqlEndpoint(FedData.CqlSourceName, "dml_cql",
+      WireEndpoints.register(CqlEndpoint(FedData.CqlSourceName, "dml_cql",
         schema, Seq("seg"), Seq("k"),
         CqlEndpointSpec(host, port, "dml_cql", CqlClientConfig())))
       val t = s"$C.${FedData.CqlSourceName}.dml_cql"
@@ -1690,7 +1689,7 @@ object Federation {
       val schema = dmlSchema
       LoopbackRestServer.register("dml_bq", schema, Seq.empty)
       val baseUrl = LoopbackRestServer.ensureStarted()
-      BqEndpoints.register(BqEndpoint(FedData.BqSourceName, "dml_bq", schema,
+      WireEndpoints.register(BqEndpoint(FedData.BqSourceName, "dml_bq", schema,
         BqEndpointSpec(baseUrl, "dml_bq", HttpRestConfig())))
       val t = s"$C.${FedData.BqSourceName}.dml_bq"
       s.sql(s"INSERT INTO $t VALUES (1, 'alpha', 10, 1.5), (2, 'beta', 20, 0.5), " +
@@ -1721,7 +1720,7 @@ object Federation {
       val schema = dmlSchema
       LoopbackRestServer.registerDs("dml_ds", schema, "item_id", Seq.empty)
       val baseUrl = LoopbackRestServer.ensureStarted()
-      DsEndpoints.register(DsEndpoint(FedData.DsSourceName, "dml_ds", schema,
+      WireEndpoints.register(DsEndpoint(FedData.DsSourceName, "dml_ds", schema,
         DsEndpointSpec(baseUrl, "dml_ds", HttpRestConfig()),
         keyCol = Some("item_id")))
       val t = s"$C.${FedData.DsSourceName}.dml_ds"
@@ -1757,7 +1756,7 @@ object Federation {
           org.apache.spark.sql.types.LongType)))
       LoopbackRestServer.registerBt("dml_bt", schema, "k", Seq.empty)
       val baseUrl = LoopbackRestServer.ensureStarted()
-      BtEndpoints.register(BtEndpoint(FedData.BtSourceName, "dml_bt", schema, "k",
+      WireEndpoints.register(BtEndpoint(FedData.BtSourceName, "dml_bt", schema, "k",
         BtEndpointSpec(baseUrl, "dml_bt", "k", HttpRestConfig())))
       val t = s"$C.${FedData.BtSourceName}.dml_bt"
       s.sql(s"INSERT INTO $t VALUES ('a', 'alpha', 10), ('b', 'beta', 20), " +

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
@@ -638,17 +637,8 @@ object BqSql {
 final case class BqEndpointSpec(baseUrl: String, table: String, cfg: HttpRestConfig)
 
 final case class BqEndpoint(source: String, table: String, schema: StructType,
-    spec: BqEndpointSpec, splits: Option[WireSplits] = None)
-
-object BqEndpoints {
-  private val endpoints = TrieMap.empty[(String, String), BqEndpoint]
-  def register(e: BqEndpoint): Unit = endpoints.put((e.source, e.table.toLowerCase), e)
-  def get(source: String, table: String): Option[BqEndpoint] =
-    endpoints.get((source, table.toLowerCase))
-  def list(source: String): Seq[String] =
-    endpoints.keys.collect { case (s, t) if s == source => t }.toSeq.sorted
-  def dropSource(source: String): Unit =
-    endpoints.keys.filter(_._1 == source).foreach(endpoints.remove)
+    spec: BqEndpointSpec, splits: Option[WireSplits] = None) extends WireEndpoint {
+  def newTable(): Table = new BqTable(this)
 }
 
 class BqTable(val ep: BqEndpoint) extends Table with SupportsRead
@@ -668,10 +658,7 @@ class BqTable(val ep: BqEndpoint) extends Table with SupportsRead
     * surface, `sql_to_bq.go:178-304`). */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new BqBatchWrite(ep)
-    }
+    new WireBatchWrite(new BqWriterFactory(ep.spec, ep.schema.json))
 
   /** DELETE FROM ... WHERE: renders to ONE standard-SQL DML statement
     * and ships it as a job (`DELETE FROM t WHERE ...` — the service's
@@ -688,17 +675,6 @@ class BqTable(val ep: BqEndpoint) extends Table with SupportsRead
       EsDsl.M.createObjectNode()
         .put("query", s"DELETE FROM ${ep.spec.table} WHERE $whereSql").toString)
   }
-}
-
-class BqBatchWrite(ep: BqEndpoint)
-  extends org.apache.spark.sql.connector.write.Write
-  with org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new BqWriterFactory(ep.spec, ep.schema.json)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 class BqWriterFactory(spec: BqEndpointSpec, schemaJson: String)

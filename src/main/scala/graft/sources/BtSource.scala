@@ -3,7 +3,6 @@ package graft.sources
 import java.util
 import java.util.Base64
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
@@ -232,17 +231,8 @@ final case class BtEndpointSpec(baseUrl: String, table: String, keyCol: String,
     cfg: HttpRestConfig)
 
 final case class BtEndpoint(source: String, table: String, schema: StructType,
-    keyCol: String, spec: BtEndpointSpec, fanout: Int = 1)
-
-object BtEndpoints {
-  private val endpoints = TrieMap.empty[(String, String), BtEndpoint]
-  def register(e: BtEndpoint): Unit = endpoints.put((e.source, e.table.toLowerCase), e)
-  def get(source: String, table: String): Option[BtEndpoint] =
-    endpoints.get((source, table.toLowerCase))
-  def list(source: String): Seq[String] =
-    endpoints.keys.collect { case (s, t) if s == source => t }.toSeq.sorted
-  def dropSource(source: String): Unit =
-    endpoints.keys.filter(_._1 == source).foreach(endpoints.remove)
+    keyCol: String, spec: BtEndpointSpec, fanout: Int = 1) extends WireEndpoint {
+  def newTable(): Table = new BtTable(this)
 }
 
 class BtTable(val ep: BtEndpoint) extends Table with SupportsRead
@@ -262,10 +252,7 @@ class BtTable(val ep: BtEndpoint) extends Table with SupportsRead
     * (`sql_to_bt.go:242-300` builds the same per-column mutation). */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new BtBatchWrite(ep)
-    }
+    new WireBatchWrite(new BtWriterFactory(ep.spec, ep.schema.json))
 
   /** DELETE FROM ... WHERE: row keys only — a BigTable delete is a
     * per-row DeleteRow mutation addressed by key
@@ -306,17 +293,6 @@ class BtTable(val ep: BtEndpoint) extends Table with SupportsRead
     val client = new HttpRestClient(ep.spec.baseUrl, ep.spec.cfg)
     client.postJson(s"/bt/${ep.spec.table}:mutateRows", body.toString)
   }
-}
-
-class BtBatchWrite(ep: BtEndpoint)
-  extends org.apache.spark.sql.connector.write.Write
-  with org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new BtWriterFactory(ep.spec, ep.schema.json)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 class BtWriterFactory(spec: BtEndpointSpec, schemaJson: String)

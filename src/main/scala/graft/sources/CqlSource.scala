@@ -1029,17 +1029,8 @@ final case class CqlEndpointSpec(host: String, port: Int, table: String,
 
 final case class CqlEndpoint(source: String, table: String, schema: StructType,
     partitionKeys: Seq[String], clusteringKeys: Seq[String], spec: CqlEndpointSpec,
-    fanout: Int = 1)
-
-object CqlEndpoints {
-  private val endpoints = TrieMap.empty[(String, String), CqlEndpoint]
-  def register(e: CqlEndpoint): Unit = endpoints.put((e.source, e.table.toLowerCase), e)
-  def get(source: String, table: String): Option[CqlEndpoint] =
-    endpoints.get((source, table.toLowerCase))
-  def list(source: String): Seq[String] =
-    endpoints.keys.collect { case (s, t) if s == source => t }.toSeq.sorted
-  def dropSource(source: String): Unit =
-    endpoints.keys.filter(_._1 == source).foreach(endpoints.remove)
+    fanout: Int = 1) extends WireEndpoint {
+  def newTable(): Table = new CqlTable(this)
 }
 
 class CqlTable(val ep: CqlEndpoint) extends Table
@@ -1061,10 +1052,7 @@ class CqlTable(val ep: CqlEndpoint) extends Table
     * INSERT is an upsert on the primary key). */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new CqlBatchWrite(ep)
-    }
+    new WireBatchWrite(new CqlWriterFactory(ep.spec, ep.schema.json, ep.table))
 
   /** DELETE FROM under Cassandra's rules: only key-column predicates
     * with the full partition key equality-bound compile to DELETE CQL
@@ -1082,17 +1070,6 @@ class CqlTable(val ep: CqlEndpoint) extends Table
     try client.query(cql).size // consume the Void result
     finally client.close()
   }
-}
-
-class CqlBatchWrite(ep: CqlEndpoint)
-  extends org.apache.spark.sql.connector.write.Write
-  with org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new CqlWriterFactory(ep.spec, ep.schema.json, ep.table)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 class CqlWriterFactory(spec: CqlEndpointSpec, schemaJson: String, table: String)

@@ -507,14 +507,7 @@ object WireSources {
   def get(name: String): Option[WireSourceDef] = defs.get(name)
   def drop(name: String): Unit = {
     defs.remove(name)
-    RestEndpoints.dropSource(name)
-    EsEndpoints.dropSource(name)
-    MongoEndpoints.dropSource(name)
-    CqlEndpoints.dropSource(name)
-    BqEndpoints.dropSource(name)
-    DsEndpoints.dropSource(name)
-    BtEndpoints.dropSource(name)
-    KubeEndpoints.dropSource(name)
+    WireEndpoints.dropSource(name)
   }
 
   /** LIVE table listing over the protocol's discovery surface — a
@@ -560,7 +553,7 @@ object WireSources {
       case "es" =>
         val client = new HttpRestClient(d.prop("url"), restCfg(d))
         val meta = EsDiscovery.mappingMeta(client, table)
-        EsEndpoints.register(EsEndpoint(d.name, table, meta.schema,
+        WireEndpoints.register(EsEndpoint(d.name, table, meta.schema,
           EsEndpointSpec(d.prop("url"), table, restCfg(d),
             slices = d.intProp("fanout", 1),
             paging = d.props.getOrElse("paging", EsEndpointSpec.DefaultPaging)),
@@ -583,24 +576,24 @@ object WireSources {
               ws.copy(points = WireFanout.thin(ws.points.toIndexedSeq, n))
             case _ => ws
           })
-        MongoEndpoints.register(MongoEndpoint(d.name, table, schema, spec,
+        WireEndpoints.register(MongoEndpoint(d.name, table, schema, spec,
           splits = splits))
       case "cassandra" =>
         val ks = d.props.getOrElse("keyspace", "graft")
         val spec = cqlSpec(d, table)
         val meta = CqlDiscovery.tableMeta(spec, table, ks)
-        CqlEndpoints.register(CqlEndpoint(d.name, table, meta.schema,
+        WireEndpoints.register(CqlEndpoint(d.name, table, meta.schema,
           meta.partitionKeys, meta.clusteringKeys, spec,
           fanout = d.intProp("fanout", 1)))
       case "bigquery" =>
         val spec = BqEndpointSpec(d.prop("url"), table, restCfg(d))
-        BqEndpoints.register(BqEndpoint(d.name, table,
+        WireEndpoints.register(BqEndpoint(d.name, table,
           BqDiscovery.tableSchema(spec), spec))
       case "datastore" =>
         val keyProp = DsDiscovery.listKinds(d.prop("url"), restCfg(d))
           .find(_._1.equalsIgnoreCase(table)).map(_._2).getOrElse("")
         val spec = DsEndpointSpec(d.prop("url"), table.toLowerCase, restCfg(d))
-        DsEndpoints.register(DsEndpoint(d.name, table.toLowerCase,
+        WireEndpoints.register(DsEndpoint(d.name, table.toLowerCase,
           DsDiscovery.inferSchema(spec), spec,
           keyCol = Some(keyProp).filter(_.nonEmpty)))
       case "bigtable" =>
@@ -608,11 +601,11 @@ object WireSources {
           .find(_._1.equalsIgnoreCase(table)).map(_._2)
           .getOrElse(throw new IllegalStateException(s"listed BT table $table vanished"))
         val spec = BtEndpointSpec(d.prop("url"), table.toLowerCase, rowKey, restCfg(d))
-        BtEndpoints.register(BtEndpoint(d.name, table.toLowerCase,
+        WireEndpoints.register(BtEndpoint(d.name, table.toLowerCase,
           BtDiscovery.inferSchema(spec), rowKey, spec,
           fanout = d.intProp("fanout", 1)))
       case "kube" =>
-        KubeEndpoints.register(KubeEndpoint(d.name, table.toLowerCase,
+        WireEndpoints.register(KubeEndpoint(d.name, table.toLowerCase,
           KubeEndpointSpec(d.prop("url"), table.toLowerCase, restCfg(d))))
       case "rest" =>
         val client = new HttpRestClient(d.prop("url"), restCfg(d))

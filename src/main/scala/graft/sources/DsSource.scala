@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
@@ -325,17 +324,8 @@ final case class DsEndpointSpec(baseUrl: String, kind: String, cfg: HttpRestConf
 
 final case class DsEndpoint(source: String, table: String, schema: StructType,
     spec: DsEndpointSpec, splits: Option[WireSplits] = None,
-    keyCol: Option[String] = None)
-
-object DsEndpoints {
-  private val endpoints = TrieMap.empty[(String, String), DsEndpoint]
-  def register(e: DsEndpoint): Unit = endpoints.put((e.source, e.table.toLowerCase), e)
-  def get(source: String, table: String): Option[DsEndpoint] =
-    endpoints.get((source, table.toLowerCase))
-  def list(source: String): Seq[String] =
-    endpoints.keys.collect { case (s, t) if s == source => t }.toSeq.sorted
-  def dropSource(source: String): Unit =
-    endpoints.keys.filter(_._1 == source).foreach(endpoints.remove)
+    keyCol: Option[String] = None) extends WireEndpoint {
+  def newTable(): Table = new DsTable(this)
 }
 
 class DsTable(val ep: DsEndpoint) extends Table with SupportsRead
@@ -360,10 +350,7 @@ class DsTable(val ep: DsEndpoint) extends Table with SupportsRead
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     keyOrRefuse
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new DsBatchWrite(ep)
-    }
+    new WireBatchWrite(new DsWriterFactory(ep.spec, ep.schema.json))
   }
 
   /** DELETE FROM ... WHERE: only key equality / IN has a mutation form
@@ -406,17 +393,6 @@ class DsTable(val ep: DsEndpoint) extends Table with SupportsRead
     val client = new HttpRestClient(ep.spec.baseUrl, ep.spec.cfg)
     client.postJson(s"/ds/${ep.spec.kind}:commit", body.toString)
   }
-}
-
-class DsBatchWrite(ep: DsEndpoint)
-  extends org.apache.spark.sql.connector.write.Write
-  with org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new DsWriterFactory(ep.spec, ep.schema.json)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 class DsWriterFactory(spec: DsEndpointSpec, schemaJson: String)

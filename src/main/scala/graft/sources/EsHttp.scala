@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -323,18 +322,8 @@ object EsEndpointSpec {
   * analyzed tokens). */
 final case class EsEndpoint(source: String, table: String, schema: StructType,
     spec: EsEndpointSpec, analyzed: Map[String, Option[String]] = Map.empty)
-
-/** Driver-side ES endpoint registry (catalog resolution only — readers
-  * never touch it). */
-object EsEndpoints {
-  private val endpoints = TrieMap.empty[(String, String), EsEndpoint]
-  def register(e: EsEndpoint): Unit = endpoints.put((e.source, e.table.toLowerCase), e)
-  def get(source: String, table: String): Option[EsEndpoint] =
-    endpoints.get((source, table.toLowerCase))
-  def list(source: String): Seq[String] =
-    endpoints.keys.collect { case (s, t) if s == source => t }.toSeq.sorted
-  def dropSource(source: String): Unit =
-    endpoints.keys.filter(_._1 == source).foreach(endpoints.remove)
+  extends WireEndpoint {
+  def newTable(): Table = new EsTable(this)
 }
 
 class EsTable(val ep: EsEndpoint) extends Table with SupportsRead with WireScanTable {

@@ -147,7 +147,7 @@ object FedData {
       if (SourceRegistry.get(RestSourceName).isEmpty)
         SourceRegistry.register(SourceDef(
           RestSourceName, new File(base, RestSourceName).getPath, "json", "rest"))
-      if (RestEndpoints.get(RestSourceName, "nation_api").isEmpty) {
+      if (WireEndpoints.get(RestSourceName, "nation_api").isEmpty) {
         val nation = Tables.load(spark, sfDir, "nation")
         val rows = nation.collect().map(_.toSeq.toArray)
         LoopbackRestServer.register("nation_api", nation.schema, rows.toSeq)
@@ -163,7 +163,7 @@ object FedData {
       // edge-anchored LIKE all ride ONE `filterql` query param the
       // server parses and applies with proper 3VL; only what the
       // dialect can't carry polyfills.
-      if (RestEndpoints.get(RestSourceName, "segments_api").isEmpty) {
+      if (WireEndpoints.get(RestSourceName, "segments_api").isEmpty) {
         val cust = Tables.load(spark, sfDir, "customer")
           .select(col("c_custkey"), col("c_name"), col("c_mktsegment"),
             col("c_nationkey"), col("c_acctbal"),
@@ -193,7 +193,7 @@ object FedData {
       if (SourceRegistry.get(EsSourceName).isEmpty)
         SourceRegistry.register(SourceDef(
           EsSourceName, new File(base, EsSourceName).getPath, "json", "es"))
-      if (EsEndpoints.get(EsSourceName, "customer_es").isEmpty) {
+      if (WireEndpoints.get(EsSourceName, "customer_es").isEmpty) {
         val customer = Tables.load(spark, sfDir, "customer")
           .select("c_custkey", "c_name", "c_mktsegment", "c_nationkey", "c_acctbal")
         val rows = customer.collect().map(_.toSeq.toArray)
@@ -205,7 +205,7 @@ object FedData {
         // downstream verifies the discovery round-trip
         val discovered = EsDiscovery.mappingSchema(
           new HttpRestClient(baseUrl), "customer_es")
-        EsEndpoints.register(EsEndpoint(EsSourceName, "customer_es", discovered,
+        WireEndpoints.register(EsEndpoint(EsSourceName, "customer_es", discovered,
           // slices=4: hit scans fan out 4-way via sliced scroll
           EsEndpointSpec(baseUrl, "customer_es", HttpRestConfig(pageSize = 512),
             slices = 4)))
@@ -216,7 +216,7 @@ object FedData {
       // from/size paging hits a real cluster's max_result_window cap
       // (10 000 by default) and scroll retries can skip pages. The PIT
       // path has neither failure mode (see EsEndpointSpec.paging).
-      if (EsEndpoints.get(EsSourceName, "orders_es").isEmpty) {
+      if (WireEndpoints.get(EsSourceName, "orders_es").isEmpty) {
         val orders = Tables.load(spark, sfDir, "orders")
           .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
         val rows = orders.collect().map(_.toSeq.toArray)
@@ -224,7 +224,7 @@ object FedData {
         val baseUrl = LoopbackRestServer.ensureStarted()
         val discovered = EsDiscovery.mappingSchema(
           new HttpRestClient(baseUrl), "orders_es")
-        EsEndpoints.register(EsEndpoint(EsSourceName, "orders_es", discovered,
+        WireEndpoints.register(EsEndpoint(EsSourceName, "orders_es", discovered,
           EsEndpointSpec(baseUrl, "orders_es", HttpRestConfig(pageSize = 512),
             slices = 4, paging = "pit")))
       }
@@ -236,7 +236,7 @@ object FedData {
       if (SourceRegistry.get(MongoSourceName).isEmpty)
         SourceRegistry.register(SourceDef(
           MongoSourceName, new File(base, MongoSourceName).getPath, "json", "mongo"))
-      if (MongoEndpoints.get(MongoSourceName, "orders_mongo").isEmpty) {
+      if (WireEndpoints.get(MongoSourceName, "orders_mongo").isEmpty) {
         val orders = Tables.load(spark, sfDir, "orders")
         val rows = orders.collect().map(_.toSeq.toArray)
         LoopbackMongoServer.register("orders_mongo", orders.schema, rows.toSeq)
@@ -247,7 +247,7 @@ object FedData {
         // `find` and switching on BSON runtime types (mgo_source.go:
         // 269-311) — no declared schema reaches the endpoint
         val discovered = MongoDiscovery.inferSchema(spec)
-        MongoEndpoints.register(MongoEndpoint(MongoSourceName, "orders_mongo",
+        WireEndpoints.register(MongoEndpoint(MongoSourceName, "orders_mongo",
           discovered, spec,
           // partition metadata (the reference's Table.Partition analogue;
           // a real deployment reads chunk boundaries from the config
@@ -264,7 +264,7 @@ object FedData {
       if (SourceRegistry.get(CqlSourceName).isEmpty)
         SourceRegistry.register(SourceDef(
           CqlSourceName, new File(base, CqlSourceName).getPath, "json", "cql"))
-      if (CqlEndpoints.get(CqlSourceName, "customer_cql").isEmpty) {
+      if (WireEndpoints.get(CqlSourceName, "customer_cql").isEmpty) {
         val customer = Tables.load(spark, sfDir, "customer")
           .select("c_mktsegment", "c_custkey", "c_name", "c_nationkey", "c_acctbal")
         val rows = customer.collect().map(_.toSeq.toArray)
@@ -278,7 +278,7 @@ object FedData {
         // over the same native protocol as data queries (the reference
         // reads gocql.TableMetadata, cassandra/source.go:185-239)
         val meta = CqlDiscovery.tableMeta(spec, "customer_cql")
-        CqlEndpoints.register(CqlEndpoint(CqlSourceName, "customer_cql",
+        WireEndpoints.register(CqlEndpoint(CqlSourceName, "customer_cql",
           meta.schema, meta.partitionKeys, meta.clusteringKeys, spec,
           // unrestricted scans fan out over 4 token ranges
           fanout = 4))
@@ -287,7 +287,7 @@ object FedData {
       // — the reference's TableMetadata set/map arms, cassandra/
       // source.go:202-255): types discover from system_schema's
       // "list<text>" names, cells ride the real v4 collection payloads
-      if (CqlEndpoints.get(CqlSourceName, "customer_tags_cql").isEmpty) {
+      if (WireEndpoints.get(CqlSourceName, "customer_tags_cql").isEmpty) {
         val customer = Tables.load(spark, sfDir, "customer")
           .select(col("c_mktsegment"), col("c_custkey"),
             array(col("c_mktsegment"), substring(col("c_name"), 1, 8)).as("tags"),
@@ -301,7 +301,7 @@ object FedData {
         val spec = CqlEndpointSpec(host, port, "customer_tags_cql",
           CqlClientConfig(pageSize = 512))
         val meta = CqlDiscovery.tableMeta(spec, "customer_tags_cql")
-        CqlEndpoints.register(CqlEndpoint(CqlSourceName, "customer_tags_cql",
+        WireEndpoints.register(CqlEndpoint(CqlSourceName, "customer_tags_cql",
           meta.schema, meta.partitionKeys, meta.clusteringKeys, spec,
           fanout = 4))
       }
@@ -310,7 +310,7 @@ object FedData {
       // the loopback warehouse parses + executes it (sql_to_bq.go:72-104
       // re-renders the whole statement the same way), results page back
       // string-encoded with pageToken.
-      if (BqEndpoints.get(BqSourceName, "orders_bqw").isEmpty) {
+      if (WireEndpoints.get(BqSourceName, "orders_bqw").isEmpty) {
         val orders = Tables.load(spark, sfDir, "orders")
         val rows = orders.collect().map(_.toSeq.toArray)
         LoopbackRestServer.registerBq("orders_bqw", orders.schema, rows.toSeq)
@@ -320,7 +320,7 @@ object FedData {
         // service's schema surface); BQ's INT64-only integer vocabulary
         // means integer columns discover as bigint — the service's truth
         val discovered = BqDiscovery.tableSchema(spec)
-        BqEndpoints.register(BqEndpoint(BqSourceName, "orders_bqw", discovered,
+        WireEndpoints.register(BqEndpoint(BqSourceName, "orders_bqw", discovered,
           spec,
           // bare statements shard 4-way on the order-key column
           splits = Some(WireSplits("o_orderkey",
@@ -329,14 +329,14 @@ object FedData {
       // second table on the SAME warehouse: the same-server join gates
       // (q_src_join_bq / q_src_join_bq_left) render customer⨝orders as
       // ONE passthrough statement
-      if (BqEndpoints.get(BqSourceName, "customer_bqw").isEmpty) {
+      if (WireEndpoints.get(BqSourceName, "customer_bqw").isEmpty) {
         val customer = Tables.load(spark, sfDir, "customer")
         val rows = customer.collect().map(_.toSeq.toArray)
         LoopbackRestServer.registerBq("customer_bqw", customer.schema, rows.toSeq)
         val baseUrl = LoopbackRestServer.ensureStarted()
         val spec = BqEndpointSpec(baseUrl, "customer_bqw", HttpRestConfig(pageSize = 512))
         val discovered = BqDiscovery.tableSchema(spec)
-        BqEndpoints.register(BqEndpoint(BqSourceName, "customer_bqw", discovered, spec))
+        WireEndpoints.register(BqEndpoint(BqSourceName, "customer_bqw", discovered, spec))
       }
       // Datastore-protocol source: the events stream behind the v1
       // :runQuery REST endpoint — property filters with the
@@ -346,7 +346,7 @@ object FedData {
       if (SourceRegistry.get(DsSourceName).isEmpty)
         SourceRegistry.register(SourceDef(
           DsSourceName, new File(base, DsSourceName).getPath, "json", "ds"))
-      if (DsEndpoints.get(DsSourceName, "events_ds").isEmpty) {
+      if (WireEndpoints.get(DsSourceName, "events_ds").isEmpty) {
         val events = Tables.load(spark, sfDir, "events")
           .select("event_id", "ts", "user_id", "event_type", "value")
         val rows = events.collect().map(_.toSeq.toArray)
@@ -357,7 +357,7 @@ object FedData {
         // real :runQuery (integerValue/doubleValue/timestampValue kinds
         // map to types; DS integers are int64)
         val discovered = DsDiscovery.inferSchema(spec)
-        DsEndpoints.register(DsEndpoint(DsSourceName, "events_ds", discovered,
+        WireEndpoints.register(DsEndpoint(DsSourceName, "events_ds", discovered,
           spec,
           keyCol = Some("event_id"),
           // scatter-style key splits => 4-way fan-out when the query's
@@ -375,7 +375,7 @@ object FedData {
       if (SourceRegistry.get(KubeSourceName).isEmpty)
         SourceRegistry.register(SourceDef(
           KubeSourceName, new File(base, KubeSourceName).getPath, "json", "kube"))
-      if (KubeEndpoints.get(KubeSourceName, "pods").isEmpty) {
+      if (WireEndpoints.get(KubeSourceName, "pods").isEmpty) {
         val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
         val supplier = Tables.load(spark, sfDir, "supplier")
           .select("s_suppkey", "s_nationkey").collect()
@@ -413,7 +413,7 @@ object FedData {
         })
         val baseUrl = LoopbackRestServer.ensureStarted()
         Seq("pods", "nodes", "services").foreach(res =>
-          KubeEndpoints.register(KubeEndpoint(KubeSourceName, res,
+          WireEndpoints.register(KubeEndpoint(KubeSourceName, res,
             KubeEndpointSpec(baseUrl, res, HttpRestConfig(pageSize = 512)))))
       }
       // BigTable-protocol source: customer keyed on c_name behind the
@@ -421,7 +421,7 @@ object FedData {
       // predicates compile into rowKeys/rowRanges (sql_to_bt.go:150-239
       // builds PrefixRange row sets), everything else polyfills; cells
       // come back base64 and scans resume with startKeyOpen.
-      if (BtEndpoints.get(BtSourceName, "customer_btw").isEmpty) {
+      if (WireEndpoints.get(BtSourceName, "customer_btw").isEmpty) {
         val customer = Tables.load(spark, sfDir, "customer")
           .select("c_name", "c_custkey", "c_mktsegment", "c_acctbal")
         val rows = customer.collect().map(_.toSeq.toArray)
@@ -434,7 +434,7 @@ object FedData {
         // detection (bigtable/source.go:193-251): one :readRows page,
         // each qualifier's cells through the text widen lattice
         val discovered = BtDiscovery.inferSchema(spec)
-        BtEndpoints.register(BtEndpoint(BtSourceName, "customer_btw",
+        WireEndpoints.register(BtEndpoint(BtSourceName, "customer_btw",
           discovered, "c_name", spec,
           // range scans shard 4-way along :sampleRowKeys boundaries
           fanout = 4))
@@ -444,14 +444,14 @@ object FedData {
       // walking GET /_mapping's nested `properties` into REAL struct
       // columns (where the reference flattens to dotted names,
       // elasticsearch/source.go:217-255 — SURVEY §1.2's declared upgrade)
-      if (EsEndpoints.get(EsSourceName, "customer_esdoc").isEmpty) {
+      if (WireEndpoints.get(EsSourceName, "customer_esdoc").isEmpty) {
         val docs = nestedCustomer(Tables.load(spark, sfDir, "customer"))
         val rows = docs.collect().map(_.toSeq.toArray)
         LoopbackRestServer.registerEs("customer_esdoc", docs.schema, rows.toSeq)
         val baseUrl = LoopbackRestServer.ensureStarted()
         val discovered = EsDiscovery.mappingSchema(
           new HttpRestClient(baseUrl), "customer_esdoc")
-        EsEndpoints.register(EsEndpoint(EsSourceName, "customer_esdoc", discovered,
+        WireEndpoints.register(EsEndpoint(EsSourceName, "customer_esdoc", discovered,
           EsEndpointSpec(baseUrl, "customer_esdoc", HttpRestConfig(pageSize = 512),
             slices = 4)))
       }
@@ -460,17 +460,17 @@ object FedData {
       // small UNSPLIT Mongo collection (one chunk — under the splitVector
       // threshold a real mongos reports no split points): the fixture for
       // single-request paging pushdown (sort+skip+limit in ONE find)
-      if (MongoEndpoints.get(MongoSourceName, "nation_mongo").isEmpty) {
+      if (WireEndpoints.get(MongoSourceName, "nation_mongo").isEmpty) {
         val nation = Tables.load(spark, sfDir, "nation")
         val rows = nation.collect().map(_.toSeq.toArray)
         LoopbackMongoServer.register("nation_mongo", nation.schema, rows.toSeq)
         val (host, port) = LoopbackMongoServer.ensureStarted()
         val spec = MongoEndpointSpec(host, port, LoopbackMongoServer.Db,
           "nation_mongo", MongoClientConfig(batchSize = 512))
-        MongoEndpoints.register(MongoEndpoint(MongoSourceName, "nation_mongo",
+        WireEndpoints.register(MongoEndpoint(MongoSourceName, "nation_mongo",
           MongoDiscovery.inferSchema(spec), spec))
       }
-      if (MongoEndpoints.get(MongoSourceName, "part_mongo").isEmpty) {
+      if (WireEndpoints.get(MongoSourceName, "part_mongo").isEmpty) {
         val part = Tables.load(spark, sfDir, "part")
         val rows = part.collect().map(_.toSeq.toArray)
         LoopbackMongoServer.register("part_mongo", part.schema, rows.toSeq)
@@ -481,7 +481,7 @@ object FedData {
         // (not derived fixture-side) — the same path CREATE SOURCE
         // discovery rides; chunk size small enough that every sf yields
         // interior points and WireFanout.thin right-sizes them per hint
-        MongoEndpoints.register(MongoEndpoint(MongoSourceName, "part_mongo",
+        WireEndpoints.register(MongoEndpoint(MongoSourceName, "part_mongo",
           MongoDiscovery.inferSchema(spec), spec,
           splits = MongoDiscovery.splits(spec, "p_partkey",
             chunkBytes = 16L * 1024).map(ws => ws.copy(points =
@@ -492,14 +492,14 @@ object FedData {
       // switch recursing into BDoc — where the reference degrades
       // sub-documents to strings, mgo_source.go:335-360), and the scan
       // decodes them back into struct rows
-      if (MongoEndpoints.get(MongoSourceName, "customer_mgdoc").isEmpty) {
+      if (WireEndpoints.get(MongoSourceName, "customer_mgdoc").isEmpty) {
         val docs = nestedCustomer(Tables.load(spark, sfDir, "customer"))
         val rows = docs.collect().map(_.toSeq.toArray)
         LoopbackMongoServer.register("customer_mgdoc", docs.schema, rows.toSeq)
         val (host, port) = LoopbackMongoServer.ensureStarted()
         val spec = MongoEndpointSpec(host, port, LoopbackMongoServer.Db,
           "customer_mgdoc", MongoClientConfig(batchSize = 512))
-        MongoEndpoints.register(MongoEndpoint(MongoSourceName, "customer_mgdoc",
+        WireEndpoints.register(MongoEndpoint(MongoSourceName, "customer_mgdoc",
           MongoDiscovery.inferSchema(spec), spec,
           splits = Some(WireSplits("c_custkey",
             quantileSplits(rows.toSeq, docs.schema, "c_custkey", 4)))))
@@ -510,7 +510,7 @@ object FedData {
       // p_name is NOT unique, and BigTable row keys must be — so the
       // fixture uses the classic composite-key design (name#id), which
       // keeps name-prefix ranges compilable on the key
-      if (BtEndpoints.get(BtSourceName, "part_btd").isEmpty) {
+      if (WireEndpoints.get(BtSourceName, "part_btd").isEmpty) {
         val part = Tables.load(spark, sfDir, "part")
           .select(
             concat(col("p_name"), lit("#"), col("p_partkey")).as("row_key"),
@@ -521,7 +521,7 @@ object FedData {
         val baseUrl = LoopbackRestServer.ensureStarted()
         val spec = BtEndpointSpec(baseUrl, "part_btd", "row_key",
           HttpRestConfig(pageSize = 512))
-        BtEndpoints.register(BtEndpoint(BtSourceName, "part_btd",
+        WireEndpoints.register(BtEndpoint(BtSourceName, "part_btd",
           BtDiscovery.inferSchema(spec), "row_key", spec, fanout = 4))
       }
     }

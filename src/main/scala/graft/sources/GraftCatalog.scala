@@ -101,50 +101,30 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // state, not a registration snapshot
     val live = WireSources.get(s.name).map(WireSources.listTables)
       .getOrElse(Seq.empty)
-    ((dirs ++ RestEndpoints.list(s.name) ++ EsEndpoints.list(s.name) ++
-      MongoEndpoints.list(s.name) ++ CqlEndpoints.list(s.name) ++
-      BqEndpoints.list(s.name) ++ DsEndpoints.list(s.name) ++
-      BtEndpoints.list(s.name) ++ KubeEndpoints.list(s.name) ++ live)
-      .distinct.sorted
+    ((dirs ++ WireEndpoints.list(s.name) ++ live).distinct.sorted
       :+ FilesMetaTable.Name)
       .map(Identifier.of(namespace, _))
   }
 
-  /** The ONE wire-endpoint resolution chain ([[listTables]] and
-    * [[loadTable]] both ride it — an eighth connector is added here
-    * once). */
-  private def wireTable(s: SourceDef, table: String): Option[Table] =
-    EsEndpoints.get(s.name, table).map(new EsTable(_))
-      .orElse(MongoEndpoints.get(s.name, table).map(new MongoTable(_)))
-      .orElse(CqlEndpoints.get(s.name, table).map(new CqlTable(_)))
-      .orElse(BqEndpoints.get(s.name, table).map(new BqTable(_)))
-      .orElse(DsEndpoints.get(s.name, table).map(new DsTable(_)))
-      .orElse(BtEndpoints.get(s.name, table).map(new BtTable(_)))
-      .orElse(KubeEndpoints.get(s.name, table).map(new KubeTable(_)))
-
   override def loadTable(ident: Identifier): Table = {
     val s = source(ident.namespace())
+    def wireTable = WireEndpoints.get(s.name, ident.name()).map(_.newTable())
     // first resolution of a wire-source table discovers its schema off
     // the backend and registers the endpoint lazily — query a table the
     // cluster grew AFTER CREATE SOURCE without re-registering anything.
     // Only on a registry miss, and never for the files meta-table: a
     // resolution that can be answered locally must not cost a backend
     // round-trip
-    wireTable(s, ident.name()).foreach(t => return t)
+    wireTable.foreach(t => return t)
     if (ident.name() != FilesMetaTable.Name)
       WireSources.get(s.name).foreach(d => WireSources.discover(d, ident.name()))
-    wireTable(s, ident.name()).foreach(t => return t)
-    RestEndpoints.get(s.name, ident.name()) match {
-      case Some(ep) => new RestTable(ep) // REST endpoints shadow nothing:
-      // they live in sources without file tables of the same name
-      case None =>
-        if (ident.name() == FilesMetaTable.Name) new FilesMetaTable(s)
-        else {
-          val dir = s.tableDir(ident.name())
-          if (!dir.isDirectory) throw new NoSuchTableException(ident)
-          FileTable.open(s, ident.name())
-            .getOrElse(throw new NoSuchTableException(ident))
-        }
+    wireTable.foreach(t => return t)
+    if (ident.name() == FilesMetaTable.Name) new FilesMetaTable(s)
+    else {
+      val dir = s.tableDir(ident.name())
+      if (!dir.isDirectory) throw new NoSuchTableException(ident)
+      FileTable.open(s, ident.name())
+        .getOrElse(throw new NoSuchTableException(ident))
     }
   }
 

@@ -2,8 +2,23 @@ package graft.sources
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
+import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{DataType, StructType}
+
+/** The INSERT path every wire sink shares (Mongo, CQL, BigQuery,
+  * Datastore, BigTable): builder, write and batch write in one, differing
+  * per connector only in the task-side writer factory. Driver-side
+  * commit and abort are no-ops — each task ships its own batches, and
+  * none of the backends is a transactional sink. */
+class WireBatchWrite(factory: DataWriterFactory)
+  extends WriteBuilder with Write with BatchWrite {
+  override def build(): Write = this
+  override def toBatch: BatchWrite = this
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    factory
+  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
+  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+}
 
 /** Shared buffered-POST writer scaffold for the HTTP-profile wire sinks
   * (Datastore `:commit`, BigTable `:mutateRows`, BigQuery `insertAll`).

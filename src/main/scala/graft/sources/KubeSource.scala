@@ -267,19 +267,9 @@ final case class KubeEndpointSpec(baseUrl: String, resource: String,
     cfg: HttpRestConfig)
 
 final case class KubeEndpoint(source: String, table: String,
-    spec: KubeEndpointSpec) {
+    spec: KubeEndpointSpec) extends WireEndpoint {
   def resource: KubeTables.KubeResource = KubeTables.All(spec.resource)
-}
-
-object KubeEndpoints {
-  private val endpoints = TrieMap.empty[(String, String), KubeEndpoint]
-  def register(e: KubeEndpoint): Unit = endpoints.put((e.source, e.table.toLowerCase), e)
-  def get(source: String, table: String): Option[KubeEndpoint] =
-    endpoints.get((source, table.toLowerCase))
-  def list(source: String): Seq[String] =
-    endpoints.keys.collect { case (s, t) if s == source => t }.toSeq.sorted
-  def dropSource(source: String): Unit =
-    endpoints.keys.filter(_._1 == source).foreach(endpoints.remove)
+  def newTable(): Table = new KubeTable(this)
 }
 
 class KubeTable(val ep: KubeEndpoint) extends Table with SupportsRead {

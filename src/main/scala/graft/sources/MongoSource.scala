@@ -1186,18 +1186,8 @@ final case class MongoEndpointSpec(host: String, port: Int, db: String,
     collection: String, cfg: MongoClientConfig)
 
 final case class MongoEndpoint(source: String, table: String, schema: StructType,
-    spec: MongoEndpointSpec, splits: Option[WireSplits] = None)
-
-/** Driver-side Mongo endpoint registry (catalog resolution only). */
-object MongoEndpoints {
-  private val endpoints = TrieMap.empty[(String, String), MongoEndpoint]
-  def register(e: MongoEndpoint): Unit = endpoints.put((e.source, e.table.toLowerCase), e)
-  def get(source: String, table: String): Option[MongoEndpoint] =
-    endpoints.get((source, table.toLowerCase))
-  def list(source: String): Seq[String] =
-    endpoints.keys.collect { case (s, t) if s == source => t }.toSeq.sorted
-  def dropSource(source: String): Unit =
-    endpoints.keys.filter(_._1 == source).foreach(endpoints.remove)
+    spec: MongoEndpointSpec, splits: Option[WireSplits] = None) extends WireEndpoint {
+  def newTable(): Table = new MongoTable(this)
 }
 
 class MongoTable(val ep: MongoEndpoint) extends Table
@@ -1219,10 +1209,7 @@ class MongoTable(val ep: MongoEndpoint) extends Table
     * exactly like the reference's per-row Put. */
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new MongoBatchWrite(ep)
-    }
+    new WireBatchWrite(new MongoWriterFactory(ep.spec, ep.schema.json))
 
   /** DELETE FROM ... WHERE: ships ONE OP_MSG `delete` with the compiled
     * filter document (reference: the Mongo backend's DeleteExpression).
@@ -1236,17 +1223,6 @@ class MongoTable(val ep: MongoEndpoint) extends Table
     try client.delete(ep.spec.db, ep.spec.collection, q)
     finally client.close()
   }
-}
-
-class MongoBatchWrite(ep: MongoEndpoint)
-  extends org.apache.spark.sql.connector.write.Write
-  with org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new MongoWriterFactory(ep.spec, ep.schema.json)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 class MongoWriterFactory(spec: MongoEndpointSpec, schemaJson: String)

@@ -2,8 +2,6 @@ package graft.sources
 
 import java.util
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
@@ -65,28 +63,12 @@ final case class RestEndpoint(
     // the API accepts a SegmentQL filter statement (the reference's
     // Lytics ad-hoc segment scan): WHERE trees compile to a `filterql`
     // query param instead of the param-equality accept-list
-    filterQl: Boolean = false)
+    filterQl: Boolean = false) extends WireEndpoint {
+  def newTable(): Table = new RestTable(this)
+}
 
-/** JVM-global endpoint registry, the REST analogue of [[SourceRegistry]]
-  * (driver-side metadata; executors in local mode share the JVM). */
+/** REST endpoint constructors; each registers into [[WireEndpoints]]. */
 object RestEndpoints {
-
-  private val endpoints = TrieMap.empty[(String, String), RestEndpoint]
-
-  def register(e: RestEndpoint): Unit =
-    endpoints.put((e.source, e.table.toLowerCase), e)
-
-  def get(source: String, table: String): Option[RestEndpoint] =
-    endpoints.get((source, table.toLowerCase))
-
-  def list(source: String): Seq[String] =
-    endpoints.keys.collect { case (s, t) if s == source => t }.toSeq.sorted
-
-  def drop(source: String, table: String): Boolean =
-    endpoints.remove((source, table.toLowerCase)).isDefined
-
-  def dropSource(source: String): Unit =
-    endpoints.keys.filter(_._1 == source).foreach(endpoints.remove)
 
   /** Runtime schema inference by sampling the live endpoint (reference:
     * the Mongo backend guesses a table's schema from N sampled documents,
@@ -107,7 +89,7 @@ object RestEndpoints {
     val schema = JsonCodec.inferSchema(new java.io.BufferedReader(
       new java.io.StringReader(sample.mkString("\n"))))
     val e = RestEndpoint(source, table, schema, params.map(_.toLowerCase), handler)
-    register(e)
+    WireEndpoints.register(e)
     e
   }
 
@@ -129,11 +111,11 @@ object RestEndpoints {
       case Some(sch) =>
         val e = RestEndpoint(source, table, sch, params.map(_.toLowerCase), handler,
           spec, slices, filterQl)
-        register(e); e
+        WireEndpoints.register(e); e
       case None =>
         val e = registerSampled(source, table, params, handler)
           .copy(httpSpec = spec, slices = slices, filterQl = filterQl)
-        register(e); e
+        WireEndpoints.register(e); e
     }
   }
 
@@ -165,7 +147,7 @@ object RestEndpoints {
         w.toString.stripLineEnd
       }
     }
-    register(RestEndpoint(source, table, schema, paramsLc, handler))
+    WireEndpoints.register(RestEndpoint(source, table, schema, paramsLc, handler))
   }
 }
 
@@ -293,7 +275,8 @@ class RestReaderFactory extends PartitionReaderFactory {
         val client = new HttpRestClient(spec.baseUrl, spec.cfg)
         (q: Map[String, String]) =>
           client.pagedLinesSliced(spec.path, q, p.slice, p.slices)
-      } else RestEndpoints.get(p.source, p.table).map(_.handler)
+      } else WireEndpoints.get(p.source, p.table)
+        .collect { case e: RestEndpoint => e.handler }
         .orElse(p.httpSpec.map { spec =>
           val client = new HttpRestClient(spec.baseUrl, spec.cfg)
           (q: Map[String, String]) => client.pagedLines(spec.path, q)

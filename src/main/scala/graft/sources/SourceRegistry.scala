@@ -5,6 +5,7 @@ import java.io.File
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.connector.catalog.Table
 
 /** A registered source: a named namespace of file-backed tables.
   *
@@ -62,4 +63,33 @@ object SourceRegistry {
     if (!spark.conf.getOption(key).contains(classOf[GraftCatalog].getName))
       spark.conf.set(key, classOf[GraftCatalog].getName)
   }
+}
+
+/** A wire-backed table's registration: the namespace and name it answers
+  * to under `graft.<source>.<table>`, and how to build its DSv2 table. */
+trait WireEndpoint {
+  def source: String
+  def table: String
+  def newTable(): Table
+}
+
+/** The ONE driver-side registry of wire endpoints, every connector kind
+  * together — the reference resolves every backend's tables through one
+  * schema registry (models/serverctx.go:136-188). Keys are
+  * `(source, table.toLowerCase)`; registering an existing key replaces
+  * it. Catalog resolution only: readers carry their own serialized
+  * specs, except an unsliced REST scan in local mode, which reuses the
+  * registered handler. */
+object WireEndpoints {
+  private val endpoints = TrieMap.empty[(String, String), WireEndpoint]
+
+  def register(e: WireEndpoint): Unit = endpoints.put((e.source, e.table.toLowerCase), e)
+  def get(source: String, table: String): Option[WireEndpoint] =
+    endpoints.get((source, table.toLowerCase))
+  def list(source: String): Seq[String] =
+    endpoints.keys.collect { case (s, t) if s == source => t }.toSeq.sorted
+  def drop(source: String, table: String): Boolean =
+    endpoints.remove((source, table.toLowerCase)).isDefined
+  def dropSource(source: String): Unit =
+    endpoints.keys.filter(_._1 == source).foreach(endpoints.remove)
 }

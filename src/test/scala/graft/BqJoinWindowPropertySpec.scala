@@ -55,7 +55,7 @@ class BqJoinWindowPropertySpec extends AnyFunSuite {
       pageSize: Int): String = {
     LoopbackRestServer.registerBq(name, schema, rows)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    BqEndpoints.register(BqEndpoint("bqtest", name, schema,
+    WireEndpoints.register(BqEndpoint("bqtest", name, schema,
       BqEndpointSpec(baseUrl, name,
         HttpRestConfig(pageSize = pageSize, retryBackoffMs = 5))))
     if (SourceRegistry.get("bqtest").isEmpty)

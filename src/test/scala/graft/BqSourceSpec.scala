@@ -37,7 +37,7 @@ class BqSourceSpec extends AnyFunSuite {
     val baseUrl = LoopbackRestServer.ensureStarted()
     LoopbackRestServer.failNext.set(0)
     LoopbackRestServer.delayMs.set(0)
-    BqEndpoints.register(BqEndpoint("bqtest", name, schema,
+    WireEndpoints.register(BqEndpoint("bqtest", name, schema,
       BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("bqtest").isEmpty)
       SourceRegistry.register(SourceDef("bqtest",
@@ -210,7 +210,7 @@ class BqSourceSpec extends AnyFunSuite {
   private def fanTable(name: String, points: Seq[Any]): String = {
     LoopbackRestServer.register(name, schema, rows)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    BqEndpoints.register(BqEndpoint("bqtest", name, schema,
+    WireEndpoints.register(BqEndpoint("bqtest", name, schema,
       BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", points))))
     if (SourceRegistry.get("bqtest").isEmpty)
@@ -227,7 +227,7 @@ class BqSourceSpec extends AnyFunSuite {
     val name = "wrq1"
     LoopbackRestServer.register(name, schema, Seq.empty)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    BqEndpoints.register(BqEndpoint("bqtest", name, schema,
+    WireEndpoints.register(BqEndpoint("bqtest", name, schema,
       BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     val t = s"${SourceRegistry.CatalogName}.bqtest.$name"
@@ -264,7 +264,7 @@ class BqSourceSpec extends AnyFunSuite {
     val name = "wrq3"
     LoopbackRestServer.register(name, schema, Seq.empty)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    BqEndpoints.register(BqEndpoint("bqtest", name, schema,
+    WireEndpoints.register(BqEndpoint("bqtest", name, schema,
       BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     val t = s"${SourceRegistry.CatalogName}.bqtest.$name"
@@ -284,8 +284,22 @@ class BqSourceSpec extends AnyFunSuite {
     val want = rows.filter(r => r(1) == "A" || r(3).asInstanceOf[Double] > 500.0)
       .map(_(0).asInstanceOf[Long]).sorted
     assert(got.toSeq == want.toSeq, "the range conjuncts tile the key space")
-    assert(LoopbackRestServer.lastBqSql.get().contains("id >="),
+    // the shards run in parallel, so any of them may reach the server
+    // last: assert on the planned statements, not on the last request
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    val sqls = plan.collectLeaves().collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions.collect { case p: BqPartition => p.sql }
+    }.flatten
+    assert(sqls.size == 4, sqls.mkString("\n"))
+    assert(sqls.count(_.contains("id >=")) == 3,
       "the shipped SQL carries the injected range")
+    assert(sqls.head.contains("IS NULL") && !sqls.head.contains("id >="),
+      "null keys ride shard 0")
   }
 
   test("a pushed predicate pinning the split key stays ONE statement") {
@@ -322,7 +336,7 @@ class BqSourceSpec extends AnyFunSuite {
   private def dimTable(name: String): String = {
     LoopbackRestServer.register(name, dimSchema, dimRows)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    BqEndpoints.register(BqEndpoint("bqtest", name, dimSchema,
+    WireEndpoints.register(BqEndpoint("bqtest", name, dimSchema,
       BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     s"${SourceRegistry.CatalogName}.bqtest.$name"

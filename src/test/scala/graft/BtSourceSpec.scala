@@ -34,7 +34,7 @@ class BtSourceSpec extends AnyFunSuite {
     LoopbackRestServer.registerBt(name, schema, "k", rows)
     val baseUrl = LoopbackRestServer.ensureStarted()
     LoopbackRestServer.failNext.set(0)
-    BtEndpoints.register(BtEndpoint("bttest", name, schema, "k",
+    WireEndpoints.register(BtEndpoint("bttest", name, schema, "k",
       BtEndpointSpec(baseUrl, name, "k",
         HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("bttest").isEmpty)
@@ -165,7 +165,7 @@ class BtSourceSpec extends AnyFunSuite {
   private def writeTable(name: String): String = {
     LoopbackRestServer.registerBt(name, schema, "k", Seq.empty)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    BtEndpoints.register(BtEndpoint("bttest", name, schema, "k",
+    WireEndpoints.register(BtEndpoint("bttest", name, schema, "k",
       BtEndpointSpec(baseUrl, name, "k",
         HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
@@ -223,7 +223,7 @@ class BtSourceSpec extends AnyFunSuite {
   private def fanTable(name: String, fanout: Int): String = {
     LoopbackRestServer.registerBt(name, schema, "k", rows)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    BtEndpoints.register(BtEndpoint("bttest", name, schema, "k",
+    WireEndpoints.register(BtEndpoint("bttest", name, schema, "k",
       BtEndpointSpec(baseUrl, name, "k",
         HttpRestConfig(pageSize = 64, retryBackoffMs = 5)), fanout = fanout))
     SourceRegistry.ensureCatalog(spark)

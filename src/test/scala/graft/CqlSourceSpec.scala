@@ -47,7 +47,7 @@ class CqlSourceSpec extends AnyFunSuite {
     LoopbackCqlServer.register(name, schema, Seq("seg"), Seq("id"), rows)
     val (host, port) = LoopbackCqlServer.ensureStarted()
     LoopbackCqlServer.failNext.set(0)
-    CqlEndpoints.register(CqlEndpoint("cqltest", name, schema, Seq("seg"), Seq("id"),
+    WireEndpoints.register(CqlEndpoint("cqltest", name, schema, Seq("seg"), Seq("id"),
       CqlEndpointSpec(host, port, name, CqlClientConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("cqltest").isEmpty)
       SourceRegistry.register(SourceDef("cqltest",
@@ -92,7 +92,7 @@ class CqlSourceSpec extends AnyFunSuite {
       ArrayType(StringType, containsNull = true))
     assert(meta.schema("props").dataType ==
       MapType(StringType, LongType, valueContainsNull = true))
-    CqlEndpoints.register(CqlEndpoint("cqltest", "coll_cql", meta.schema,
+    WireEndpoints.register(CqlEndpoint("cqltest", "coll_cql", meta.schema,
       meta.partitionKeys, meta.clusteringKeys, spec))
     if (SourceRegistry.get("cqltest").isEmpty)
       SourceRegistry.register(SourceDef("cqltest",
@@ -363,7 +363,7 @@ class CqlSourceSpec extends AnyFunSuite {
   private def fanTable(name: String, fanout: Int): String = {
     LoopbackCqlServer.register(name, schema, Seq("seg"), Seq("id"), rows)
     val (host, port) = LoopbackCqlServer.ensureStarted()
-    CqlEndpoints.register(CqlEndpoint("cqltest", name, schema, Seq("seg"), Seq("id"),
+    WireEndpoints.register(CqlEndpoint("cqltest", name, schema, Seq("seg"), Seq("id"),
       CqlEndpointSpec(host, port, name, CqlClientConfig(pageSize = 64, retryBackoffMs = 5)),
       fanout = fanout))
     SourceRegistry.ensureCatalog(spark)
@@ -465,7 +465,7 @@ class CqlSourceSpec extends AnyFunSuite {
   test("grouped aggregates push as CQL GROUP BY with token fan-out: bare plan, exact union") {
     LoopbackCqlServer.register("agg1", schema, Seq("seg"), Seq("id"), rows)
     val (host, port) = LoopbackCqlServer.ensureStarted()
-    CqlEndpoints.register(CqlEndpoint("cqltest", "agg1", schema, Seq("seg"), Seq("id"),
+    WireEndpoints.register(CqlEndpoint("cqltest", "agg1", schema, Seq("seg"), Seq("id"),
       CqlEndpointSpec(host, port, "agg1", CqlClientConfig(pageSize = 64, retryBackoffMs = 5)),
       fanout = 4))
     SourceRegistry.ensureCatalog(spark)
@@ -497,7 +497,7 @@ class CqlSourceSpec extends AnyFunSuite {
   test("a GLOBAL aggregate collapses fan-out to one task (per-range rows would be partials)") {
     LoopbackCqlServer.register("agg2", schema, Seq("seg"), Seq("id"), rows)
     val (host, port) = LoopbackCqlServer.ensureStarted()
-    CqlEndpoints.register(CqlEndpoint("cqltest", "agg2", schema, Seq("seg"), Seq("id"),
+    WireEndpoints.register(CqlEndpoint("cqltest", "agg2", schema, Seq("seg"), Seq("id"),
       CqlEndpointSpec(host, port, "agg2", CqlClientConfig(pageSize = 64, retryBackoffMs = 5)),
       fanout = 4))
     SourceRegistry.ensureCatalog(spark)
@@ -516,7 +516,7 @@ class CqlSourceSpec extends AnyFunSuite {
       Array[Any]("B", 4L, null), Array[Any]("B", 5L, null))
     LoopbackCqlServer.register("agg3", s2, Seq("seg"), Seq("id"), rs)
     val (host, port) = LoopbackCqlServer.ensureStarted()
-    CqlEndpoints.register(CqlEndpoint("cqltest", "agg3", s2, Seq("seg"), Seq("id"),
+    WireEndpoints.register(CqlEndpoint("cqltest", "agg3", s2, Seq("seg"), Seq("id"),
       CqlEndpointSpec(host, port, "agg3", CqlClientConfig(retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     val df = spark.table(s"${SourceRegistry.CatalogName}.cqltest.agg3")

@@ -56,7 +56,7 @@ class CqlWindowPropertySpec extends AnyFunSuite {
     LoopbackCqlServer.register(name, schema, Seq("seg"), Seq("ck1", "ck2"), rows)
     val (host, port) = LoopbackCqlServer.ensureStarted()
     LoopbackCqlServer.failNext.set(0)
-    CqlEndpoints.register(CqlEndpoint("cqltest", name, schema,
+    WireEndpoints.register(CqlEndpoint("cqltest", name, schema,
       Seq("seg"), Seq("ck1", "ck2"),
       CqlEndpointSpec(host, port, name,
         CqlClientConfig(pageSize = pageSize, retryBackoffMs = 5))))

@@ -37,7 +37,7 @@ class DsSourceSpec extends AnyFunSuite {
     LoopbackRestServer.register(name, schema, rows)
     val baseUrl = LoopbackRestServer.ensureStarted()
     LoopbackRestServer.failNext.set(0)
-    DsEndpoints.register(DsEndpoint("dstest", name, schema,
+    WireEndpoints.register(DsEndpoint("dstest", name, schema,
       DsEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("dstest").isEmpty)
       SourceRegistry.register(SourceDef("dstest",
@@ -189,7 +189,7 @@ class DsSourceSpec extends AnyFunSuite {
   private def writeTable(name: String): String = {
     LoopbackRestServer.registerDs(name, schema, "id", Seq.empty)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    DsEndpoints.register(DsEndpoint("dstest", name, schema,
+    WireEndpoints.register(DsEndpoint("dstest", name, schema,
       DsEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
       keyCol = Some("id")))
     SourceRegistry.ensureCatalog(spark)
@@ -258,7 +258,7 @@ class DsSourceSpec extends AnyFunSuite {
   private def fanTable(name: String, points: Seq[Any]): String = {
     LoopbackRestServer.register(name, schema, rows)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    DsEndpoints.register(DsEndpoint("dstest", name, schema,
+    WireEndpoints.register(DsEndpoint("dstest", name, schema,
       DsEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", points))))
     SourceRegistry.ensureCatalog(spark)
@@ -287,7 +287,7 @@ class DsSourceSpec extends AnyFunSuite {
     val ntzRows: Seq[Array[Any]] = (1 to 28).map(i => Array[Any](i.toLong, ldt(i)))
     LoopbackRestServer.registerDs("ntzds", ntzSchema, "id", ntzRows)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    DsEndpoints.register(DsEndpoint("dstest", "ntzds", ntzSchema,
+    WireEndpoints.register(DsEndpoint("dstest", "ntzds", ntzSchema,
       DsEndpointSpec(baseUrl, "ntzds", HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
       keyCol = Some("id")))
     SourceRegistry.ensureCatalog(spark)
@@ -307,7 +307,7 @@ class DsSourceSpec extends AnyFunSuite {
       Array[Any](null, "B", -2.0, java.sql.Timestamp.valueOf("2024-02-02 00:00:00")))
     LoopbackRestServer.register("fan3", schema, rowsN)
     val baseUrl = LoopbackRestServer.ensureStarted()
-    DsEndpoints.register(DsEndpoint("dstest", "fan3", schema,
+    WireEndpoints.register(DsEndpoint("dstest", "fan3", schema,
       DsEndpointSpec(baseUrl, "fan3", HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", Seq(100L, 200L, 300L)))))
     SourceRegistry.ensureCatalog(spark)

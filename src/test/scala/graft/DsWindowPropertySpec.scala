@@ -44,7 +44,7 @@ class DsWindowPropertySpec extends AnyFunSuite {
     LoopbackRestServer.register(name, schema, rows)
     val baseUrl = LoopbackRestServer.ensureStarted()
     LoopbackRestServer.failNext.set(0)
-    DsEndpoints.register(DsEndpoint("dstest", name, schema,
+    WireEndpoints.register(DsEndpoint("dstest", name, schema,
       DsEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = pageSize,
         retryBackoffMs = 5))))
     if (SourceRegistry.get("dstest").isEmpty)

@@ -43,7 +43,7 @@ class EsCompositeWindowPropertySpec extends AnyFunSuite {
   private def table(name: String, rows: Seq[Array[Any]], pageSize: Int): String = {
     LoopbackRestServer.register(name, schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    EsEndpoints.register(EsEndpoint("estest", name, schema,
+    WireEndpoints.register(EsEndpoint("estest", name, schema,
       EsEndpointSpec(base, name, HttpRestConfig(retryBackoffMs = 5),
         compositePageSize = pageSize)))
     if (SourceRegistry.get("estest").isEmpty)

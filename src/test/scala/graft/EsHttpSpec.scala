@@ -36,7 +36,7 @@ class EsHttpSpec extends AnyFunSuite {
     val base = LoopbackRestServer.ensureStarted()
     LoopbackRestServer.failNext.set(0)
     LoopbackRestServer.delayMs.set(0)
-    EsEndpoints.register(EsEndpoint("estest", name, schema,
+    WireEndpoints.register(EsEndpoint("estest", name, schema,
       EsEndpointSpec(base, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("estest").isEmpty)
       SourceRegistry.register(SourceDef("estest",
@@ -173,7 +173,7 @@ class EsHttpSpec extends AnyFunSuite {
     // perturbation reach an exact COUNT(DISTINCT).
     LoopbackRestServer.register("es_card_ex", schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    EsEndpoints.register(EsEndpoint("estest", "es_card_ex", schema,
+    WireEndpoints.register(EsEndpoint("estest", "es_card_ex", schema,
       EsEndpointSpec(base, "es_card_ex", HttpRestConfig(pageSize = 64, retryBackoffMs = 5),
         cardinalityThreshold = 5)))
     if (SourceRegistry.get("estest").isEmpty)
@@ -243,7 +243,7 @@ class EsHttpSpec extends AnyFunSuite {
       paging: String = "pit", pageSize: Int = 64): String = {
     LoopbackRestServer.register(name, schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    EsEndpoints.register(EsEndpoint("estest", name, schema,
+    WireEndpoints.register(EsEndpoint("estest", name, schema,
       EsEndpointSpec(base, name, HttpRestConfig(pageSize = pageSize, retryBackoffMs = 5),
         slices = slices, paging = paging)))
     if (SourceRegistry.get("estest").isEmpty)
@@ -546,7 +546,7 @@ class EsHttpSpec extends AnyFunSuite {
       Map("title" -> true, "body" -> false))
     val base = LoopbackRestServer.ensureStarted()
     val meta = EsDiscovery.mappingMeta(new HttpRestClient(base), name)
-    EsEndpoints.register(EsEndpoint("estest", name, meta.schema,
+    WireEndpoints.register(EsEndpoint("estest", name, meta.schema,
       EsEndpointSpec(base, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
       analyzed = meta.analyzed))
     if (SourceRegistry.get("estest").isEmpty)
@@ -690,7 +690,7 @@ class EsHttpSpec extends AnyFunSuite {
       Map("repo.name" -> true))
     val base = LoopbackRestServer.ensureStarted()
     val meta = EsDiscovery.mappingMeta(new HttpRestClient(base), "nst1")
-    EsEndpoints.register(EsEndpoint("estest", "nst1", meta.schema,
+    WireEndpoints.register(EsEndpoint("estest", "nst1", meta.schema,
       EsEndpointSpec(base, "nst1", HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
       analyzed = meta.analyzed))
     if (SourceRegistry.get("estest").isEmpty)
@@ -729,7 +729,7 @@ class EsHttpSpec extends AnyFunSuite {
     LoopbackRestServer.register("comp1", s2, rs)
     val base = LoopbackRestServer.ensureStarted()
     // page size 2 over 6 groups forces THREE after_key round-trips
-    EsEndpoints.register(EsEndpoint("estest", "comp1", s2,
+    WireEndpoints.register(EsEndpoint("estest", "comp1", s2,
       EsEndpointSpec(base, "comp1", HttpRestConfig(retryBackoffMs = 5),
         compositePageSize = 2)))
     SourceRegistry.ensureCatalog(spark)
@@ -790,7 +790,7 @@ class EsHttpSpec extends AnyFunSuite {
     }
     LoopbackRestServer.register("aggtopn1", s2, rs)
     val base = LoopbackRestServer.ensureStarted()
-    EsEndpoints.register(EsEndpoint("estest", "aggtopn1", s2,
+    WireEndpoints.register(EsEndpoint("estest", "aggtopn1", s2,
       EsEndpointSpec(base, "aggtopn1", HttpRestConfig(retryBackoffMs = 5),
         compositePageSize = 2)))
     SourceRegistry.ensureCatalog(spark)

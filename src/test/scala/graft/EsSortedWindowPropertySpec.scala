@@ -41,7 +41,7 @@ class EsSortedWindowPropertySpec extends AnyFunSuite {
   private def table(name: String, rows: Seq[Array[Any]], pageSize: Int): String = {
     LoopbackRestServer.register(name, schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    EsEndpoints.register(EsEndpoint("estest", name, schema,
+    WireEndpoints.register(EsEndpoint("estest", name, schema,
       EsEndpointSpec(base, name,
         HttpRestConfig(pageSize = pageSize, retryBackoffMs = 5))))
     if (SourceRegistry.get("estest").isEmpty)

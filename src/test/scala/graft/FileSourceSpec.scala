@@ -353,7 +353,7 @@ class FileSourceSpec extends AnyFunSuite {
     // no declared params: every predicate is declined and polyfilled
     val filtered = df.filter(col("score") > 5.0)
     assert(filtered.count() == 2)
-    RestEndpoints.drop(FedData.RestSourceName, "sampled_api")
+    WireEndpoints.drop(FedData.RestSourceName, "sampled_api")
   }
 
   test("golden plan: aggregates are pushed as per-file partials") {
@@ -525,8 +525,8 @@ class FileSourceSpec extends AnyFunSuite {
     val joined = running.join(
       spark.table("graft.k8s.services"), Seq("namespace"))
     assert(joined.count() == 2) // api-1/prod⨝api, job-1/batch⨝jobs
-    RestEndpoints.drop("k8s", "pods")
-    RestEndpoints.drop("k8s", "services")
+    WireEndpoints.drop("k8s", "pods")
+    WireEndpoints.drop("k8s", "services")
     SourceRegistry.drop("k8s")
   }
 

@@ -59,7 +59,7 @@ class GraftEngineSpec extends AnyFunSuite {
     val rows: Seq[Array[Any]] = (0L until 300L).map(i => Array[Any](i, i * 2.0))
     LoopbackMongoServer.register("hint_fan", schema, rows)
     val (host, port) = LoopbackMongoServer.ensureStarted()
-    MongoEndpoints.register(MongoEndpoint("mongotest", "hint_fan", schema,
+    WireEndpoints.register(MongoEndpoint("mongotest", "hint_fan", schema,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "hint_fan",
         MongoClientConfig(batchSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", Seq(50L, 100L, 150L, 200L, 250L)))))
@@ -203,7 +203,7 @@ class GraftEngineSpec extends AnyFunSuite {
     // DROP SOURCE unregisters the namespace and its endpoints
     engine.sql("DROP SOURCE es_live")
     assert(SourceRegistry.get("es_live").isEmpty)
-    assert(EsEndpoints.get("es_live", "cs_idx_a").isEmpty)
+    assert(WireEndpoints.get("es_live", "cs_idx_a").isEmpty)
   }
 
   test("CREATE SOURCE cassandra: discovered keys compile pushdown; mongo: sampled types") {
@@ -225,7 +225,7 @@ class GraftEngineSpec extends AnyFunSuite {
     val cgot = spark.table(ct).filter(col("seg") === "A")
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
     assert(cgot == (0L until 90L).filter(_ % 3 == 0))
-    assert(CqlEndpoints.get("cql_live", "cs_cql_t")
+    assert(WireEndpoints.get("cql_live", "cs_cql_t").collect { case e: CqlEndpoint => e }
       .exists(e => e.partitionKeys == Seq("seg") && e.clusteringKeys == Seq("id")))
     engine.sql("DROP SOURCE cql_live")
     // mongo: types sampled off documents, pushed filter compiles on them
@@ -267,7 +267,8 @@ class GraftEngineSpec extends AnyFunSuite {
     val ds = spark.table(s"${SourceRegistry.CatalogName}.ds_live.cs_ds_k")
       .filter(col("kind") === "k1").select("ev").collect().map(_.getLong(0)).sorted
     assert(ds.toSeq == (0L until 30L).filter(_ % 3 == 1))
-    assert(DsEndpoints.get("ds_live", "cs_ds_k").exists(_.keyCol.contains("ev")))
+    assert(WireEndpoints.get("ds_live", "cs_ds_k").collect { case e: DsEndpoint => e }
+      .exists(_.keyCol.contains("ev")))
     // BigTable: admin listing carries the row-key qualifier; cell types
     // guessed -> the discovered key compiles a prefix range
     val tschema = StructType(Seq(
@@ -279,7 +280,8 @@ class GraftEngineSpec extends AnyFunSuite {
       .filter(col("name").startsWith("row04")).select("qty")
       .collect().map(_.getLong(0)).sorted
     assert(bt.toSeq == (40L until 50L))
-    assert(BtEndpoints.get("bt_live", "cs_bt_t").exists(_.keyCol == "name"))
+    assert(WireEndpoints.get("bt_live", "cs_bt_t").collect { case e: BtEndpoint => e }
+      .exists(_.keyCol == "name"))
     // Kubernetes: the API's fixed typed-table surface registers whole
     engine.sql(s"""CREATE SOURCE k8s_live WITH {"protocol": "kube", "url": "$url"}""")
     assert(engine.sql(s"SHOW TABLES IN ${SourceRegistry.CatalogName}.k8s_live")
@@ -325,7 +327,7 @@ class GraftEngineSpec extends AnyFunSuite {
     // the filter also blocks LAZY registration through resolution
     intercept[Exception](
       spark.table(s"${SourceRegistry.CatalogName}.es_ttl.cs_ttl_b").collect())
-    assert(EsEndpoints.get("es_ttl", "cs_ttl_b").isEmpty)
+    assert(WireEndpoints.get("es_ttl", "cs_ttl_b").isEmpty)
     engine.sql("DROP SOURCE es_ttl")
   }
 
@@ -362,7 +364,8 @@ class GraftEngineSpec extends AnyFunSuite {
       .collect().map(_.getString(1)).toSet
     assert(listed.contains("cs_rest_api"), listed.toString)
     // schema discovered by live-sampling the listing (no declared schema)
-    val ep = RestEndpoints.get("rest_cs", "cs_rest_api").get
+    val ep = WireEndpoints.get("rest_cs", "cs_rest_api")
+      .collect { case e: RestEndpoint => e }.get
     assert(ep.schema("aid").dataType == LongType)
     assert(ep.schema("seg").dataType == StringType)
     assert(ep.slices == 2, "fanout prop flows into strided scan slices")
@@ -372,8 +375,14 @@ class GraftEngineSpec extends AnyFunSuite {
     assert(df.count() == 20L)
     assert(LoopbackRestServer.lastParams.get().get("seg").contains("even"),
       LoopbackRestServer.lastParams.get().toString)
+    // an already-registered table resolves off the registry alone: no
+    // listing or sampling round-trip to the backend
+    val servedBefore = LoopbackRestServer.served.get
+    spark.table(s"${SourceRegistry.CatalogName}.rest_cs.cs_rest_api").schema
+    assert(LoopbackRestServer.served.get - servedBefore == 0L,
+      "re-resolving a registered REST table must not call the backend")
     engine.sql("DROP SOURCE rest_cs")
-    assert(RestEndpoints.get("rest_cs", "cs_rest_api").isEmpty, "DROP cleans endpoints")
+    assert(WireEndpoints.get("rest_cs", "cs_rest_api").isEmpty, "DROP cleans endpoints")
   }
 
   test("failed wire CREATE SOURCE over an existing FILE source restores it") {

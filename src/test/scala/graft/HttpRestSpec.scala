@@ -370,7 +370,7 @@ class HttpRestSpec extends AnyFunSuite {
     })
     val baseUrl = LoopbackRestServer.ensureStarted()
     Seq("pods", "nodes", "services").foreach(res =>
-      KubeEndpoints.register(KubeEndpoint("k8stest", res,
+      WireEndpoints.register(KubeEndpoint("k8stest", res,
         KubeEndpointSpec(baseUrl, res, HttpRestConfig(retryBackoffMs = 5)))))
     if (SourceRegistry.get("k8stest").isEmpty)
       SourceRegistry.register(SourceDef("k8stest",

@@ -45,7 +45,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     LoopbackMongoServer.failNext.set(0)
     LoopbackMongoServer.delayMs.set(0)
-    MongoEndpoints.register(MongoEndpoint("mongotest", name, schema,
+    WireEndpoints.register(MongoEndpoint("mongotest", name, schema,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, name,
         MongoClientConfig(batchSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("mongotest").isEmpty)
@@ -64,7 +64,7 @@ class MongoSourceSpec extends AnyFunSuite {
       Array[Any](null, "Z", "null_key_2", -2.0))
     LoopbackMongoServer.register(name, schema, withNulls)
     val (host, port) = LoopbackMongoServer.ensureStarted()
-    MongoEndpoints.register(MongoEndpoint("mongotest", name, schema,
+    WireEndpoints.register(MongoEndpoint("mongotest", name, schema,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, name,
         MongoClientConfig(batchSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", splitPoints))))
@@ -118,7 +118,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val disc = MongoDiscovery.inferSchema(spec)
     assert(disc("profile").dataType.asInstanceOf[StructType]("bal").dataType == DoubleType)
     assert(disc("tags").dataType == ArrayType(StringType, containsNull = true))
-    MongoEndpoints.register(MongoEndpoint("mongotest", "nested_docs", disc, spec))
+    WireEndpoints.register(MongoEndpoint("mongotest", "nested_docs", disc, spec))
     if (SourceRegistry.get("mongotest").isEmpty)
       SourceRegistry.register(SourceDef("mongotest",
         new java.io.File(sys.props("user.dir"), "target/graft-test/mongotest").getPath,
@@ -276,7 +276,7 @@ class MongoSourceSpec extends AnyFunSuite {
 
   test("split metadata fans the scan into one task per key range, exactly-once") {
     val (t, all) = splitTable("fan1", Seq(100L, 200L, 300L))
-    val ep = MongoEndpoints.get("mongotest", "fan1").get
+    val ep = WireEndpoints.get("mongotest", "fan1").collect { case e: MongoEndpoint => e }.get
     val parts = new MongoScanBuilder(ep).build().toBatch.planInputPartitions()
     assert(parts.length == 4, "3 split points => 4 range partitions")
     val df = spark.table(t)
@@ -325,7 +325,7 @@ class MongoSourceSpec extends AnyFunSuite {
     eng.sql(s"""CREATE SOURCE mg_split WITH {"protocol": "mongo",
       "host": "$host", "port": "$port", "tables_to_load": "$name",
       "split_key": "id", "split_chunk_bytes": "4096"}""")
-    val ep = MongoEndpoints.get("mg_split", name).get
+    val ep = WireEndpoints.get("mg_split", name).collect { case e: MongoEndpoint => e }.get
     assert(ep.splits.isDefined && ep.splits.get.points.nonEmpty,
       "discovery populates split metadata off the server")
     assert(ep.splits.get.key == "id")
@@ -346,7 +346,7 @@ class MongoSourceSpec extends AnyFunSuite {
     eng.sql(s"""CREATE SOURCE mg_split WITH {"protocol": "mongo",
       "host": "$host", "port": "$port", "tables_to_load": "$name",
       "split_key": "id", "split_chunk_bytes": "4096", "fanout": "3"}""")
-    val ep2 = MongoEndpoints.get("mg_split", name).get
+    val ep2 = WireEndpoints.get("mg_split", name).collect { case e: MongoEndpoint => e }.get
     assert(ep2.splits.get.points.size == 2, "fanout=3 -> 2 interior points")
     assert(new MongoScanBuilder(ep2).build().toBatch.planInputPartitions().length == 3)
     eng.sql("DROP SOURCE mg_split")
@@ -374,7 +374,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val ntzRows: Seq[Array[Any]] = (1 to 28).map(i => Array[Any](i.toLong, ldt(i)))
     LoopbackMongoServer.register("ntz1", ntzSchema, ntzRows)
     val (host, port) = LoopbackMongoServer.ensureStarted()
-    MongoEndpoints.register(MongoEndpoint("mongotest", "ntz1", ntzSchema,
+    WireEndpoints.register(MongoEndpoint("mongotest", "ntz1", ntzSchema,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "ntz1",
         MongoClientConfig(batchSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
@@ -410,7 +410,7 @@ class MongoSourceSpec extends AnyFunSuite {
 
   test("the node_ct session conf overrides the metadata partition count") {
     val (_, _) = splitTable("fan3", Seq(100L, 200L, 300L))
-    val ep = MongoEndpoints.get("mongotest", "fan3").get
+    val ep = WireEndpoints.get("mongotest", "fan3").collect { case e: MongoEndpoint => e }.get
     spark.conf.set(WireFanout.ConfKey, "2")
     try {
       val parts = new MongoScanBuilder(ep).build().toBatch.planInputPartitions()
@@ -590,7 +590,7 @@ class MongoSourceSpec extends AnyFunSuite {
       Array[Any]("B", null), Array[Any]("B", null))
     LoopbackMongoServer.register("agg2", s2, rs)
     val (host, port) = LoopbackMongoServer.ensureStarted()
-    MongoEndpoints.register(MongoEndpoint("mongotest", "agg2", s2,
+    WireEndpoints.register(MongoEndpoint("mongotest", "agg2", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "agg2",
         MongoClientConfig(retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
@@ -619,7 +619,7 @@ class MongoSourceSpec extends AnyFunSuite {
       Array[Any]("A", 7L))
     LoopbackMongoServer.register("aggovf", s2, rs)
     val (host, port) = LoopbackMongoServer.ensureStarted()
-    MongoEndpoints.register(MongoEndpoint("mongotest", "aggovf", s2,
+    WireEndpoints.register(MongoEndpoint("mongotest", "aggovf", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "aggovf",
         MongoClientConfig(retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
@@ -678,7 +678,7 @@ class MongoSourceSpec extends AnyFunSuite {
       Array[Any](5L, "five"), Array[Any](10L, "ten"), Array[Any](11L, "eleven"))
     LoopbackMongoServer.register("jltopn_right", s2, dimRows)
     val (host, port) = LoopbackMongoServer.ensureStarted()
-    MongoEndpoints.register(MongoEndpoint("mongotest", "jltopn_right", s2,
+    WireEndpoints.register(MongoEndpoint("mongotest", "jltopn_right", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "jltopn_right",
         MongoClientConfig(retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
@@ -800,7 +800,8 @@ class MongoSourceSpec extends AnyFunSuite {
     val t = table("dyn4")
     // decimal literals aren't wire-exact: filter() must decline, join stays correct
     val scan = new MongoScan(
-      MongoEndpoints.get("mongotest", "dyn4").get, schema, BDoc.empty,
+      WireEndpoints.get("mongotest", "dyn4").collect { case e: MongoEndpoint => e }.get,
+      schema, BDoc.empty,
       None, None, -1, Array.empty)
     val dec = org.apache.spark.sql.connector.expressions.Expressions.literal(
       new java.math.BigDecimal("1.5"))
@@ -866,7 +867,7 @@ class MongoSourceSpec extends AnyFunSuite {
       Array[Any](null, "nullkey")) // must match NOTHING under SQL equality
     LoopbackMongoServer.register("jl_right", s2, dimRows)
     val (host, port) = LoopbackMongoServer.ensureStarted()
-    MongoEndpoints.register(MongoEndpoint("mongotest", "jl_right", s2,
+    WireEndpoints.register(MongoEndpoint("mongotest", "jl_right", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "jl_right",
         MongoClientConfig(retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
@@ -895,7 +896,7 @@ class MongoSourceSpec extends AnyFunSuite {
       StructField("dim_id", LongType), StructField("label", StringType))),
       Seq(Array[Any](3L, "three"), Array[Any](9L, "nine"), Array[Any](300L, "big")))
     val (host, port) = LoopbackMongoServer.ensureStarted()
-    MongoEndpoints.register(MongoEndpoint("mongotest", "jl_right2",
+    WireEndpoints.register(MongoEndpoint("mongotest", "jl_right2",
       StructType(Seq(StructField("dim_id", LongType), StructField("label", StringType))),
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "jl_right2",
         MongoClientConfig(retryBackoffMs = 5))))
@@ -954,7 +955,7 @@ class MongoSourceSpec extends AnyFunSuite {
     LoopbackMongoServer.register("jro_right", s2, rrows)
     val (host, port) = LoopbackMongoServer.ensureStarted()
     Seq(("jro_left", s1), ("jro_right", s2)).foreach { case (n, sch) =>
-      MongoEndpoints.register(MongoEndpoint("mongotest", n, sch,
+      WireEndpoints.register(MongoEndpoint("mongotest", n, sch,
         MongoEndpointSpec(host, port, LoopbackMongoServer.Db, n,
           MongoClientConfig(retryBackoffMs = 5))))
     }
@@ -1001,7 +1002,7 @@ class MongoSourceSpec extends AnyFunSuite {
     LoopbackMongoServer.register("jlo_right", s2, rrows)
     val (host, port) = LoopbackMongoServer.ensureStarted()
     Seq(("jlo_left", s1), ("jlo_right", s2)).foreach { case (n, sch) =>
-      MongoEndpoints.register(MongoEndpoint("mongotest", n, sch,
+      WireEndpoints.register(MongoEndpoint("mongotest", n, sch,
         MongoEndpointSpec(host, port, LoopbackMongoServer.Db, n,
           MongoClientConfig(retryBackoffMs = 5))))
     }
@@ -1040,7 +1041,7 @@ class MongoSourceSpec extends AnyFunSuite {
       Array[Any](null, "nullkey"))
     LoopbackMongoServer.register("jlagg_right", s2, dimRows)
     val (host, port) = LoopbackMongoServer.ensureStarted()
-    MongoEndpoints.register(MongoEndpoint("mongotest", "jlagg_right", s2,
+    WireEndpoints.register(MongoEndpoint("mongotest", "jlagg_right", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "jlagg_right",
         MongoClientConfig(retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)

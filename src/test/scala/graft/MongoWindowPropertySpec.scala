@@ -47,7 +47,7 @@ class MongoWindowPropertySpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     LoopbackMongoServer.failNext.set(0)
     LoopbackMongoServer.delayMs.set(0)
-    MongoEndpoints.register(MongoEndpoint("mongotest", name, schema,
+    WireEndpoints.register(MongoEndpoint("mongotest", name, schema,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, name,
         MongoClientConfig(batchSize = batch, retryBackoffMs = 5))))
     if (SourceRegistry.get("mongotest").isEmpty)

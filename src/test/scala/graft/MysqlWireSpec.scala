@@ -265,7 +265,7 @@ class MysqlWireSpec extends AnyFunSuite {
       Array[Any](i, if (i % 2 == 0) "even" else "odd"))
     graft.sources.LoopbackMongoServer.register("wire_two", schema, rows)
     val (host, mport) = graft.sources.LoopbackMongoServer.ensureStarted()
-    graft.sources.MongoEndpoints.register(graft.sources.MongoEndpoint(
+    graft.sources.WireEndpoints.register(graft.sources.MongoEndpoint(
       "mysqlmongo", "wire_two", schema,
       graft.sources.MongoEndpointSpec(host, mport,
         graft.sources.LoopbackMongoServer.Db, "wire_two",

@@ -61,7 +61,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
         val (host, port) = LoopbackMongoServer.ensureStarted()
         LoopbackMongoServer.failNext.set(0)
         LoopbackMongoServer.delayMs.set(0)
-        MongoEndpoints.register(MongoEndpoint("mongotest", name, schema,
+        WireEndpoints.register(MongoEndpoint("mongotest", name, schema,
           MongoEndpointSpec(host, port, LoopbackMongoServer.Db, name,
             MongoClientConfig(batchSize = 64, retryBackoffMs = 5))))
         catalogTable("mongotest", "mongo", name)
@@ -70,7 +70,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
       windowsBy("id"), staticCut = false, (name, schema, rows) => {
         LoopbackRestServer.register(name, schema, rows)
         val base = LoopbackRestServer.ensureStarted()
-        EsEndpoints.register(EsEndpoint("estest", name, schema,
+        WireEndpoints.register(EsEndpoint("estest", name, schema,
           EsEndpointSpec(base, name, HttpRestConfig(pageSize = 16, retryBackoffMs = 5))))
         catalogTable("estest", "es", name)
       }),
@@ -83,7 +83,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
         LoopbackRestServer.registerBt(name, schema, "k", rows)
         val baseUrl = LoopbackRestServer.ensureStarted()
         LoopbackRestServer.failNext.set(0)
-        BtEndpoints.register(BtEndpoint("bttest", name, schema, "k",
+        WireEndpoints.register(BtEndpoint("bttest", name, schema, "k",
           BtEndpointSpec(baseUrl, name, "k",
             HttpRestConfig(pageSize = 16, retryBackoffMs = 5))))
         catalogTable("bttest", "bt", name)
@@ -98,7 +98,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
         LoopbackCqlServer.register(name, schema, Seq("id"), Seq("ck"), rows)
         val (host, port) = LoopbackCqlServer.ensureStarted()
         LoopbackCqlServer.failNext.set(0)
-        CqlEndpoints.register(CqlEndpoint("cqltest", name, schema, Seq("id"), Seq("ck"),
+        WireEndpoints.register(CqlEndpoint("cqltest", name, schema, Seq("id"), Seq("ck"),
           CqlEndpointSpec(host, port, name,
             CqlClientConfig(pageSize = 16, retryBackoffMs = 5))))
         catalogTable("cqltest", "cql", name)
@@ -107,7 +107,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
       windowsBy("id"), staticCut = true, (name, schema, rows) => {
         LoopbackRestServer.registerBq(name, schema, rows)
         val baseUrl = LoopbackRestServer.ensureStarted()
-        BqEndpoints.register(BqEndpoint("bqtest", name, schema,
+        WireEndpoints.register(BqEndpoint("bqtest", name, schema,
           BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 16, retryBackoffMs = 5))))
         catalogTable("bqtest", "bq", name)
       }))
