@@ -82,7 +82,9 @@ import org.apache.spark.sql.SparkSession
   *     SPARK_GRAFT_BENCH_MAX_LOADAVG (default 4.0) — the direct
   *     machine-state gate beside the inferred spread gate, so a loaded
   *     driver re-run is self-labelling and reports zero phantom
-  *     regressions (they adjudicate away against the isolated arm).
+  *     regressions (they adjudicate away against the isolated arm). A
+  *     loaded full run is written to `target/BENCH_LOADED.json`, never
+  *     to `BENCH_FULL.json`.
   *
   * Round-14 arm: the artifact carries a `regressions` map (query →
   * ratio for every common-set query past 1.25× with a ≥0.15 s absolute
@@ -715,10 +717,13 @@ object Bench {
     // diverted to target/ too — an r16 8-core re-run silently replaced
     // the accepted 32-core snapshot, losing its per-query data.
     // An unreadable committed artifact counts as a clash (divert, never
-    // overwrite what could not be checked).
+    // overwrite what could not be checked). A full run marked
+    // `loaded_run` is diverted too, ahead of both: it is evidence, never
+    // the committed artifact.
     val repoDir = java.nio.file.Paths.get(sys.props("user.dir"))
     val mainPath = repoDir.resolve("BENCH_FULL.json")
-    val cpusClash = only.isEmpty && !rejected &&
+    val loadedFull = only.isEmpty && !rejected && loadedRun
+    val cpusClash = only.isEmpty && !rejected && !loadedRun &&
       java.nio.file.Files.exists(mainPath) && scala.util.Try {
         val prior = new String(
           java.nio.file.Files.readAllBytes(mainPath), "UTF-8")
@@ -729,6 +734,7 @@ object Bench {
     // filtered A/B runs must not clobber the committed full snapshot
     val artifact =
       if (rejected) "target/BENCH_REJECTED.json"
+      else if (loadedFull) "target/BENCH_LOADED.json"
       else if (cpusClash) s"target/BENCH_FULL_c$cpus.json"
       else if (only.isEmpty) "BENCH_FULL.json"
       else "target/BENCH_FILTERED.json"
@@ -766,6 +772,9 @@ object Bench {
         s"[bench] BENCH_FULL.json was recorded at a different core count; " +
           s"writing this cpus=$cpus run to $artifact " +
           "instead (delete the committed artifact to replace it)")
+      if (loadedFull) System.err.println(
+        s"[bench] loadavg_start $loadavgStart exceeds $maxLoadavg: this loaded " +
+          s"run goes to $artifact, not BENCH_FULL.json (re-run idle)")
       java.nio.file.Files.write(repoDir.resolve(artifact),
         (line + "\n").getBytes("UTF-8"))
       if (rejected) System.err.println(

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.aggregate._
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.{Expression, NamedReference, NullOrdering, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
@@ -723,7 +723,7 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
   private var limit: Int = -1
   private var offset: Int = 0
   private var orders: Seq[BqSql.Order] = Nil
-  private var agg: Option[(Seq[Int], Seq[(String, Int, DataType)])] = None
+  private var agg: Option[(Seq[Int], Seq[AggDef])] = None
   private var join: Option[BqJoinSpec] = None
 
   // ---- same-warehouse join pushdown (full-statement render) ---------------
@@ -855,56 +855,33 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
   /** The warehouse's answer is final — sort/limit/offset consumed. */
   override def isPartiallyPushed(): Boolean = false
 
-  private def fieldIdx(e: Expression): Option[Int] = e match {
-    case nr: NamedReference if nr.fieldNames().length == 1 =>
-      Some(resolveCols.indexWhere(_._1.equalsIgnoreCase(nr.fieldNames()(0))))
-        .filter(_ >= 0)
-    case _ => None
-  }
+  /** [[resolveCols]] as the schema aggregates resolve against. */
+  private def resolveSchema: StructType =
+    StructType(resolveCols.map(c => StructField(c._1, c._3, nullable = true)))
 
-  /** Translate an Aggregation against the scan's resolution base —
-    * the raw table, or the joined output when a join was pushed (the
-    * classic fact⨝dim→aggregate renders as ONE statement). */
-  private def translate(a: Aggregation): Option[(Seq[Int], Seq[(String, Int, DataType)])] = {
-    val cols = resolveCols
-    val groups = a.groupByExpressions().toSeq.map(fieldIdx)
-    if (groups.exists(_.isEmpty)) return None
-    def numeric(i: Int) = cols(i)._3.isInstanceOf[NumericType]
-    val aggs = a.aggregateExpressions().toSeq.map {
-      case _: CountStar => Some(("count_star", -1, LongType))
-      case c: Count if !c.isDistinct => fieldIdx(c.column()).map(("count", _, LongType))
-      case m: Min => fieldIdx(m.column()).filter(numeric)
-        .map(i => ("min", i, cols(i)._3))
-      case m: Max => fieldIdx(m.column()).filter(numeric)
-        .map(i => ("max", i, cols(i)._3))
-      case s: Sum if !s.isDistinct => fieldIdx(s.column()).flatMap { i =>
-        cols(i)._3 match {
-          case ShortType | IntegerType | LongType => Some(("sum", i, LongType))
-          case FloatType | DoubleType => Some(("sum", i, DoubleType))
-          case _ => None
-        }
-      }
-      case av: Avg if !av.isDistinct =>
-        fieldIdx(av.column()).filter(numeric).map(("avg", _, DoubleType))
-      case _ => None
-    }
-    if (aggs.exists(_.isEmpty)) None else Some((groups.map(_.get), aggs.map(_.get)))
+  /** [[PushedAgg.translate]] against the scan's resolution base — the raw
+    * table, or the joined output when a join was pushed (the classic
+    * fact⨝dim→aggregate renders as ONE statement). Any group column;
+    * MIN/MAX/AVG over numeric columns. */
+  private def pushedAgg(a: Aggregation): Option[(Seq[Int], Seq[AggDef])] = {
+    import AggFn._
+    PushedAgg.translate(a, resolveSchema, _ => true, {
+      case (Count | Sum, _) => true
+      case (Min | Max | Avg, f) => f.dataType.isInstanceOf[NumericType]
+      case _ => false
+    })
   }
 
   override def supportCompletePushDown(a: Aggregation): Boolean =
-    translate(a).isDefined
+    pushedAgg(a).isDefined
   override def pushAggregation(a: Aggregation): Boolean =
-    translate(a) match {
+    pushedAgg(a) match {
       case Some(t) => agg = Some(t); true
       case None => false
     }
 
   private def aggOutSchema: StructType = agg match {
-    case Some((gs, as)) => StructType(
-      gs.map(i => StructField(resolveCols(i)._1, resolveCols(i)._3, nullable = true)) ++
-        as.zipWithIndex.map { case ((_, _, dt), i) =>
-          StructField(s"agg_$i", dt, nullable = true)
-        })
+    case Some((gs, as)) => PushedAgg.outSchema(resolveSchema, gs, as)
     case None => required
   }
 
@@ -934,11 +911,8 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
       val cols = resolveCols
       val (items, groupSql, outSchema) = agg match {
         case Some((gs, as)) =>
-          val its = gs.map(cols(_)._2) ++ as.zipWithIndex.map {
-            case ((kind, i, _), k) =>
-              val fn = if (kind == "count_star") "count(*)"
-                else s"$kind(${cols(i)._2})"
-              s"$fn AS agg_$k"
+          val its = gs.map(cols(_)._2) ++ as.zipWithIndex.map { case (d, k) =>
+            s"${d.sql(if (d.col < 0) "" else cols(d.col)._2)} AS agg_$k"
           }
           val grp = if (gs.isEmpty) ""
             else " GROUP BY " + gs.map(cols(_)._2).mkString(", ")
@@ -994,11 +968,8 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
     }
     val (selectSql, groupSql, outSchema) = agg match {
       case Some((gs, as)) =>
-        val items = gs.map(ep.schema.fieldNames(_)) ++ as.zipWithIndex.map {
-          case ((kind, i, _), k) =>
-            val fn = if (kind == "count_star") "count(*)"
-              else s"$kind(${ep.schema.fieldNames(i)})"
-            s"$fn AS agg_$k"
+        val items = gs.map(ep.schema.fieldNames(_)) ++ as.zipWithIndex.map { case (d, k) =>
+          s"${d.sql(if (d.col < 0) "" else ep.schema.fieldNames(d.col))} AS agg_$k"
         }
         val grp = if (gs.isEmpty) ""
           else " GROUP BY " + gs.map(ep.schema.fieldNames(_)).mkString(", ")
@@ -1165,12 +1136,6 @@ class BqReaderFactory extends PartitionReaderFactory {
         if (raw == null) null else LineCodec.parse(raw, f.dataType)
       })).asInstanceOf[InternalRow]
     }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    IteratorReader(it)
   }
 }

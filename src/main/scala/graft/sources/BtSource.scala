@@ -497,12 +497,6 @@ class BtReaderFactory extends PartitionReaderFactory {
         else LineCodec.parse(BtQuery.unb64(c.asText()), f.dataType)
       })).asInstanceOf[InternalRow]
     }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    IteratorReader(it)
   }
 }

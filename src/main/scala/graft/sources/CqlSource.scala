@@ -1125,13 +1125,12 @@ class CqlWriterFactory(spec: CqlEndpointSpec, schemaJson: String, table: String)
   * (the reader nulls a 0-count value). COUNT(DISTINCT) has no CQL
   * spelling — declined, Spark polyfills over the row scan. */
 object CqlAgg {
-  import org.apache.spark.sql.connector.expressions.aggregate._
+  import AggFn._
 
-  /** (group cols in SPARK's output order, group cols in KEY order,
-    * select-item kinds). A kind is (cqlText, tag, outType) where tag ∈
-    * count|minmax|sum|avg; sum/avg carry a companion count(col). */
+  /** (group cols in SPARK's output order, group cols in KEY order, the
+    * pushed functions over the endpoint schema). */
   final case class Spec(groupOut: Seq[String], groupKeyOrder: Seq[String],
-      aggs: Seq[(String, String, DataType)])
+      aggs: Seq[AggDef])
 
   private def orderable(dt: DataType): Boolean = dt match {
     case ShortType | IntegerType | LongType | FloatType | DoubleType |
@@ -1139,60 +1138,37 @@ object CqlAgg {
     case _ => false
   }
 
-  def translate(a: Aggregation, ep: CqlEndpoint): Option[Spec] = {
-    def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[StructField] =
-      e match {
-        case nr: org.apache.spark.sql.connector.expressions.NamedReference
-            if nr.fieldNames().length == 1 =>
-          ep.schema.fields.find(_.name.equalsIgnoreCase(nr.fieldNames()(0)))
-        case _ => None
-      }
-    val groups = a.groupByExpressions().toSeq.map(fieldOf)
-    if (groups.exists(_.isEmpty)) return None
-    val groupNames = groups.map(_.get.name)
-    // the key-prefix rule: group set == partition key + clustering prefix
-    val keys = ep.partitionKeys ++ ep.clusteringKeys
-    val keyOrder = keys.filter(k => groupNames.exists(_.equalsIgnoreCase(k)))
-    if (groupNames.size != keyOrder.size ||
-        keyOrder.map(_.toLowerCase) != keys.take(keyOrder.size).map(_.toLowerCase) ||
-        keyOrder.size < ep.partitionKeys.size)
-      return None
-    if (groups.exists(g => !orderable(g.get.dataType))) return None
-    val aggs: Seq[Option[(String, String, DataType)]] = a.aggregateExpressions().toSeq.map {
-      case _: CountStar => Some(("count(*)", "count", LongType))
-      case c: Count if !c.isDistinct =>
-        fieldOf(c.column()).map(f => (s"count(${f.name})", "count", LongType))
-      case m: Min => fieldOf(m.column()).filter(f => orderable(f.dataType))
-        .map(f => (s"min(${f.name})", "minmax", f.dataType))
-      case m: Max => fieldOf(m.column()).filter(f => orderable(f.dataType))
-        .map(f => (s"max(${f.name})", "minmax", f.dataType))
-      case s: Sum if !s.isDistinct => fieldOf(s.column()).flatMap { f =>
-        f.dataType match {
-          case ShortType | IntegerType | LongType =>
-            Some((s"sum(cast(${f.name} as bigint))", "sum", LongType))
-          case FloatType | DoubleType =>
-            Some((s"sum(cast(${f.name} as double))", "sum", DoubleType))
-          case _ => None
-        }
-      }
-      case av: Avg if !av.isDistinct => fieldOf(av.column())
-        .filter(f => f.dataType.isInstanceOf[NumericType] && orderable(f.dataType))
-        .map(f => (s"avg(cast(${f.name} as double))", "avg", DoubleType))
-      case _ => None // COUNT(DISTINCT), expressions: Spark polyfills
+  /** [[PushedAgg.translate]] under CQL's rules, then the key-prefix
+    * group rule. */
+  def plan(a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation,
+      ep: CqlEndpoint): Option[Spec] =
+    PushedAgg.translate(a, ep.schema, f => orderable(f.dataType), {
+      case (Count | Sum, _) => true
+      case (Min | Max | Avg, f) => orderable(f.dataType)
+      case _ => false // COUNT(DISTINCT) has no CQL spelling
+    }).flatMap { case (groupIdx, aggs) =>
+      val groupNames = groupIdx.map(ep.schema.fields(_).name)
+      // the key-prefix rule: group set == partition key + clustering prefix
+      val keys = ep.partitionKeys ++ ep.clusteringKeys
+      val keyOrder = keys.filter(k => groupNames.exists(_.equalsIgnoreCase(k)))
+      if (groupNames.size != keyOrder.size ||
+          keyOrder.map(_.toLowerCase) != keys.take(keyOrder.size).map(_.toLowerCase) ||
+          keyOrder.size < ep.partitionKeys.size) None
+      else Some(Spec(groupNames, keyOrder, aggs))
     }
-    if (aggs.exists(_.isEmpty)) None
-    else Some(Spec(groupNames, keyOrder, aggs.map(_.get)))
-  }
 
-  /** The select list [[Spec]] compiles to: group columns (Spark order),
-    * then each aggregate followed by its companion count where needed. */
-  def selectList(spec: Spec): Seq[String] =
-    spec.groupOut ++ spec.aggs.flatMap { case (sql, tag, _) =>
-      if (tag == "sum" || tag == "avg") {
-        // the companion counts the SAME column the sum/avg casts
-        val col = sql.substring(sql.indexOf("cast(") + 5, sql.indexOf(" as "))
-        Seq(sql, s"count($col)")
-      } else Seq(sql)
+  /** The select list a [[Spec]] over `schema` compiles to: group columns
+    * (Spark order), then each aggregate — sums and averages cast inside
+    * and followed by their companion count of the same column. */
+  def selectList(spec: Spec, schema: StructType): Seq[String] =
+    spec.groupOut ++ spec.aggs.flatMap { d =>
+      val col = if (d.col < 0) "" else schema.fields(d.col).name
+      d.fn match {
+        case Sum | Avg =>
+          val as = if (d.out == LongType) "bigint" else "double"
+          Seq(d.sql(s"cast($col as $as)"), s"count($col)")
+        case _ => Seq(d.sql(col))
+      }
     }
 }
 
@@ -1263,24 +1239,22 @@ class CqlScanBuilder(ep: CqlEndpoint, hint: Option[Int] = None) extends ScanBuil
     * are final buckets ([[CqlAgg]] for the rule set and cast guards). */
   override def supportCompletePushDown(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    CqlAgg.translate(a, ep).isDefined
+    CqlAgg.plan(a, ep).isDefined
   override def pushAggregation(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    CqlAgg.translate(a, ep) match {
+    CqlAgg.plan(a, ep) match {
       case Some(s) => agg = Some(s); true
       case None => false
     }
 
   override def build(): Scan = agg match {
     case Some(spec) =>
-      val outSchema = StructType(
-        spec.groupOut.map(g => ep.schema.fields(
-          ep.schema.fieldNames.indexWhere(_.equalsIgnoreCase(g)))) ++
-          spec.aggs.zipWithIndex.map { case ((_, _, dt), i) =>
-            StructField(s"agg_$i", dt, nullable = true) })
-      new CqlScan(ep, outSchema, CqlAgg.selectList(spec), accepted.where,
+      val outSchema = PushedAgg.outSchema(ep.schema,
+        spec.groupOut.map(g => ep.schema.fieldNames.indexWhere(_.equalsIgnoreCase(g))),
+        spec.aggs)
+      new CqlScan(ep, outSchema, CqlAgg.selectList(spec, ep.schema), accepted.where,
         limit, accepted.pushed.toArray, hint,
-        groupBy = spec.groupKeyOrder, aggKinds = spec.aggs.map(_._2))
+        groupBy = spec.groupKeyOrder, aggs = spec.aggs)
     case None =>
       val cols =
         if (required.fields.isEmpty) Seq(ep.schema.fieldNames.head)
@@ -1293,7 +1267,7 @@ class CqlScanBuilder(ep: CqlEndpoint, hint: Option[Int] = None) extends ScanBuil
 class CqlScan(ep: CqlEndpoint, required: StructType, cols: Seq[String],
     where: Seq[String], limit: Int, pushed: Array[Filter],
     hint: Option[Int] = None, groupBy: Seq[String] = Nil,
-    aggKinds: Seq[String] = Nil, orderBy: Seq[(String, Boolean)] = Nil)
+    aggs: Seq[AggDef] = Nil, orderBy: Seq[(String, Boolean)] = Nil)
   extends Scan with Batch with WireRuntimeFilter[String] {
 
   // ---- runtime semi-join reduction ([[WireRuntimeFilter]]) ---------------
@@ -1360,7 +1334,7 @@ class CqlScan(ep: CqlEndpoint, required: StructType, cols: Seq[String],
     // forbids mixing token() relations with key relations, and the IN
     // read is the multi-partition fast path anyway.
     runtimeIn.foreach { in =>
-      return Array(CqlPartition(ep.spec, render(Seq(in)), required.json, aggKinds))
+      return Array(CqlPartition(ep.spec, render(Seq(in)), required.json, aggs))
     }
     // Grouped aggregates may STILL fan out over token ranges: the group
     // rule guarantees every group binds the full partition key, all of a
@@ -1369,16 +1343,16 @@ class CqlScan(ep: CqlEndpoint, required: StructType, cols: Seq[String],
     // GLOBAL aggregate (no GROUP BY) must stay one task — per-range
     // results would be partials, but the scan's contract is final rows.
     val n =
-      if (where.nonEmpty || (aggKinds.nonEmpty && groupBy.isEmpty)) 1
+      if (where.nonEmpty || (aggs.nonEmpty && groupBy.isEmpty)) 1
       else WireFanout.effective(ep.fanout, hint)
-    if (n <= 1) Array(CqlPartition(ep.spec, render(Nil), required.json, aggKinds))
+    if (n <= 1) Array(CqlPartition(ep.spec, render(Nil), required.json, aggs))
     else {
       val tok = s"token(${ep.partitionKeys.mkString(", ")})"
       val bs = CqlToken.bounds(n)
       Array.tabulate(n) { i =>
         val lo = if (i == 0) Nil else Seq(s"$tok > ${bs(i - 1)}")
         val hi = if (i == n - 1) Nil else Seq(s"$tok <= ${bs(i)}")
-        CqlPartition(ep.spec, render(lo ++ hi), required.json, aggKinds)
+        CqlPartition(ep.spec, render(lo ++ hi), required.json, aggs)
       }
     }
   }
@@ -1387,7 +1361,7 @@ class CqlScan(ep: CqlEndpoint, required: StructType, cols: Seq[String],
 }
 
 final case class CqlPartition(spec: CqlEndpointSpec, cql: String,
-    requiredSchemaJson: String, aggKinds: Seq[String] = Nil) extends InputPartition
+    requiredSchemaJson: String, aggs: Seq[AggDef] = Nil) extends InputPartition
 
 class CqlReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
@@ -1396,19 +1370,19 @@ class CqlReaderFactory extends PartitionReaderFactory {
     val client = new CqlClientLite(p.spec.host, p.spec.port, p.spec.cfg)
     val conv = CatalystTypeConverters.createToCatalystConverter(required)
     val it = client.query(p.cql).map { case (cols, cells) =>
-      if (p.aggKinds.nonEmpty) {
+      if (p.aggs.nonEmpty) {
         // POSITIONAL agg decode: group columns, then per aggregate its
         // value — sums/avgs followed by a companion count(col) that
         // restores SQL's NULL over zero non-null values (CQL's is 0)
-        val groupCount = required.fields.length - p.aggKinds.size
+        val groupCount = required.fields.length - p.aggs.size
         val vals = scala.collection.mutable.ArrayBuffer.empty[Any]
         var ci = 0
         (0 until groupCount).foreach { _ =>
           vals += CqlWire.decodeValue(cells(ci), cols(ci)._2); ci += 1
         }
-        p.aggKinds.foreach { kind =>
+        p.aggs.foreach { d =>
           val v = CqlWire.decodeValue(cells(ci), cols(ci)._2); ci += 1
-          if (kind == "sum" || kind == "avg") {
+          if (d.fn == AggFn.Sum || d.fn == AggFn.Avg) {
             val n = CqlWire.decodeValue(cells(ci), cols(ci)._2)
               .asInstanceOf[Number].longValue(); ci += 1
             vals += (if (n == 0L) null else v)
@@ -1425,12 +1399,6 @@ class CqlReaderFactory extends PartitionReaderFactory {
         })).asInstanceOf[InternalRow]
       }
     }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = client.close()
-    }
+    IteratorReader(it, client.close())
   }
 }

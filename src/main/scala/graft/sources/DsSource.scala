@@ -191,9 +191,9 @@ object DsQuery {
   val MaxAggregations = 5
 
   /** Compile a pushed global aggregate into the aggregation-query body.
-    * `aggs`: (kind ∈ count|sum_long|sum_double|avg, property). */
+    * `aggs`: each pushed COUNT(*), SUM or AVG with the property it reads. */
   def aggregationJson(kind: String, props: Seq[String],
-      filters: Seq[PropFilter], aggs: Seq[(String, String)]): String = {
+      filters: Seq[PropFilter], aggs: Seq[(AggFn, String)]): String = {
     val root = M.createObjectNode()
     val aq = root.putObject("aggregationQuery")
     val nested = M.readTree(
@@ -208,21 +208,20 @@ object DsQuery {
         if (withProp) f.putObject("property").put("name", p)
       }
       k match {
-        case "count" => one(s"agg_$i", "count", withProp = false)
-        case "sum_long" | "sum_double" =>
+        case AggFn.Sum =>
           one(s"agg_$i", "sum", withProp = true)
           one(s"agg_${i}_n", "avg", withProp = true) // NULL ⇔ no valid values
-        case "avg" => one(s"agg_$i", "avg", withProp = true)
-        case other => throw new IllegalArgumentException(s"bad agg kind $other")
+        case AggFn.Avg => one(s"agg_$i", "avg", withProp = true)
+        case _ => one(s"agg_$i", "count", withProp = false) // COUNT(*)
       }
     }
     root.toString
   }
 
-  /** Aggregation aliases a spec costs on the wire (sums ride a
-    * companion avg). */
-  def aliasCount(aggs: Seq[(String, String)]): Int =
-    aggs.map(a => if (a._1.startsWith("sum")) 2 else 1).sum
+  /** Aggregation aliases the pushed functions cost on the wire (sums
+    * ride a companion avg). */
+  def aliasCount(aggs: Seq[AggDef]): Int =
+    aggs.map(a => if (a.fn == AggFn.Sum) 2 else 1).sum
 
   // ---- server-side validation + evaluation ------------------------------
 
@@ -429,54 +428,28 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
   private var limit: Int = -1
   private var skipN: Int = -1
   private var orders: Seq[(String, Boolean)] = Nil
-  private var agg: Option[Seq[(String, String, DataType)]] = None
+  private var agg: Option[Seq[AggDef]] = None
 
   /** GLOBAL count(*)/sum/avg translate to ONE `:runAggregationQuery`
     * ([[DsQuery.aggregationJson]] for the semantic guards); Datastore
     * has no GROUP BY, per-property counts, or min/max — those decline
     * and Spark polyfills over the entity scan. */
-  private def translateAgg(
+  private def pushedAgg(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Option[Seq[(String, String, DataType)]] = {
-    import org.apache.spark.sql.connector.expressions.aggregate._
-    if (a.groupByExpressions().nonEmpty) return None
-    def fieldOf(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Option[StructField] = e match {
-      case nr: NamedReference if nr.fieldNames().length == 1 =>
-        ep.schema.fields.find(_.name.equalsIgnoreCase(nr.fieldNames()(0)))
-      case _ => None
-    }
-    val kinds: Seq[Option[(String, String, DataType)]] =
-      a.aggregateExpressions().toSeq.map {
-        case _: CountStar => Some(("count", "", LongType))
-        case s: Sum if !s.isDistinct => fieldOf(s.column()).flatMap { f =>
-          f.dataType match {
-            case ShortType | IntegerType | LongType =>
-              Some(("sum_long", f.name, LongType))
-            case FloatType | DoubleType =>
-              Some(("sum_double", f.name, DoubleType))
-            case _ => None
-          }
-        }
-        case av: Avg if !av.isDistinct => fieldOf(av.column())
-          .filter(_.dataType.isInstanceOf[NumericType])
-          .map(f => ("avg", f.name, DoubleType))
-        case _ => None // COUNT(col), COUNT(DISTINCT), MIN/MAX: no API form
-      }
-    if (kinds.exists(_.isEmpty)) return None
-    val spec = kinds.map(_.get)
-    // the documented per-request aggregation cap (companions included)
-    if (DsQuery.aliasCount(spec.map(k => (k._1, k._2))) > DsQuery.MaxAggregations)
-      None
-    else Some(spec)
-  }
+      : Option[Seq[AggDef]] =
+    PushedAgg.translate(a, ep.schema, _ => false, {
+      case (AggFn.Sum | AggFn.Avg, _) => true
+      case _ => false // COUNT(col), COUNT(DISTINCT), MIN/MAX: no API form
+    }).map(_._2)
+      // the documented per-request aggregation cap (companions included)
+      .filter(DsQuery.aliasCount(_) <= DsQuery.MaxAggregations)
 
   override def supportCompletePushDown(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    translateAgg(a).isDefined
+    pushedAgg(a).isDefined
   override def pushAggregation(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    translateAgg(a) match {
+    pushedAgg(a) match {
       case Some(s) => agg = Some(s); true
       case None => false
     }
@@ -558,13 +531,11 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
   }
 
   override def build(): Scan = agg match {
-    case Some(spec) =>
-      val outSchema = StructType(spec.zipWithIndex.map { case ((_, _, dt), i) =>
-        StructField(s"agg_$i", dt, nullable = true) })
-      new DsScan(ep, outSchema,
+    case Some(aggs) =>
+      new DsScan(ep, PushedAgg.outSchema(ep.schema, Nil, aggs),
         DsQuery.aggregationJson(ep.spec.kind, Nil, accepted,
-          spec.map(k => (k._1, k._2))),
-        accepted, Nil, -1, pushed, hint, aggKinds = spec.map(_._1))
+          aggs.map(d => d.fn -> (if (d.col < 0) "" else ep.schema.fields(d.col).name))),
+        accepted, Nil, -1, pushed, hint, aggs = aggs)
     case None =>
       val props =
         if (required.fieldNames.sameElements(ep.schema.fieldNames)) Nil
@@ -582,7 +553,7 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
 class DsScan(ep: DsEndpoint, required: StructType, queryBody: String,
     accepted: Seq[DsQuery.PropFilter], orders: Seq[(String, Boolean)],
     limit: Int, pushed: Array[Filter], hint: Option[Int] = None,
-    aggKinds: Seq[String] = Nil) extends Scan with Batch {
+    aggs: Seq[AggDef] = Nil) extends Scan with Batch {
 
   override def readSchema(): StructType = required
 
@@ -605,9 +576,9 @@ class DsScan(ep: DsEndpoint, required: StructType, queryBody: String,
     * `key EQUAL null` so explicit-null keys survive the range tiling. */
   override def planInputPartitions(): Array[InputPartition] = {
     def single = Array[InputPartition](
-      DsPartition(ep.spec, queryBody, required.json, aggKinds))
+      DsPartition(ep.spec, queryBody, required.json, aggs))
     // a global aggregation result is ONE row — never range-tiled
-    if (aggKinds.nonEmpty) return single
+    if (aggs.nonEmpty) return single
     val ws = ep.splits.getOrElse(return single)
     if (orders.nonEmpty) return single
     val foreignIneq = accepted.exists(p =>
@@ -644,14 +615,14 @@ class DsScan(ep: DsEndpoint, required: StructType, queryBody: String,
 }
 
 final case class DsPartition(spec: DsEndpointSpec, queryBody: String,
-    requiredSchemaJson: String, aggKinds: Seq[String] = Nil) extends InputPartition
+    requiredSchemaJson: String, aggs: Seq[AggDef] = Nil) extends InputPartition
 
 class DsReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[DsPartition]
     val required = DataType.fromJson(p.requiredSchemaJson).asInstanceOf[StructType]
     val client = new HttpRestClient(p.spec.baseUrl, p.spec.cfg)
-    if (p.aggKinds.nonEmpty) return aggReader(p, required, client)
+    if (p.aggs.nonEmpty) return aggReader(p, required, client)
     val conv = CatalystTypeConverters.createToCatalystConverter(required)
     val M = EsDsl.M
     // LOOPBACK CURSOR CONTRACT (ADVICE r15): each continuation re-sends
@@ -685,13 +656,7 @@ class DsReaderFactory extends PartitionReaderFactory {
         DsQuery.valueOf(props.path(f.name), f.dataType)
       })).asInstanceOf[InternalRow]
     }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    IteratorReader(it)
   }
 
   /** One `:runAggregationQuery` round trip → one final row.
@@ -707,14 +672,13 @@ class DsReaderFactory extends PartitionReaderFactory {
       s"/ds/${p.spec.kind}:runAggregationQuery", p.queryBody))
     val props = resp.path("batch").path("aggregationResults")
       .path(0).path("aggregateProperties")
-    val vals: Seq[Any] = p.aggKinds.zipWithIndex.map { case (kind, i) =>
+    val vals: Seq[Any] = p.aggs.zipWithIndex.map { case (d, i) =>
       val v = props.path(s"agg_$i")
-      kind match {
-        case "count" => v.path("integerValue").asLong(): java.lang.Long
-        case "sum_long" | "sum_double" =>
+      d.fn match {
+        case AggFn.Sum =>
           val companionNull = props.path(s"agg_${i}_n").has("nullValue")
           if (companionNull) null
-          else if (kind == "sum_long") {
+          else if (d.out == LongType) {
             if (v.has("doubleValue"))
               throw new ArithmeticException(
                 "Datastore sum overflowed int64 and degraded to a double; " +
@@ -723,18 +687,12 @@ class DsReaderFactory extends PartitionReaderFactory {
           } else if (v.has("integerValue"))
             v.path("integerValue").asDouble(): java.lang.Double
           else v.path("doubleValue").asDouble(): java.lang.Double
-        case "avg" =>
+        case AggFn.Avg =>
           if (v.has("nullValue")) null
           else v.path("doubleValue").asDouble(): java.lang.Double
-        case other => throw new IllegalArgumentException(s"bad agg kind $other")
+        case _ => v.path("integerValue").asLong(): java.lang.Long // COUNT(*)
       }
     }
-    val row = conv(Row.fromSeq(vals)).asInstanceOf[InternalRow]
-    new PartitionReader[InternalRow] {
-      private var served = false
-      override def next(): Boolean = if (served) false else { served = true; true }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
+    IteratorReader(Iterator.single(conv(Row.fromSeq(vals)).asInstanceOf[InternalRow]))
   }
 }

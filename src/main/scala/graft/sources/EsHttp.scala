@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.aggregate._
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
@@ -361,7 +361,7 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
   private var required: StructType = ep.schema
   private var limit: Int = -1
   private var orders: Seq[(String, Boolean, Boolean)] = Nil // (target, desc, missingFirst)
-  private var agg: Option[(Seq[Int], Seq[(String, Int, DataType)])] = None
+  private var agg: Option[(Seq[Int], Seq[AggDef])] = None
   // TopN over a pushed aggregate: (group OUTPUT position, desc, nullsFirst)
   private var aggOrders: Seq[(Int, Boolean, Boolean)] = Nil
 
@@ -486,90 +486,43 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
     else Some(ep.schema.fieldNames.indexWhere(_.equalsIgnoreCase(parts(0))))
       .filter(_ >= 0)
   }
-  private def numeric(i: Int): Boolean =
-    ep.schema.fields(i).dataType.isInstanceOf[NumericType]
 
   /** [[serverField]] by schema index (agg targets). */
   private def serverFieldIdx(i: Int): Option[String] =
     serverField(ep.schema.fields(i).name)
 
-  private def translate(a: Aggregation): Option[(Seq[Int], Seq[(String, Int, DataType)])] = {
-    val groups = a.groupByExpressions().toSeq.map {
-      // a terms bucket needs per-document field data: text columns with
-      // no keyword sub-field decline (Spark plans the aggregate itself)
-      case nr: NamedReference => fieldIdx(nr).filter(serverFieldIdx(_).isDefined)
-      case _ => None
-    }
-    // one key -> terms buckets; two or more -> the composite aggregation
-    // (the public multi-source bucket API, paged by after_key)
-    if (groups.exists(_.isEmpty)) return None
-    val aggs = a.aggregateExpressions().toSeq.map {
-      case _: CountStar => Some(("doc_count", -1, LongType))
-      case c: Count if !c.isDistinct =>
-        c.column() match {
-          case nr: NamedReference =>
-            fieldIdx(nr).filter(serverFieldIdx(_).isDefined)
-              .map(("value_count", _, LongType))
-          case _ => None
-        }
-      // Distinct counts push as the ES `cardinality` aggregation ONLY
-      // under the explicit approx opt-in (the dialect's cardinality()/
-      // approx_count_distinct spelling — the reference maps exactly that
-      // function to the agg, sqltoes.go:599-611). ES cardinality is
-      // HLL++-backed: documented as "close to accurate" below
-      // precision_threshold and approximate beyond it — never a
-      // contractual exact count. SQL's exact COUNT(DISTINCT) therefore
-      // DECLINES here and polyfills engine-side over the hit scan; a
-      // silent approximation past 40k distincts per group is a
-      // scale-correctness bug this guard exists to prevent.
-      case c: Count if c.isDistinct =>
-        if (!approxDistinct) None
-        else c.column() match {
-          case nr: NamedReference =>
-            fieldIdx(nr).filter(serverFieldIdx(_).isDefined)
-              .map(("cardinality", _, LongType))
-          case _ => None
-        }
-      // numeric-only: real ES min/max metrics are numeric aggregations
-      case m: Min => m.column() match {
-        case nr: NamedReference =>
-          fieldIdx(nr).filter(numeric)
-            .map(i => ("min", i, ep.schema.fields(i).dataType))
-        case _ => None
-      }
-      case m: Max => m.column() match {
-        case nr: NamedReference =>
-          fieldIdx(nr).filter(numeric)
-            .map(i => ("max", i, ep.schema.fields(i).dataType))
-        case _ => None
-      }
-      case s: Sum if !s.isDistinct => s.column() match {
-        case nr: NamedReference => fieldIdx(nr).flatMap { i =>
-          ep.schema.fields(i).dataType match {
-            case ShortType | IntegerType | LongType => Some(("sum_long", i, LongType))
-            case FloatType | DoubleType => Some(("sum_double", i, DoubleType))
-            case _ => None
-          }
-        }
-        case _ => None
-      }
-      case av: Avg if !av.isDistinct => av.column() match {
-        case nr: NamedReference =>
-          fieldIdx(nr).filter(numeric).map(("avg", _, DoubleType))
-        case _ => None
-      }
-      case _ => None
-    }
-    if (aggs.exists(_.isEmpty)) None
-    else Some((groups.map(_.get), aggs.map(_.get)))
+  /** [[PushedAgg.translate]] under ES's rules. A terms bucket, a
+    * value_count and a cardinality need per-document field data: text
+    * columns with no keyword sub-field decline (Spark plans the aggregate
+    * itself). Min/max/avg are numeric metrics on real ES. Distinct counts
+    * push as the ES `cardinality` aggregation ONLY under the explicit
+    * approx opt-in (the dialect's cardinality()/approx_count_distinct
+    * spelling — the reference maps exactly that function to the agg,
+    * sqltoes.go:599-611). ES cardinality is HLL++-backed: documented as
+    * "close to accurate" below precision_threshold and approximate beyond
+    * it — never a contractual exact count. SQL's exact COUNT(DISTINCT)
+    * therefore DECLINES here and polyfills engine-side over the hit scan;
+    * a silent approximation past 40k distincts per group is a
+    * scale-correctness bug this guard exists to prevent. One group key
+    * rides terms buckets; two or more the composite aggregation (the
+    * public multi-source bucket API, paged by after_key). */
+  private def pushedAgg(a: Aggregation): Option[(Seq[Int], Seq[AggDef])] = {
+    import AggFn._
+    def hasField(f: StructField) = serverField(f.name).isDefined
+    PushedAgg.translate(a, ep.schema, hasField, {
+      case (Count, f) => hasField(f)
+      case (CountDistinct, f) => approxDistinct && hasField(f)
+      case (Min | Max | Avg, f) => f.dataType.isInstanceOf[NumericType]
+      case _ => true
+    })
   }
 
   /** ES aggs execute server-side and return FINAL buckets (the reference
     * consumes them as final results, esresults.go) — complete pushdown. */
   override def supportCompletePushDown(a: Aggregation): Boolean =
-    translate(a).isDefined
+    pushedAgg(a).isDefined
   override def pushAggregation(a: Aggregation): Boolean =
-    translate(a) match {
+    pushedAgg(a) match {
       case Some(t) => agg = Some(t); true
       case None => false
     }
@@ -582,39 +535,34 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
       })
     agg match {
       case Some((groupIdx, aggs)) =>
-        val outSchema = StructType(
-          groupIdx.map(i => ep.schema.fields(i)) ++
-            aggs.zipWithIndex.map { case ((_, _, dt), i) =>
-              StructField(s"agg_$i", dt, nullable = true) })
         val body = EsDsl.M.createObjectNode()
         body.set[ObjectNode]("query", dsl)
         body.put("size", 0)
         val metrics = EsDsl.M.createObjectNode()
-        aggs.zipWithIndex.foreach { case ((kind, idx, _), i) =>
-          if (kind != "doc_count") {
-            val m = metrics.putObject(s"agg_$i")
-            val esKind = kind match {
-              case "sum_long" | "sum_double" => "sum"
-              case other => other
-            }
-            val mo = m.putObject(esKind)
-            // translate() only accepts columns with a server target
-            val target = serverFieldIdx(idx).get
-            mo.put("field", target)
-            if (esKind == "cardinality")
-              mo.put("precision_threshold", ep.spec.cardinalityThreshold)
-            // ES sum over zero docs is 0.0, SQL SUM is NULL: a companion
-            // value_count disambiguates (the reader nulls a 0-count sum)
-            if (esKind == "sum")
-              metrics.putObject(s"agg_${i}_n").putObject("value_count")
-                .put("field", target)
-          }
+        // COUNT(*) needs no metric: it is the bucket's doc_count
+        aggs.zipWithIndex.filter(_._1.col >= 0).foreach { case (d, i) =>
+          val mo = metrics.putObject(s"agg_$i").putObject(d.fn match {
+            case AggFn.Count => "value_count"
+            case AggFn.CountDistinct => "cardinality"
+            case AggFn.Sum => "sum"
+            case _ => d.tag
+          })
+          // pushedAgg() only accepts columns with a server target
+          val target = serverFieldIdx(d.col).get
+          mo.put("field", target)
+          if (d.fn == AggFn.CountDistinct)
+            mo.put("precision_threshold", ep.spec.cardinalityThreshold)
+          // ES sum over zero docs is 0.0, SQL SUM is NULL: a companion
+          // value_count disambiguates (the reader nulls a 0-count sum)
+          if (d.fn == AggFn.Sum)
+            metrics.putObject(s"agg_${i}_n").putObject("value_count")
+              .put("field", target)
         }
         val aggsNode = body.putObject("aggs")
         groupIdx match {
           case Seq(g) if aggOrders.isEmpty =>
             val by = aggsNode.putObject("by")
-            // translate() only accepts group keys with a server target
+            // pushedAgg() only accepts group keys with a server target
             val groupTarget = serverFieldIdx(g).get
             by.putObject("terms").put("field", groupTarget)
               .put("size", Int.MaxValue)
@@ -661,9 +609,9 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
             }
             if (!metrics.isEmpty) by.set[ObjectNode]("aggs", metrics)
         }
-        new EsScan(ep, required = outSchema, dslBody = body.toString,
-          pushed = pushed, aggMode = true,
-          aggKinds = aggs.map(_._1), groupCount = groupIdx.size,
+        new EsScan(ep, required = PushedAgg.outSchema(ep.schema, groupIdx, aggs),
+          dslBody = body.toString, pushed = pushed, aggMode = true,
+          aggs = aggs, groupCount = groupIdx.size,
           limit = if (aggOrders.nonEmpty) limit else -1,
           hint = hint, sorted = aggOrders.nonEmpty)
       case None =>
@@ -678,14 +626,14 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
           }
         }
         new EsScan(ep, required, body.toString, pushed,
-          aggMode = false, aggKinds = Nil, groupCount = 0, limit = limit,
+          aggMode = false, aggs = Nil, groupCount = 0, limit = limit,
           hint = hint, sorted = orders.nonEmpty)
     }
   }
 }
 
 class EsScan(ep: EsEndpoint, required: StructType, dslBody: String,
-    pushed: Array[Filter], aggMode: Boolean, aggKinds: Seq[String],
+    pushed: Array[Filter], aggMode: Boolean, aggs: Seq[AggDef],
     groupCount: Int, limit: Int, hint: Option[Int] = None,
     sorted: Boolean = false)
   extends Scan with Batch with WireRuntimeFilter[JsonNode] {
@@ -805,7 +753,7 @@ class EsScan(ep: EsEndpoint, required: StructType, dslBody: String,
     val body = effectiveBody // static DSL ∧ runtime semi-join terms
     Array.tabulate(n) { i =>
       EsPartition(ep.spec, body, ep.schema.json, required.json,
-        aggMode, aggKinds, groupCount, limit,
+        aggMode, aggs, groupCount, limit,
         sliceId = i, sliceMax = n, pitId = pitId, sorted = sorted)
     }
   }
@@ -815,7 +763,7 @@ class EsScan(ep: EsEndpoint, required: StructType, dslBody: String,
 
 final case class EsPartition(spec: EsEndpointSpec, dslBody: String,
     fullSchemaJson: String, requiredSchemaJson: String,
-    aggMode: Boolean, aggKinds: Seq[String], groupCount: Int,
+    aggMode: Boolean, aggs: Seq[AggDef], groupCount: Int,
     limit: Int, sliceId: Int = 0, sliceMax: Int = 1,
     pitId: Option[String] = None, sorted: Boolean = false) extends InputPartition
 
@@ -885,8 +833,7 @@ class EsReaderFactory extends PartitionReaderFactory {
               val keyObj = b.path("key")
               val keys = (0 until p.groupCount).map(i =>
                 decodeKey(keyObj.path(s"k$i"), required.fields(i).dataType))
-              Row.fromSeq(keys ++ p.aggKinds.zipWithIndex.map { case (kind, i) =>
-                metric(b, kind, i, required.fields(p.groupCount + i).dataType) })
+              Row.fromSeq(keys ++ p.aggs.zipWithIndex.map { case (d, i) => metric(b, d, i) })
             }
             val ak = byN.path("after_key")
             if (buckets.size < pageSize || ak.isMissingNode || ak.isNull) done = true
@@ -903,26 +850,21 @@ class EsReaderFactory extends PartitionReaderFactory {
             val buckets = resp.path("aggregations").path("by").path("buckets")
             val keyed = buckets.elements().asScala.map { b =>
               val key = LineCodec.parse(b.get("key").asText(), required.fields(0).dataType)
-              Row.fromSeq(key +: p.aggKinds.zipWithIndex.map { case (kind, i) =>
-                metric(b, kind, i, required.fields(p.groupCount + i).dataType)
-              })
+              Row.fromSeq(key +: p.aggs.zipWithIndex.map { case (d, i) => metric(b, d, i) })
             }
             // the `missing` sibling carries the SQL NULL group
             val nullsNode = resp.path("aggregations").path("nulls")
             val nullGroup =
               if (nullsNode.path("doc_count").asLong(0L) > 0)
                 Iterator.single(Row.fromSeq(
-                  null +: p.aggKinds.zipWithIndex.map { case (kind, i) =>
-                    metric(nullsNode, kind, i, required.fields(p.groupCount + i).dataType)
-                  }))
+                  null +: p.aggs.zipWithIndex.map { case (d, i) => metric(nullsNode, d, i) }))
               else Iterator.empty
             keyed ++ nullGroup
           } else {
             val aggsNode = resp.path("aggregations")
-            Iterator.single(Row.fromSeq(p.aggKinds.zipWithIndex.map { case (kind, i) =>
-              if (kind == "doc_count")
-                resp.path("hits").path("total").path("value").asLong()
-              else metric(aggsNode, kind, i, required.fields(i).dataType)
+            Iterator.single(Row.fromSeq(p.aggs.zipWithIndex.map { case (d, i) =>
+              if (d.col < 0) resp.path("hits").path("total").path("value").asLong()
+              else metric(aggsNode, d, i)
             }))
           }
         rows.map(conv(_).asInstanceOf[InternalRow])
@@ -1070,32 +1012,25 @@ class EsReaderFactory extends PartitionReaderFactory {
           conv(Row.fromSeq(row.toSeq)).asInstanceOf[InternalRow]
         }
       }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    IteratorReader(it)
   }
 
-  private def metric(node: JsonNode, kind: String, i: Int, dt: DataType): Any =
-    kind match {
-      case "doc_count" => node.path("doc_count").asLong()
-      // ES sum over zero present values is 0.0 where SQL SUM is NULL —
-      // the companion value_count decides which it was
-      case "sum_long" | "sum_double"
-        if node.path(s"agg_${i}_n").path("value").asLong(-1L) == 0L => null
-      case _ =>
-        val v = node.path(s"agg_$i").path("value")
-        if (v.isNull || v.isMissingNode) null
-        else dt match {
-          case LongType => v.asLong()
-          case IntegerType => v.asInt()
-          case DoubleType => v.asDouble()
-          case FloatType => v.asDouble().toFloat
-          case StringType => v.asText()
-          case other => LineCodec.parse(v.asText(), other)
-        }
+  private def metric(node: JsonNode, d: AggDef, i: Int): Any =
+    if (d.col < 0) node.path("doc_count").asLong() // COUNT(*)
+    // ES sum over zero present values is 0.0 where SQL SUM is NULL —
+    // the companion value_count decides which it was
+    else if (d.fn == AggFn.Sum &&
+      node.path(s"agg_${i}_n").path("value").asLong(-1L) == 0L) null
+    else {
+      val v = node.path(s"agg_$i").path("value")
+      if (v.isNull || v.isMissingNode) null
+      else d.out match {
+        case LongType => v.asLong()
+        case IntegerType => v.asInt()
+        case DoubleType => v.asDouble()
+        case FloatType => v.asDouble().toFloat
+        case StringType => v.asText()
+        case other => LineCodec.parse(v.asText(), other)
+      }
     }
 }

@@ -7,11 +7,11 @@ import scala.collection.mutable
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.expressions.{Expression, NamedReference, NullOrdering, SortDirection, SortOrder}
-import org.apache.spark.sql.connector.expressions.aggregate._
+import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 
 /** Predicate accept-list + evaluator for the file connector.
   *
@@ -259,11 +259,6 @@ final case class BucketedFilePartition(inner: FilePartition, bucketId: Int)
       Array[Any](bucketId))
 }
 
-/** One pushed aggregate function, indexed into the scan's parse schema.
-  * kinds: count_star | count | min | max | sum_long | sum_double | avg
-  * (avg only under complete pushdown — partials can't merge it). */
-final case class AggDef(kind: String, colIdx: Int, resultType: DataType)
-
 class FileScanBuilder(
     table: FileTable,
     maxFilesPerTrigger: Option[Int] = None) extends ScanBuilder
@@ -357,52 +352,20 @@ class FileScanBuilder(
     }
   }
 
-  /** Translate a DSv2 aggregation to (group indices, agg defs) over the
-    * table schema; None = contains something the connector can't compute
-    * (declined — Spark keeps its aggregate). */
-  private def translateAgg(agg: Aggregation): Option[(Seq[Int], Seq[AggDef])] = {
-    def fieldIdx(e: Expression): Option[Int] = e match {
-      case nr: NamedReference if nr.fieldNames().length == 1 =>
-        val i = table.schema0.fieldNames.indexWhere(
-          _.equalsIgnoreCase(nr.fieldNames()(0)))
-        if (i >= 0) Some(i) else None
-      case _ => None
-    }
-    def isNumeric(i: Int): Boolean = table.schema0.fields(i).dataType match {
-      case org.apache.spark.sql.types.IntegerType | LongType |
-           org.apache.spark.sql.types.ShortType | DoubleType |
-           org.apache.spark.sql.types.FloatType => true
+  /** [[PushedAgg.translate]] over the table schema: any group column;
+    * COUNT(col)/MIN/MAX over any column; avg only under the complete
+    * pushdown profile, over Int/Long/Short/Double/Float — a sum/count pair
+    * can merge across partials, a finished average cannot. */
+  private def pushedAgg(agg: Aggregation): Option[(Seq[Int], Seq[AggDef])] = {
+    import AggFn._
+    PushedAgg.translate(agg, table.schema0, _ => true, {
+      case (Count | Min | Max | Sum, _) => true
+      case (Avg, f) => passthrough && (f.dataType match {
+        case IntegerType | LongType | ShortType | DoubleType | FloatType => true
+        case _ => false
+      })
       case _ => false
-    }
-    val groups = agg.groupByExpressions().toSeq.map(fieldIdx)
-    if (groups.exists(_.isEmpty)) return None
-    val aggs: Seq[Option[AggDef]] = agg.aggregateExpressions().toSeq.map {
-      case _: CountStar => Some(AggDef("count_star", -1, LongType))
-      case c: Count if !c.isDistinct =>
-        fieldIdx(c.column()).map(AggDef("count", _, LongType))
-      case m: Min =>
-        fieldIdx(m.column()).map(i => AggDef("min", i, table.schema0.fields(i).dataType))
-      case m: Max =>
-        fieldIdx(m.column()).map(i => AggDef("max", i, table.schema0.fields(i).dataType))
-      case s: Sum if !s.isDistinct =>
-        fieldIdx(s.column()).flatMap { i =>
-          table.schema0.fields(i).dataType match {
-            case org.apache.spark.sql.types.IntegerType | LongType |
-                 org.apache.spark.sql.types.ShortType =>
-              Some(AggDef("sum_long", i, LongType))
-            case DoubleType | org.apache.spark.sql.types.FloatType =>
-              Some(AggDef("sum_double", i, DoubleType))
-            case _ => None
-          }
-        }
-      // avg only under the complete-pushdown profile: a sum/count pair can
-      // merge across partials, a finished average cannot
-      case a: Avg if !a.isDistinct && passthrough =>
-        fieldIdx(a.column()).filter(isNumeric).map(AggDef("avg", _, DoubleType))
-      case _ => None // distinct/decimal sums/etc: declined
-    }
-    if (aggs.exists(_.isEmpty)) None
-    else Some((groups.map(_.get), aggs.map(_.get)))
+    })
   }
 
   /** Complete pushdown (reference: the BigQuery backend executes the whole
@@ -410,7 +373,7 @@ class FileScanBuilder(
     * FINAL results and Spark plans no aggregate at all. Only the
     * passthrough profile claims this; "full" stays partial. */
   override def supportCompletePushDown(agg: Aggregation): Boolean =
-    passthrough && translateAgg(agg).isDefined
+    passthrough && pushedAgg(agg).isDefined
 
   /** ES-style aggregate pushdown (reference: SQL→ES aggs,
     * backends/elasticsearch/sqltoes.go:285-365, and the `hits.total`
@@ -423,19 +386,15 @@ class FileScanBuilder(
     * BigTable) have no server-side aggregation and decline. */
   override def pushAggregation(agg: Aggregation): Boolean = {
     if (table.source.pushdown != "full" && !passthrough) return false
-    translateAgg(agg) match {
+    pushedAgg(agg) match {
       case Some(t) => aggregation = Some(t); true
       case None => false
     }
   }
 
-  /** Output schema of the pushed aggregate: group columns then agg_i. */
   private def aggOutSchema: StructType = {
     val (groupIdx, aggs) = aggregation.get
-    StructType(
-      groupIdx.map(i => table.schema0.fields(i)) ++
-        aggs.zipWithIndex.map { case (a, i) =>
-          StructField(s"agg_$i", a.resultType, nullable = true) })
+    PushedAgg.outSchema(table.schema0, groupIdx, aggs)
   }
 
   /** Datastore-style get-by-key short-circuit (reference: key-equality
@@ -467,7 +426,7 @@ class FileScanBuilder(
       // top-level column)
       val filterRefs = pushed.flatMap(_.references)
         .map(_.split('.').head.toLowerCase).toSet
-      val needed = (groupIdx ++ aggs.map(_.colIdx).filter(_ >= 0)).toSet
+      val needed = (groupIdx ++ aggs.map(_.col).filter(_ >= 0)).toSet
       val parseFields = table.schema0.fields.zipWithIndex.filter { case (f, i) =>
         needed.contains(i) || filterRefs.contains(f.name.toLowerCase)
       }
@@ -475,8 +434,7 @@ class FileScanBuilder(
       def reIdx(i: Int): Int =
         parseSchema.fieldNames.indexWhere(_.equalsIgnoreCase(table.schema0.fields(i).name))
       val groups2 = groupIdx.map(reIdx)
-      val aggs2 = aggs.map(a =>
-        if (a.colIdx < 0) a else a.copy(colIdx = reIdx(a.colIdx)))
+      val aggs2 = aggs.map(a => if (a.col < 0) a else a.copy(col = reIdx(a.col)))
       val outSchema = aggOutSchema
       // passthrough consumed sort+limit: resolved against the agg output
       val topNSpecs = sortKeys.map { case (name, desc, nf) =>
@@ -568,7 +526,7 @@ class FileAggScanImpl(
       s"files=${files.size}${if (prunedFrom >= 0) s"/$prunedFrom key-pruned" else ""} " +
       s"Complete: $complete, " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
-      s"PushedAggregates: [${aggs.map(_.kind).mkString(", ")}], " +
+      s"PushedAggregates: [${aggs.map(_.tag).mkString(", ")}], " +
       s"PushedGroupBy: [${groupIdx.mkString(", ")}], " +
       s"PushedTopN: ${if (topN.nonEmpty) s"[${topN.mkString(", ")}] limit=$limit" else "none"}"
 
@@ -609,46 +567,46 @@ class FileAggReaderFactory extends PartitionReaderFactory {
     val outSchema = DataType.fromJson(p.outputSchemaJson).asInstanceOf[StructType]
     val codec = FileCodec.forFormat(p.format)
 
-    def newAcc(): Array[Any] = p.aggs.map {
-      case AggDef("count_star" | "count", _, _) => java.lang.Long.valueOf(0L)
-      case AggDef("avg", _, _) => Array[Any](0.0, 0L) // running (sum, count)
-      case _ => null // min / max / sums start absent
-    }
+    def newAcc(): Array[Any] = p.aggs.map(_.fn match {
+      case AggFn.Avg => Array[Any](0.0, 0L) // running (sum, count)
+      case AggFn.Min | AggFn.Max | AggFn.Sum => null // start absent
+      case _ => java.lang.Long.valueOf(0L) // counts
+    })
     def update(acc: Array[Any], row: Array[Any]): Unit = {
       var i = 0
       while (i < p.aggs.length) {
         val a = p.aggs(i)
-        val v = if (a.colIdx >= 0) row(a.colIdx) else null
-        a.kind match {
-          case "count_star" =>
-            acc(i) = java.lang.Long.valueOf(acc(i).asInstanceOf[java.lang.Long] + 1L)
-          case "count" =>
+        val v = if (a.col >= 0) row(a.col) else null
+        a.fn match {
+          case AggFn.Count =>
             if (v != null)
               acc(i) = java.lang.Long.valueOf(acc(i).asInstanceOf[java.lang.Long] + 1L)
-          case "min" =>
+          case AggFn.Min =>
             if (v != null && (acc(i) == null || FilterEval.cmp(v, acc(i)).exists(_ < 0)))
               acc(i) = v
-          case "max" =>
+          case AggFn.Max =>
             if (v != null && (acc(i) == null || FilterEval.cmp(v, acc(i)).exists(_ > 0)))
               acc(i) = v
-          case "sum_long" =>
+          case AggFn.Sum if a.out == LongType =>
             if (v != null) {
               val add = v.asInstanceOf[Number].longValue()
               acc(i) = java.lang.Long.valueOf(
                 (if (acc(i) == null) 0L else acc(i).asInstanceOf[java.lang.Long].longValue()) + add)
             }
-          case "sum_double" =>
+          case AggFn.Sum =>
             if (v != null) {
               val add = v.asInstanceOf[Number].doubleValue()
               acc(i) = java.lang.Double.valueOf(
                 (if (acc(i) == null) 0.0 else acc(i).asInstanceOf[java.lang.Double].doubleValue()) + add)
             }
-          case "avg" =>
+          case AggFn.Avg =>
             if (v != null) {
               val pair = acc(i).asInstanceOf[Array[Any]]
               pair(0) = pair(0).asInstanceOf[Double] + v.asInstanceOf[Number].doubleValue()
               pair(1) = pair(1).asInstanceOf[Long] + 1L
             }
+          case _ => // COUNT(*)
+            acc(i) = java.lang.Long.valueOf(acc(i).asInstanceOf[java.lang.Long] + 1L)
         }
         i += 1
       }
@@ -667,8 +625,8 @@ class FileAggReaderFactory extends PartitionReaderFactory {
       groups.put(Nil, newAcc()) // neutral partial for a filtered-empty partition
 
     def finish(acc: Array[Any]): Seq[Any] = p.aggs.indices.map { i =>
-      (p.aggs(i).kind, acc(i)) match {
-        case ("avg", pair: Array[Any]) =>
+      (p.aggs(i).fn, acc(i)) match {
+        case (AggFn.Avg, pair: Array[Any]) =>
           val cnt = pair(1).asInstanceOf[Long]
           if (cnt == 0L) null
           else java.lang.Double.valueOf(pair(0).asInstanceOf[Double] / cnt)
@@ -686,13 +644,7 @@ class FileAggReaderFactory extends PartitionReaderFactory {
       outRows = outRows.drop(p.offset)
     val conv = CatalystTypeConverters.createToCatalystConverter(outSchema)
     val it = outRows.map(r => conv(Row.fromSeq(r.toSeq)).asInstanceOf[InternalRow])
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    IteratorReader(it)
   }
 }
 
@@ -914,13 +866,7 @@ class FilePartitionReaderFactory extends PartitionReaderFactory {
       }
       toCatalyst(Row.fromSeq(out)).asInstanceOf[InternalRow]
     }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) { current = rows.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = in.close()
-    }
+    IteratorReader(rows, in.close())
   }
 }
 
@@ -947,12 +893,6 @@ class MetaReaderFactory extends PartitionReaderFactory {
     val rows = partition.asInstanceOf[MetaRowsPartition].rows
     val conv = CatalystTypeConverters.createToCatalystConverter(FilesMetaTable.Schema)
     val it = rows.iterator.map(r => conv(Row.fromSeq(r.toSeq)).asInstanceOf[InternalRow])
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    IteratorReader(it)
   }
 }

@@ -377,12 +377,6 @@ class KubeReaderFactory extends PartitionReaderFactory {
         }
       })).asInstanceOf[InternalRow]
     }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    IteratorReader(it)
   }
 }

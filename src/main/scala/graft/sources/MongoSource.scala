@@ -273,12 +273,7 @@ object MongoDsl {
   */
 object MongoAgg {
 
-  import org.apache.spark.sql.connector.expressions.NamedReference
-  import org.apache.spark.sql.connector.expressions.aggregate._
-
-  /** One pushed aggregate: (kind, schema column index, output type).
-    * Kinds: count_star, count_field, min, max, sum_long, sum_double, avg. */
-  type Spec = (String, Int, DataType)
+  import AggFn._
 
   /** Wire-safe scalar types for group keys and min/max (the BSON subset
     * the codec round-trips exactly; BSON binary UTF-8 string order ==
@@ -289,43 +284,15 @@ object MongoAgg {
     case _ => false
   }
 
-  def translate(a: Aggregation, schema: StructType): Option[(Seq[Int], Seq[Spec])] = {
-    def fieldIdx(col: org.apache.spark.sql.connector.expressions.Expression): Option[Int] =
-      col match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          Some(schema.fieldNames.indexWhere(_.equalsIgnoreCase(nr.fieldNames()(0))))
-            .filter(_ >= 0)
-        case _ => None
-      }
-    val groups = a.groupByExpressions().toSeq.map(
-      fieldIdx(_).filter(i => orderable(schema.fields(i).dataType) ||
-        schema.fields(i).dataType == BooleanType))
-    if (groups.exists(_.isEmpty)) return None
-    val aggs: Seq[Option[Spec]] = a.aggregateExpressions().toSeq.map {
-      case _: CountStar => Some(("count_star", -1, LongType))
-      case c: Count if !c.isDistinct =>
-        fieldIdx(c.column()).map(("count_field", _, LongType))
-      case m: Min => fieldIdx(m.column())
-        .filter(i => orderable(schema.fields(i).dataType))
-        .map(i => ("min", i, schema.fields(i).dataType))
-      case m: Max => fieldIdx(m.column())
-        .filter(i => orderable(schema.fields(i).dataType))
-        .map(i => ("max", i, schema.fields(i).dataType))
-      case s: Sum if !s.isDistinct => fieldIdx(s.column()).flatMap { i =>
-        schema.fields(i).dataType match {
-          case ShortType | IntegerType | LongType => Some(("sum_long", i, LongType))
-          case FloatType | DoubleType => Some(("sum_double", i, DoubleType))
-          case _ => None
-        }
-      }
-      case av: Avg if !av.isDistinct => fieldIdx(av.column())
-        .filter(i => schema.fields(i).dataType.isInstanceOf[NumericType] &&
-          orderable(schema.fields(i).dataType))
-        .map(("avg", _, DoubleType))
-      case _ => None // COUNT(DISTINCT), general expressions: polyfill
-    }
-    if (aggs.exists(_.isEmpty)) None
-    else Some((groups.map(_.get), aggs.map(_.get)))
+  /** [[PushedAgg.translate]]'s group rule: orderable or Boolean keys. */
+  val groupOk: StructField => Boolean =
+    f => orderable(f.dataType) || f.dataType == BooleanType
+
+  /** MIN/MAX/AVG over orderable columns; COUNT(DISTINCT) declines. */
+  val accepts: (AggFn, StructField) => Boolean = {
+    case (Count | Sum, _) => true
+    case (Min | Max | Avg, f) => orderable(f.dataType)
+    case _ => false
   }
 
   /** `{$sum: {$cond: [{$ne: ["$f", null]}, 1, 0]}}` — non-null count. */
@@ -334,24 +301,21 @@ object MongoAgg {
       BDoc(Seq("$ne" -> Seq(s"$$$field", null))),
       1: java.lang.Integer, 0: java.lang.Integer)))))
 
-  /** Compile the pushed aggregate into pipeline stages. */
-  def pipeline(filter: BDoc, groups: Seq[String], aggs: Seq[(String, String)]): Seq[BDoc] = {
+  /** Compile the pushed aggregate into pipeline stages; each function
+    * comes with the field it reads. */
+  def pipeline(filter: BDoc, groups: Seq[String], aggs: Seq[(AggDef, String)]): Seq[BDoc] = {
     val id: Any =
       if (groups.isEmpty) null
       else BDoc(groups.map(g => g -> (s"$$$g": Any)))
-    val accs: Seq[(String, Any)] = aggs.zipWithIndex.flatMap { case ((kind, f), i) =>
+    val accs: Seq[(String, Any)] = aggs.zipWithIndex.flatMap { case ((d, f), i) =>
       val name = s"agg_$i"
-      kind match {
-        case "count_star" =>
-          Seq(name -> BDoc(Seq("$sum" -> (1: java.lang.Integer))))
-        case "count_field" => Seq(name -> nonNullCount(f))
-        case "min" => Seq(name -> BDoc(Seq("$min" -> s"$$$f")))
-        case "max" => Seq(name -> BDoc(Seq("$max" -> s"$$$f")))
-        case "avg" => Seq(name -> BDoc(Seq("$avg" -> s"$$$f")))
-        case "sum_long" | "sum_double" =>
+      d.fn match {
+        case Count => Seq(name -> nonNullCount(f))
+        case Min | Max | Avg => Seq(name -> BDoc(Seq(s"$$${d.tag}" -> s"$$$f")))
+        case Sum =>
           Seq(name -> BDoc(Seq("$sum" -> s"$$$f")),
             s"${name}_n" -> nonNullCount(f))
-        case other => throw new IllegalArgumentException(s"bad agg kind $other")
+        case _ => Seq(name -> BDoc(Seq("$sum" -> (1: java.lang.Integer)))) // COUNT(*)
       }
     }
     val group = BDoc(Seq("$group" -> BDoc(("_id" -> id) +: accs)))
@@ -1300,7 +1264,7 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
   private var limit: Int = -1
   private var skip: Int = -1
   private var sortDoc: Option[BDoc] = None
-  private var agg: Option[(Seq[Int], Seq[MongoAgg.Spec])] = None
+  private var agg: Option[(Seq[Int], Seq[AggDef])] = None
   private var joinSpec: Option[MongoJoinSpec] = None
 
   // ---- same-server join pushdown ($lookup) ---------------------------------
@@ -1549,14 +1513,16 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
     * aggregate arriving ON TOP of a pushed join resolves against the
     * JOINED output schema and appends its $group after the $lookup
     * pipeline — fact⨝dim→aggregate entirely server-side. */
-  private def aggResolveSchema: StructType =
-    joinSpec.map(_.outSchema).getOrElse(ep.schema)
+  private def pushedAgg(a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
+      : Option[(Seq[Int], Seq[AggDef])] =
+    PushedAgg.translate(a, joinSpec.map(_.outSchema).getOrElse(ep.schema),
+      MongoAgg.groupOk, MongoAgg.accepts)
   override def supportCompletePushDown(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    MongoAgg.translate(a, aggResolveSchema).isDefined
+    pushedAgg(a).isDefined
   override def pushAggregation(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
-    MongoAgg.translate(a, aggResolveSchema) match {
+    pushedAgg(a) match {
       case Some(t) => agg = Some(t); true
       case None => false
     }
@@ -1626,17 +1592,12 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
           val outNames = j.outSchema.fieldNames.toSeq
           val project = projectStage(j.cols.map(c => (c._1, c._2, c._3)))
           val groupNames = groupIdx.map(outNames(_))
-          val outSchema = StructType(
-            groupIdx.map(i => j.outSchema.fields(i)) ++
-              aggs.zipWithIndex.map { case ((_, _, dt), i) =>
-                StructField(s"agg_$i", dt, nullable = true) })
           val aggStages = MongoAgg.pipeline(BDoc.empty, groupNames,
-            aggs.map { case (kind, idx, _) =>
-              kind -> (if (idx < 0) "" else outNames(idx)) })
-          return new MongoScan(epScan, outSchema, driveFilterDoc, None, sortDoc, limit,
-            pushed, hint,
+            aggs.map(d => d -> (if (d.col < 0) "" else outNames(d.col))))
+          return new MongoScan(epScan, PushedAgg.outSchema(j.outSchema, groupIdx, aggs),
+            driveFilterDoc, None, sortDoc, limit, pushed, hint,
             aggPipeline = Some(((joinStages :+ project) ++ aggStages) ++ windowStages),
-            aggKinds = aggs.map(_._1), groupFields = groupNames, joined = true)
+            aggs = aggs, groupFields = groupNames, joined = true)
         case None =>
           // `required` was re-pruned over the JOINED output after the push
           val out = required.fields.toSeq.map { f =>
@@ -1647,22 +1608,17 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
           return new MongoScan(epScan, required, driveFilterDoc, None, sortDoc, limit,
             pushed, hint,
             aggPipeline = Some((joinStages :+ projectStage(out)) ++ windowStages),
-            joined = true) // aggKinds empty => plain row decode
+            joined = true) // aggs empty => plain row decode
       }
     }
     agg match {
       case Some((groupIdx, aggs)) =>
         val groupNames = groupIdx.map(ep.schema.fields(_).name)
-        val outSchema = StructType(
-          groupIdx.map(i => ep.schema.fields(i)) ++
-            aggs.zipWithIndex.map { case ((_, _, dt), i) =>
-              StructField(s"agg_$i", dt, nullable = true) })
         val stages = MongoAgg.pipeline(filter, groupNames,
-          aggs.map { case (kind, idx, _) =>
-            kind -> (if (idx < 0) "" else ep.schema.fields(idx).name) })
-        new MongoScan(ep, outSchema, filter, None, sortDoc, limit, pushed, hint,
-          aggPipeline = Some(stages ++ windowStages), aggKinds = aggs.map(_._1),
-          groupFields = groupNames)
+          aggs.map(d => d -> (if (d.col < 0) "" else ep.schema.fields(d.col).name)))
+        new MongoScan(ep, PushedAgg.outSchema(ep.schema, groupIdx, aggs), filter, None,
+          sortDoc, limit, pushed, hint, aggPipeline = Some(stages ++ windowStages),
+          aggs = aggs, groupFields = groupNames)
       case None =>
         val projection =
           if (required.fieldNames.sameElements(ep.schema.fieldNames)) None
@@ -1679,7 +1635,7 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
 class MongoScan(ep: MongoEndpoint, required: StructType, filter: BDoc,
     projection: Option[BDoc], sort: Option[BDoc], limit: Int,
     pushed: Array[Filter], hint: Option[Int] = None,
-    aggPipeline: Option[Seq[BDoc]] = None, aggKinds: Seq[String] = Nil,
+    aggPipeline: Option[Seq[BDoc]] = None, aggs: Seq[AggDef] = Nil,
     groupFields: Seq[String] = Nil, skip: Int = -1, joined: Boolean = false)
   extends Scan with Batch with WireRuntimeFilter[Any] {
 
@@ -1756,7 +1712,7 @@ class MongoScan(ep: MongoEndpoint, required: StructType, filter: BDoc,
       return Array(MongoPartition(ep.spec, Bson.encode(this.filter), None, None, -1,
         required.json,
         pipelineBson = Some(Bson.encode(BDoc(Seq("pipeline" -> staged)))),
-        aggKinds = aggKinds, groupFields = groupFields))
+        aggs = aggs, groupFields = groupFields))
     }
     // a key-pinning pushed predicate ships as ONE targeted find, not
     // N sockets of which N-1 are provably empty (WireFanout.pinsKey)
@@ -1791,7 +1747,7 @@ class MongoScan(ep: MongoEndpoint, required: StructType, filter: BDoc,
 final case class MongoPartition(spec: MongoEndpointSpec, filterBson: Array[Byte],
     projectionBson: Option[Array[Byte]], sortBson: Option[Array[Byte]],
     limit: Int, requiredSchemaJson: String,
-    pipelineBson: Option[Array[Byte]] = None, aggKinds: Seq[String] = Nil,
+    pipelineBson: Option[Array[Byte]] = None, aggs: Seq[AggDef] = Nil,
     groupFields: Seq[String] = Nil, skip: Int = -1) extends InputPartition
 
 class MongoReaderFactory extends PartitionReaderFactory {
@@ -1808,18 +1764,18 @@ class MongoReaderFactory extends PartitionReaderFactory {
         // SQL's GLOBAL aggregate over zero input rows is ONE row
         // (count 0, null sums); Mongo's $group over an empty stream
         // emits NO document — synthesize the neutral row. Grouped
-        // aggregates and join pipelines (no aggKinds) correctly
+        // aggregates and join pipelines (no aggs) correctly
         // return zero rows on both sides.
-        if (p.aggKinds.isEmpty || p.groupFields.nonEmpty || raw.hasNext) raw
+        if (p.aggs.isEmpty || p.groupFields.nonEmpty || raw.hasNext) raw
         else Iterator.single(BDoc(
-          ("_id" -> (null: Any)) +: p.aggKinds.zipWithIndex.flatMap {
-            case (k, i) => k match {
-              case "count_star" | "count_field" =>
-                Seq(s"agg_$i" -> (0L: java.lang.Long): (String, Any))
-              case "sum_long" | "sum_double" =>
+          ("_id" -> (null: Any)) +: p.aggs.zipWithIndex.flatMap {
+            case (d, i) => d.fn match {
+              case AggFn.Sum =>
                 Seq(s"agg_$i" -> (0L: java.lang.Long): (String, Any),
                   s"agg_${i}_n" -> (0L: java.lang.Long): (String, Any))
-              case _ => Seq(s"agg_$i" -> (null: Any): (String, Any))
+              case AggFn.Min | AggFn.Max | AggFn.Avg =>
+                Seq(s"agg_$i" -> (null: Any): (String, Any))
+              case _ => Seq(s"agg_$i" -> (0L: java.lang.Long): (String, Any)) // counts
             }
           }))
       case None =>
@@ -1830,7 +1786,7 @@ class MongoReaderFactory extends PartitionReaderFactory {
           limit = p.limit, skip = p.skip)
     }
     val it: Iterator[InternalRow] =
-      if (p.pipelineBson.isDefined && p.aggKinds.nonEmpty) docs.map { doc =>
+      if (p.pipelineBson.isDefined && p.aggs.nonEmpty) docs.map { doc =>
         // `_id` carries the group-key values; agg_i the accumulators
         val idDoc = doc.get("_id").getOrElse(null) match {
           case d: BDoc => d
@@ -1839,19 +1795,16 @@ class MongoReaderFactory extends PartitionReaderFactory {
         val groupVals = p.groupFields.zipWithIndex.map { case (g, i) =>
           idDoc.get(g).map(coerce(_, required.fields(i).dataType)).orNull
         }
-        val aggVals = p.aggKinds.zipWithIndex.map { case (kind, i) =>
-          val dt = required.fields(p.groupFields.size + i).dataType
+        val aggVals = p.aggs.zipWithIndex.map { case (d, i) =>
           val v = doc.get(s"agg_$i").getOrElse(null)
-          kind match {
-            case "count_star" | "count_field" =>
-              v.asInstanceOf[Number].longValue(): java.lang.Long
-            case "sum_long" | "sum_double" =>
+          d.fn match {
+            case AggFn.Sum =>
               // SQL SUM over zero non-null values is NULL, Mongo's is 0:
               // the companion non-null count disambiguates
               val n = doc.get(s"agg_${i}_n").map(_.asInstanceOf[Number].longValue())
                 .getOrElse(0L)
               if (n == 0L) null
-              else if (kind == "sum_long") v match {
+              else if (d.out == LongType) v match {
                 // a real mongod promotes an int64-overflowing $sum to
                 // double — silently truncating that back to long would be
                 // a wrong answer; REFUSE loudly (DsSource aggReader's same
@@ -1869,11 +1822,12 @@ class MongoReaderFactory extends PartitionReaderFactory {
                 case other => other.asInstanceOf[Number].longValue(): java.lang.Long
               }
               else v.asInstanceOf[Number].doubleValue(): java.lang.Double
-            case "avg" =>
+            case AggFn.Avg =>
               if (v == null) null
               else v.asInstanceOf[Number].doubleValue(): java.lang.Double
-            case _ => // min/max: the column's own type
-              if (v == null) null else coerce(v, dt)
+            case AggFn.Min | AggFn.Max => // the column's own type
+              if (v == null) null else coerce(v, d.out)
+            case _ => v.asInstanceOf[Number].longValue(): java.lang.Long // counts
           }
         }
         conv(Row.fromSeq(groupVals ++ aggVals)).asInstanceOf[InternalRow]
@@ -1883,13 +1837,7 @@ class MongoReaderFactory extends PartitionReaderFactory {
         doc.get(f.name).map(coerce(_, f.dataType)).orNull
       })).asInstanceOf[InternalRow]
     }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = client.close()
-    }
+    IteratorReader(it, client.close())
   }
 
   private def coerce(v: Any, dt: DataType): Any = MongoDsl.coerce(v, dt)

@@ -291,12 +291,6 @@ class RestReaderFactory extends PartitionReaderFactory {
       conv(Row.fromSeq(outIdx.toSeq.map(i => if (i < 0) null else row(i))))
         .asInstanceOf[InternalRow]
     }
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = it.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
+    IteratorReader(it)
   }
 }

@@ -406,7 +406,7 @@ class DsSourceSpec extends AnyFunSuite {
     val c = new HttpRestClient(base, HttpRestConfig(retryBackoffMs = 5))
     val aggs = (0 until 6).map(i => ("count", "")).toSeq
     val body = DsQuery.aggregationJson("dsagg4", Nil, Nil,
-      Seq.fill(6)(("count", "")))
+      Seq.fill(6)((AggFn.CountStar, "")))
     val e = intercept[java.io.IOException](
       c.postJson("/ds/dsagg4:runAggregationQuery", body))
     assert(e.getMessage.contains("maximum of 5 aggregations"), e.getMessage)
