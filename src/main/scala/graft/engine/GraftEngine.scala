@@ -32,33 +32,6 @@ class GraftEngine(val spark: SparkSession) {
   private val userVars = TrieMap.empty[String, String]
   private val prepared = TrieMap.empty[String, String]
 
-  /** Replace positional `?` placeholders (outside quoted strings) with the
-    * given literal values; errors on arity mismatch as MySQL does. */
-  private def bindPositional(body: String, vals: Seq[String]): String = {
-    val sb = new StringBuilder
-    var inStr = false
-    var i = 0
-    var used = 0
-    while (i < body.length) {
-      val ch = body.charAt(i)
-      if (inStr) { sb.append(ch); if (ch == '\'') inStr = false }
-      else ch match {
-        case '\'' => inStr = true; sb.append(ch)
-        case '?' =>
-          if (used >= vals.length)
-            throw new IllegalArgumentException(
-              s"not enough EXECUTE arguments: statement needs more than ${vals.length}")
-          sb.append(vals(used)); used += 1
-        case other => sb.append(other)
-      }
-      i += 1
-    }
-    if (used != vals.length)
-      throw new IllegalArgumentException(
-        s"too many EXECUTE arguments: statement uses $used of ${vals.length}")
-    sb.toString
-  }
-
   /** MySQL-ish system variables the reference answers (@@max_allowed_packet
     * et al., mysql_session.go). Values are engine-appropriate defaults. */
   val sysVars: Map[String, String] = Map(
@@ -113,7 +86,7 @@ class GraftEngine(val spark: SparkSession) {
     case SetVar(name, value) =>
       // evaluate the RHS once so `SET @x = 1 + 1` stores "2"
       val v = spark.sql(s"SELECT ($value) AS v").collect()(0).get(0)
-      userVars.put(name, literal(v))
+      userVars.put(name, SqlText.literal(v))
       spark.emptyDataFrame
 
     case TxnNoop(_) => spark.emptyDataFrame
@@ -145,9 +118,9 @@ class GraftEngine(val spark: SparkSession) {
     case ExecuteStmt(name, args) =>
       val body = prepared.getOrElse(name,
         throw new IllegalArgumentException(s"unknown prepared statement: $name"))
-      val vals = Option(args).map(a => splitTopLevel(substitute(a))).getOrElse(Seq.empty)
-        .map(v => literal(spark.sql(s"SELECT ($v) AS v").collect()(0).get(0)))
-      sql(bindPositional(body, vals))
+      val vals = Option(args).map(a => SqlText.splitTopLevel(substitute(a))).getOrElse(Seq.empty)
+        .map(v => SqlText.literal(spark.sql(s"SELECT ($v) AS v").collect()(0).get(0)))
+      sql(SqlText.bind(body, vals))
 
     case DeallocStmt(name) =>
       prepared.remove(name)
@@ -277,38 +250,16 @@ class GraftEngine(val spark: SparkSession) {
     * string literals are untouched, and a bracket directly following an
     * identifier, `]`, or `)` is array/map INDEXING (`roles[1]`), kept
     * verbatim. */
-  private def normalizeBrackets(text: String): String = {
-    if (!text.contains('[')) return text
-    val sb = new StringBuilder(text.length)
-    var i = 0; var inStr = false; var inTick = false
-    while (i < text.length) {
-      val ch = text.charAt(i)
-      if (inStr) {
-        // Spark's dialect accepts backslash-escaped quotes ('it\'s'):
-        // the escape must not close the literal, or a bracket after it
-        // would be rewritten into an identifier
-        if (ch == '\\' && i + 1 < text.length) {
-          sb.append(ch).append(text.charAt(i + 1)); i += 2
-        } else { sb.append(ch); if (ch == '\'') inStr = false; i += 1 }
-      }
-      else if (inTick) { sb.append(ch); if (ch == '`') inTick = false; i += 1 }
-      else ch match {
-        case '\'' => inStr = true; sb.append(ch); i += 1
-        case '`' => inTick = true; sb.append(ch); i += 1
-        case '[' =>
-          val prev = if (sb.isEmpty) ' ' else sb.charAt(sb.length - 1)
-          val indexing = Character.isLetterOrDigit(prev) || prev == '_' ||
-            prev == ']' || prev == ')'
-          GraftEngine.BracketIdent.findPrefixMatchOf(text.subSequence(i, text.length)) match {
-            case Some(m) if !indexing =>
-              sb.append('`').append(m.group(1)).append('`'); i += m.end
-            case _ => sb.append(ch); i += 1
-          }
-        case other => sb.append(other); i += 1
-      }
+  private def normalizeBrackets(text: String): String =
+    if (!text.contains('[')) text
+    else SqlText.mapCode(text) { code =>
+      BracketIdent.replaceAllIn(code, m => {
+        val prev = if (m.start == 0) ' ' else code.charAt(m.start - 1)
+        val indexing = Character.isLetterOrDigit(prev) || prev == '_' ||
+          prev == ']' || prev == ')'
+        if (indexing) m.matched else s"`${m.group(1)}`"
+      })
     }
-    sb.toString
-  }
 
   private def upsertRewrite(tbl: String, cols: Option[String], values: String): DataFrame = {
     val parts = tbl.replace("`", "").split('.')
@@ -345,7 +296,7 @@ class GraftEngine(val spark: SparkSession) {
       if (inOk) {
         // single key on a profile that accepts IN (full, Cassandra-style
         // keys): one IN-list delete (file-pruned inside deleteWhere)
-        val in = keyRows.map(r => literal(r.get(0))).distinct.mkString(", ")
+        val in = keyRows.map(r => SqlText.literal(r.get(0))).distinct.mkString(", ")
         spark.sql(s"DELETE FROM $tbl WHERE `${table.keys.head}` IN ($in)")
       } else {
         // composite keys, or a profile without IN (BigTable-style prefix
@@ -422,7 +373,7 @@ class GraftEngine(val spark: SparkSession) {
     // against the ORIGINAL row, so all assignments go into ONE select —
     // sequential withColumn would let later assignments (and the
     // condition) see already-updated values.
-    val assigns = splitTopLevel(sets).map { assign =>
+    val assigns = SqlText.splitTopLevel(sets).map { assign =>
       val Array(c, v) = assign.split("=", 2).map(_.trim)
       c.replace("`", "") -> v
     }.toMap
@@ -482,7 +433,7 @@ class GraftEngine(val spark: SparkSession) {
     require(!compiled.exists(_.isEmpty),
       s"UPDATE $tbl: WHERE is outside the wire filter surface: $cond")
     val q = MongoDsl.compileAll(compiled.flatten)
-    val set = BDoc(splitTopLevel(sets).map { assign =>
+    val set = BDoc(SqlText.splitTopLevel(sets).map { assign =>
       val Array(c, v) = assign.split("=", 2).map(_.trim)
       val name = c.replace("`", "")
       val i = ep.schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
@@ -508,7 +459,7 @@ class GraftEngine(val spark: SparkSession) {
     * RHS are literal expressions only (the wires carry values, not
     * row-referencing expressions); each is CAST to its column type. */
   private def foldSets(sets: String, schema: StructType, tbl: String): Seq[(String, Any)] =
-    splitTopLevel(sets).map { assign =>
+    SqlText.splitTopLevel(sets).map { assign =>
       val Array(c, v) = assign.split("=", 2).map(_.trim)
       val name = c.replace("`", "")
       val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
@@ -595,67 +546,18 @@ class GraftEngine(val spark: SparkSession) {
     Seq(matched.length.toLong).toDF("affected_rows")
   }
 
-  /** Split on commas not inside single-quoted strings or parens. */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var inStr = false; var i = 0
-    while (i < s.length) {
-      val ch = s.charAt(i)
-      if (inStr) {
-        // \'-escapes must not close the literal (same contract as the
-        // bracket normalizer and placeholder scanners)
-        if (ch == '\\' && i + 1 < s.length) { cur += ch; cur += s.charAt(i + 1); i += 1 }
-        else { cur += ch; if (ch == '\'') inStr = false }
-      }
-      else ch match {
-        case '\'' => inStr = true; cur += ch
-        case '(' => depth += 1; cur += ch
-        case ')' => depth -= 1; cur += ch
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case other => cur += other
-      }
-      i += 1
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.toSeq.map(_.trim)
-  }
-
   /** Replace @@sysvars and @uservars with their literal values — but never
-    * inside single-quoted string literals, so `'a@b.com'` survives
+    * inside quoted strings or identifiers, so `'a@b.com'` survives
     * (mysql frontends tokenize before variable expansion; a raw regex over
     * the whole text would corrupt quoted emails). */
-  def substitute(text: String): String = {
-    // a literal runs to the next unescaped quote: '' doubles and \'
-    // backslash-escapes both stay inside (same contract as the other
-    // scanners in this file)
-    val quoted = """'(?:[^'\\]|''|\\.)*'""".r
-    val sb = new StringBuilder
-    var idx = 0
-    quoted.findAllMatchIn(text).foreach { m =>
-      sb.append(substituteVars(text.substring(idx, m.start)))
-      sb.append(m.matched)
-      idx = m.end
-    }
-    sb.append(substituteVars(text.substring(idx)))
-    sb.toString
-  }
-
-  private def substituteVars(text: String): String = {
-    val s1 = "@@(?:session\\.|global\\.)?(\\w+)".r.replaceAllIn(text, m =>
+  def substitute(text: String): String = SqlText.mapCode(text) { code =>
+    val s1 = SysVarRef.replaceAllIn(code, m =>
       scala.util.matching.Regex.quoteReplacement(
         sysVars.get(m.group(1).toLowerCase)
           .map(v => s"'$v'").getOrElse("NULL")))
-    "@(\\w+)".r.replaceAllIn(s1, m =>
+    UserVarRef.replaceAllIn(s1, m =>
       scala.util.matching.Regex.quoteReplacement(
         userVars.getOrElse(m.group(1), "NULL")))
-  }
-
-  private def literal(v: Any): String = v match {
-    case null => "NULL"
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case ts: java.sql.Timestamp => s"TIMESTAMP '$ts'"
-    case other => other.toString
   }
 
   /** MySQL-style DDL rendering of a catalog table
@@ -713,6 +615,8 @@ object GraftEngine {
     """(?is)\s*OPTIMIZE\s+TABLE\s+([\w.`]+)(?:\s+INTO\s+(\d+)\s+FILES)?\s*;?\s*""".r
   private[engine] val UpdateStmt = """(?is)\s*UPDATE\s+([\w.`]+)\s+SET\s+(.+?)\s+WHERE\s+(.+?)\s*;?\s*""".r
   private[engine] val BracketIdent = """\[([A-Za-z_][A-Za-z0-9_]*)\]""".r
+  private val SysVarRef = "@@(?:session\\.|global\\.)?(\\w+)".r
+  private val UserVarRef = "@(\\w+)".r
   private[engine] val UpsertStmt = """(?is)\s*UPSERT\s+INTO\s+([\w.`]+)\s*(?:\(([^)]*)\))?\s*VALUES\s+(.+?)\s*;?\s*""".r
 
   // one engine per SparkSession, weakly held: session vars / prepared
@@ -740,13 +644,6 @@ object GraftEngine {
     case OptimizeStmt(t, _) => t.replace("`", "").startsWith("graft.")
     case UpdateStmt(t, _, _) => t.replace("`", "").startsWith("graft.")
     case UpsertStmt(t, _, _) => t.replace("`", "").startsWith("graft.")
-    case _ => hasVarRef(text)
-  }
-
-  /** @var / @@sysvar reference outside single-quoted literals ('a@b.com'
-    * must not trigger the dialect path). */
-  private def hasVarRef(text: String): Boolean = {
-    val unquoted = "'(?:[^']|'')*'".r.replaceAllIn(text, "''")
-    "@\\w".r.findFirstIn(unquoted).isDefined
+    case _ => SqlText.hasVarRef(text)
   }
 }

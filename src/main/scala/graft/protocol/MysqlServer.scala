@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, to_json}
 import org.apache.spark.sql.types._
 
-import graft.engine.GraftEngine
+import graft.engine.{GraftEngine, SqlText}
 import MysqlWire._
 
 /** MySQL wire-protocol listener over the engine — the reference's front
@@ -105,7 +105,7 @@ final class MysqlServer(
           case ComStmtPrepare =>
             val text = new String(cmd, 1, cmd.length - 1, UTF_8)
             nextStmtId += 1
-            val nParams = countPlaceholders(text)
+            val nParams = SqlText.placeholders(text)
             stmts(nextStmtId) = (text, nParams)
             io.write(encodeStmtPrepareOk(nextStmtId, 0, nParams))
             // param definition packets + EOF (type '?', resolved at execute)
@@ -164,24 +164,6 @@ final class MysqlServer(
     ok
   }
 
-  /** `?` placeholders outside single-quoted strings. */
-  private def countPlaceholders(sql: String): Int = {
-    var n = 0; var inStr = false; var i = 0
-    while (i < sql.length) {
-      val ch = sql.charAt(i)
-      // mysql client libraries escape quotes as \' — the escape must not
-      // close the literal or a ? after it would be miscounted
-      if (inStr) {
-        if (ch == '\\' && i + 1 < sql.length) i += 1
-        else if (ch == '\'') inStr = false
-      }
-      else if (ch == '\'') inStr = true
-      else if (ch == '?') n += 1
-      i += 1
-    }
-    n
-  }
-
   /** COM_STMT_EXECUTE: decode the NULL bitmap + bound types + binary
     * values, bind them as SQL literals into the prepared text, run, and
     * answer with a BINARY-protocol resultset. */
@@ -215,11 +197,11 @@ final class MysqlServer(
                 if ((bitmap(i / 8) & (1 << (i % 8))) != 0) "NULL"
                 else {
                   val (tpe, unsigned) = types(i)
-                  sqlLiteral(MysqlWire.readBinaryValue(r, tpe, unsigned))
+                  SqlText.literal(MysqlWire.readBinaryValue(r, tpe, unsigned))
                 }
               }
             }
-          val bound = bindPlaceholders(text, args)
+          val bound = SqlText.bind(text, args)
           val df = engine.sql(bound)
           if (df.schema.isEmpty) { io.write(encodeOk(0)); io.flush() }
           else writeResultSet(io, df, binary = true)
@@ -230,35 +212,6 @@ final class MysqlServer(
             io.flush()
         }
     }
-  }
-
-  private def sqlLiteral(v: Any): String = v match {
-    case s: String => "'" + s.replace("'", "''") + "'"
-    case b: Array[Byte] => "X'" + b.map(x => f"${x & 0xff}%02x").mkString + "'"
-    case d: java.time.LocalDate => s"DATE'$d'"
-    case t: java.time.LocalDateTime => s"TIMESTAMP'${t.toString.replace('T', ' ')}'"
-    case other => String.valueOf(other)
-  }
-
-  private def bindPlaceholders(sql: String, vals: Seq[String]): String = {
-    val sb = new StringBuilder
-    var inStr = false; var i = 0; var used = 0
-    while (i < sql.length) {
-      val ch = sql.charAt(i)
-      if (inStr) {
-        // \'-escapes (see countPlaceholders) — copy the pair verbatim
-        if (ch == '\\' && i + 1 < sql.length) {
-          sb.append(ch).append(sql.charAt(i + 1)); i += 1
-        } else { sb.append(ch); if (ch == '\'') inStr = false }
-      }
-      else ch match {
-        case '\'' => inStr = true; sb.append(ch)
-        case '?' => sb.append(vals(used)); used += 1
-        case other => sb.append(other)
-      }
-      i += 1
-    }
-    sb.toString
   }
 
   private def runQuery(io: PacketIO, engine: GraftEngine, text: String): Unit =

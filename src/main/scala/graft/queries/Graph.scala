@@ -36,6 +36,8 @@ object Graph {
   private val PrIters = 8
   private val R0 = 1000000000L        // initial rank, 1e9 fixed point
   private val PrBase = 150000000L     // (1 − d)·1e9 with damping d = 0.85
+  private val PrParts = 8             // rank-round shuffle partitions
+  private val PrBatch = 2             // rounds composed per localCheckpoint
 
   val queries: Seq[GQuery] = Seq(
 
@@ -119,8 +121,7 @@ object Graph {
       // set/restore here because every round materializes eagerly inside
       // this function; only the final node-sized projection runs later.
       val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PR_PARTS", "8"))
+      s.conf.set("spark.sql.shuffle.partitions", PrParts.toString)
       val finalRanks = try {
         // Both per-round joins are hinted SHUFFLE_HASH (guide §3.1): the
         // build sides (the rank table, the contribution aggregate) are
@@ -152,13 +153,12 @@ object Graph {
         // (r9: checkpoint-every-round beat never-checkpointing 12.3 vs
         // 16-21s; this keeps the O(1)-depth property at half the
         // per-round job overhead, the residual cost at toy scale).
-        val perJob = sys.env.getOrElse("SPARK_GRAFT_PR_BATCH", "2").toInt.max(1)
         var ranks = nodes.select(col("node"), lit(R0).as("r")).localCheckpoint(true)
         var t = 1
         while (t <= PrIters) {
           var step = ranks
           var k = 0
-          while (k < perJob && t + k <= PrIters) { step = round(step); k += 1 }
+          while (k < PrBatch && t + k <= PrIters) { step = round(step); k += 1 }
           ranks = step.localCheckpoint(true)
           t += k
         }

@@ -25,6 +25,8 @@ object StreamQueries {
 
   private val runId = new AtomicInteger(0)
   private val lock = new Object
+  /** Shuffle (= state) partitions of a drain: see [[drain]]. */
+  private val DrainParts = 8
 
   /** Stage the events table as a multi-file parquet dir (micro-batch
     * splits), plus a copy with injected duplicate rows for the dedup
@@ -124,7 +126,7 @@ object StreamQueries {
     val name = s"graft_stream_sink_${runId.incrementAndGet()}"
     val oldParts = s.conf.get("spark.sql.shuffle.partitions")
     val oldNoData = s.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    s.conf.set("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_DRAIN_PARTS", "8"))
+    s.conf.set("spark.sql.shuffle.partitions", DrainParts.toString)
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noData.toString)
     try {
       val q = df.writeStream.format("memory").queryName(name)
@@ -153,8 +155,8 @@ object StreamQueries {
     * advanced watermark, past every trigger's interval end, so ALL
     * remaining unmatched state evicts and emits. One query start: the
     * earlier two-restart drain paid a full checkpoint state reload +
-    * re-snapshot (~4s at sf0.1) for the same sweep (A/B verified
-    * bit-identical via SPARK_GRAFT_DRAIN_MODE=two).
+    * re-snapshot (~4s at sf0.1) for the same sweep (an A/B in round 9
+    * found the two drains' outputs bit-identical).
     *
     * This is the production "drain a stream" barrier pattern (kafka
     * deployments post a terminating tombstone for the same reason). The
@@ -163,8 +165,7 @@ object StreamQueries {
     * watermark node, and the global watermark is the MIN across watermark
     * operators — a sentinel that gets filtered off one side would pin the
     * watermark forever. Sentinel-origin rows (negative ids) are filtered
-    * from the result. State recovery across the restarts needs a
-    * recoverable sink, so this drains to parquet, not memory. */
+    * from the result. */
   private def drainWithFinalSweep(
       s: SparkSession, evDir: String, sentinelType: String)(
       build: DataFrame => DataFrame): DataFrame = {
@@ -192,51 +193,24 @@ object StreamQueries {
     val outDir = new File(work, "out")
     val ckpt = new File(work, "ckpt")
     val oldParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_DRAIN_PARTS", "8"))
+    s.conf.set("spark.sql.shuffle.partitions", DrainParts.toString)
     try {
       val nReal = dataDir.listFiles().count(_.isFile)
-      def runOnce(maxFilesPerTrigger: Option[Int] = None): Unit = {
-        val reader = s.readStream.schema(schema)
-        maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-        val q = build(reader.parquet(dataDir.getPath))
-          .writeStream.format("parquet")
-          .option("path", outDir.getPath)
-          .option("checkpointLocation", ckpt.getPath)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+      // the sentinel, written now, is the newest file: it lands alone in
+      // batch 1 behind the nReal (older) real files of batch 0
       val maxTs = s.read.parquet(evDir).agg(max("ts")).head().getTimestamp(0)
-      def sentinel(offsetHours: Long): Unit = {
-        import scala.jdk.CollectionConverters._
-        val row = org.apache.spark.sql.Row(-1L - offsetHours,
-          java.sql.Timestamp.from(maxTs.toInstant.plusSeconds(offsetHours * 3600)),
-          -1L, sentinelType, 0.0, null)
-        s.createDataFrame(List(row).asJava, schema)
-          .repartition(1).write.mode("append").parquet(dataDir.getPath)
-      }
-      if (sys.env.getOrElse("SPARK_GRAFT_DRAIN_MODE", "single") == "single") {
-        // SINGLE-RUN drain: stage the sentinel BEFORE the run. The linked
-        // real files keep the fixture's (old) mtimes and the sentinel is
-        // written now, so the file source's oldest-first admission with
-        // maxFilesPerTrigger = nReal yields batch 0 = all real data,
-        // batch 1 = the sentinel. Batch 1 sweeps with the real data's
-        // final watermark; the engine's closing NO-DATA micro-batch
-        // (noDataMicroBatches, which AvailableNow runs before stopping
-        // precisely for state cleanup) then applies the sentinel-advanced
-        // watermark — past every trigger's interval end, so all remaining
-        // unmatched state evicts and emits. One query start, no state
-        // reload: the round-8 two-restart drain paid a full checkpoint
-        // state reload + re-snapshot (~4s at sf0.1) for the same sweep.
-        sentinel(2)
-        runOnce(maxFilesPerTrigger = Some(nReal))
-      } else {
-        // two-restart fallback (round-8 shape, kept for A/B): run the real
-        // data, then restart with two sentinel batches — batch 1 sweeps
-        // with the real final watermark, batch 2 with sentinel-1's.
-        runOnce()
-        sentinel(1); sentinel(2)
-        runOnce(maxFilesPerTrigger = Some(1))
-      }
+      val sentinel = org.apache.spark.sql.Row(-3L,
+        java.sql.Timestamp.from(maxTs.toInstant.plusSeconds(2 * 3600)),
+        -1L, sentinelType, 0.0, null)
+      s.createDataFrame(java.util.List.of(sentinel), schema)
+        .repartition(1).write.mode("append").parquet(dataDir.getPath)
+      build(s.readStream.schema(schema).option("maxFilesPerTrigger", nReal)
+          .parquet(dataDir.getPath))
+        .writeStream.format("parquet")
+        .option("path", outDir.getPath)
+        .option("checkpointLocation", ckpt.getPath)
+        .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
       s.read.parquet(outDir.getPath).filter(col("trigger_id") >= 0)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", oldParts)

@@ -705,6 +705,24 @@ class FileSourceSpec extends AnyFunSuite {
     eng.sql("DROP SOURCE upbt")
   }
 
+  test("UPSERT replaces by a DATE key (the IN-list delete renders DATE literals)") {
+    val eng = new GraftEngine(spark)
+    val p = new File(sys.props("user.dir"), "target/graft-test/upsert-date").getPath
+    eng.sql(s"""CREATE SOURCE update_src WITH { "type": "csv", "path": "$p", "pushdown": "keys" }""")
+    spark.sql("DROP TABLE IF EXISTS graft.update_src.days")
+    spark.sql("CREATE TABLE graft.update_src.days (d DATE, v STRING) " +
+      "TBLPROPERTIES ('keys' = 'd')")
+    spark.sql("INSERT INTO graft.update_src.days VALUES " +
+      "(DATE'2020-01-01', 'a'), (DATE'2020-01-02', 'b')")
+    eng.sql("UPSERT INTO graft.update_src.days VALUES " +
+      "(DATE'2020-01-02', 'B'), (DATE'2020-01-03', 'c')")
+    val rows = spark.table("graft.update_src.days").orderBy("d").collect()
+      .map(r => (r.getDate(0).toString, r.getString(1))).toSeq
+    assert(rows == Seq(("2020-01-01", "a"), ("2020-01-02", "B"), ("2020-01-03", "c")))
+    spark.sql("DROP TABLE graft.update_src.days")
+    eng.sql("DROP SOURCE update_src")
+  }
+
   test("keyed UPDATE/UPSERT rewrite only intersecting part files (rest byte-identical)") {
     val eng = new GraftEngine(spark)
     val p = new File(sys.props("user.dir"), "target/graft-test/upd-prune").getPath
@@ -1014,6 +1032,10 @@ class FileSourceSpec extends AnyFunSuite {
       "SELECT 'a@b.com' AS email WHERE x > 3")
     val r = eng.sql("SELECT 'a@b.com' AS email").collect()(0).getString(0)
     assert(r == "a@b.com")
+    // Spark reads "…" as a string literal and `…` as a name: neither
+    // holds a variable reference
+    assert(eng.sql("SELECT \"a@b.com\" AS email").collect()(0).getString(0) == "a@b.com")
+    assert(eng.sql("SELECT 1 AS `a@b`").columns.toSeq == Seq("a@b"))
   }
 
   test("prepared statements: PREPARE / EXECUTE USING / DEALLOCATE") {
@@ -1035,6 +1057,10 @@ class FileSourceSpec extends AnyFunSuite {
     // arity errors
     intercept[IllegalArgumentException] { eng.sql("EXECUTE q2 USING 1, 2") }
     intercept[IllegalArgumentException] { eng.sql("EXECUTE get_nation USING 1") }
+    // a DATE argument binds as a DATE literal, not as 2020 - 1 - 1
+    eng.sql("PREPARE pd FROM 'SELECT ? AS a'")
+    assert(eng.sql("EXECUTE pd USING DATE'2020-01-01'").collect()(0).get(0) ==
+      java.sql.Date.valueOf("2020-01-01"))
     eng.sql("DEALLOCATE PREPARE get_nation")
     intercept[IllegalArgumentException] { eng.sql("EXECUTE get_nation USING 1, 2") }
   }

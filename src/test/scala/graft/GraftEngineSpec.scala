@@ -30,6 +30,13 @@ class GraftEngineSpec extends AnyFunSuite {
       "SELECT count(*) AS n FROM orders WHERE o_totalprice > 400000")
       .collect()(0).getLong(0)
     assert(n == direct && n > 0)
+    // a DATE variable substitutes as a DATE literal, not as 2020 - 1 - 1
+    engine.sql("SET @d = DATE'2020-01-01'")
+    assert(engine.sql("SELECT @d AS d").collect()(0).getDate(0) ==
+      java.sql.Date.valueOf("2020-01-01"))
+    // a backslash in a string variable survives the round trip
+    engine.sql("""SET @path = 'C:\\dir'""")
+    assert(engine.sql("SELECT @path AS p").collect()(0).getString(0) == "C:\\dir")
   }
 
   test("WITH distributed=true, node_ct=N hints accept (the reference's syntax)") {

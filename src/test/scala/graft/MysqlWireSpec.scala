@@ -319,6 +319,14 @@ class MysqlWireSpec extends AnyFunSuite {
       // a closed statement id is ERR 1243
       val e = intercept[Exception] { c.stmtExecute(ok.stmtId, Seq(1, "x")) }
       assert(e.getMessage.contains("1243"))
+      // ? inside a "…" string or a `…` identifier is data, and an
+      // apostrophe inside "…" opens no string
+      assert(c.stmtPrepare("SELECT \"a?\" AS x, ? AS y").numParams === 1)
+      assert(c.stmtPrepare("SELECT `a?b` FROM t WHERE id = ?").numParams === 1)
+      val ob = c.stmtPrepare(
+        "SELECT n_nationkey FROM nation WHERE n_name = \"O'Brien\" OR n_nationkey = ?")
+      assert(ob.numParams === 1)
+      assert(c.stmtExecute(ob.stmtId, Seq(3)).toOption.get.rows === Vector(Vector(Some(3))))
     } finally c.close()
   }
 
