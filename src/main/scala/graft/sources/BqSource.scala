@@ -8,7 +8,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.expressions.{Expression, NamedReference, NullOrdering, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.{Expression, NamedReference, SortOrder}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -89,7 +89,9 @@ object BqSql {
   // ---- parsing (server side) --------------------------------------------
 
   final case class Agg(kind: String, col: String) // kind: count_star|count|min|max|sum|avg
-  final case class Order(col: String, desc: Boolean, nullsFirst: Boolean)
+  /** One ORDER BY item; the target is the column reference. */
+  type Order = SortKey[String]
+  val Order = SortKey
 
   /** One parsed two-table join (the full-statement passthrough identity:
     * `sql_to_bq.go:72-104` re-renders whatever statement it gets, joins
@@ -507,23 +509,10 @@ object BqSql {
         else (vs.map(_.asInstanceOf[Number].doubleValue()).sum / vs.size, DoubleType)
     }
 
-    // shared null-ordered multi-key comparator over indexed rows
-    def sortBy[R](rows: Seq[R], keyIdx: Seq[(Int, Order)], get: (R, Int) => Any): Seq[R] =
-      rows.sortWith { (a, b) =>
-        var r = 0
-        val it = keyIdx.iterator
-        while (r == 0 && it.hasNext) {
-          val (k, o) = it.next()
-          val c = (get(a, k), get(b, k)) match {
-            case (null, null) => 0
-            case (null, _) => if (o.nullsFirst) -1 else 1
-            case (_, null) => if (o.nullsFirst) 1 else -1
-            case (x, y) => FilterEval.cmp(x, y).getOrElse(0)
-          }
-          r = if (o.desc) -c else c
-        }
-        r < 0
-      }
+    // ORDER BY items resolved to row positions, in the shared comparator
+    def sortBy[R](rows: Seq[R], position: String => Int)(get: (R, Int) => Any): Seq[R] =
+      rows.sorted(PushedWindow.ordering(
+        stmt.orderBy.map(o => o.copy(target = position(o.target))))(get))
 
     val isAgg = stmt.aggs.nonEmpty || stmt.groupBy.nonEmpty
     // non-agg ORDER BY resolves against the INPUT schema and sorts the
@@ -531,8 +520,7 @@ object BqSql {
     // projected; a pushed join's qualified `ORDER BY t0.x` rides here)
     val preSorted =
       if (isAgg || stmt.orderBy.isEmpty) filtered
-      else sortBy[Array[Any]](filtered,
-        stmt.orderBy.map(o => (idx(o.col), o)), (r, k) => r(k))
+      else sortBy(filtered, idx)(_(_))
 
     val (names, types, out): (Seq[String], Seq[DataType], Seq[Seq[Any]]) =
       if (isAgg) {
@@ -555,12 +543,11 @@ object BqSql {
 
     // agg ORDER BY (TopN over a pushed aggregate) names OUTPUT columns
     val sorted = if (!isAgg || stmt.orderBy.isEmpty) out else {
-      val keyIdx = stmt.orderBy.map(o => {
-        val k = names.indexWhere(_.equalsIgnoreCase(o.col))
-        require(k >= 0, s"ORDER BY references unknown output ${o.col}")
-        (k, o)
-      })
-      sortBy[Seq[Any]](out, keyIdx, (r, k) => r(k))
+      sortBy(out, { c =>
+        val k = names.indexWhere(_.equalsIgnoreCase(c))
+        require(k >= 0, s"ORDER BY references unknown output $c")
+        k
+      })(_(_))
     }
     val windowed = sorted.slice(stmt.offset,
       if (stmt.limit >= 0) stmt.offset + stmt.limit else sorted.size)
@@ -837,21 +824,11 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
     case None => resolveCols.map(c => (c._1, c._2))
   }
 
-  override def pushTopN(so: Array[SortOrder], n: Int): Boolean = {
-    val base = sortable
-    val ks = so.map { o =>
-      o.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          base.find(_._1.equalsIgnoreCase(nr.fieldNames()(0))).map(c =>
-            BqSql.Order(c._2,
-              o.direction() == SortDirection.DESCENDING,
-              o.nullOrdering() == NullOrdering.NULLS_FIRST))
-        case _ => None
-      }
+  override def pushTopN(so: Array[SortOrder], n: Int): Boolean =
+    PushedWindow.keys(so)(PushedWindow.byName(sortable)) match {
+      case Some(ks) => orders = ks; limit = n; true
+      case None => false
     }
-    if (ks.exists(_.isEmpty)) false
-    else { orders = ks.map(_.get).toSeq; limit = n; true }
-  }
   /** The warehouse's answer is final — sort/limit/offset consumed. */
   override def isPartiallyPushed(): Boolean = false
 
@@ -925,23 +902,11 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
           (outCols.map(_._2), "",
             StructType(outCols.map(c => StructField(c._1, c._3, nullable = true))))
       }
-      val orderSql =
-        if (orders.isEmpty) ""
-        else " ORDER BY " + orders.map { o =>
-          val dir = if (o.desc) " DESC" else " ASC"
-          val nulls = if (o.nullsFirst) " NULLS FIRST" else " NULLS LAST"
-          s"${o.col}$dir$nulls"
-        }.mkString(", ")
-      // Spark pushes limit INCLUSIVE of the offset; SQL's LIMIT counts
-      // post-OFFSET rows (same adjustment as the single-table render)
-      val effLimit = if (limit >= 0) math.max(0, limit - offset) else -1
-      val limitSql = if (effLimit >= 0) s" LIMIT $effLimit" else ""
-      val offsetSql = if (offset > 0) s" OFFSET $offset" else ""
       val renderJoin: Seq[String] => String = extras => {
         val w = whereSide ++ extras
         val whereSql = if (w.isEmpty) "" else " WHERE " + w.mkString(" AND ")
         s"SELECT ${items.mkString(", ")} FROM ${ep.table} t0 " +
-          s"$joinKw ${j.rightTable} t1 ON $onSql$whereSql$groupSql$orderSql$limitSql$offsetSql"
+          s"$joinKw ${j.rightTable} t1 ON $onSql$whereSql$groupSql$windowSql"
       }
       // runtime semi-join keys AND into the joined statement's WHERE —
       // INNER only (under an outer join a WHERE on the null-extended
@@ -960,7 +925,7 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
         }
       return new BqScan(ep, outSchema, renderJoin(Nil), None, pushed,
         aggMode = agg.isDefined, hint, extraRender = Some(renderJoin),
-        runtimeCols = rtCols, delegatesOrderedWindow = orders.nonEmpty || offset > 0)
+        runtimeCols = rtCols, delegatesOrderedWindow = orderedWindow)
     }
     val whereSql = pushed.toSeq.flatMap(BqSql.render) match {
       case Nil => ""
@@ -981,22 +946,10 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
           if (required.fields.isEmpty)
             StructType(Seq(ep.schema.fields.head)) else required)
     }
-    val orderSql =
-      if (orders.isEmpty) ""
-      else " ORDER BY " + orders.map { o =>
-        val dir = if (o.desc) " DESC" else " ASC"
-        val nulls = if (o.nullsFirst) " NULLS FIRST" else " NULLS LAST"
-        s"${o.col}$dir$nulls"
-      }.mkString(", ")
-    // Spark pushes limit INCLUSIVE of the offset (take(limit+offset)
-    // then drop(offset)); SQL's LIMIT counts post-OFFSET rows
-    val effLimit = if (limit >= 0) math.max(0, limit - offset) else -1
-    val limitSql = if (effLimit >= 0) s" LIMIT $effLimit" else ""
-    val offsetSql = if (offset > 0) s" OFFSET $offset" else ""
     val renderFull: Seq[String] => String = extras => {
       val w = pushed.toSeq.flatMap(BqSql.render) ++ extras
       val whereS = if (w.isEmpty) "" else " WHERE " + w.mkString(" AND ")
-      s"SELECT $selectSql FROM ${ep.table}$whereS$groupSql$orderSql$limitSql$offsetSql"
+      s"SELECT $selectSql FROM ${ep.table}$whereS$groupSql$windowSql"
     }
     val sql = renderFull(Nil)
     // a "bare" statement (no agg/sort/limit/offset consumed) may shard:
@@ -1017,8 +970,25 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
     }
     new BqScan(ep, outSchema, sql, sqlFor, pushed, agg.isDefined, hint,
       extraRender = Some(renderFull), runtimeCols = rtCols,
-      delegatesOrderedWindow = orders.nonEmpty || offset > 0)
+      delegatesOrderedWindow = orderedWindow)
   }
+
+  /** The consumed sort, limit and offset as trailing SQL clauses; SQL's
+    * LIMIT counts the rows after OFFSET. */
+  private def windowSql: String = {
+    val orderSql =
+      if (orders.isEmpty) ""
+      else " ORDER BY " + orders.map { o =>
+        val dir = if (o.desc) " DESC" else " ASC"
+        val nulls = if (o.nullsFirst) " NULLS FIRST" else " NULLS LAST"
+        s"${o.target}$dir$nulls"
+      }.mkString(", ")
+    val wl = PushedWindow.wireLimit(limit, offset)
+    orderSql + (if (wl >= 0) s" LIMIT $wl" else "") +
+      (if (offset > 0) s" OFFSET $offset" else "")
+  }
+
+  private def orderedWindow: Boolean = PushedWindow.ordered(orders.nonEmpty, offset)
 }
 
 class BqScan(ep: BqEndpoint, out: StructType, sql: String,

@@ -11,7 +11,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.SortOrder
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -361,16 +361,13 @@ class BtScanBuilder(ep: BtEndpoint, hint: Option[Int] = None) extends ScanBuilde
     * in key order and Spark re-sorts — at scale a top-n-by-key reads n
     * rows per shard instead of the table. */
   override def pushTopN(so: Array[SortOrder], n: Int): Boolean =
-    so.headOption.exists { o =>
-      o.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 &&
-            nr.fieldNames()(0).equalsIgnoreCase(ep.keyCol) =>
-          reversed = o.direction() == SortDirection.DESCENDING
-          sortedByKey = true
-          limit = n
-          true
-        case _ => false
-      }
+    PushedWindow.keys(so.take(1))(PushedWindow.byName(Seq(ep.keyCol -> ()))) match {
+      case Some(Seq(k)) =>
+        reversed = k.desc
+        sortedByKey = true
+        limit = n
+        true
+      case _ => false
     }
 
   override def build(): Scan =
@@ -393,7 +390,7 @@ class BtScan(ep: BtEndpoint, required: StructType, rowSet: BtQuery.RowSet,
 
   @volatile private var runtimeKeys: Option[Seq[String]] = None
 
-  override protected def delegatesOrderedWindow: Boolean = sorted
+  override protected def delegatesOrderedWindow: Boolean = PushedWindow.ordered(sorted, 0)
 
   override protected def runtimeFilterColumns: Seq[String] =
     required.fieldNames.find(_.equalsIgnoreCase(ep.keyCol)).toSeq

@@ -10,7 +10,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.SortOrder
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -766,17 +766,9 @@ object LoopbackCqlServer {
     val ordered =
       if (stmt.orderBy.isEmpty) matched
       else {
-        val keys = stmt.orderBy.map { case (c, desc) => (fieldIdx(c), desc) }
-        matched.sortWith { (a, b) =>
-          var r = 0
-          val it = keys.iterator
-          while (r == 0 && it.hasNext) {
-            val (i, desc) = it.next()
-            val c = FilterEval.cmp(a(i), b(i)).getOrElse(0)
-            r = if (desc) -c else c
-          }
-          r < 0
-        }
+        matched.sorted(PushedWindow.ordering(stmt.orderBy.map { case (c, desc) =>
+          SortKey(fieldIdx(c), desc, nullsFirst = !desc)
+        })((r: Array[Any], i: Int) => r(i)))
       }
     val (cols, encodedAll) =
       if (isAgg) runAggregate(t, stmt, matched, fieldIdx)
@@ -1216,21 +1208,11 @@ class CqlScanBuilder(ep: CqlEndpoint, hint: Option[Int] = None) extends ScanBuil
     }.toSet
     if (!ep.partitionKeys.map(_.toLowerCase).forall(pkEq.contains)) return false
     val ck = ep.clusteringKeys.map(_.toLowerCase)
-    val keys = so.toSeq.map { o =>
-      o.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          val name = nr.fieldNames()(0).toLowerCase
-          if (ck.contains(name))
-            Some((name, o.direction() == SortDirection.DESCENDING))
-          else None
-        case _ => None
-      }
-    }
-    if (keys.exists(_.isEmpty)) return false
-    val flat = keys.map(_.get)
-    if (flat.map(_._1) != ck.take(flat.size)) return false // clustering prefix
-    if (flat.map(_._2).distinct.size > 1) return false // one direction
-    orders = flat
+    val keys = PushedWindow.keys(so)(PushedWindow.byName(ck.map(c => c -> c)))
+      .getOrElse(return false)
+    if (keys.map(_.target) != ck.take(keys.size)) return false // clustering prefix
+    if (keys.map(_.desc).distinct.size > 1) return false // one direction
+    orders = keys.map(k => (k.target, k.desc))
     limit = n
     true
   }
@@ -1283,7 +1265,8 @@ class CqlScan(ep: CqlEndpoint, required: StructType, cols: Seq[String],
   // A pushed ORDER BY can never coexist with an unbound key (pushTopN
   // requires the full pk EQ-bound ⇒ where is non-empty), but the rule is
   // stated anyway: a sorted window must never gain a filter beneath it.
-  override protected def delegatesOrderedWindow: Boolean = orderBy.nonEmpty
+  override protected def delegatesOrderedWindow: Boolean =
+    PushedWindow.ordered(orderBy.nonEmpty, 0)
 
   /** The single partition key, when it is in the output and no static
     * relation already pins it (CQL refuses a column restricted twice). */

@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.SortOrder
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -285,24 +285,10 @@ object DsQuery {
         }
       }
     }
-    if (orders.nonEmpty) {
-      val keys = orders.map { case (p, desc) => (idx(p), desc) }
-      matched = matched.sortWith { (a, b) =>
-        var r = 0
-        val it = keys.iterator
-        while (r == 0 && it.hasNext) {
-          val (i, desc) = it.next()
-          val c = (a(i), b(i)) match {
-            case (null, null) => 0
-            case (null, _) => -1 // Datastore: nulls sort lowest
-            case (_, null) => 1
-            case (x, y) => FilterEval.cmp(x, y).getOrElse(0)
-          }
-          r = if (desc) -c else c
-        }
-        r < 0
-      }
-    }
+    if (orders.nonEmpty) // Datastore: nulls sort lowest
+      matched = matched.sorted(PushedWindow.ordering(orders.map { case (p, desc) =>
+        SortKey(idx(p), desc, nullsFirst = !desc)
+      })((r: Array[Any], i: Int) => r(i)))
     // the documented evaluation order: sort, then skip `offset` results,
     // then cap at `limit` (limit counts results AFTER the offset)
     val offset = q.path("offset").asInt(0)
@@ -433,7 +419,9 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
   /** GLOBAL count(*)/sum/avg translate to ONE `:runAggregationQuery`
     * ([[DsQuery.aggregationJson]] for the semantic guards); Datastore
     * has no GROUP BY, per-property counts, or min/max — those decline
-    * and Spark polyfills over the entity scan. */
+    * and Spark polyfills over the entity scan. So does an aggregation
+    * with no functions (a COUNT over a global aggregate prunes them
+    * all): the API has no empty aggregation query. */
   private def pushedAgg(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Option[Seq[AggDef]] =
@@ -442,7 +430,7 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
       case _ => false // COUNT(col), COUNT(DISTINCT), MIN/MAX: no API form
     }).map(_._2)
       // the documented per-request aggregation cap (companions included)
-      .filter(DsQuery.aliasCount(_) <= DsQuery.MaxAggregations)
+      .filter(as => as.nonEmpty && DsQuery.aliasCount(as) <= DsQuery.MaxAggregations)
 
   override def supportCompletePushDown(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
@@ -472,26 +460,31 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Will this scan fan out into key-range slices? Must agree EXACTLY
-    * with [[DsScan.planInputPartitions]]: when false the scan is one
-    * cursor stream and a pushed window (sort+limit+offset in the one
-    * runQuery) is exact — FULLY delegated, Spark removes its own
-    * Sort/Limit/Offset; when true every slice serves limit per range
-    * and the push is partial (Spark re-applies). */
-  private def fansOut: Boolean = ep.splits.exists { ws =>
-    orders.isEmpty &&
+  /** The thinned split points the scan fans out over as key-range
+    * slices, or None for one cursor stream. Because the API allows
+    * inequality filters on only ONE property, a scan whose pushed
+    * filters already range over a different property — or that carries
+    * a pushed sort — cannot take range injection; an EQUAL on the split
+    * key pins the scan to one targeted request (range shards would all
+    * be provably empty but one); a global aggregation is ONE row. On
+    * one stream a pushed window (sort+limit+offset in the one runQuery)
+    * is exact — FULLY delegated, Spark removes its own
+    * Sort/Limit/Offset; a fanned scan serves limit per range and the
+    * push is partial (Spark re-applies). [[build]] hands this value to
+    * the scan, so the partition plan cannot disagree with it. */
+  private def fanOut: Option[WireSplits] = ep.splits.filter { ws =>
+    agg.isEmpty && orders.isEmpty &&
       !accepted.exists(p => p.op != "EQUAL" && !p.prop.equalsIgnoreCase(ws.key)) &&
-      !accepted.exists(p => p.prop.equalsIgnoreCase(ws.key) && p.op == "EQUAL") &&
-      WireFanout.thin(ws.points.toIndexedSeq,
-        WireFanout.effective(ws.points.size + 1, hint)).nonEmpty
-  }
+      !accepted.exists(p => p.prop.equalsIgnoreCase(ws.key) && p.op == "EQUAL")
+  }.map(ws => ws.copy(points = WireFanout.thin(ws.points.toIndexedSeq,
+    WireFanout.effective(ws.points.size + 1, hint)))).filter(_.points.nonEmpty)
 
   /** The aggregation query has no limit form — an aggregate's one-row
     * (global-only) answer makes LIMIT n≥1 the identity anyway, but the
     * clean contract is to decline and let Spark keep its node. */
   override def pushLimit(n: Int): Boolean =
     if (agg.isDefined) false else { limit = n; true }
-  override def isPartiallyPushed(): Boolean = fansOut
+  override def isPartiallyPushed(): Boolean = fanOut.isDefined
 
   /** OFFSET rides the structured query's `offset` field (documented:
     * results to skip, applied after sort and before `limit` — `limit`
@@ -502,30 +495,20 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
     * limit, so `limit` already includes the offset here and the wire
     * limit comes back off it in build(). */
   override def pushOffset(n: Int): Boolean =
-    if (agg.isDefined || fansOut) false else { skipN = n; true }
+    if (agg.isDefined || fanOut.isDefined) false else { skipN = n; true }
 
   /** First sort key must be the inequality property (Datastore rule). */
   override def pushTopN(so: Array[SortOrder], n: Int): Boolean = {
     if (agg.isDefined) return false // bucket-less one-row answer: no window
-    val ks = so.map { o =>
-      o.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 &&
-            ep.schema.fieldNames.exists(_.equalsIgnoreCase(nr.fieldNames()(0))) =>
-          val desc = o.direction() == SortDirection.DESCENDING
-          val nullsFirst = o.nullOrdering() == NullOrdering.NULLS_FIRST
-          // Datastore orders nulls lowest: ASC+NULLS_FIRST / DESC+NULLS_LAST
-          if (desc != nullsFirst) Some((nr.fieldNames()(0), desc)) else None
-        case _ => None
-      }
-    }
-    if (ks.exists(_.isEmpty)) return false
+    // Datastore orders nulls lowest: ASC+NULLS_FIRST / DESC+NULLS_LAST
+    val keys = PushedWindow.keys(so)(PushedWindow.byName(ep.schema.fieldNames.toSeq.map(n => n -> n)))
+      .filter(_.forall(_.nullsLowest)).getOrElse(return false)
     val ineq = accepted.collectFirst {
       case p if p.op != "EQUAL" => p.prop.toLowerCase
     }
-    val keys = ks.map(_.get).toSeq
-    if (ineq.exists(p => !keys.headOption.exists(_._1.equalsIgnoreCase(p))))
+    if (ineq.exists(p => !keys.headOption.exists(_.target.equalsIgnoreCase(p))))
       return false // first sort must be the inequality property
-    orders = keys
+    orders = keys.map(k => (k.target, k.desc))
     limit = n
     true
   }
@@ -535,24 +518,22 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
       new DsScan(ep, PushedAgg.outSchema(ep.schema, Nil, aggs),
         DsQuery.aggregationJson(ep.spec.kind, Nil, accepted,
           aggs.map(d => d.fn -> (if (d.col < 0) "" else ep.schema.fields(d.col).name))),
-        accepted, Nil, -1, pushed, hint, aggs = aggs)
+        accepted, Nil, -1, pushed, aggs = aggs)
     case None =>
       val props =
         if (required.fieldNames.sameElements(ep.schema.fieldNames)) Nil
         else required.fieldNames.toSeq
-      // Spark pushes limit+offset as one widened limit then the offset;
-      // the API's limit counts results AFTER the skip, so it comes off
-      val wireLimit = if (skipN > 0 && limit > 0) limit - skipN else limit
+      val wireLimit = PushedWindow.wireLimit(limit, skipN)
       new DsScan(ep, required,
         DsQuery.queryJson(ep.spec.kind, props, accepted, orders, wireLimit,
           "", skipN),
-        accepted, orders, wireLimit, pushed, hint)
+        accepted, orders, wireLimit, pushed, fanOut)
   }
 }
 
 class DsScan(ep: DsEndpoint, required: StructType, queryBody: String,
     accepted: Seq[DsQuery.PropFilter], orders: Seq[(String, Boolean)],
-    limit: Int, pushed: Array[Filter], hint: Option[Int] = None,
+    limit: Int, pushed: Array[Filter], fanOut: Option[WireSplits] = None,
     aggs: Seq[AggDef] = Nil) extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -564,39 +545,23 @@ class DsScan(ep: DsEndpoint, required: StructType, queryBody: String,
 
   override def toBatch: Batch = this
 
-  /** Key-range fan-out under Datastore's own constraints: each partition
-    * ANDs `key >= lo AND key < hi` property filters into its query (the
+  /** Key-range fan-out under Datastore's own constraints (the builder's
+    * `fanOut` decides whether): each partition ANDs
+    * `key >= lo AND key < hi` property filters into its query (the
     * classic scatter-key sharding recipe every parallel Datastore reader
-    * uses). Because the API allows inequality filters on only ONE
-    * property, a scan whose pushed filters already range over a
-    * different property — or that carries a pushed sort — cannot take
-    * range injection and stays a single cursor stream; the loopback
-    * service enforces that rule with a 400, so a violation here would
-    * fail loudly, not mis-answer. A final partition carries
-    * `key EQUAL null` so explicit-null keys survive the range tiling. */
+    * uses); the loopback service enforces the single-inequality rule
+    * with a 400, so a violation here would fail loudly, not mis-answer.
+    * A final partition carries `key EQUAL null` so explicit-null keys
+    * survive the range tiling. */
   override def planInputPartitions(): Array[InputPartition] = {
-    def single = Array[InputPartition](
-      DsPartition(ep.spec, queryBody, required.json, aggs))
-    // a global aggregation result is ONE row — never range-tiled
-    if (aggs.nonEmpty) return single
-    val ws = ep.splits.getOrElse(return single)
-    if (orders.nonEmpty) return single
-    val foreignIneq = accepted.exists(p =>
-      p.op != "EQUAL" && !p.prop.equalsIgnoreCase(ws.key))
-    if (foreignIneq) return single
-    // an EQUAL on the split key pins the scan: one targeted request
-    // (range shards would all be provably empty but one)
-    if (accepted.exists(p => p.prop.equalsIgnoreCase(ws.key) && p.op == "EQUAL"))
-      return single
-    val n = WireFanout.effective(ws.points.size + 1, hint)
-    val pts = WireFanout.thin(ws.points.toIndexedSeq, n)
-    if (pts.isEmpty) return single
+    val ws = fanOut.getOrElse(
+      return Array(DsPartition(ep.spec, queryBody, required.json, aggs)))
     val props =
       if (required.fieldNames.sameElements(ep.schema.fieldNames)) Nil
       else required.fieldNames.toSeq
     def bodyFor(extra: Seq[DsQuery.PropFilter]) = DsQuery.queryJson(
       ep.spec.kind, props, accepted ++ extra, orders, limit, "")
-    val ranges = WireFanout.ranges(pts).map { case (lo, hi) =>
+    val ranges = WireFanout.ranges(ws.points).map { case (lo, hi) =>
       bodyFor(lo.map(l => DsQuery.PropFilter(ws.key, "GREATER_THAN_OR_EQUAL", l)).toSeq ++
         hi.map(h => DsQuery.PropFilter(ws.key, "LESS_THAN", h)).toSeq)
     }

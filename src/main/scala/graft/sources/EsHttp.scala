@@ -11,7 +11,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.SortOrder
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -360,10 +360,10 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = ep.schema
   private var limit: Int = -1
-  private var orders: Seq[(String, Boolean, Boolean)] = Nil // (target, desc, missingFirst)
+  private var orders: Seq[SortKey[String]] = Nil // target: the server field
   private var agg: Option[(Seq[Int], Seq[AggDef])] = None
-  // TopN over a pushed aggregate: (group OUTPUT position, desc, nullsFirst)
-  private var aggOrders: Seq[(Int, Boolean, Boolean)] = Nil
+  // TopN over a pushed aggregate; target: the group's OUTPUT position
+  private var aggOrders: Seq[SortKey[Int]] = Nil
 
   /** The field name a server-side exact-value operation must target:
     * analyzed (text) columns retarget to their `.keyword` multi-field;
@@ -431,18 +431,11 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
   override def pushTopN(so: Array[SortOrder], n: Int): Boolean = {
     if (agg.isDefined) return pushAggTopN(so, n)
     if (n > EsTable.MaxResultWindow) return false
-    val ks = so.map { o =>
-      o.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          fieldIdx(nr).flatMap(serverFieldIdx).map { t =>
-            (t, o.direction() == SortDirection.DESCENDING,
-              o.nullOrdering() == NullOrdering.NULLS_FIRST)
-          }
-        case _ => None
-      }
+    PushedWindow.keys(so)(name =>
+      ep.schema.fieldNames.find(_.equalsIgnoreCase(name)).flatMap(serverField)) match {
+      case Some(ks) => orders = ks; limit = n; true
+      case None => false
     }
-    if (ks.exists(_.isEmpty)) false
-    else { orders = ks.map(_.get).toSeq; limit = n; true }
   }
 
   /** TopN over a pushed aggregate: sort keys that are GROUP columns ride
@@ -462,29 +455,12 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
     val (groupIdx, _) = agg.get
     if (groupIdx.isEmpty) return false // a global aggregate has no window
     val groupNames = groupIdx.map(i => ep.schema.fields(i).name)
-    val ks = so.toSeq.map { o =>
-      o.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          val pos = groupNames.indexWhere(_.equalsIgnoreCase(nr.fieldNames()(0)))
-          if (pos < 0) None
-          else Some((pos, o.direction() == SortDirection.DESCENDING,
-            o.nullOrdering() == NullOrdering.NULLS_FIRST))
-        case _ => None
-      }
-    }
-    if (ks.exists(_.isEmpty)) return false
-    val flat = ks.map(_.get)
-    if (flat.map(_._1).distinct.size != flat.size) return false // dup sort key
+    val flat = PushedWindow.keys(so)(PushedWindow.byName(groupNames.zipWithIndex))
+      .getOrElse(return false)
+    if (flat.map(_.target).distinct.size != flat.size) return false // dup sort key
     aggOrders = flat
     limit = n
     true
-  }
-
-  private def fieldIdx(col: NamedReference): Option[Int] = {
-    val parts = col.fieldNames()
-    if (parts.length != 1) None
-    else Some(ep.schema.fieldNames.indexWhere(_.equalsIgnoreCase(parts(0))))
-      .filter(_ >= 0)
   }
 
   /** [[serverField]] by schema index (agg targets). */
@@ -596,15 +572,15 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
               else ep.spec.compositePageSize
             comp.put("size", pageSize)
             val srcs = comp.putArray("sources")
-            val lead = aggOrders.map(_._1)
+            val lead = aggOrders.map(_.target)
             val srcOrder = lead ++ keys.indices.filterNot(lead.contains)
             srcOrder.foreach { outPos =>
               val t = srcs.addObject().putObject(s"k$outPos").putObject("terms")
               t.put("field", serverFieldIdx(keys(outPos)).get)
               t.put("missing_bucket", true)
-              aggOrders.find(_._1 == outPos).foreach { case (_, desc, nullsFirst) =>
-                t.put("order", if (desc) "desc" else "asc")
-                t.put("missing_order", if (nullsFirst) "first" else "last")
+              aggOrders.find(_.target == outPos).foreach { k =>
+                t.put("order", if (k.desc) "desc" else "asc")
+                t.put("missing_order", if (k.nullsFirst) "first" else "last")
               }
             }
             if (!metrics.isEmpty) by.set[ObjectNode]("aggs", metrics)
@@ -619,10 +595,10 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
         body.set[ObjectNode]("query", dsl)
         if (orders.nonEmpty) {
           val sortArr = body.putArray("sort")
-          orders.foreach { case (target, desc, missingFirst) =>
-            val o = sortArr.addObject().putObject(target)
-            o.put("order", if (desc) "desc" else "asc")
-            o.put("missing", if (missingFirst) "_first" else "_last")
+          orders.foreach { k =>
+            val o = sortArr.addObject().putObject(k.target)
+            o.put("order", if (k.desc) "desc" else "asc")
+            o.put("missing", if (k.nullsFirst) "_first" else "_last")
           }
         }
         new EsScan(ep, required, body.toString, pushed,
@@ -666,7 +642,7 @@ class EsScan(ep: EsEndpoint, required: StructType, dslBody: String,
   // a pushed sorted window must never gain a filter beneath it: even
   // under the PARTIAL contract Spark re-applies its Sort/Limit BELOW the
   // join, so a runtime filter here would window the filtered subset
-  override protected def delegatesOrderedWindow: Boolean = sorted
+  override protected def delegatesOrderedWindow: Boolean = PushedWindow.ordered(sorted, 0)
 
   override protected def runtimeFilterColumns: Seq[String] = {
     def jsonExact(dt: DataType): Boolean = dt match {

@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.SortOrder
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
@@ -205,32 +205,18 @@ object FilterEval {
   }
 }
 
-/** One sort key of a pushed top-N, resolved to a row index (parse schema
-  * for row scans, output schema for complete-agg scans). */
-final case class SortSpec(colIdx: Int, descending: Boolean, nullsFirst: Boolean)
+/** A pushed top-N over positional rows: keys target row indices (parse
+  * schema for row scans, output schema for complete-agg scans). */
+private object FileTopN {
+  def ordering(keys: Array[SortKey[Int]]): Ordering[Array[Any]] =
+    PushedWindow.ordering(keys.toSeq)((r: Array[Any], i: Int) => r(i))
 
-object SortSpec {
-  /** Row ordering for a pushed top-N: lexicographic over the sort keys with
-    * SQL null ordering; incomparable values tie (cmp = None ⇒ 0). */
-  def ordering(specs: Array[SortSpec]): Ordering[Array[Any]] =
-    (x: Array[Any], y: Array[Any]) => {
-      var i = 0
-      var r = 0
-      while (r == 0 && i < specs.length) {
-        val s = specs(i)
-        val (a, b) = (x(s.colIdx), y(s.colIdx))
-        r =
-          if (a == null && b == null) 0
-          else if (a == null) { if (s.nullsFirst) -1 else 1 }
-          else if (b == null) { if (s.nullsFirst) 1 else -1 }
-          else {
-            val c = FilterEval.cmp(a, b).getOrElse(0)
-            if (s.descending) -c else c
-          }
-        i += 1
-      }
-      r
-    }
+  /** The keys as EXPLAIN has always printed them,
+    * `SortSpec(index,desc,nullsFirst)`. */
+  def describe(keys: Array[SortKey[Int]], limit: Int): String =
+    if (keys.isEmpty) "none"
+    else keys.map(k => s"SortSpec(${k.target},${k.desc},${k.nullsFirst})")
+      .mkString("[", ", ", s"] limit=$limit")
 }
 
 /** One scan partition = a bin-packed list of file chunks planned by
@@ -245,7 +231,7 @@ final case class FilePartition(
     outputIndices: Array[Int],
     filters: Array[Filter],
     limit: Int,
-    topN: Array[SortSpec],
+    topN: Array[SortKey[Int]],
     offset: Int = 0) extends InputPartition
 
 /** A [[FilePartition]] holding exactly one bucket of a bucketed table,
@@ -273,8 +259,8 @@ class FileScanBuilder(
   private var required: StructType = table.schema0
   private var limit: Int = -1
   private var offset: Int = 0
-  // pushed ORDER BY keys as (column name, descending, nullsFirst)
-  private var sortKeys: Array[(String, Boolean, Boolean)] = Array.empty
+  // pushed ORDER BY keys, by column name
+  private var sortKeys: Seq[SortKey[String]] = Nil
   // (group col indices into table schema, agg defs indexed into table schema)
   private var aggregation: Option[(Seq[Int], Seq[AggDef])] = None
 
@@ -334,21 +320,9 @@ class FileScanBuilder(
   override def pushTopN(orders: Array[SortOrder], n: Int): Boolean = {
     if (aggregation.isDefined && !passthrough) return false
     val sortSchema = if (aggregation.isDefined) aggOutSchema else table.schema0
-    val keys = orders.map { so =>
-      so.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 &&
-            sortSchema.fieldNames.exists(_.equalsIgnoreCase(nr.fieldNames()(0))) =>
-          Some((nr.fieldNames()(0),
-            so.direction() == SortDirection.DESCENDING,
-            so.nullOrdering() == NullOrdering.NULLS_FIRST))
-        case _ => None
-      }
-    }
-    if (keys.exists(_.isEmpty)) false
-    else {
-      sortKeys = keys.map(_.get)
-      limit = n
-      true
+    PushedWindow.keys(orders)(PushedWindow.byName(sortSchema.fieldNames.toSeq.map(n => n -> n))) match {
+      case Some(ks) => sortKeys = ks; limit = n; true
+      case None => false
     }
   }
 
@@ -437,9 +411,8 @@ class FileScanBuilder(
       val aggs2 = aggs.map(a => if (a.col < 0) a else a.copy(col = reIdx(a.col)))
       val outSchema = aggOutSchema
       // passthrough consumed sort+limit: resolved against the agg output
-      val topNSpecs = sortKeys.map { case (name, desc, nf) =>
-        SortSpec(outSchema.fieldNames.indexWhere(_.equalsIgnoreCase(name)), desc, nf)
-      }
+      val topNSpecs = sortKeys.map(k => k.copy(target =
+        outSchema.fieldNames.indexWhere(_.equalsIgnoreCase(k.target)))).toArray
       new FileAggScanImpl(scanFiles.map(_.getPath), table.format,
         parseSchema, outSchema, groups2, aggs2, pushed,
         complete = passthrough, topNSpecs, if (passthrough) limit else -1,
@@ -449,7 +422,7 @@ class FileScanBuilder(
       // prunes them out of the required schema once the filter is pushed.
       // Filter references may be dotted nested paths (profile.name); the
       // parse unit is the top-level column.
-      val filterRefs = pushed.flatMap(_.references).toSeq ++ sortKeys.map(_._1)
+      val filterRefs = pushed.flatMap(_.references).toSeq ++ sortKeys.map(_.target)
       val filterTops = filterRefs.map(_.split('.').head.toLowerCase).toSet
       // top-level struct columns whose *nested* path a pushed filter needs
       val nestedTops = pushed.flatMap(_.references).filter(_.contains('.'))
@@ -470,9 +443,8 @@ class FileScanBuilder(
       val parseSchema = StructType(parseFields)
       val outIdx = required.fieldNames.map(n =>
         parseSchema.fieldNames.indexWhere(_.equalsIgnoreCase(n)))
-      val topN = sortKeys.map { case (name, desc, nf) =>
-        SortSpec(parseSchema.fieldNames.indexWhere(_.equalsIgnoreCase(name)), desc, nf)
-      }
+      val topN = sortKeys.map(k => k.copy(target =
+        parseSchema.fieldNames.indexWhere(_.equalsIgnoreCase(k.target)))).toArray
       // a passthrough-consumed limit/top-N/offset is exact
       // (isPartiallyPushed = false): one partition delivers the globally
       // sorted, trimmed result
@@ -514,7 +486,7 @@ class FileAggScanImpl(
     aggs: Seq[AggDef],
     pushed: Array[Filter],
     complete: Boolean = false,
-    topN: Array[SortSpec] = Array.empty,
+    topN: Array[SortKey[Int]] = Array.empty,
     limit: Int = -1,
     prunedFrom: Int = -1,
     offset: Int = 0) extends Scan with Batch {
@@ -528,7 +500,7 @@ class FileAggScanImpl(
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"PushedAggregates: [${aggs.map(_.tag).mkString(", ")}], " +
       s"PushedGroupBy: [${groupIdx.mkString(", ")}], " +
-      s"PushedTopN: ${if (topN.nonEmpty) s"[${topN.mkString(", ")}] limit=$limit" else "none"}"
+      s"PushedTopN: ${FileTopN.describe(topN, limit)}"
 
   override def toBatch: Batch = this
 
@@ -556,7 +528,7 @@ final case class FileAggPartition(
     aggs: Array[AggDef],
     filters: Array[Filter],
     complete: Boolean,
-    topN: Array[SortSpec],
+    topN: Array[SortKey[Int]],
     limit: Int,
     offset: Int = 0) extends InputPartition
 
@@ -637,7 +609,7 @@ class FileAggReaderFactory extends PartitionReaderFactory {
       case (key, acc) => (key ++ finish(acc)).toArray
     }
     if (p.complete && p.topN.nonEmpty) // consumed ORDER BY: final rows sorted
-      outRows = outRows.toArray.sorted(SortSpec.ordering(p.topN)).iterator
+      outRows = outRows.toArray.sorted(FileTopN.ordering(p.topN)).iterator
     if (p.complete && p.limit >= 0)
       outRows = outRows.take(p.limit) // Spark pushes limit+offset combined
     if (p.complete && p.offset > 0)
@@ -656,7 +628,7 @@ class FileScanImpl(
     outputIndices: Array[Int],
     pushed: Array[Filter],
     limit: Int,
-    topN: Array[SortSpec] = Array.empty,
+    topN: Array[SortKey[Int]] = Array.empty,
     onePartition: Boolean = false,
     prunedFrom: Int = -1,
     offset: Int = 0,
@@ -759,7 +731,7 @@ class FileScanImpl(
       s"Exact: $onePartition, " +
       s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"PushedLimit: ${if (limit >= 0) limit.toString else "none"}, " +
-      s"PushedTopN: ${if (topN.nonEmpty) s"[${topN.mkString(", ")}] limit=$limit" else "none"}, " +
+      s"PushedTopN: ${FileTopN.describe(topN, limit)}, " +
       s"ReadSchema: ${outputSchema.catalogString}"
 
   /** Honest size for the planner: the bytes of the (key-pruned) file
@@ -848,7 +820,7 @@ class FilePartitionReaderFactory extends PartitionReaderFactory {
       if (p.topN.nonEmpty && p.limit >= 0) {
         // bounded selection: keep the partition's N best rows in a max-heap
         // of the current worst — O(rows·log N) time, O(N) memory per task
-        val ord = SortSpec.ordering(p.topN)
+        val ord = FileTopN.ordering(p.topN)
         val heap = new mutable.PriorityQueue[Array[Any]]()(ord)
         base.foreach { row =>
           if (heap.size < p.limit) heap.enqueue(row)

@@ -1045,26 +1045,10 @@ object LoopbackRestServer {
                 else e.getKey
               val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(target))
               require(i >= 0, s"unknown sort field ${e.getKey}")
-              val desc = e.getValue.path("order").asText("asc") == "desc"
-              val missingFirst = e.getValue.path("missing").asText("_last") == "_first"
-              (i, desc, missingFirst)
+              SortKey(i, e.getValue.path("order").asText("asc") == "desc",
+                e.getValue.path("missing").asText("_last") == "_first")
             }
-            matched.sortWith { (a, b) =>
-              var r = 0
-              val it = keys.iterator
-              while (r == 0 && it.hasNext) {
-                val (i, desc, mf) = it.next()
-                r = (a(i), b(i)) match {
-                  case (null, null) => 0
-                  case (null, _) => if (mf) -1 else 1
-                  case (_, null) => if (mf) 1 else -1
-                  case (x, y) =>
-                    val c = FilterEval.cmp(x, y).getOrElse(0)
-                    if (desc) -c else c
-                }
-              }
-              r < 0
-            }
+            matched.sorted(PushedWindow.ordering(keys)((r: Array[Any], i: Int) => r(i)))
           }
         val from = body.path("from").asLong(0L)
         val size = body.path("size").asLong(10L)

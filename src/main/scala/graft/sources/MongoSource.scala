@@ -11,7 +11,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.{NamedReference, SortOrder}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
@@ -219,30 +219,22 @@ object MongoDsl {
       s"BSON value ${other.getClass.getSimpleName} does not fit $t")
   }
 
-  /** Sort comparator for a Mongo sort document (null orders lowest, as
-    * Mongo's canonical BSON order places null before numbers/strings). */
-  def sortComparator(sort: BDoc, schema: StructType): Ordering[Array[Any]] = {
-    val keys = sort.fields.map { case (name, dir) =>
+  /** A Mongo sort document's keys, each `resolve`d to its target. Null
+    * orders lowest, as Mongo's canonical BSON order places null before
+    * numbers and strings. */
+  def sortKeys[T](sort: BDoc)(resolve: String => T): Seq[SortKey[T]] =
+    sort.fields.map { case (name, dir) =>
+      val desc = dir.asInstanceOf[Number].intValue() < 0
+      SortKey(resolve(name), desc, nullsFirst = !desc)
+    }
+
+  /** Sort comparator for a Mongo sort document over schema rows. */
+  def sortComparator(sort: BDoc, schema: StructType): Ordering[Array[Any]] =
+    PushedWindow.ordering(sortKeys(sort) { name =>
       val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
       require(i >= 0, s"unknown sort field $name")
-      (i, dir.asInstanceOf[Number].intValue())
-    }
-    (a: Array[Any], b: Array[Any]) => {
-      var r = 0
-      val it = keys.iterator
-      while (r == 0 && it.hasNext) {
-        val (i, dir) = it.next()
-        val c = (a(i), b(i)) match {
-          case (null, null) => 0
-          case (null, _) => -1
-          case (_, null) => 1
-          case (x, y) => FilterEval.cmp(x, y).getOrElse(0)
-        }
-        r = if (dir < 0) -c else c
-      }
-      r
-    }
-  }
+      i
+    })((r: Array[Any], i: Int) => r(i))
 }
 
 /** SQL aggregate → Mongo aggregation-pipeline translation, and the
@@ -977,22 +969,8 @@ object LoopbackMongoServer {
             }
             cur
           }
-          docs = docs.sortWith { (a, b) =>
-            var r = 0
-            val it = s.fields.iterator
-            while (r == 0 && it.hasNext) {
-              val (name, dir) = it.next()
-              val (va, vb) = (pathGet(a, name), pathGet(b, name))
-              val c = (va, vb) match {
-                case (null, null) => 0
-                case (null, _) => -1
-                case (_, null) => 1
-                case (x, y) => FilterEval.cmp(x, y).getOrElse(0)
-              }
-              r = if (dir.asInstanceOf[Number].intValue() < 0) -c else c
-            }
-            r < 0
-          }
+          docs = docs.sorted(
+            PushedWindow.ordering(MongoDsl.sortKeys(s)(identity))(pathGet))
         case Some(("$limit", n)) =>
           docs = docs.take(n.asInstanceOf[Number].intValue())
         case Some(("$lookup", spec: BDoc)) =>
@@ -1430,7 +1408,7 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
     * fanned-out scan skipping `n` rows per slice would drop n×slices.
     * Aggregated scans decline too (the pipeline has no skip stage). */
   override def pushOffset(n: Int): Boolean =
-    if (agg.isDefined || joinSpec.isDefined || fansOut) false
+    if (agg.isDefined || joinSpec.isDefined || fanOut.isDefined) false
     else { skip = n; true }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -1457,16 +1435,23 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
     * under full delegation the pipeline's answer IS the window. */
   override def pushLimit(n: Int): Boolean = { limit = n; true }
 
-  /** Will this scan fan out into per-range slices? (split metadata
-    * present and not collapsed by a key-pinning pushed predicate) */
-  private def fansOut: Boolean = ep.splits.exists(s =>
-    s.points.nonEmpty && !WireFanout.pinsKey(pushed, s.key))
+  /** The thinned split points the scan fans out over, or None for one
+    * request: no split metadata, a consumed `$group`/`$lookup` pipeline
+    * (global server-side state), a key-pinning pushed predicate
+    * ([[WireFanout.pinsKey]]) or a fan-out of one. [[build]] hands this
+    * value to the scan, so the partition plan cannot disagree with it. */
+  private def fanOut: Option[WireSplits] =
+    if (agg.isDefined || joinSpec.isDefined) None
+    else ep.splits.filterNot(s => WireFanout.pinsKey(pushed, s.key))
+      .map(s => s.copy(points = WireFanout.thin(s.points.toIndexedSeq,
+        WireFanout.effective(s.points.size + 1, hint))))
+      .filter(_.points.nonEmpty)
 
   /** A fanned-out scan serves limit/topN PER SLICE — partial, Spark
     * re-applies. A single-request scan's server-side sort+limit is
     * exact — fully pushed, which is also what lets Spark delegate
     * OFFSET (it only pushes offset below a FULLY pushed limit). */
-  override def isPartiallyPushed(): Boolean = fansOut
+  override def isPartiallyPushed(): Boolean = fanOut.isDefined
 
   /** Mongo's null placement matches Spark's defaults (nulls lowest):
     * accept ASC+NULLS_FIRST and DESC+NULLS_LAST. The sort target depends
@@ -1481,29 +1466,16 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
     val outNames: Seq[String] =
       joinSpec.map(_.outSchema.fieldNames.toSeq).getOrElse(ep.schema.fieldNames.toSeq)
     // under a pushed $group only group columns are sortable, as _id.<k>
-    val targetFor: String => Option[String] = agg match {
-      case Some((groupIdx, _)) =>
-        val groups = groupIdx.map(outNames(_))
-        k => groups.find(_.equalsIgnoreCase(k)).map(g => s"_id.$g")
-      case None =>
-        k => outNames.find(_.equalsIgnoreCase(k))
+    val targets = agg match {
+      case Some((groupIdx, _)) => groupIdx.map(outNames(_)).map(g => g -> s"_id.$g")
+      case None => outNames.map(n => n -> n)
     }
-    val keys = orders.map { so =>
-      so.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          targetFor(nr.fieldNames()(0)).flatMap { t =>
-            val desc = so.direction() == SortDirection.DESCENDING
-            val nullsFirst = so.nullOrdering() == NullOrdering.NULLS_FIRST
-            if (desc != nullsFirst) Some(t -> (if (desc) -1 else 1)) else None
-          }
-        case _ => None
-      }
-    }
-    if (keys.exists(_.isEmpty)) false
-    else {
-      sortDoc = Some(BDoc(keys.map(k => k.get._1 -> (k.get._2: Any)).toSeq))
-      limit = n
-      true
+    PushedWindow.keys(orders)(PushedWindow.byName(targets)) match {
+      case Some(ks) if ks.forall(_.nullsLowest) =>
+        sortDoc = Some(BDoc(ks.map(k => k.target -> ((if (k.desc) -1 else 1): Any))))
+        limit = n
+        true
+      case _ => false
     }
   }
 
@@ -1595,7 +1567,7 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
           val aggStages = MongoAgg.pipeline(BDoc.empty, groupNames,
             aggs.map(d => d -> (if (d.col < 0) "" else outNames(d.col))))
           return new MongoScan(epScan, PushedAgg.outSchema(j.outSchema, groupIdx, aggs),
-            driveFilterDoc, None, sortDoc, limit, pushed, hint,
+            driveFilterDoc, None, sortDoc, limit, pushed,
             aggPipeline = Some(((joinStages :+ project) ++ aggStages) ++ windowStages),
             aggs = aggs, groupFields = groupNames, joined = true)
         case None =>
@@ -1606,7 +1578,7 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
             (c._1, c._2, c._3)
           }
           return new MongoScan(epScan, required, driveFilterDoc, None, sortDoc, limit,
-            pushed, hint,
+            pushed,
             aggPipeline = Some((joinStages :+ projectStage(out)) ++ windowStages),
             joined = true) // aggs empty => plain row decode
       }
@@ -1617,26 +1589,24 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
         val stages = MongoAgg.pipeline(filter, groupNames,
           aggs.map(d => d -> (if (d.col < 0) "" else ep.schema.fields(d.col).name)))
         new MongoScan(ep, PushedAgg.outSchema(ep.schema, groupIdx, aggs), filter, None,
-          sortDoc, limit, pushed, hint, aggPipeline = Some(stages ++ windowStages),
+          sortDoc, limit, pushed, aggPipeline = Some(stages ++ windowStages),
           aggs = aggs, groupFields = groupNames)
       case None =>
         val projection =
           if (required.fieldNames.sameElements(ep.schema.fieldNames)) None
           else Some(BDoc(required.fieldNames.toSeq.map(_ -> (1: Any))))
-        // Spark pushes limit = (its limit + offset); the wire's limit
-        // counts AFTER skip, so a delegated offset comes off it again
-        val wireLimit = if (skip > 0 && limit > 0) limit - skip else limit
-        new MongoScan(ep, required, filter, projection, sortDoc, wireLimit, pushed,
-          hint, skip = skip)
+        new MongoScan(ep, required, filter, projection, sortDoc,
+          PushedWindow.wireLimit(limit, skip), pushed, skip = skip, fanOut = fanOut)
     }
   }
 }
 
 class MongoScan(ep: MongoEndpoint, required: StructType, filter: BDoc,
     projection: Option[BDoc], sort: Option[BDoc], limit: Int,
-    pushed: Array[Filter], hint: Option[Int] = None,
+    pushed: Array[Filter],
     aggPipeline: Option[Seq[BDoc]] = None, aggs: Seq[AggDef] = Nil,
-    groupFields: Seq[String] = Nil, skip: Int = -1, joined: Boolean = false)
+    groupFields: Seq[String] = Nil, skip: Int = -1, joined: Boolean = false,
+    fanOut: Option[WireSplits] = None)
   extends Scan with Batch with WireRuntimeFilter[Any] {
 
   override def readSchema(): StructType = required
@@ -1647,7 +1617,8 @@ class MongoScan(ep: MongoEndpoint, required: StructType, filter: BDoc,
 
   @volatile private var runtimeFilter: BDoc = BDoc.empty
 
-  override protected def delegatesOrderedWindow: Boolean = sort.isDefined || skip >= 0
+  override protected def delegatesOrderedWindow: Boolean =
+    PushedWindow.ordered(sort.isDefined, skip)
 
   /** Under agg pushdown only GROUP-KEY pruning is sound (it removes whole
     * groups the join would drop anyway); otherwise any wire-exact output
@@ -1714,15 +1685,11 @@ class MongoScan(ep: MongoEndpoint, required: StructType, filter: BDoc,
         pipelineBson = Some(Bson.encode(BDoc(Seq("pipeline" -> staged)))),
         aggs = aggs, groupFields = groupFields))
     }
-    // a key-pinning pushed predicate ships as ONE targeted find, not
-    // N sockets of which N-1 are provably empty (WireFanout.pinsKey)
-    ep.splits match {
-      case Some(WireSplits(key, points))
-          if points.nonEmpty && !WireFanout.pinsKey(pushed, key) =>
-        val pts = WireFanout.thin(points.toIndexedSeq,
-          WireFanout.effective(points.size + 1, hint))
-        if (pts.isEmpty) Array(part(filter))
-        else WireFanout.ranges(pts).map { case (lo, hi) =>
+    // the builder's one fan-out decision (a key-pinning pushed predicate
+    // ships as ONE targeted find, not N sockets of which N-1 are empty)
+    fanOut match {
+      case Some(WireSplits(key, pts)) =>
+        WireFanout.ranges(pts).map { case (lo, hi) =>
           val range: Any = (lo, hi) match {
             case (None, Some(h)) => // null/missing keys ride partition 0
               BDoc(Seq("$or" -> Seq(
@@ -1737,7 +1704,7 @@ class MongoScan(ep: MongoEndpoint, required: StructType, filter: BDoc,
             else BDoc(Seq("$and" -> Seq(range, filter)))
           part(combined)
         }.toArray
-      case _ => Array(part(filter))
+      case None => Array(part(filter))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
 import org.apache.spark.sql.functions._
@@ -32,12 +32,13 @@ class BqSourceSpec extends AnyFunSuite {
       s"name_${i}_x", i * 1.5)
   }
 
-  private def table(name: String): String = {
-    LoopbackRestServer.register(name, schema, rows)
+  private def table(name: String, tSchema: StructType = schema,
+      tRows: Seq[Array[Any]] = rows): String = {
+    LoopbackRestServer.register(name, tSchema, tRows)
     val baseUrl = LoopbackRestServer.ensureStarted()
     LoopbackRestServer.failNext.set(0)
     LoopbackRestServer.delayMs.set(0)
-    WireEndpoints.register(BqEndpoint("bqtest", name, schema,
+    WireEndpoints.register(BqEndpoint("bqtest", name, tSchema,
       BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("bqtest").isEmpty)
       SourceRegistry.register(SourceDef("bqtest",
@@ -188,6 +189,25 @@ class BqSourceSpec extends AnyFunSuite {
     assert(got.toSeq == want)
     assert(!LoopbackRestServer.lastBqSql.get().contains("%"),
       s"the modulo must stay engine-side: ${LoopbackRestServer.lastBqSql.get()}")
+  }
+
+  test("a delegated DESC sort places nulls where Spark does") {
+    val vSchema = StructType(Seq(StructField("id", LongType), StructField("v", LongType)))
+    val vRows: Seq[Array[Any]] = Seq((1L, 5L), (2L, null), (3L, 9L), (4L, null), (5L, 1L))
+      .map { case (i, v) => Array[Any](i, v) }
+    val t = spark.table(table("bqdescnulls", vSchema, vRows))
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(vRows.map(r => Row.fromSeq(r.toSeq)): _*), vSchema)
+    def top3(df: DataFrame, v: Column): Seq[Long] =
+      df.orderBy(v, col("id")).limit(3).collect().map(_.getLong(0)).toSeq
+    for (v <- Seq(col("v").desc, col("v").desc_nulls_first)) {
+      val got = top3(t, v)
+      val sql = LoopbackRestServer.lastBqSql.get()
+      assert(sql.contains("ORDER BY v DESC") && sql.contains("LIMIT 3"),
+        s"the window must be delegated: $sql")
+      assert(got == top3(local, v), s"$v over [$sql]")
+    }
+    assert(top3(t, col("v").desc) == Seq(3L, 1L, 5L))
   }
 
   test("row results page with pageToken (pageSize < result size)") {

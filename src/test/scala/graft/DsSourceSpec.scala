@@ -368,6 +368,14 @@ class DsSourceSpec extends AnyFunSuite {
     assert(q.contains("propertyFilter"), s"the WHERE must ride the nested query: $q")
   }
 
+  test("a global aggregate counted from above is one row, split or not") {
+    for (t <- Seq(table("dsagg4"), fanTable("dsagg5", Seq(100L, 200L, 300L)))) {
+      val df = spark.table(t).filter(col("seg") === "A")
+        .agg(count(lit(1)).as("n"), sum("id").as("sum_id"))
+      assert(df.count() == 1L, t)
+    }
+  }
+
   test("SUM over zero matching entities reads back as SQL NULL via the companion avg") {
     val t = table("dsagg2")
     val df = spark.table(t)

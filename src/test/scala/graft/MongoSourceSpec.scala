@@ -740,6 +740,22 @@ class MongoSourceSpec extends AnyFunSuite {
     assert(withNulls.size == 402)
   }
 
+  test("a pipeline or a one-range fan-out is one request: its window is exact") {
+    val ep = MongoEndpoint("m", "t", schema,
+      MongoEndpointSpec("127.0.0.1", 1, "db", "t", MongoClientConfig()),
+      Some(WireSplits("id", Seq(100L, 200L, 300L))))
+    val fanned = new MongoScanBuilder(ep)
+    assert(fanned.pushLimit(5) && fanned.isPartiallyPushed() && !fanned.pushOffset(2))
+    val oneRange = new MongoScanBuilder(ep, hint = Some(1))
+    assert(oneRange.pushLimit(5) && !oneRange.isPartiallyPushed() && oneRange.pushOffset(2))
+    val grouped = new MongoScanBuilder(ep)
+    assert(grouped.pushAggregation(
+      new org.apache.spark.sql.connector.expressions.aggregate.Aggregation(
+        Array(new org.apache.spark.sql.connector.expressions.aggregate.CountStar()),
+        Array(org.apache.spark.sql.connector.expressions.Expressions.column("seg")))))
+    assert(grouped.pushLimit(5) && !grouped.isPartiallyPushed())
+  }
+
   // ---- runtime semi-join reduction (dynamic filtering) ---------------------
 
   test("a broadcast dim join ships the build-side keys as a runtime $in") {
