@@ -107,28 +107,6 @@ object BqSql {
       where: Option[Filter], groupBy: Seq[String], orderBy: Seq[Order],
       limit: Int, offset: Int, join: Option[Join] = None)
 
-  /** Prefix every attribute reference with `q.` — rendering a side's
-    * pushed filters under that side's alias in a join statement. Only the
-    * renderable subset needs covering: anything else never pushed. */
-  def prefixRefs(f: Filter, q: String): Filter = f match {
-    case EqualTo(a, v) => EqualTo(s"$q.$a", v)
-    case EqualNullSafe(a, v) => EqualNullSafe(s"$q.$a", v)
-    case GreaterThan(a, v) => GreaterThan(s"$q.$a", v)
-    case GreaterThanOrEqual(a, v) => GreaterThanOrEqual(s"$q.$a", v)
-    case LessThan(a, v) => LessThan(s"$q.$a", v)
-    case LessThanOrEqual(a, v) => LessThanOrEqual(s"$q.$a", v)
-    case In(a, vs) => In(s"$q.$a", vs)
-    case IsNull(a) => IsNull(s"$q.$a")
-    case IsNotNull(a) => IsNotNull(s"$q.$a")
-    case StringStartsWith(a, v) => StringStartsWith(s"$q.$a", v)
-    case StringEndsWith(a, v) => StringEndsWith(s"$q.$a", v)
-    case StringContains(a, v) => StringContains(s"$q.$a", v)
-    case And(l, r) => And(prefixRefs(l, q), prefixRefs(r, q))
-    case Or(l, r) => Or(prefixRefs(l, q), prefixRefs(r, q))
-    case Not(c) => Not(prefixRefs(c, q))
-    case other => other // AlwaysTrue/False carry no refs
-  }
-
   def parse(sql: String): Stmt = new Parser(sql).parseStmt()
 
   /** A parsed DML statement (BigQuery standard-SQL DML; the service —
@@ -697,7 +675,7 @@ final case class BqJoinSpec(kind: String, rightTable: String,
     leftKeyCol: String, rightKeyCol: String, rightPushed: Array[Filter])
 
 class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extends ScanBuilder
-  with SupportsPushDownFilters
+  with PushedFilter
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit
   with SupportsPushDownOffset
@@ -705,7 +683,6 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
   with SupportsPushDownAggregates
   with SupportsPushDownJoin {
 
-  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = ep.schema
   private var limit: Int = -1
   private var offset: Int = 0
@@ -787,13 +764,9 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
     }
   }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    if (join.isDefined) return filters // post-join refs are output names
-    val (ok, declined) = filters.partition(f => BqSql.render(f).isDefined)
-    pushed = ok
-    declined
-  }
-  override def pushedFilters(): Array[Filter] = pushed
+  override protected def filtersClosed: Boolean = join.isDefined
+  override protected def acceptFilters(filters: Array[Filter]): collection.Seq[Filter] =
+    filters.filter(f => BqSql.render(f).isDefined)
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -865,7 +838,8 @@ class BqScanBuilder(private val ep: BqEndpoint, hint: Option[Int] = None) extend
   override def build(): Scan = {
     join.foreach { j =>
       def rendered(fs: Array[Filter], alias: String): Seq[String] =
-        fs.toSeq.flatMap(f => BqSql.render(BqSql.prefixRefs(f, alias)))
+        fs.toSeq.flatMap(f =>
+          PushedFilter.mapRefs(f)(a => Some(s"$alias.$a")).flatMap(BqSql.render))
       // preserved side's pre-join filters → WHERE (equivalent pre/post);
       // null-extended side's → ON (a WHERE would drop null-extended rows)
       val (onSide, whereSide) = j.kind match {
@@ -1048,7 +1022,7 @@ class BqScan(ep: BqEndpoint, out: StructType, sql: String,
     val ws = ep.splits.getOrElse(return single)
     // a key-pinning pushed predicate answers in ONE statement: range
     // shards would be provably empty for all but one partition
-    if (WireFanout.pinsKey(pushed, ws.key)) return single
+    if (PushedFilter.pins(pushed, ws.key)) return single
     val n = WireFanout.effective(ws.points.size + 1, hint)
     val pts = WireFanout.thin(ws.points.toIndexedSeq, n)
       .flatMap(BqSql.renderLit) // unrenderable split values => no fan-out

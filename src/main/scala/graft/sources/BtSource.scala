@@ -257,28 +257,20 @@ class BtTable(val ep: BtEndpoint) extends Table with SupportsRead
   /** DELETE FROM ... WHERE: row keys only — a BigTable delete is a
     * per-row DeleteRow mutation addressed by key
     * (`sql_to_bt.go:404-430`); range/prefix deletes are an admin-API
-    * concern, so any other WHERE shape refuses. */
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall {
-      case EqualTo(a, v) => a.equalsIgnoreCase(ep.keyCol) && v.isInstanceOf[String]
-      case In(a, vs) => a.equalsIgnoreCase(ep.keyCol) && vs != null &&
-        vs.forall(_.isInstanceOf[String])
-      case IsNotNull(a) => a.equalsIgnoreCase(ep.keyCol)
-      case _ => false
-    } && filters.exists { // a bare IsNotNull pins no keys: refuse loudly
-      case _: EqualTo | _: In => true
-      case _ => false
+    * concern, so any other WHERE shape, a bare IS NOT NULL (it pins no
+    * keys) or a non-String key refuses. */
+  private def rowKeys(filters: Array[Filter]): Option[Set[String]] =
+    PushedFilter.keySet(filters, ep.keyCol) {
+      case s: String => Some(s)
+      case _ => None
     }
+  override def canDeleteWhere(filters: Array[Filter]): Boolean =
+    rowKeys(filters).isDefined
   override def deleteWhere(filters: Array[Filter]): Unit = {
     // the filters are a CONJUNCTION: intersect the key sets (k = 'a'
     // AND k IN ('a','b') deletes only 'a'; a contradiction deletes
     // nothing) — a union here would delete rows the WHERE never matched
-    val keySets = filters.toSeq.collect {
-      case EqualTo(_, v: String) => Set(v)
-      case In(_, vs) => vs.toSeq.map(_.asInstanceOf[String]).toSet
-    }
-    val keys = keySets.reduceOption(_ intersect _).getOrElse(Set.empty[String])
-      .toSeq.sorted
+    val keys = rowKeys(filters).getOrElse(Set.empty).toSeq.sorted
     if (keys.isEmpty) return // provably-empty conjunction: no request
     val M = EsDsl.M
     val body = M.createObjectNode()
@@ -320,30 +312,23 @@ class BtWriterFactory(spec: BtEndpointSpec, schemaJson: String)
 }
 
 class BtScanBuilder(ep: BtEndpoint, hint: Option[Int] = None) extends ScanBuilder
-  with SupportsPushDownFilters
+  with PushedFilter
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit
   with SupportsPushDownTopN {
 
   private var rowSet: BtQuery.RowSet = BtQuery.RowSet(Seq(("", "")), Nil)
-  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = ep.schema
   private var limit: Int = -1
   private var reversed = false
   private var sortedByKey = false
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val parsed = filters.map(f => f -> BtQuery.compileOne(f, ep.keyCol))
-    val accepted = parsed.collect { case (f, Some(rs)) => (f, rs) }
-    // implied IS NOT NULL on the key column is free (keys exist)
-    val implied = filters.collect {
-      case f @ IsNotNull(a) if a.equalsIgnoreCase(ep.keyCol) => f: Filter
-    }
+  override protected def acceptFilters(filters: Array[Filter]): collection.Seq[Filter] = {
+    val accepted = filters.flatMap(f => BtQuery.compileOne(f, ep.keyCol).map(f -> _))
     rowSet = BtQuery.intersect(accepted.map(_._2).toSeq)
-    pushed = (accepted.map(_._1) ++ implied).toArray
-    filters.filterNot(pushed.contains)
+    // row keys exist: an IS NOT NULL on the key is free
+    accepted.map(_._1) ++ PushedFilter.notNulls(filters, Seq(ep.keyCol))
   }
-  override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema

@@ -80,10 +80,7 @@ object CqlGen {
     // so it ALWAYS absorbs (no WHERE text, no residual). Leaving it
     // residual would plant a post-scan Filter that blocks aggregate
     // pushdown whenever a join infers IsNotNull over the group key.
-    val keyNotNull = filters.collect {
-      case f @ IsNotNull(a) if pk(a.toLowerCase) || ck.contains(a.toLowerCase) =>
-        f: Filter
-    }
+    val keyNotNull = PushedFilter.notNulls(filters, partitionKeys ++ clusteringKeys)
 
     val pkEq = parsed.collect {
       case (f, Some((a, "=", v))) if pk(a.toLowerCase) => (a.toLowerCase, f, s"$a = $v")
@@ -126,9 +123,7 @@ object CqlGen {
     val constrained = (pkEq.map(_._1) ++ ckDone.collect {
       case (f, _) => simple(f).get._1.toLowerCase
     }).toSet
-    val implied = (filters.collect {
-      case f @ IsNotNull(a) if constrained(a.toLowerCase) => f: Filter
-    } ++ keyNotNull).distinct
+    val implied = (PushedFilter.notNulls(filters, constrained) ++ keyNotNull).distinct
     val acceptedFilters = pkEq.map(_._2) ++ ckDone.map(_._1) ++ implied
     val where = pkEq.map(_._3) ++ ckDone.map(_._2)
     val residual = filters.filterNot(acceptedFilters.contains)
@@ -1165,7 +1160,7 @@ object CqlAgg {
 }
 
 class CqlScanBuilder(ep: CqlEndpoint, hint: Option[Int] = None) extends ScanBuilder
-  with SupportsPushDownFilters
+  with PushedFilter
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit
   with SupportsPushDownTopN
@@ -1177,13 +1172,10 @@ class CqlScanBuilder(ep: CqlEndpoint, hint: Option[Int] = None) extends ScanBuil
   private var orders: Seq[(String, Boolean)] = Nil // (column, desc)
   private var agg: Option[CqlAgg.Spec] = None
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (acc, residual) = CqlGen.split(filters.toSeq,
-      ep.partitionKeys, ep.clusteringKeys)
-    accepted = acc
-    residual.toArray
+  override protected def acceptFilters(filters: Array[Filter]): collection.Seq[Filter] = {
+    accepted = CqlGen.split(filters.toSeq, ep.partitionKeys, ep.clusteringKeys)._1
+    accepted.pushed
   }
-  override def pushedFilters(): Array[Filter] = accepted.pushed.toArray
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -1203,7 +1195,7 @@ class CqlScanBuilder(ep: CqlEndpoint, hint: Option[Int] = None) extends ScanBuil
     * clustering index and returns n rows instead of the partition. */
   override def pushTopN(so: Array[SortOrder], n: Int): Boolean = {
     if (agg.isDefined) return false // grouped rows have no ORDER BY surface here
-    val pkEq = accepted.pushed.collect {
+    val pkEq = pushed.collect {
       case EqualTo(a, _) => a.toLowerCase
     }.toSet
     if (!ep.partitionKeys.map(_.toLowerCase).forall(pkEq.contains)) return false
@@ -1235,14 +1227,14 @@ class CqlScanBuilder(ep: CqlEndpoint, hint: Option[Int] = None) extends ScanBuil
         spec.groupOut.map(g => ep.schema.fieldNames.indexWhere(_.equalsIgnoreCase(g))),
         spec.aggs)
       new CqlScan(ep, outSchema, CqlAgg.selectList(spec, ep.schema), accepted.where,
-        limit, accepted.pushed.toArray, hint,
+        limit, pushed, hint,
         groupBy = spec.groupKeyOrder, aggs = spec.aggs)
     case None =>
       val cols =
         if (required.fields.isEmpty) Seq(ep.schema.fieldNames.head)
         else required.fieldNames.toSeq
       new CqlScan(ep, required, cols, accepted.where, limit,
-        accepted.pushed.toArray, hint, orderBy = orders)
+        pushed, hint, orderBy = orders)
   }
 }
 

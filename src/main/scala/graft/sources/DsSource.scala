@@ -342,29 +342,18 @@ class DsTable(val ep: DsEndpoint) extends Table with SupportsRead
     * (the reference's `KeyFromWhere` contract,
     * `sql_to_datastore.go:376-382` — anything else: "Could not delete
     * with that where expression"). Ships ONE `:commit` of delete
-    * mutations. */
+    * mutations. A bare IS NOT NULL pins no keys and refuses, as does a
+    * key with no Datastore value form. */
+  private def deleteKeys(filters: Array[Filter]): Option[Set[Any]] =
+    ep.keyCol.flatMap(k => PushedFilter.keySet(filters, k)(v =>
+      if (v != null && DsQuery.valueNode(v).isDefined) Some(v) else None))
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    ep.keyCol.exists(k => filters.forall {
-      case EqualTo(a, v) => a.equalsIgnoreCase(k) && v != null &&
-        DsQuery.valueNode(v).isDefined // same renderability bar as In
-      case In(a, vs) => a.equalsIgnoreCase(k) && vs != null &&
-        vs.forall(v => v != null && DsQuery.valueNode(v).isDefined)
-      case IsNotNull(a) => a.equalsIgnoreCase(k)
-      case _ => false
-    }) && filters.exists { // a bare IsNotNull pins no keys: refuse loudly
-      case _: EqualTo | _: In => true
-      case _ => false
-    }
+    deleteKeys(filters).isDefined
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    val key = keyOrRefuse
+    keyOrRefuse
     // conjunctive filters: INTERSECT the key sets (k = 2 AND k IN (4)
     // is a contradiction and must delete nothing, never the union)
-    val keySets = filters.toSeq.collect {
-      case EqualTo(_, v) => Set(v)
-      case In(_, vs) => vs.toSet
-    }
-    val keys: Seq[Any] = keySets.reduceOption(_ intersect _)
-      .getOrElse(Set.empty[Any]).toSeq
+    val keys = deleteKeys(filters).getOrElse(Set.empty).toSeq
     if (keys.isEmpty) return // provably-empty conjunction: no request
     val M = EsDsl.M
     val body = M.createObjectNode()
@@ -401,7 +390,7 @@ class DsWriterFactory(spec: DsEndpointSpec, schemaJson: String)
 }
 
 class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilder
-  with SupportsPushDownFilters
+  with PushedFilter
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit
   with SupportsPushDownTopN
@@ -409,7 +398,6 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
   with SupportsPushDownAggregates {
 
   private var accepted: Seq[DsQuery.PropFilter] = Nil
-  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = ep.schema
   private var limit: Int = -1
   private var skipN: Int = -1
@@ -442,20 +430,14 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
       case None => false
     }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (acc, residual0) = DsQuery.split(filters.toSeq)
+  override protected def acceptFilters(filters: Array[Filter]): collection.Seq[Filter] = {
+    val (acc, declined) = DsQuery.split(filters.toSeq)
     accepted = acc
     // implied IS NOT NULLs on pushed-compared properties are absorbed
     // (Datastore comparisons never match missing/null)
-    val compared = acc.filter(_.value != null).map(_.prop.toLowerCase).toSet
-    val (implied, residual) = residual0.partition {
-      case IsNotNull(a) => compared(a.toLowerCase)
-      case _ => false
-    }
-    pushed = (filters.toSeq.filterNot(residual0.contains) ++ implied).toArray
-    residual.toArray
+    filters.filterNot(declined.contains) ++
+      PushedFilter.notNulls(declined, acc.filter(_.value != null).map(_.prop))
   }
-  override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema

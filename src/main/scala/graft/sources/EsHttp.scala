@@ -351,13 +351,12 @@ object EsTable {
 
 class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
     approxDistinct: Boolean = false) extends ScanBuilder
-  with SupportsPushDownFilters
+  with PushedFilter
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit
   with SupportsPushDownTopN
   with SupportsPushDownAggregates {
 
-  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = ep.schema
   private var limit: Int = -1
   private var orders: Seq[SortKey[String]] = Nil // target: the server field
@@ -376,38 +375,16 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
       case Some(kw) => kw
     }
 
-  /** Rewrite a filter tree's exact-value references through
+  /** A filter tree with its exact-value references retargeted through
     * [[serverField]]; None when any reference lands on a text column
     * with no keyword sub-field (the filter then declines and Spark
     * polyfills it over the hit scan). exists/missing (IS [NOT] NULL)
     * keep the raw field — real ES serves `exists` on text directly. */
-  private def retargetFilter(f: Filter): Option[Filter] = f match {
-    case EqualTo(a, v) => serverField(a).map(EqualTo(_, v))
-    case EqualNullSafe(a, v) => serverField(a).map(EqualNullSafe(_, v))
-    case In(a, vs) => serverField(a).map(In(_, vs))
-    case GreaterThan(a, v) => serverField(a).map(GreaterThan(_, v))
-    case GreaterThanOrEqual(a, v) => serverField(a).map(GreaterThanOrEqual(_, v))
-    case LessThan(a, v) => serverField(a).map(LessThan(_, v))
-    case LessThanOrEqual(a, v) => serverField(a).map(LessThanOrEqual(_, v))
-    case StringStartsWith(a, v) => serverField(a).map(StringStartsWith(_, v))
-    case StringEndsWith(a, v) => serverField(a).map(StringEndsWith(_, v))
-    case StringContains(a, v) => serverField(a).map(StringContains(_, v))
-    case IsNull(_) | IsNotNull(_) => Some(f)
-    case And(l, r) =>
-      for (rl <- retargetFilter(l); rr <- retargetFilter(r)) yield And(rl, rr)
-    case Or(l, r) =>
-      for (rl <- retargetFilter(l); rr <- retargetFilter(r)) yield Or(rl, rr)
-    case Not(c) => retargetFilter(c).map(Not(_))
-    case other => Some(other) // inexpressible shapes fail at compile anyway
-  }
+  private def serverFilter(f: Filter): Option[Filter] =
+    PushedFilter.mapRefs(f, rawNullTests = true)(serverField)
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, declined) = filters.partition(f =>
-      retargetFilter(f).exists(rf => EsDsl.compile(rf).isDefined))
-    pushed = ok
-    declined
-  }
-  override def pushedFilters(): Array[Filter] = pushed
+  override protected def acceptFilters(filters: Array[Filter]): collection.Seq[Filter] =
+    filters.filter(f => serverFilter(f).exists(rf => EsDsl.compile(rf).isDefined))
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -505,7 +482,7 @@ class EsScanBuilder(ep: EsEndpoint, hint: Option[Int] = None,
 
   override def build(): Scan = {
     val dsl = EsDsl.compileAll(
-      pushed.toSeq.flatMap(f => retargetFilter(f)).flatMap(EsDsl.compile) match {
+      pushed.toSeq.flatMap(serverFilter).flatMap(EsDsl.compile) match {
         case Nil => Seq({ val o = EsDsl.M.createObjectNode(); o.putObject("match_all"); o })
         case fs => fs
       })
@@ -616,9 +593,12 @@ class EsScan(ep: EsEndpoint, required: StructType, dslBody: String,
 
   override def readSchema(): StructType = required
 
+  /** A pushed limit (the search `size`, or the bucket cap of an ordered
+    * aggregate) prints as `limit=`; a scan without one prints none. */
   override def description(): String =
     s"GraftEsScan endpoint=${ep.source}/${ep.table} agg=$aggMode " +
-      s"query=$dslBody PushedFilters: [${pushed.mkString(", ")}], " +
+      s"query=$dslBody ${if (limit >= 0) s"limit=$limit " else ""}" +
+      s"PushedFilters: [${pushed.mkString(", ")}], " +
       s"ReadSchema: ${required.catalogString}"
 
   override def toBatch: Batch = this

@@ -248,14 +248,13 @@ final case class BucketedFilePartition(inner: FilePartition, bucketId: Int)
 class FileScanBuilder(
     table: FileTable,
     maxFilesPerTrigger: Option[Int] = None) extends ScanBuilder
-  with SupportsPushDownFilters
+  with PushedFilter
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit
   with SupportsPushDownTopN
   with SupportsPushDownOffset
   with SupportsPushDownAggregates {
 
-  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = table.schema0
   private var limit: Int = -1
   private var offset: Int = 0
@@ -271,13 +270,8 @@ class FileScanBuilder(
     * as one job, dataux backends/bigquery/sql_to_bq.go:72-104). */
   private def passthrough: Boolean = table.source.pushdown == "passthrough"
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, declined) = filters.partition(table.acceptsFilter)
-    pushed = ok
-    declined // Spark re-applies these post-scan (residual polyfill)
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
+  override protected def acceptFilters(filters: Array[Filter]): collection.Seq[Filter] =
+    filters.filter(table.acceptsFilter)
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema

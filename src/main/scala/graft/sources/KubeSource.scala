@@ -283,13 +283,12 @@ class KubeTable(val ep: KubeEndpoint) extends Table with SupportsRead {
 }
 
 class KubeScanBuilder(ep: KubeEndpoint) extends ScanBuilder
-  with SupportsPushDownFilters
+  with PushedFilter
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit {
 
   private val res = ep.resource
   private var selectors: Seq[(String, String)] = Nil
-  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = res.schema
   private var limit: Int = -1
 
@@ -299,22 +298,15 @@ class KubeScanBuilder(ep: KubeEndpoint) extends ScanBuilder
       case (k, c) if c.equalsIgnoreCase(col) => k
     }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val parsed = filters.map {
-      case f @ EqualTo(a, v: String) =>
-        (f, selectorKey(a).map(_ -> v))
-      case f => (f, None)
+  override protected def acceptFilters(filters: Array[Filter]): collection.Seq[Filter] = {
+    val accepted = filters.flatMap {
+      case f @ EqualTo(a, v: String) => selectorKey(a).map(k => (f, a, k -> v))
+      case _ => None
     }
-    val accepted = parsed.collect { case (f, Some(sel)) => (f, sel) }
-    val compared = accepted.map(_._1.asInstanceOf[EqualTo].attribute.toLowerCase).toSet
-    val implied = filters.collect {
-      case f @ IsNotNull(a) if compared(a.toLowerCase) => f: Filter
-    }
-    selectors = accepted.map(_._2).toSeq
-    pushed = (accepted.map(_._1) ++ implied).toArray
-    filters.filterNot(pushed.contains)
+    selectors = accepted.map(_._3).toSeq
+    // a selector match never matches a missing field
+    accepted.map(_._1) ++ PushedFilter.notNulls(filters, accepted.map(_._2))
   }
-  override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema

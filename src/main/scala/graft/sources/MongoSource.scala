@@ -1229,7 +1229,7 @@ final case class MongoJoinSpec(
 }
 
 class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) extends ScanBuilder
-  with SupportsPushDownFilters
+  with PushedFilter
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit
   with SupportsPushDownTopN
@@ -1237,7 +1237,6 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
   with SupportsPushDownAggregates
   with SupportsPushDownJoin {
 
-  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = ep.schema
   private var limit: Int = -1
   private var skip: Int = -1
@@ -1338,23 +1337,24 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
         // row the filter could touch — exactly the constraints Catalyst
         // propagates across the equality). Anything else — a genuine
         // user pre-join filter on the looked-up side — declines.
+        // A filter over key `from` alone, transposed onto key `to`; None
+        // for any other filter.
+        def onKey(f: Filter, from: String, to: String): Option[Filter] =
+          if (f.references.isEmpty ||
+            !f.references.forall(_.equalsIgnoreCase(from))) None
+          else PushedFilter.mapRefs(f)(_ => Some(to))
         def impliedOnly(fs: Array[Filter], keyOnThisSide: String,
             keyOtherSide: String, otherPushed: Array[Filter]): Boolean =
-          fs.forall { f =>
-            f.references.forall(_.equalsIgnoreCase(keyOnThisSide)) && (f match {
-              case IsNotNull(_) => true
-              case _ => renameRefs(f, keyOnThisSide, keyOtherSide)
-                .exists(otherPushed.contains)
-            })
+          fs.forall {
+            case f @ IsNotNull(_) => onKey(f, keyOnThisSide, keyOtherSide).isDefined
+            case f => onKey(f, keyOnThisSide, keyOtherSide).exists(otherPushed.contains)
           }
         if (leftOuter && !driveRight &&
           !impliedOnly(o.pushed, ff, lf, pushed)) return false
         if (driveRight && !impliedOnly(pushed, lf, ff, o.pushed)) return false
         val rewritten: Seq[Option[Filter]] =
           if (leftOuter) Nil
-          else o.pushed.toSeq.map(f =>
-            if (f.references.forall(_.equalsIgnoreCase(ff))) renameRefs(f, ff, lf)
-            else None)
+          else o.pushed.toSeq.map(onKey(_, ff, lf))
         if (rewritten.exists(_.isEmpty)) return false
         if (!driveRight) pushed = pushed ++ rewritten.flatten.filterNot(pushed.contains)
         joinSpec = Some(
@@ -1374,33 +1374,6 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
     }
   }
 
-  /** Rewrite every reference in a filter from one column name to
-    * another (the foreign-key → local-key transposition above); None
-    * for shapes outside the compilable subset. */
-  private def renameRefs(f: Filter, from: String, to: String): Option[Filter] = {
-    def col(a: String): String = if (a.equalsIgnoreCase(from)) to else a
-    f match {
-      case EqualTo(a, v) => Some(EqualTo(col(a), v))
-      case EqualNullSafe(a, v) => Some(EqualNullSafe(col(a), v))
-      case GreaterThan(a, v) => Some(GreaterThan(col(a), v))
-      case GreaterThanOrEqual(a, v) => Some(GreaterThanOrEqual(col(a), v))
-      case LessThan(a, v) => Some(LessThan(col(a), v))
-      case LessThanOrEqual(a, v) => Some(LessThanOrEqual(col(a), v))
-      case In(a, vs) => Some(In(col(a), vs))
-      case IsNull(a) => Some(IsNull(col(a)))
-      case IsNotNull(a) => Some(IsNotNull(col(a)))
-      case StringStartsWith(a, v) => Some(StringStartsWith(col(a), v))
-      case StringEndsWith(a, v) => Some(StringEndsWith(col(a), v))
-      case StringContains(a, v) => Some(StringContains(col(a), v))
-      case And(l, r) =>
-        for (a <- renameRefs(l, from, to); b <- renameRefs(r, from, to)) yield And(a, b)
-      case Or(l, r) =>
-        for (a <- renameRefs(l, from, to); b <- renameRefs(r, from, to)) yield Or(a, b)
-      case Not(c) => renameRefs(c, from, to).map(Not)
-      case _ => None
-    }
-  }
-
   /** OFFSET ships as the find's `skip` (`sql_to_mgo.go:220-245` passes
     * filter, sort, limit, skip into one query the same way). Unlike
     * limit, a pushed offset is FULLY delegated — Spark removes its own
@@ -1411,20 +1384,17 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
     if (agg.isDefined || joinSpec.isDefined || fanOut.isDefined) false
     else { skip = n; true }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+  override protected def acceptFilters(filters: Array[Filter]): collection.Seq[Filter] = {
     // only TOP-LEVEL fields compile: a nested reference arrives as a
     // dotted name ("profile.name") which would need Mongo dot-notation
     // in the filter document AND dotted-path evaluation server-side —
     // declined (Spark polyfills), like the reference's non-compilable
     // WHERE arms
     val top = ep.schema.fieldNames.map(_.toLowerCase).toSet
-    val (ok, declined) = filters.partition(f =>
+    filters.filter(f =>
       f.references.forall(r => top.contains(r.toLowerCase)) &&
         MongoDsl.compile(f).isDefined)
-    pushed = ok
-    declined
   }
-  override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
@@ -1438,11 +1408,11 @@ class MongoScanBuilder(private val ep: MongoEndpoint, hint: Option[Int] = None) 
   /** The thinned split points the scan fans out over, or None for one
     * request: no split metadata, a consumed `$group`/`$lookup` pipeline
     * (global server-side state), a key-pinning pushed predicate
-    * ([[WireFanout.pinsKey]]) or a fan-out of one. [[build]] hands this
+    * ([[PushedFilter.pins]]) or a fan-out of one. [[build]] hands this
     * value to the scan, so the partition plan cannot disagree with it. */
   private def fanOut: Option[WireSplits] =
     if (agg.isDefined || joinSpec.isDefined) None
-    else ep.splits.filterNot(s => WireFanout.pinsKey(pushed, s.key))
+    else ep.splits.filterNot(s => PushedFilter.pins(pushed, s.key))
       .map(s => s.copy(points = WireFanout.thin(s.points.toIndexedSeq,
         WireFanout.effective(s.points.size + 1, hint))))
       .filter(_.points.nonEmpty)

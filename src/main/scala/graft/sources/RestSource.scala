@@ -167,11 +167,10 @@ class RestTable(val endpoint: RestEndpoint) extends Table with SupportsRead
 }
 
 class RestScanBuilder(ep: RestEndpoint, hint: Option[Int] = None) extends ScanBuilder
-  with SupportsPushDownFilters
+  with PushedFilter
   with SupportsPushDownRequiredColumns
   with SupportsPushDownLimit {
 
-  private var pushed: Array[Filter] = Array.empty
   private var required: StructType = ep.schema
   private var limit: Int = -1
 
@@ -183,18 +182,12 @@ class RestScanBuilder(ep: RestEndpoint, hint: Option[Int] = None) extends ScanBu
     *   - plain param endpoints: only `param = literal`, because a URL
     *     query string cannot express more.
     * Either way, what can't ship is declined and Spark polyfills. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, declined) =
-      if (ep.filterQl) filters.partition(f => SegmentQl.compile(f).isDefined)
-      else filters.partition {
-        case EqualTo(a, v) => v != null && ep.params.contains(a.toLowerCase)
-        case _ => false
-      }
-    pushed = ok
-    declined // Spark re-applies (residual polyfill)
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
+  override protected def acceptFilters(filters: Array[Filter]): collection.Seq[Filter] =
+    if (ep.filterQl) filters.filter(f => SegmentQl.compile(f).isDefined)
+    else filters.filter {
+      case EqualTo(a, v) => v != null && ep.params.contains(a.toLowerCase)
+      case _ => false
+    }
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema

@@ -58,20 +58,6 @@ object WireFanout {
     math.max(1, hint.orElse(conf).getOrElse(default))
   }
 
-  /** True when a pushed predicate PINS the split key to specific values
-    * (or to null): range tiling is pointless for such a scan — all but
-    * one shard would be provably empty — so the connectors collapse it
-    * to one targeted request. Shared so the rule cannot drift between
-    * connectors. */
-  def pinsKey(pushed: Array[org.apache.spark.sql.sources.Filter],
-      key: String): Boolean = pushed.exists {
-    case org.apache.spark.sql.sources.EqualTo(a, _) => a.equalsIgnoreCase(key)
-    case org.apache.spark.sql.sources.EqualNullSafe(a, _) => a.equalsIgnoreCase(key)
-    case org.apache.spark.sql.sources.In(a, _) => a.equalsIgnoreCase(key)
-    case org.apache.spark.sql.sources.IsNull(a) => a.equalsIgnoreCase(key)
-    case _ => false
-  }
-
   /** Thin a sorted split-point list to at most n-1 evenly-spread points
     * (n ranges). Grouping contiguous ranges this way preserves range
     * semantics: a coalesced group of ranges is itself one range. */

@@ -177,25 +177,25 @@ class WindowPushdownMatrixSpec extends AnyFunSuite {
     ("mongo_split", "sort_offset", "TP:70aed386"),
     ("mongo_split", "sort_desc_offset", "TP:1123dbcb"),
     ("mongo_split", "offset", "o:455dadd5"),
-    ("es", "asc_nulls_first", "TP:782592ed TP:320f7267 TP:2fbaa612 TP:4159e2f8 .:532d3226"),
-    ("es", "asc_nulls_last", "TP:bf7476b9 TP:c573bfff TP:7b0deaf4 TP:ffc0794e .:532d3226"),
-    ("es", "desc_nulls_first", "TP:9d5ffe4b TP:20b20e11 TP:d86d4fc6 TP:fab5afa0 .:532d3226"),
-    ("es", "desc_nulls_last", "TP:e1b0279b TP:9b9a0715 TP:99453ac0 TP:aae477a6 .:532d3226"),
-    ("es", "two_keys", "TP:9c4550d5"),
-    ("es", "two_keys_desc", "TP:e905ec95"),
-    ("es", "two_keys_mixed", "TP:7f7b57e7"),
+    ("es", "asc_nulls_first", "TP:0b0bfada TP:1143c054 TP:dfc218ff TP:21e10fe5 .:532d3226"),
+    ("es", "asc_nulls_last", "TP:f95052a6 TP:9eacf5ec TP:39fb5be1 TP:024ef03b .:532d3226"),
+    ("es", "desc_nulls_first", "TP:61cc2838 TP:228d11fe TP:23d9ceb3 TP:2599b48d .:532d3226"),
+    ("es", "desc_nulls_last", "TP:a1460188 TP:a77dc702 TP:75fc1fad TP:b81b1693 .:532d3226"),
+    ("es", "two_keys", "TP:842350c2"),
+    ("es", "two_keys_desc", "TP:b36c2c82"),
+    ("es", "two_keys_mixed", "TP:1d3225d4"),
     ("es", "multi_part_name", ".:532d3226"),
     ("es", "expression", ".:532d3226"),
     ("es", "k_then_expression", ".:532d3226"),
-    ("es", "limit", "LP:532d3226"),
-    ("es", "limit_offset", "LP:532d3226"),
-    ("es", "sort_offset", "TP:320f7267"),
-    ("es", "sort_desc_offset", "TP:9b9a0715"),
+    ("es", "limit", "LP:73415113"),
+    ("es", "limit_offset", "LP:e3230751"),
+    ("es", "sort_offset", "TP:81257692"),
+    ("es", "sort_desc_offset", "TP:175f7d40"),
     ("es", "offset", ":532d3226"),
-    ("es_agg", "asc_nulls_first", ".:96adf5a1 .:96adf5a1 TP:4330c379 TP:8732b5e7 .:96adf5a1"),
-    ("es_agg", "asc_nulls_last", ".:96adf5a1 .:96adf5a1 TP:99d2df25 TP:ca5f6fe5 .:96adf5a1"),
-    ("es_agg", "desc_nulls_first", ".:96adf5a1 .:96adf5a1 TP:d8d8d6a7 TP:3ab6c2a7 .:96adf5a1"),
-    ("es_agg", "desc_nulls_last", ".:96adf5a1 .:96adf5a1 TP:9664ae37 TP:43c6cb25 .:96adf5a1"),
+    ("es_agg", "asc_nulls_first", ".:96adf5a1 .:96adf5a1 TP:39fd23ec TP:5354c85a .:96adf5a1"),
+    ("es_agg", "asc_nulls_last", ".:96adf5a1 .:96adf5a1 TP:a44ed398 TP:3a9ea458 .:96adf5a1"),
+    ("es_agg", "desc_nulls_first", ".:96adf5a1 .:96adf5a1 TP:602e291a TP:ab60151a .:96adf5a1"),
+    ("es_agg", "desc_nulls_last", ".:96adf5a1 .:96adf5a1 TP:427170aa TP:c196bf98 .:96adf5a1"),
     ("es_agg", "two_keys", ".:96adf5a1"),
     ("es_agg", "two_keys_desc", ".:96adf5a1"),
     ("es_agg", "two_keys_mixed", ".:96adf5a1"),

@@ -7,16 +7,17 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources._
 
-/** Randomized semantics property for the ordered windows the wire scans
-  * delegate, one descriptor per backend. For arbitrary null-bearing
-  * corpora, page or cursor-batch sizes small enough that a window spans
-  * several pages, random pushed filters, 1-2 sort keys and a random
-  * OFFSET and LIMIT, the collected window must equal a direct model
-  * (filter → total-order sort → drop(offset) → take(limit)). A unique
-  * non-null id rides every sort as the tiebreak so the window is
-  * deterministic.
+/** Randomized window properties of the wire scans, one descriptor per
+  * backend: a seed and the named properties drawn, in order, from that
+  * one seeded stream — deterministic.
   *
-  * Per backend:
+  * Mongo, Datastore, ES and BigQuery share one semantics property. For
+  * arbitrary null-bearing corpora, page or cursor-batch sizes small
+  * enough that a window spans several pages, random pushed filters, 1-2
+  * sort keys and a random OFFSET and LIMIT, the collected window must
+  * equal a direct model (filter → total-order sort → drop(offset) →
+  * take(limit)). A unique non-null id rides every sort as the tiebreak
+  * so the window is deterministic.
   *  - Mongo and Datastore draw 3 of 4 keys in their native nulls-lowest
   *    pairing (ASC NULLS FIRST / DESC NULLS LAST: fully delegated on a
   *    single-stream scan) and 1 of 4 in a declining one (Spark
@@ -27,9 +28,31 @@ import graft.sources._
   *    an explicit `missing`, BigQuery by `NULLS FIRST|LAST`) and draw
   *    them uniformly. ES pushes no offset.
   *
+  * CQL's clustering-order window: random corpora over (partition key,
+  * two clustering keys), random window shapes crossing every arm of the
+  * single-partition rule — pk-bound clustering-prefix sorts in a uniform
+  * direction (pushed as CQL ORDER BY ... LIMIT), mixed-direction sorts
+  * (declined: CQL has no mixed-direction ORDER BY over ASC-declared
+  * clustering), unbound partition keys (declined: the server refuses
+  * ORDER BY without the partition restricted), and residual non-key
+  * filters (polyfilled) — the collected window equals a direct model.
+  * ck1 is unique within each partition so every tested ordering is
+  * total. Page sizes randomize down to a few rows per page, exercising
+  * the paging-state resume mid-window.
+  *
+  * BigTable's windowed scan, at the protocol level: for arbitrary key
+  * universes, row sets (ranges or explicit keys), page caps, window
+  * sizes and scan directions, the CLIENT resume loop (requestJson with
+  * the last received key, re-select server-side, re-cap) must drain to
+  * EXACTLY the window a one-shot evaluation of the row set would produce
+  * — first n keys ascending forward, last n keys descending reversed —
+  * regardless of where the per-response cap slices the stream. This is
+  * the invariant the reversed-resume contract (exclusive END at the last
+  * key) exists to preserve; an off-by-one in either bound duplicates or
+  * drops a row at some page boundary.
+  *
   * The connector specs pin the wire shape; this pins the window
-  * semantics across the rule space around it. Seeded per backend —
-  * deterministic. */
+  * semantics across the rule space around it. */
 class WireWindowPropertySpec extends AnyFunSuite {
   import WireWindowPropertySpec._
 
@@ -57,8 +80,8 @@ class WireWindowPropertySpec extends AnyFunSuite {
 
   private def http(page: Int) = HttpRestConfig(pageSize = page, retryBackoffMs = 5)
 
-  private val backends = Seq(
-    Backend("mongo", 20260818L, "mongowprop", pageMin = 8, pageSpread = 57, filters = 4,
+  private val windowDraws = Seq(
+    ("mongo", 20260818L, WindowDraw("mongowprop", pageMin = 8, pageSpread = 57, filters = 4,
       nullsLowestKey, offsets = true, limitMax = 20, (name, rows, batch) => {
         LoopbackMongoServer.register(name, schema, rows)
         val (host, port) = LoopbackMongoServer.ensureStarted()
@@ -68,8 +91,8 @@ class WireWindowPropertySpec extends AnyFunSuite {
           MongoEndpointSpec(host, port, LoopbackMongoServer.Db, name,
             MongoClientConfig(batchSize = batch, retryBackoffMs = 5))))
         catalogTable("mongotest", "mongo", name)
-      }),
-    Backend("ds", 20260819L, "dswprop", pageMin = 8, pageSpread = 57, filters = 4,
+      })),
+    ("ds", 20260819L, WindowDraw("dswprop", pageMin = 8, pageSpread = 57, filters = 4,
       nullsLowestKey, offsets = true, limitMax = 20, (name, rows, page) => {
         LoopbackRestServer.register(name, schema, rows)
         val baseUrl = LoopbackRestServer.ensureStarted()
@@ -77,16 +100,16 @@ class WireWindowPropertySpec extends AnyFunSuite {
         WireEndpoints.register(DsEndpoint("dstest", name, schema,
           DsEndpointSpec(baseUrl, name, http(page))))
         catalogTable("dstest", "ds", name)
-      }),
-    Backend("es", 20260821L, "essortprop", pageMin = 4, pageSpread = 13, filters = 3,
+      })),
+    ("es", 20260821L, WindowDraw("essortprop", pageMin = 4, pageSpread = 13, filters = 3,
       anyKey, offsets = false, limitMax = 40, (name, rows, page) => {
         LoopbackRestServer.register(name, schema, rows)
         val base = LoopbackRestServer.ensureStarted()
         WireEndpoints.register(EsEndpoint("estest", name, schema,
           EsEndpointSpec(base, name, http(page))))
         catalogTable("estest", "es", name)
-      }),
-    Backend("bq", 20260828L, "bqwprop", pageMin = 8, pageSpread = 57, filters = 4,
+      })),
+    ("bq", 20260828L, WindowDraw("bqwprop", pageMin = 8, pageSpread = 57, filters = 4,
       anyKey, offsets = true, limitMax = 20, (name, rows, page) => {
         LoopbackRestServer.registerBq(name, schema, rows)
         val baseUrl = LoopbackRestServer.ensureStarted()
@@ -94,7 +117,7 @@ class WireWindowPropertySpec extends AnyFunSuite {
         WireEndpoints.register(BqEndpoint("bqtest", name, schema,
           BqEndpointSpec(baseUrl, name, http(page))))
         catalogTable("bqtest", "bq", name)
-      }))
+      })))
 
   private def sortCol(k: Key): Column = (k: @unchecked) match {
     case Key(c, true, true) => col(c).asc_nulls_first
@@ -116,64 +139,269 @@ class WireWindowPropertySpec extends AnyFunSuite {
 
   private val fieldOf = Map("id" -> 0, "seg" -> 1, "v" -> 2)
 
-  for (b <- backends)
-    test(s"${b.name}: random windows equal the model") {
-      val rnd = new java.util.Random(b.seed)
-      def corpus(n: Int): Seq[Array[Any]] = (0L until n.toLong).map { i =>
-        Array[Any](i,
-          if (rnd.nextInt(5) == 0) null else ("S" + ('A' + rnd.nextInt(4)).toChar),
+  /** One iteration of the shared window property. */
+  private def windowCase(d: WindowDraw)(rnd: java.util.Random, iter: Int): Case = {
+    def corpus(n: Int): Seq[Array[Any]] = (0L until n.toLong).map { i =>
+      Array[Any](i,
+        if (rnd.nextInt(5) == 0) null else ("S" + ('A' + rnd.nextInt(4)).toChar),
+        if (rnd.nextInt(6) == 0) null else java.lang.Long.valueOf(rnd.nextInt(50).toLong))
+    }
+    val rows = corpus(60 + rnd.nextInt(120))
+    val tbl = d.register(s"${d.tablePrefix}$iter", rows,
+      d.pageMin + rnd.nextInt(d.pageSpread))
+
+    // random pushed filter (all compile to the wire; 3VL: null drops);
+    // an inequality on v makes Datastore require v to lead the sort
+    val (filt, keep): (Option[Column], Array[Any] => Boolean) =
+      rnd.nextInt(d.filters) match {
+        case 0 => (None, _ => true)
+        case 1 =>
+          val c = rnd.nextInt(50).toLong
+          (Some(col("v") > c), r => r(2) != null &&
+            r(2).asInstanceOf[java.lang.Long] > c)
+        case 2 => (Some(col("seg") === "SA"), r => r(1) == "SA")
+        case 3 =>
+          val c = rnd.nextInt(150).toLong
+          (Some(col("id") <= c), r => r(0).asInstanceOf[Long] <= c)
+      }
+
+    // 1-2 sort keys over seg/v; id asc tiebreaks
+    val keys = (rnd.nextInt(3) match {
+      case 0 => Seq(d.randKey("seg", rnd))
+      case 1 => Seq(d.randKey("v", rnd))
+      case 2 => Seq(d.randKey("seg", rnd), d.randKey("v", rnd))
+    }) :+ Key("id", asc = true, nullsFirst = true)
+
+    val offset = if (d.offsets) rnd.nextInt(9) else 0
+    val limit = 1 + rnd.nextInt(d.limitMax)
+
+    var df = spark.table(tbl)
+    filt.foreach(f => df = df.filter(f))
+    df = df.orderBy(keys.map(sortCol): _*)
+    if (offset > 0) df = df.offset(offset)
+    df = df.limit(limit).select("id")
+
+    val got = df.collect().map(_.getLong(0)).toSeq
+    val want = rows.filter(keep)
+      .sortWith { (a, b) =>
+        keys.iterator
+          .map(k => cmpOne(a(fieldOf(k.col)), b(fieldOf(k.col)), k))
+          .find(_ != 0).getOrElse(0) < 0
+      }
+      .slice(offset, offset + limit)
+      .map(_(0).asInstanceOf[Long])
+    Case(got, want, s"keys=$keys offset=$offset limit=$limit filt=$filt")
+  }
+
+  // ---- CQL: the single-partition clustering window ------------------------
+
+  private val cqlSchema = StructType(Seq(
+    StructField("seg", StringType), StructField("ck1", LongType),
+    StructField("ck2", LongType), StructField("v", LongType)))
+
+  private val Parts = Seq("PA", "PB", "PC")
+
+  /** ck1 unique within each partition — every tested sort is total. */
+  private def cqlCorpus(rnd: java.util.Random): Seq[Array[Any]] = {
+    val rows = Parts.flatMap { p =>
+      val n = 8 + rnd.nextInt(25)
+      val ck1s = rnd.ints(0, 200).distinct().limit(n.toLong).toArray
+      ck1s.toSeq.map { c1 =>
+        Array[Any](p, c1.toLong, rnd.nextInt(10).toLong,
           if (rnd.nextInt(6) == 0) null else java.lang.Long.valueOf(rnd.nextInt(50).toLong))
       }
-      for (iter <- 1 to 30) {
-        val rows = corpus(60 + rnd.nextInt(120))
-        val tbl = b.register(s"${b.tablePrefix}$iter", rows,
-          b.pageMin + rnd.nextInt(b.pageSpread))
+    }
+    // insertion order is NOT clustering order: the server must sort
+    rnd.ints(0, rows.size).distinct().limit(rows.size.toLong)
+      .toArray.toSeq.map(rows(_))
+  }
 
-        // random pushed filter (all compile to the wire; 3VL: null drops);
-        // an inequality on v makes Datastore require v to lead the sort
-        val (filt, keep): (Option[Column], Array[Any] => Boolean) =
-          rnd.nextInt(b.filters) match {
-            case 0 => (None, _ => true)
-            case 1 =>
-              val c = rnd.nextInt(50).toLong
-              (Some(col("v") > c), r => r(2) != null &&
-                r(2).asInstanceOf[java.lang.Long] > c)
-            case 2 => (Some(col("seg") === "SA"), r => r(1) == "SA")
-            case 3 =>
-              val c = rnd.nextInt(150).toLong
-              (Some(col("id") <= c), r => r(0).asInstanceOf[Long] <= c)
-          }
+  private def cqlTable(name: String, rows: Seq[Array[Any]], pageSize: Int): String = {
+    LoopbackCqlServer.register(name, cqlSchema, Seq("seg"), Seq("ck1", "ck2"), rows)
+    val (host, port) = LoopbackCqlServer.ensureStarted()
+    LoopbackCqlServer.failNext.set(0)
+    WireEndpoints.register(CqlEndpoint("cqltest", name, cqlSchema,
+      Seq("seg"), Seq("ck1", "ck2"),
+      CqlEndpointSpec(host, port, name,
+        CqlClientConfig(pageSize = pageSize, retryBackoffMs = 5))))
+    catalogTable("cqltest", "cql", name)
+  }
 
-        // 1-2 sort keys over seg/v; id asc tiebreaks
-        val keys = (rnd.nextInt(3) match {
-          case 0 => Seq(b.randKey("seg", rnd))
-          case 1 => Seq(b.randKey("v", rnd))
-          case 2 => Seq(b.randKey("seg", rnd), b.randKey("v", rnd))
-        }) :+ Key("id", asc = true, nullsFirst = true)
+  /** A clustering sort key: schema position, direction. */
+  private case class CqlKey(field: Int, asc: Boolean)
 
-        val offset = if (b.offsets) rnd.nextInt(9) else 0
-        val limit = 1 + rnd.nextInt(b.limitMax)
+  private def cqlModel(rows: Seq[Array[Any]], keep: Array[Any] => Boolean,
+      keys: Seq[CqlKey], limit: Int): Seq[(String, Long)] =
+    rows.filter(keep).sortWith { (a, b) =>
+      keys.iterator.map { k =>
+        val c = (a(k.field), b(k.field)) match {
+          case (p: String, q: String) => p.compareTo(q)
+          case (p: java.lang.Long, q: java.lang.Long) => p.compareTo(q)
+          case other => sys.error(s"unexpected pair $other")
+        }
+        if (k.asc) c else -c
+      }.find(_ != 0).getOrElse(0) < 0
+    }.take(limit).map(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[Long]))
 
-        var df = spark.table(tbl)
-        filt.foreach(f => df = df.filter(f))
-        df = df.orderBy(keys.map(sortCol): _*)
-        if (offset > 0) df = df.offset(offset)
-        df = df.limit(limit).select("id")
+  private def cqlCase(rnd: java.util.Random, iter: Int): Case = {
+    val names = Seq("seg", "ck1", "ck2", "v")
+    val rows = cqlCorpus(rnd)
+    val tbl = cqlTable(s"cqlwprop$iter", rows, 4 + rnd.nextInt(29))
+    val limit = 1 + rnd.nextInt(15)
+    val part = Parts(rnd.nextInt(Parts.size))
+    val inPart: Array[Any] => Boolean = _(0) == part
 
-        val got = df.collect().map(_.getLong(0)).toSeq
-        val want = rows.filter(keep)
-          .sortWith { (a, b) =>
-            keys.iterator
-              .map(k => cmpOne(a(fieldOf(k.col)), b(fieldOf(k.col)), k))
-              .find(_ != 0).getOrElse(0) < 0
-          }
-          .slice(offset, offset + limit)
-          .map(_(0).asInstanceOf[Long])
-        assert(got == want,
-          s"${b.name} iter $iter keys=$keys offset=$offset limit=$limit filt=$filt:\n" +
-            s" got=$got\nwant=$want")
+    def run(df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row])
+        : Seq[(String, Long)] =
+      df.limit(limit).select("seg", "ck1").collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+
+    def ord(k: CqlKey): Column = {
+      val c = col(names(k.field)); if (k.asc) c.asc else c.desc
+    }
+
+    val arm = rnd.nextInt(4)
+    val (got, want) = arm match {
+      case 0 =>
+        // pushed: pk bound, clustering prefix, uniform direction
+        val asc = rnd.nextBoolean()
+        val keys =
+          if (rnd.nextBoolean()) Seq(CqlKey(1, asc))
+          else Seq(CqlKey(1, asc), CqlKey(2, asc))
+        (run(spark.table(tbl).filter(col("seg") === part)
+           .orderBy(keys.map(ord): _*)),
+         cqlModel(rows, inPart, keys, limit))
+      case 1 =>
+        // declined: mixed direction over the clustering pair
+        val keys = Seq(CqlKey(1, asc = true), CqlKey(2, asc = false))
+        (run(spark.table(tbl).filter(col("seg") === part)
+           .orderBy(keys.map(ord): _*)),
+         cqlModel(rows, inPart, keys, limit))
+      case 2 =>
+        // declined: unbound partition key (server would refuse)
+        val asc = rnd.nextBoolean()
+        val keys = Seq(CqlKey(1, asc), CqlKey(0, asc = true))
+        (run(spark.table(tbl).orderBy(keys.map(ord): _*)),
+         cqlModel(rows, _ => true, keys, limit))
+      case 3 =>
+        // residual non-key filter polyfills; window stays engine-side
+        val c = rnd.nextInt(50).toLong
+        val asc = rnd.nextBoolean()
+        val keys = Seq(CqlKey(1, asc))
+        val keep: Array[Any] => Boolean = r => inPart(r) && r(3) != null &&
+          r(3).asInstanceOf[java.lang.Long] > c
+        (run(spark.table(tbl).filter(col("seg") === part && col("v") > c)
+           .orderBy(keys.map(ord): _*)),
+         cqlModel(rows, keep, keys, limit))
+    }
+    Case(got, want, s"arm=$arm part=$part limit=$limit")
+  }
+
+  // ---- BigTable: the resume loop against a one-shot evaluation ------------
+
+  private val M = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Simulated service: evaluate the request body over `rows`, cap the
+    * response, report the resume key — the loopback's exact shape. */
+  private def btServe(body: String, rows: Seq[String], cap: Int)
+      : (Seq[String], Boolean) = {
+    val selected = BtQuery.select(M.readTree(body), r => r(0).asInstanceOf[String],
+      rows.map(k => Array[Any](k)))
+    val page = selected.take(cap)
+    (page.map(_._1), selected.size > page.size)
+  }
+
+  /** The reader's drain loop (BtReaderFactory's shape): resume with the
+    * last received key, subtract received from the remaining limit. */
+  private def btDrain(rs: BtQuery.RowSet, rows: Seq[String], cap: Int,
+      limit: Int, reversed: Boolean): Seq[String] = {
+    var out = Vector.empty[String]
+    var resume = ""
+    var done = false
+    var guard = 0
+    while (!done && (limit < 0 || out.size < limit)) {
+      guard += 1
+      require(guard <= rows.size + 8, s"drain loop did not terminate: $out")
+      val lim = if (limit > 0) limit - out.size else -1
+      val body = BtQuery.requestJson(rs, lim, resume, reversed)
+      val (page, more) = btServe(body, rows, cap)
+      if (page.isEmpty) done = true
+      else {
+        out ++= page
+        resume = page.last
+        if (!more) done = true
       }
     }
+    out
+  }
+
+  /** Reference model: evaluate the row set directly, order, window. */
+  private def btModel(rs: BtQuery.RowSet, rows: Seq[String], limit: Int,
+      reversed: Boolean): Seq[String] = {
+    val keys = rows.sorted
+    val sel =
+      if (rs.keys.nonEmpty) { val want = rs.keys.toSet; keys.filter(want) }
+      else keys.filter(k => rs.ranges.exists { case (s, e) =>
+        (s.isEmpty || k >= s) && (e.isEmpty || k < e)
+      })
+    val ordered = if (reversed) sel.reverse else sel
+    if (limit > 0) ordered.take(limit) else ordered
+  }
+
+  private def btKey(rnd: java.util.Random): String = f"k${rnd.nextInt(500)}%04d"
+
+  private def btWindowCase(rnd: java.util.Random, iter: Int): Case = {
+    val n = 1 + rnd.nextInt(60)
+    val rows = Seq.fill(n)(btKey(rnd)).distinct
+    val rs =
+      if (rnd.nextBoolean()) {
+        // 1-2 ranges, possibly unbounded on either side
+        val ranges = (1 to (1 + rnd.nextInt(2))).map { _ =>
+          val a = if (rnd.nextBoolean()) btKey(rnd) else ""
+          val b = if (rnd.nextBoolean()) btKey(rnd) else ""
+          if (a.nonEmpty && b.nonEmpty && a > b) (b, a) else (a, b)
+        }
+        BtQuery.RowSet(ranges, Nil)
+      } else BtQuery.RowSet(Nil,
+        Seq.fill(1 + rnd.nextInt(12))(btKey(rnd)).distinct)
+    val cap = 1 + rnd.nextInt(7) // small caps force many resumes
+    val limit = if (rnd.nextBoolean()) -1 else 1 + rnd.nextInt(20)
+    val reversed = rnd.nextBoolean()
+    Case(btDrain(rs, rows, cap, limit, reversed), btModel(rs, rows, limit, reversed),
+      s"rs=$rs cap=$cap limit=$limit reversed=$reversed rows=${rows.sorted}")
+  }
+
+  private def btMirrorCase(rnd: java.util.Random, iter: Int): Case = {
+    val rows = Seq.fill(1 + rnd.nextInt(40))(btKey(rnd)).distinct
+    val rs = BtQuery.RowSet(Seq(("", "")), Nil)
+    val cap = 1 + rnd.nextInt(5)
+    val fwd = btDrain(rs, rows, cap, -1, reversed = false)
+    val rev = btDrain(rs, rows, cap, -1, reversed = true)
+    Case(Seq(fwd, rev), Seq(rows.sorted, rows.sorted.reverse), s"cap=$cap")
+  }
+
+  private val backends: Seq[Backend] =
+    windowDraws.map { case (name, seed, d) =>
+      Backend(name, seed, Seq(Phase("random windows equal the model", 30, windowCase(d))))
+    } ++ Seq(
+      Backend("cql", 20260820L, Seq(Phase(
+        "random clustering windows equal the model across the rule space", 24, cqlCase))),
+      Backend("bt", 20260816L, Seq(
+        Phase("windowed drains equal the one-shot model at every page boundary", 400,
+          btWindowCase),
+        Phase("forward and reversed full drains are exact mirrors", 100, btMirrorCase))))
+
+  for (b <- backends) {
+    val rnd = new java.util.Random(b.seed)
+    for (p <- b.phases)
+      test(s"${b.name}: ${p.title}") {
+        for (iter <- 1 to p.iterations) {
+          val c = p.draw(rnd, iter)
+          assert(c.got == c.want,
+            s"${b.name} iter $iter ${c.what}:\n got=${c.got}\nwant=${c.want}")
+        }
+      }
+  }
 }
 
 object WireWindowPropertySpec {
@@ -192,12 +420,25 @@ object WireWindowPropertySpec {
   val anyKey: (String, java.util.Random) => Key =
     (c, rnd) => Key(c, rnd.nextBoolean(), rnd.nextBoolean())
 
-  /** One wire backend under the property: its seed, its tables' name
-    * prefix, the page (or cursor-batch) size range `pageMin +
+  /** One backend under the property: its seed and its named properties,
+    * which run in order and draw from one stream seeded with `seed`. */
+  final case class Backend(name: String, seed: Long, phases: Seq[Phase])
+
+  /** One named property: `iterations` cases, each drawn from the
+    * backend's stream (with the 1-based iteration number). */
+  final case class Phase(title: String, iterations: Int,
+      draw: (java.util.Random, Int) => Case)
+
+  /** One drawn case: what the scan returned, what the model says, and
+    * the draw, for the failure message. */
+  final case class Case(got: Seq[Any], want: Seq[Any], what: String)
+
+  /** The shared window property's knobs for one backend: its tables'
+    * name prefix, the page (or cursor-batch) size range `pageMin +
     * nextInt(pageSpread)`, how many of the filter shapes it draws from,
     * its key draw, whether it draws an offset, the limit range and how it
     * registers a table (name, rows, page size → catalog name). */
-  final case class Backend(name: String, seed: Long, tablePrefix: String,
+  final case class WindowDraw(tablePrefix: String,
       pageMin: Int, pageSpread: Int, filters: Int,
       randKey: (String, java.util.Random) => Key, offsets: Boolean, limitMax: Int,
       register: (String, Seq[Array[Any]], Int) => String)
