@@ -24,6 +24,8 @@ object Relational {
   // writes)
   private val ZBits = 16
   private val ZBuckets = 16L
+  /** How long `q_profile_stats` waits for its overlapped distinct counts. */
+  private val ProfileStatsDeadline = scala.concurrent.duration.Duration(10, "minutes")
   private def part(s: SparkSession, d: String) = Tables.load(s, d, "part")
   private def cust(s: SparkSession, d: String) = Tables.load(s, d, "customer")
 
@@ -548,17 +550,45 @@ object Relational {
       // shuffles. Five driver scalars, same exact values. At petabyte
       // scale the documented swap to approx_count_distinct folds back
       // into the single pass with no layout change.
+      // The five jobs carry one job tag: past ProfileStatsDeadline, or when
+      // one count fails, the query fails and no tagged job outlives it.
       val nd: Map[String, Long] = {
         import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
+        val sc = s.sparkContext
+        val tag = s"q_profile_stats-${java.util.UUID.randomUUID}"
+        val stopped = new java.util.concurrent.atomic.AtomicBoolean(false)
         val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
         try {
           implicit val ec: ExecutionContext =
             ExecutionContext.fromExecutor(pool)
-          cols.map(c => c -> Future(
-              li(s, d).agg(countDistinct(col(c))).first().getLong(0)))
-            .map { case (c, f) => c -> Await.result(f, Duration.Inf) }
-            .toMap
+          val counts = Future.traverse(cols) { c =>
+            Future {
+              if (stopped.get) throw new java.util.concurrent.CancellationException(c)
+              sc.addJobTag(tag)
+              try c -> li(s, d).agg(countDistinct(col(c))).first().getLong(0)
+              finally sc.removeJobTag(tag)
+            }
+          }
+          try Await.result(counts, ProfileStatsDeadline).toMap
+          catch {
+            case e: Exception =>
+              // queued counts now start no job; a count already past its
+              // check may still submit one, so cancel the tag until every
+              // pool thread is done (no interrupt: a thread interrupted in
+              // runJob returns while its job runs on)
+              stopped.set(true)
+              pool.shutdown()
+              sc.cancelJobsWithTag(tag)
+              while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.SECONDS))
+                sc.cancelJobsWithTag(tag)
+              e match {
+                case t: java.util.concurrent.TimeoutException =>
+                  throw new IllegalStateException(
+                    s"q_profile_stats: the distinct counts did not finish within " +
+                      s"$ProfileStatsDeadline; their jobs were cancelled", t)
+                case _ => throw e
+              }
+          }
         } finally pool.shutdown()
       }
       val aggs: Seq[Column] = count(lit(1)).as("n_rows") +: cols.flatMap { c =>

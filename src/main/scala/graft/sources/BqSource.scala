@@ -401,7 +401,7 @@ object BqSql {
   /** Apply a DML statement; returns (new rows, affected count). */
   def executeDml(dml: Dml, schema: StructType, rows: Seq[Array[Any]])
       : (Seq[Array[Any]], Long) = {
-    val hit = (r: Array[Any]) => FilterEval.eval(dml.where, schema, r)
+    val hit = FilterEval.compile(dml.where, schema)
     dml.kind match {
       case "delete" =>
         val kept = rows.filterNot(hit)
@@ -448,7 +448,7 @@ object BqSql {
       k
     }
     val filtered = stmt.where match {
-      case Some(f) => rows.filter(r => FilterEval.eval(f, schema, r))
+      case Some(f) => rows.filter(FilterEval.compile(f, schema))
       case None => rows
     }
     def integral(i: Int) = schema.fields(i).dataType match {
@@ -570,8 +570,8 @@ object BqSql {
         n.asInstanceOf[Number].doubleValue(): java.lang.Double
       case x => x
     }
-    def accepts(row: Array[Any]): Boolean =
-      j.onExtra.forall(p => FilterEval.eval(p, virt, row))
+    val onExtra = j.onExtra.map(FilterEval.compile(_, virt))
+    def accepts(row: Array[Any]): Boolean = onExtra.forall(_(row))
     val nullsL = Array.fill[Any](ls.fields.length)(null)
     val nullsR = Array.fill[Any](rs.fields.length)(null)
     val joined: Seq[Array[Any]] = j.kind match {

@@ -26,14 +26,16 @@ import graft.protocol.CqlWire.{Frame, Op, T}
   * LIKE, and non-key columns set `needsPolyFill` and stay engine-side).
   * Enforced here exactly as Cassandra would:
   *
-  *   - every partition-key column must be EQUALITY-bound, or NOTHING
-  *     pushes (a partial partition key is an illegal CQL query);
+  *   - every partition-key column must be bound, by `=` or else by one
+  *     static IN, or NOTHING pushes (a partial partition key is an
+  *     illegal CQL query);
   *   - clustering columns push as a PREFIX: column i may carry a range
   *     only if columns 1..i-1 are equality-bound; a range cuts the
   *     prefix (later clustering predicates decline);
-  *   - `!=`, IN, OR, LIKE, IS NULL decline (the reference lets `!=`
-  *     through, `sql_to_cql.go:551-554`, which real Cassandra rejects —
-  *     we side with the server; its test suite polyfills these anyway).
+  *   - `!=`, IN off the partition key, OR, LIKE, IS NULL decline (the
+  *     reference lets `!=` through, `sql_to_cql.go:551-554`, which real
+  *     Cassandra rejects — we side with the server; its test suite
+  *     polyfills these anyway).
   *
   * Declined predicates return to Spark as residuals — the polyfill
   * contract (`needsWherePolyFill`, sql_to_cql.go:447-457).
@@ -85,8 +87,20 @@ object CqlGen {
     val pkEq = parsed.collect {
       case (f, Some((a, "=", v))) if pk(a.toLowerCase) => (a.toLowerCase, f, s"$a = $v")
     }
-    // rule 1: the FULL partition key must be equality-bound
-    if (pkEq.map(_._1).toSet != pk)
+    // a partition-key column no `=` binds may take one static IN, rendered
+    // like the runtime filter's `pk IN (...)` (CQL refuses a column
+    // restricted twice, so an `=` wins and the IN stays residual)
+    val eqCols = pkEq.map(_._1).toSet
+    val pkIn = filters.flatMap {
+      case f @ In(a, vs) if pk(a.toLowerCase) && !eqCols(a.toLowerCase) && vs.nonEmpty =>
+        val rendered = vs.toSeq.flatMap(lit)
+        if (rendered.size < vs.length) None
+        else Some((a.toLowerCase, f, s"$a IN (${rendered.mkString(", ")})"))
+      case _ => None
+    }.distinctBy(_._1)
+    val pkBound = pkEq ++ pkIn
+    // rule 1: the FULL partition key must be bound, by `=` or IN
+    if (pkBound.map(_._1).toSet != pk)
       return (Accepted(Nil, keyNotNull), filters.filterNot(keyNotNull.contains))
 
     // rule 2: clustering prefix, ranges only at the cut
@@ -120,12 +134,12 @@ object CqlGen {
     // comparison is IMPLIED server-side (CQL comparisons never match
     // null cells) — absorb it so a fully-pushed WHERE leaves no Filter
     // node behind (which would also block limit pushdown)
-    val constrained = (pkEq.map(_._1) ++ ckDone.collect {
+    val constrained = (pkBound.map(_._1) ++ ckDone.collect {
       case (f, _) => simple(f).get._1.toLowerCase
     }).toSet
     val implied = (PushedFilter.notNulls(filters, constrained) ++ keyNotNull).distinct
-    val acceptedFilters = pkEq.map(_._2) ++ ckDone.map(_._1) ++ implied
-    val where = pkEq.map(_._3) ++ ckDone.map(_._2)
+    val acceptedFilters = pkBound.map(_._2) ++ ckDone.map(_._1) ++ implied
+    val where = pkBound.map(_._3) ++ ckDone.map(_._2)
     val residual = filters.filterNot(acceptedFilters.contains)
     (Accepted(where, acceptedFilters), residual)
   }
@@ -1043,12 +1057,13 @@ class CqlTable(val ep: CqlEndpoint) extends Table
 
   /** DELETE FROM under Cassandra's rules: only key-column predicates
     * with the full partition key equality-bound compile to DELETE CQL
-    * ([[CqlGen.split]] enforces both); anything else refuses — and the
+    * ([[CqlGen.split]] enforces both; a partition-key IN, which the read
+    * path takes, refuses here); anything else refuses — and the
     * server re-validates (`Some partition key parts are missing`). */
   override def canDeleteWhere(filters: Array[Filter]): Boolean = {
     val (acc, residual) = CqlGen.split(filters.toSeq,
       ep.partitionKeys, ep.clusteringKeys)
-    residual.isEmpty && acc.where.nonEmpty
+    residual.isEmpty && acc.where.nonEmpty && !acc.pushed.exists(_.isInstanceOf[In])
   }
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val (acc, _) = CqlGen.split(filters.toSeq, ep.partitionKeys, ep.clusteringKeys)

@@ -1,12 +1,13 @@
 package graft.sources
 
-import java.io.{BufferedReader, File, FileReader}
+import java.io.File
 
 import scala.collection.mutable
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.expressions.SortOrder
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.read._
@@ -110,98 +111,165 @@ object FilterEval {
     case other => other
   }
 
+  /** [[cmp]] over values already through [[norm]]; [[Incomparable]] for
+    * None (no `compareTo` returns it). */
+  private val Incomparable = Int.MinValue
+  private def cmpNorm(a: Any, b: Any): Int = (a, b) match {
+    case (x: java.lang.Long, y: java.lang.Long) => x.compareTo(y)
+    case (x: java.lang.Long, y: java.lang.Double) => java.lang.Double.compare(x.doubleValue(), y)
+    case (x: java.lang.Double, y: java.lang.Long) => java.lang.Double.compare(x, y.doubleValue())
+    case (x: java.lang.Double, y: java.lang.Double) => x.compareTo(y)
+    case (x: String, y: String) => x.compareTo(y)
+    case (x: java.lang.Boolean, y: java.lang.Boolean) => x.compareTo(y)
+    case _ => Incomparable
+  }
+
   /** Three-valued compare collapsed to Option (None = incomparable). */
-  private[sources] def cmp(a: Any, b: Any): Option[Int] = (norm(a), norm(b)) match {
-    case (x: java.lang.Long, y: java.lang.Long) => Some(x.compareTo(y))
-    case (x: java.lang.Long, y: java.lang.Double) =>
-      Some(java.lang.Double.compare(x.doubleValue(), y))
-    case (x: java.lang.Double, y: java.lang.Long) =>
-      Some(java.lang.Double.compare(x, y.doubleValue()))
-    case (x: java.lang.Double, y: java.lang.Double) => Some(x.compareTo(y))
-    case (x: String, y: String) => Some(x.compareTo(y))
-    case (x: java.lang.Boolean, y: java.lang.Boolean) => Some(x.compareTo(y))
-    case _ => None
+  private[sources] def cmp(a: Any, b: Any): Option[Int] = {
+    val c = cmpNorm(norm(a), norm(b))
+    if (c == Incomparable) None else Some(c)
   }
 
   /** Evaluate one filter on an external-typed row (UNKNOWN ⇒ false, the
     * same collapse SQL applies to WHERE). */
   def eval(f: Filter, schema: StructType, row: Array[Any]): Boolean =
-    eval3(f, schema, row).contains(true)
+    compile(f, schema)(row)
 
   /** SQL three-valued evaluation: None = UNKNOWN (null operand). Proper
     * 3VL matters for the passthrough profile, which accepts arbitrary
     * OR/NOT nesting: `NOT (null_col = 1)` must stay UNKNOWN (row dropped),
     * not flip to TRUE under two-valued negation. */
-  def eval3(f: Filter, schema: StructType, row: Array[Any]): Option[Boolean] = {
-    def v(attr: String): Any = {
-      // exact full-name match first: joined virtual tables carry alias-
-      // qualified TOP-LEVEL columns ("t0.bal") that must not be walked
-      // as nested struct paths
+  def eval3(f: Filter, schema: StructType, row: Array[Any]): Option[Boolean] =
+    compile(f, schema).eval3(row)
+
+  /** A filter resolved against one schema, for many rows. `columns` are
+    * the top-level row positions it reads. */
+  final class Compiled private[FilterEval] (
+      val columns: Array[Int], run: Array[Any] => Option[Boolean])
+      extends (Array[Any] => Boolean) {
+    def eval3(row: Array[Any]): Option[Boolean] = run(row)
+    /** UNKNOWN ⇒ false, as in [[eval]]. */
+    def apply(row: Array[Any]): Boolean = run(row).contains(true)
+  }
+
+  private val True = Some(true)
+  private val False = Some(false)
+  private def verdict(b: Boolean): Option[Boolean] = if (b) True else False
+
+  /** Resolve every reference of `f` once: the exact top-level name first —
+    * joined virtual tables carry alias-qualified TOP-LEVEL columns
+    * ("t0.bal") that must not be walked as nested struct paths — then the
+    * dotted path through struct fields; an unresolvable reference reads
+    * null. */
+  def compile(f: Filter, schema: StructType): Compiled = {
+    val cols = mutable.LinkedHashSet.empty[Int]
+    def ref(attr: String): Array[Any] => Any = {
       val exact = schema.fieldNames.indexWhere(_.equalsIgnoreCase(attr))
-      if (exact >= 0) return row(exact)
+      if (exact >= 0) { cols += exact; return row => row(exact) }
       val parts = attr.split('.')
       val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(parts(0)))
-      if (i < 0) return null
-      var cur: Any = row(i)
+      if (i < 0) return _ => null
+      cols += i
+      val path = new Array[Int](parts.length - 1)
       var dt: DataType = schema.fields(i).dataType
-      var k = 1
-      while (k < parts.length) {
-        (cur, dt) match {
-          case (r: Row, st: StructType) =>
-            val j = st.fieldNames.indexWhere(_.equalsIgnoreCase(parts(k)))
-            if (j < 0) return null
-            cur = r.get(j); dt = st.fields(j).dataType
-          case _ => return null // null struct or non-struct mid-path
-        }
-        k += 1
+      for (k <- 1 until parts.length) dt match {
+        case st: StructType =>
+          val j = st.fieldNames.indexWhere(_.equalsIgnoreCase(parts(k)))
+          if (j < 0) return _ => null
+          path(k - 1) = j; dt = st.fields(j).dataType
+        case _ => return _ => null // non-struct mid-path
       }
-      cur
+      row => {
+        var cur: Any = row(i)
+        var k = 0
+        while (cur != null && k < path.length) {
+          cur = cur match { case r: Row => r.get(path(k)); case _ => null }
+          k += 1
+        }
+        cur
+      }
     }
     // comparison against a literal: null/incomparable operand ⇒ UNKNOWN
-    def cmpOp(a: String, b: Any)(p: Int => Boolean): Option[Boolean] = {
-      val x = v(a)
-      if (x == null || b == null) None else cmp(x, b).map(p)
+    def cmpOp(a: String, b: Any)(p: Int => Boolean): Array[Any] => Option[Boolean] = {
+      val get = ref(a)
+      val lit = norm(b)
+      if (b == null) _ => None
+      else row => {
+        val x = get(row)
+        val c = if (x == null) Incomparable else cmpNorm(norm(x), lit)
+        if (c == Incomparable) None else verdict(p(c))
+      }
     }
-    def strOp(a: String)(p: String => Boolean): Option[Boolean] =
-      Option(v(a)).map(x => p(x.toString))
-    f match {
+    def strOp(a: String)(p: String => Boolean): Array[Any] => Option[Boolean] = {
+      val get = ref(a)
+      row => { val x = get(row); if (x == null) None else verdict(p(x.toString)) }
+    }
+    def node(f: Filter): Array[Any] => Option[Boolean] = f match {
       case EqualTo(a, b) => cmpOp(a, b)(_ == 0)
       case GreaterThan(a, b) => cmpOp(a, b)(_ > 0)
       case GreaterThanOrEqual(a, b) => cmpOp(a, b)(_ >= 0)
       case LessThan(a, b) => cmpOp(a, b)(_ < 0)
       case LessThanOrEqual(a, b) => cmpOp(a, b)(_ <= 0)
       case In(a, vs) =>
-        val x = v(a)
-        if (x == null) None
-        else if (vs.exists(b => b != null && cmp(x, b).contains(0))) Some(true)
-        else if (vs.contains(null)) None // x IN (…, NULL) with no match
-        else Some(false)
-      case IsNull(a) => Some(v(a) == null)
-      case IsNotNull(a) => Some(v(a) != null)
+        val get = ref(a)
+        val lits = vs.filter(_ != null).map(norm)
+        val hasNull = vs.contains(null)
+        row => {
+          val x = get(row)
+          if (x == null) None
+          else {
+            val nx = norm(x)
+            if (lits.exists(cmpNorm(nx, _) == 0)) True
+            else if (hasNull) None // x IN (…, NULL) with no match
+            else False
+          }
+        }
+      case IsNull(a) => val get = ref(a); row => verdict(get(row) == null)
+      case IsNotNull(a) => val get = ref(a); row => verdict(get(row) != null)
       case StringStartsWith(a, p) => strOp(a)(_.startsWith(p))
       case StringEndsWith(a, s) => strOp(a)(_.endsWith(s))
       case StringContains(a, s) => strOp(a)(_.contains(s))
       case EqualNullSafe(a, b) =>
-        val x = v(a)
-        Some(if (x == null || b == null) x == null && b == null
-             else cmp(x, b).contains(0))
-      case Not(c) => eval3(c, schema, row).map(!_)
+        val get = ref(a)
+        val lit = norm(b)
+        row => {
+          val x = get(row)
+          verdict(if (x == null || b == null) x == null && b == null
+                  else cmpNorm(norm(x), lit) == 0)
+        }
+      case Not(c) => val inner = node(c); row => inner(row).map(!_)
       case And(l, r) =>
-        (eval3(l, schema, row), eval3(r, schema, row)) match {
-          case (Some(false), _) | (_, Some(false)) => Some(false)
-          case (Some(true), Some(true)) => Some(true)
-          case _ => None
+        val (lf, rf) = (node(l), node(r))
+        row => {
+          val x = lf(row)
+          if (x == False) False
+          else {
+            val y = rf(row)
+            if (y == False) False else if (x == True && y == True) True else None
+          }
         }
       case Or(l, r) =>
-        (eval3(l, schema, row), eval3(r, schema, row)) match {
-          case (Some(true), _) | (_, Some(true)) => Some(true)
-          case (Some(false), Some(false)) => Some(false)
-          case _ => None
+        val (lf, rf) = (node(l), node(r))
+        row => {
+          val x = lf(row)
+          if (x == True) True
+          else {
+            val y = rf(row)
+            if (y == True) True else if (x == False && y == False) False else None
+          }
         }
-      case _: AlwaysTrue => Some(true)
-      case _: AlwaysFalse => Some(false)
-      case other => throw new IllegalStateException(s"unpushable filter evaluated: $other")
+      case _: AlwaysTrue => _ => True
+      case _: AlwaysFalse => _ => False
+      case other => _ => throw new IllegalStateException(s"unpushable filter evaluated: $other")
     }
+    val run = node(f)
+    new Compiled(cols.toArray, run)
+  }
+
+  /** The top-level conjuncts of `f`. */
+  def conjuncts(f: Filter): Seq[Filter] = f match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
   }
 }
 
@@ -579,9 +647,10 @@ class FileAggReaderFactory extends PartitionReaderFactory {
     }
 
     val groups = mutable.LinkedHashMap.empty[List[Any], Array[Any]]
+    val filters = p.filters.map(FilterEval.compile(_, parseSchema))
     val in = ScanChunks.records(p.chunks.toSeq, codec, parseSchema)
     try {
-      in.filter(row => p.filters.forall(FilterEval.eval(_, parseSchema, row)))
+      in.filter(row => filters.forall(_(row)))
         .foreach { row =>
           val key = p.groupIdx.map(row(_)).toList
           update(groups.getOrElseUpdate(key, newAcc()), row)
@@ -798,6 +867,23 @@ class FilePartitionReaderFactory extends PartitionReaderFactory {
       case _ => v
     }
 
+  /** The pushed limit, top-N and offset over rows whose parse-schema
+    * values `values` gives. */
+  private def window[T](base: Iterator[T], p: FilePartition)(values: T => Array[Any]): Iterator[T] =
+    if (p.topN.nonEmpty && p.limit >= 0) {
+      // bounded selection: keep the partition's N best rows in a max-heap
+      // of the current worst — O(rows·log N) time, O(N) memory per task
+      val ord = FileTopN.ordering(p.topN).on(values)
+      val heap = new mutable.PriorityQueue[T]()(ord)
+      base.foreach { row =>
+        if (heap.size < p.limit) heap.enqueue(row)
+        else if (ord.compare(row, heap.head) < 0) { heap.dequeue(); heap.enqueue(row) }
+      }
+      heap.dequeueAll.reverseIterator.drop(p.offset)
+    } else if (p.limit >= 0) base.take(p.limit).drop(p.offset)
+    else if (p.offset > 0) base.drop(p.offset) // consumed OFFSET, no limit
+    else base
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition match {
       case b: BucketedFilePartition => b.inner
@@ -805,35 +891,92 @@ class FilePartitionReaderFactory extends PartitionReaderFactory {
     }
     val parseSchema = DataType.fromJson(p.parseSchemaJson).asInstanceOf[StructType]
     val outSchema = DataType.fromJson(p.outputSchemaJson).asInstanceOf[StructType]
-    val codec = FileCodec.forFormat(p.format)
-    val in = ScanChunks.records(p.chunks.toSeq, codec, parseSchema)
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(outSchema)
-    val base = in
-      .filter(row => p.filters.forall(FilterEval.eval(_, parseSchema, row)))
-    val limited =
-      if (p.topN.nonEmpty && p.limit >= 0) {
-        // bounded selection: keep the partition's N best rows in a max-heap
-        // of the current worst — O(rows·log N) time, O(N) memory per task
-        val ord = FileTopN.ordering(p.topN)
-        val heap = new mutable.PriorityQueue[Array[Any]]()(ord)
-        base.foreach { row =>
-          if (heap.size < p.limit) heap.enqueue(row)
-          else if (ord.compare(row, heap.head) < 0) { heap.dequeue(); heap.enqueue(row) }
+    FileCodec.forFormat(p.format) match {
+      case CsvCodec =>
+        val rows = new CsvRowScan(p, parseSchema, outSchema).rows()
+        IteratorReader(window(rows, p)(_._1).map(_._2), rows.close())
+      case codec =>
+        val in = ScanChunks.records(p.chunks.toSeq, codec, parseSchema)
+        val filters = p.filters.map(FilterEval.compile(_, parseSchema))
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(outSchema)
+        val rows = window(in.filter(row => filters.forall(_(row))), p)(identity).map { row =>
+          val out = p.outputIndices.indices.map { oi =>
+            val pi = p.outputIndices(oi)
+            projectValue(row(pi), parseSchema.fields(pi).dataType,
+              outSchema.fields(oi).dataType)
+          }
+          toCatalyst(Row.fromSeq(out)).asInstanceOf[InternalRow]
         }
-        heap.dequeueAll.reverseIterator.drop(p.offset)
-      } else if (p.limit >= 0) base.take(p.limit).drop(p.offset)
-      else if (p.offset > 0) base.drop(p.offset) // consumed OFFSET, no limit
-      else base
-    val rows = limited.map { row =>
-      val out = p.outputIndices.indices.map { oi =>
-        val pi = p.outputIndices(oi)
-        projectValue(row(pi), parseSchema.fields(pi).dataType,
-          outSchema.fields(oi).dataType)
-      }
-      toCatalyst(Row.fromSeq(out)).asInstanceOf[InternalRow]
+        IteratorReader(rows, in.close())
     }
-    IteratorReader(rows, in.close())
   }
+}
+
+/** The CSV row scan of one partition, filter first: per record, each pushed
+  * conjunct decodes only the columns it reads (null tests run last, after
+  * the comparisons that decide most rows), and only a record that passes
+  * all of them has its output columns decoded, straight into an
+  * `InternalRow`. Rows come out as (parse-schema values, output row); the
+  * values hold the filter columns and, under a pushed top-N, the sort
+  * columns. Without a top-N the output row is one reused object. */
+private final class CsvRowScan(p: FilePartition, parseSchema: StructType, outSchema: StructType) {
+  private val types = parseSchema.fields.map(_.dataType)
+  private val filters = p.filters.toSeq.flatMap(FilterEval.conjuncts)
+    .sortBy { case _: IsNull | _: IsNotNull => 1; case _ => 0 }
+    .map(FilterEval.compile(_, parseSchema)).toArray
+  private val sortCols = p.topN.map(_.target)
+  private val outTypes = outSchema.fields.map(_.dataType)
+  private val outConv = outTypes.map(CatalystTypeConverters.createToCatalystConverter)
+  private val values = new Array[Any](types.length)
+  private val decodedAt = new Array[Long](types.length) // record each value is of
+  private var recordNo = 0L
+  private val reused = new SpecificInternalRow(outTypes.toSeq)
+
+  def rows(): Iterator[(Array[Any], InternalRow)] with AutoCloseable =
+    ScanChunks.open(p.chunks.toSeq) { c =>
+      require(c.wholeFile, s"non-splittable chunk: $c")
+      val in = FileCodec.utf8Reader(new File(c.path))
+      val tok = new CsvTokenizer(in)
+      val idx = tok.columns(parseSchema)
+      (if (idx == null) Iterator.empty else survivors(tok, idx), in)
+    }
+
+  private def survivors(tok: CsvTokenizer, idx: Array[Int]): Iterator[(Array[Any], InternalRow)] =
+    new Iterator[(Array[Any], InternalRow)] {
+      private def decode(i: Int): Unit =
+        if (decodedAt(i) != recordNo) {
+          values(i) = tok.value(idx(i), types(i)); decodedAt(i) = recordNo
+        }
+      private def passes(): Boolean = {
+        recordNo += 1
+        var k = 0
+        while (k < filters.length) {
+          filters(k).columns.foreach(decode)
+          if (!filters(k)(values)) return false
+          k += 1
+        }
+        true
+      }
+      // the tokenizer sits on a passing record not yet returned; found only
+      // when asked for, so a pushed LIMIT reads no record past its last row
+      private var pending = false
+      override def hasNext: Boolean = pending || {
+        while (!pending && tok.next()) pending = passes()
+        pending
+      }
+      override def next(): (Array[Any], InternalRow) = {
+        if (!hasNext) throw new NoSuchElementException("end of CSV scan")
+        val row = if (sortCols.isEmpty) reused else new SpecificInternalRow(outTypes.toSeq)
+        var oi = 0
+        while (oi < outTypes.length) {
+          tok.write(idx(p.outputIndices(oi)), outTypes(oi), outConv(oi), row, oi)
+          oi += 1
+        }
+        val sortValues = if (sortCols.isEmpty) null else { sortCols.foreach(decode); values.clone() }
+        pending = false
+        (sortValues, row)
+      }
+    }
 }
 
 /** Scan for the `_files` meta-table: listing computed at plan time on the

@@ -198,11 +198,12 @@ class FileTable(
         val cdc = FileCodec.forFormat(fmt)
         val tmp = new File(path + ".rewrite")
         var kept = 0L
+        val matches = conjuncts.map(FilterEval.compile(_, sch))
         Using.resource(FileCodec.utf8Reader(new File(path))) { in =>
           Using.resource(FileCodec.utf8Writer(tmp)) { out =>
             cdc.writeHeader(out, sch)
             cdc.reader(in, sch).foreach { row =>
-              val matched = conjuncts.forall(f => FilterEval.eval(f, sch, row))
+              val matched = matches.forall(_(row))
               if (!matched) { cdc.write(out, row, sch); kept += 1 }
             }
           }

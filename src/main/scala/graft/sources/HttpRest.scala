@@ -655,8 +655,9 @@ object LoopbackRestServer {
               }
             case None => None
           }
+        val qlMatch = ql.map(FilterEval.compile(_, schema))
         var out = rows.iterator.filter { row =>
-          ql.forall(FilterEval.eval(_, schema, row)) &&
+          qlMatch.forall(_(row)) &&
           q.forall { case (k, v) =>
             reserved(k) || {
               val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(k))

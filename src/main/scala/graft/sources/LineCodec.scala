@@ -8,7 +8,9 @@ import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Record codecs for the file connector: CSV (with header) and JSONL.
   *
@@ -22,6 +24,14 @@ import org.apache.spark.sql.types._
   *   - dates as yyyy-MM-dd;
   *   - CSV: null = empty unquoted field, empty string = "" (quoted);
   *     quotes/commas/newlines quoted with "" escaping.
+  *
+  * A cell that does not parse as its column's type fails the read that
+  * decodes it. The CSV row scan (`CsvRowScan`) decodes a record's pushed-
+  * filter columns first and its other columns only when the record
+  * passes, so a malformed cell in a rejected record goes unread there;
+  * the aggregate scan, the keyed DELETE/UPDATE rewrite and streaming
+  * decode every column of every record ([[CsvCodec.reader]]) and fail
+  * on it.
   *
   * Schema inference samples the first [[FileCodec.SampleRows]] records and
   * widens per column (long → double → bool → timestamp → date → string),
@@ -72,6 +82,33 @@ object LineCodec {
       case DateType => java.sql.Date.valueOf(cell.trim)
       case _ => cell
     }
+
+  // ---- fixed-format text -> unboxed value ------------------------------
+
+  /** What [[fixedLong]] returns for text outside its form; the caller
+    * then takes the general path ([[parse]]), so every text reads to the
+    * same value either way. */
+  val NotFixed: Long = Long.MinValue
+
+  /** Digits cs[at, at+n) as a number; -1 unless all are ASCII digits. */
+  private def digits(cs: Array[Char], at: Int, n: Int): Long = {
+    var v = 0L
+    var i = at
+    while (i < at + n) {
+      val d = cs(i) - '0'
+      if (d < 0 || d > 9) return -1
+      v = v * 10 + d
+      i += 1
+    }
+    v
+  }
+
+  /** `[+-]?\d{1,18}` in cs[from, until) (18 digits cannot overflow). */
+  def fixedLong(cs: Array[Char], from: Int, until: Int): Long = {
+    val s = if (from < until && (cs(from) == '-' || cs(from) == '+')) from + 1 else from
+    val v = if (until - s > 18) -1L else digits(cs, s, until - s)
+    if (v < 0 || s == until) NotFixed else if (cs(from) == '-') -v else v
+  }
 
   /** Widening type inference for one sampled cell. */
   private def cellType(cell: String): DataType = {
@@ -170,41 +207,6 @@ object FileCodec {
 object CsvCodec extends FileCodec {
   val extension = "csv"
 
-  /** Read one raw CSV record; null at EOF. Cells: null = unquoted empty. */
-  private def readRecord(in: BufferedReader): Array[String] = {
-    var c = in.read()
-    if (c < 0) return null
-    val cells = ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var quoted = false    // currently inside quotes
-    var wasQuoted = false // this cell had quotes (=> "" is empty string)
-    def endCell(): Unit = {
-      cells += (if (!wasQuoted && sb.isEmpty) null else sb.toString)
-      sb.clear(); wasQuoted = false
-    }
-    var done = false
-    while (!done) {
-      if (c < 0) { endCell(); done = true }
-      else {
-        val ch = c.toChar
-        if (quoted) {
-          if (ch == '"') {
-            val nxt = in.read()
-            if (nxt == '"') { sb += '"'; c = in.read() }
-            else { quoted = false; c = nxt }
-          } else { sb += ch; c = in.read() }
-        } else ch match {
-          case '"' => quoted = true; wasQuoted = true; c = in.read()
-          case ',' => endCell(); c = in.read()
-          case '\r' => c = in.read() // swallow CR of CRLF
-          case '\n' => endCell(); done = true
-          case ch2 => sb += ch2; c = in.read()
-        }
-      }
-    }
-    cells.toArray
-  }
-
   private def quote(s: String): String =
     if (s == null) ""
     else if (s.isEmpty || s.exists(ch => ch == ',' || ch == '"' || ch == '\n' || ch == '\r'))
@@ -222,38 +224,167 @@ object CsvCodec extends FileCodec {
   }
 
   def reader(in: BufferedReader, schema: StructType): Iterator[Array[Any]] = {
-    val header = readRecord(in)
-    if (header == null) return Iterator.empty
-    // map header position -> schema position (extra file columns dropped)
-    val idx = schema.fieldNames.map(n => header.indexWhere(h => h != null && h.equalsIgnoreCase(n)))
+    val tok = new CsvTokenizer(in)
+    val idx = tok.columns(schema)
+    if (idx == null) return Iterator.empty
+    val types = schema.fields.map(_.dataType)
     new Iterator[Array[Any]] {
-      private var nextRec = readRecord(in)
-      def hasNext: Boolean = nextRec != null
+      private var ready = tok.next()
+      def hasNext: Boolean = ready
       def next(): Array[Any] = {
-        val rec = nextRec
-        nextRec = readRecord(in)
-        schema.fields.indices.toArray.map { i =>
-          val j = idx(i)
-          if (j < 0 || j >= rec.length) null
-          else LineCodec.parse(rec(j), schema.fields(i).dataType)
-        }
+        val row = Array.tabulate[Any](types.length)(i => tok.value(idx(i), types(i)))
+        ready = tok.next()
+        row
       }
     }
   }
 
   def inferSchema(in: BufferedReader): StructType = {
-    val header = readRecord(in)
-    require(header != null && header.nonEmpty, "empty csv: cannot infer schema")
+    val tok = new CsvTokenizer(in)
+    require(tok.next() && tok.fields > 0, "empty csv: cannot infer schema")
+    val header = tok.record()
     val sample = ArrayBuffer.empty[Array[String]]
-    var rec = readRecord(in)
-    while (rec != null && sample.size < LineCodec.SampleRows) {
-      sample += rec; rec = readRecord(in)
-    }
+    while (sample.size < LineCodec.SampleRows && tok.next()) sample += tok.record()
     StructType(header.zipWithIndex.map { case (name, i) =>
       val col = sample.toSeq.map(r => if (i < r.length) r(i) else null)
       StructField(name, LineCodec.inferColumn(col), nullable = true)
     })
   }
+}
+
+/** The one CSV reader: a quote-aware tokenizer over a reused char buffer.
+  * [[next]] splits one record into field offsets; a quoted field is
+  * unescaped in place (`""` → `"`), so a field is always one slice of the
+  * buffer and no cell becomes a String unless asked for. A record that
+  * runs past the buffer end is moved to its start before the refill (the
+  * buffer doubles for a record longer than itself).
+  *
+  * Field semantics: an unquoted empty field is null, a quoted one (`""`)
+  * the empty string; a CR outside quotes is dropped (CRLF ends a record
+  * like LF), inside quotes it is kept; text after a closing quote joins
+  * the field; a missing trailing field reads as null; the last record
+  * needs no newline. Typed reads trim like `String.trim` and give the
+  * value [[LineCodec.parse]] gives for the field's text. The tokenizer
+  * does not close `in`. */
+final class CsvTokenizer(in: java.io.Reader, bufSize: Int = 1 << 16) {
+  private var buf = new Array[Char](bufSize)
+  private var pos = 0     // next char to read
+  private var lim = 0     // chars in buf
+  private var rec = 0     // start of the current record; buf before it is free
+  private var eof = false
+  private var w = 0       // where the current field's next char is written
+  private var fStart = 0  // start of the current field
+  private var wasQuoted = false
+  private var starts = new Array[Int](16)
+  private var ends = new Array[Int](16)
+  private var quoted = new Array[Boolean](16)
+  private var n = 0
+
+  /** Fields of the current record. */
+  def fields: Int = n
+
+  /** Refill after the last char: slide the current record to the start of
+    * the buffer (growing it when the record fills it), then read. */
+  private def fill(): Boolean = {
+    if (eof) return false
+    if (rec > 0) {
+      System.arraycopy(buf, rec, buf, 0, lim - rec)
+      var k = 0
+      while (k < n) { starts(k) -= rec; ends(k) -= rec; k += 1 }
+      pos -= rec; lim -= rec; w -= rec; fStart -= rec; rec = 0
+    }
+    if (lim == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+    var got = 0
+    while (got == 0) got = in.read(buf, lim, buf.length - lim)
+    if (got < 0) { eof = true; false } else { lim += got; true }
+  }
+
+  private def endField(): Unit = {
+    if (n == starts.length) {
+      starts = java.util.Arrays.copyOf(starts, n * 2)
+      ends = java.util.Arrays.copyOf(ends, n * 2)
+      quoted = java.util.Arrays.copyOf(quoted, n * 2)
+    }
+    starts(n) = fStart; ends(n) = w; quoted(n) = wasQuoted
+    n += 1
+    fStart = w; wasQuoted = false
+  }
+
+  /** Advance to the next record; false at end of input. */
+  def next(): Boolean = {
+    rec = pos; n = 0
+    if (pos == lim && !fill()) return false
+    w = pos; fStart = pos; wasQuoted = false
+    var inQuotes = false
+    while (true) {
+      if (pos == lim && !fill()) { endField(); return true }
+      val c = buf(pos)
+      pos += 1
+      if (inQuotes) {
+        if (c != '"') { buf(w) = c; w += 1 }
+        else if (pos == lim && !fill()) inQuotes = false
+        else if (buf(pos) == '"') { buf(w) = '"'; w += 1; pos += 1 }
+        else inQuotes = false
+      } else c match {
+        case ',' => endField()
+        case '\n' => endField(); return true
+        case '"' => inQuotes = true; wasQuoted = true
+        case '\r' =>
+        case _ => buf(w) = c; w += 1
+      }
+    }
+    true
+  }
+
+  /** Field j is null: unquoted empty, past the record's end, or j < 0. */
+  def isNull(j: Int): Boolean =
+    j < 0 || j >= n || (!quoted(j) && starts(j) == ends(j))
+
+  def text(j: Int): String =
+    if (isNull(j)) null else new String(buf, starts(j), ends(j) - starts(j))
+
+  def record(): Array[String] = Array.tabulate(n)(text)
+
+  /** Read the header record and place each schema field in it
+    * (case-insensitive; -1 = not in this file, read as null); null when
+    * the input is empty. */
+  def columns(schema: StructType): Array[Int] =
+    if (!next()) null
+    else {
+      val header = record()
+      schema.fieldNames.map(f => header.indexWhere(h => h != null && h.equalsIgnoreCase(f)))
+    }
+
+  private def long(j: Int): Long = {
+    var ts = starts(j)
+    var te = ends(j)
+    while (ts < te && buf(ts) <= ' ') ts += 1
+    while (te > ts && buf(te - 1) <= ' ') te -= 1
+    val v = LineCodec.fixedLong(buf, ts, te)
+    if (v != LineCodec.NotFixed) v else java.lang.Long.parseLong(text(j).trim)
+  }
+
+  /** Field j as [[LineCodec.parse]] types it. */
+  def value(j: Int, dt: DataType): Any =
+    if (isNull(j)) null
+    else dt match {
+      case LongType => java.lang.Long.valueOf(long(j))
+      case StringType => text(j)
+      case _ => LineCodec.parse(text(j), dt)
+    }
+
+  /** Field j into slot i of `row` as the Catalyst value of `dt`: what
+    * `conv(LineCodec.parse(text(j), dt))` gives, with `conv` the Catalyst
+    * converter of `dt`; longs and doubles go in unboxed and strings
+    * without the converter. */
+  def write(j: Int, dt: DataType, conv: Any => Any, row: InternalRow, i: Int): Unit =
+    if (isNull(j)) row.setNullAt(i)
+    else dt match {
+      case LongType => row.setLong(i, long(j))
+      case DoubleType => row.setDouble(i, java.lang.Double.parseDouble(text(j).trim))
+      case StringType => row.update(i, UTF8String.fromString(text(j)))
+      case _ => row.update(i, conv(LineCodec.parse(text(j), dt)))
+    }
 }
 
 /** JSON-lines: one object per line. Nested objects round-trip as real

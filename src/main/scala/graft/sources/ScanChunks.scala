@@ -67,18 +67,34 @@ object ScanChunks {
     parts.toSeq
   }
 
-  /** Records of one partition's chunk list, opened lazily one chunk at a
-    * time (at most one file handle live per task). */
+  /** Records of one partition's chunk list through `codec`. */
   def records(
       chunks: Seq[FileChunk], codec: FileCodec,
       schema: StructType): Iterator[Array[Any]] with AutoCloseable =
-    new Iterator[Array[Any]] with AutoCloseable {
+    open(chunks) { c =>
+      codec match {
+        case JsonCodec => // line-oriented: any byte range works
+          val lines = new ChunkLineIterator(new File(c.path), c.start, c.length)
+          (JsonCodec.lineRecords(lines, schema), lines)
+        case _ => // csv: whole files only (planner never splits them)
+          require(c.wholeFile, s"non-splittable chunk: $c")
+          val in = FileCodec.utf8Reader(new File(c.path))
+          (codec.reader(in, schema), in)
+      }
+    }
+
+  /** The items `read` gives for each chunk in turn, each chunk opened
+    * lazily and closed when drained (at most one file handle live per
+    * task). */
+  def open[T](chunks: Seq[FileChunk])(
+      read: FileChunk => (Iterator[T], AutoCloseable)): Iterator[T] with AutoCloseable =
+    new Iterator[T] with AutoCloseable {
       private var i = 0
-      private var cur: Iterator[Array[Any]] = Iterator.empty
-      private var open: AutoCloseable = null
+      private var cur: Iterator[T] = Iterator.empty
+      private var handle: AutoCloseable = null
 
       private def closeCur(): Unit =
-        if (open != null) { open.close(); open = null }
+        if (handle != null) { handle.close(); handle = null }
 
       @scala.annotation.tailrec
       private def ensure(): Boolean =
@@ -87,22 +103,14 @@ object ScanChunks {
         else {
           closeCur()
           val c = chunks(i); i += 1
-          codec match {
-            case JsonCodec => // line-oriented: any byte range works
-              val lines = new ChunkLineIterator(new File(c.path), c.start, c.length)
-              open = lines
-              cur = JsonCodec.lineRecords(lines, schema)
-            case _ => // csv: whole files only (planner never splits them)
-              require(c.wholeFile, s"non-splittable chunk: $c")
-              val in = FileCodec.utf8Reader(new File(c.path))
-              open = in
-              cur = codec.reader(in, schema)
-          }
+          val (items, h) = read(c)
+          handle = h
+          cur = items
           ensure()
         }
 
       override def hasNext: Boolean = ensure()
-      override def next(): Array[Any] = { ensure(); cur.next() }
+      override def next(): T = { ensure(); cur.next() }
       override def close(): Unit = closeCur()
     }
 }

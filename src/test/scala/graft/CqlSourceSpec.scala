@@ -578,6 +578,24 @@ class CqlSourceSpec extends AnyFunSuite {
 
   // ---- runtime semi-join reduction (dynamic filtering) ---------------------
 
+  test("a static partition-key IN pushes as CQL IN: same rows as Spark's own filter") {
+    val t = table("staticin")
+    val all = spark.createDataFrame(
+      java.util.Arrays.asList(spark.table(t).collect(): _*), schema)
+    for (cond <- Seq(col("seg").isin("A", "C"),
+                     col("seg").isin("B", "Z") && col("id") < 200L,
+                     col("seg").isin("C", "A") && col("id") >= 10L && col("bal") > 100.0)) {
+      val pushed = spark.table(t).filter(cond).select("seg", "id", "bal")
+      val got = pushed.collect().map(_.toString).sorted.toSeq
+      val cql = LoopbackCqlServer.lastCql.get()
+      val want = all.filter(cond).select("seg", "id", "bal").collect().map(_.toString).sorted.toSeq
+      assert(got == want, s"$cond")
+      assert(got.nonEmpty, s"$cond")
+      assert(cql.contains("seg IN ('"), s"the static IN must reach the wire: $cql")
+      assert(!cql.contains("token("), s"an IN-pinned read must not token-fan-out: $cql")
+    }
+  }
+
   test("a broadcast dim join ships the build-side keys as partition-key IN") {
     val t = table("dynq1")
     // selective dim built over range() so the Filter survives optimization
