@@ -210,9 +210,9 @@ class GraftEngine(val spark: SparkSession) {
 
     // UPDATE on a connector table: read-modify-write rewrite (reference:
     // datastore read-modify-write UPDATE, backends/datastore/
-    // datastore_test.go:398-486). The updated frame is staged into a
-    // temp table through the connector's own append path, then swapped in
-    // — never an in-place mutation a concurrent reader could half-see.
+    // datastore_test.go:398-486). Each rewritten part file is written to
+    // a temp and swapped in whole — never an in-place mutation a
+    // concurrent reader could half-see.
     case UpdateStmt(tbl, sets, cond) if tbl.startsWith("graft.") =>
       updateRewrite(tbl, sets, substitute(cond))
 
@@ -285,58 +285,30 @@ class GraftEngine(val spark: SparkSession) {
           org.apache.spark.sql.functions.lit(null)
             .cast(table.schema0(c).dataType))
       }
-    // delete existing rows matching any incoming key (key list is literal
-    // VALUES text — driver-side by construction, like the statement itself)
-    val keyRows = incoming.select(table.keys.map(
-      org.apache.spark.sql.functions.col): _*).collect()
-    if (keyRows.nonEmpty) {
-      val inOk = table.keys.size == 1 &&
-        table.acceptsFilter(org.apache.spark.sql.sources.In(
-          table.keys.head, keyRows.map(_.get(0)).toArray))
-      if (inOk) {
-        // single key on a profile that accepts IN (full, Cassandra-style
-        // keys): one IN-list delete (file-pruned inside deleteWhere)
-        val in = keyRows.map(r => SqlText.literal(r.get(0))).distinct.mkString(", ")
-        spark.sql(s"DELETE FROM $tbl WHERE `${table.keys.head}` IN ($in)")
-      } else {
-        // composite keys, or a profile without IN (BigTable-style prefix
-        // ranges): ONE broadcast anti-join rewrite over the part files
-        // whose key range can hold an incoming key — replaces the
-        // reference's row-at-a-time Put with a single batched job
-        import org.apache.spark.sql.functions.{broadcast, col}
-        import graft.sources.PartFileRewrite
-        val firstKeyVals = keyRows.map(_.get(0)).distinct.filter(_ != null)
-        val (touched, _) = PartFileRewrite.touchedFiles(table,
-          Seq(org.apache.spark.sql.sources.In(table.keys.head, firstKeyVals.toArray)))
-        if (touched.nonEmpty) {
-          val rows = PartFileRewrite.readFiles(spark, table, touched)
-          val keyDf = incoming.select(table.keys.map(k =>
-            col(k).as("_gk_" + k)): _*).distinct()
-          val joinCond = table.keys.map(k =>
-            rows.col(k) === keyDf.col("_gk_" + k)).reduce(_ && _)
-          val survivors = rows.join(broadcast(keyDf), joinCond, "left_anti")
-          PartFileRewrite.replaceFiles(table, survivors, touched, removeEmptied = true)
-        }
-      }
-    }
+    // the incoming keys, cast to the table's key types before any file is
+    // touched: a value that does not fit fails here, not after a delete
+    // (key list is literal VALUES text — driver-side by construction)
+    import org.apache.spark.sql.functions.col
+    val keyRows = incoming.select(table.keys.map(k => col(k).cast(
+      table.schema0.fields.find(_.name.equalsIgnoreCase(k)).get.dataType)): _*).collect()
+    // ONE part-file rewrite drops the existing rows whose key tuple equals
+    // an incoming one, over the files whose key range can hold one —
+    // replaces the reference's row-at-a-time Put with a single batched job
+    graft.sources.PartFileRewrite.deleteKeys(table, keyRows.map(_.toSeq).toSeq)
     incoming.writeTo(tbl).append()
     import spark.implicits._
     Seq(keyRows.length.toLong).toDF("affected_rows")
   }
 
-  /** UPDATE as a surgical part-file rewrite (reference: per-key
-    * read-modify-write, backends/datastore/sql_to_datastore.go:218-360).
-    * Two pruning stages keep the write O(affected files), never O(table):
-    *   1. KeyRanges sidecar pruning — files whose recorded key range
-    *      cannot hold a matching row are never opened;
-    *   2. a match pre-pass over the survivors — files that contain no
-    *      actually-matching row are read once but never rewritten, so
-    *      their part files stay byte-identical.
-    * A one-row UPDATE on a 100 TB keyed table therefore rewrites one
-    * file. Per-file swaps are atomic (tmp + rename, the deleteWhere
-    * protocol); the statement is not cross-file transactional. */
+  /** UPDATE as ONE surgical part-file rewrite job (reference: per-key
+    * read-modify-write, backends/datastore/sql_to_datastore.go:218-360):
+    * the KeyRanges sidecar prunes the files whose key range cannot hold a
+    * matching row, and [[graft.sources.PartFileRewrite]] rewrites only the
+    * files where the condition hits, so a one-row UPDATE on a 100 TB keyed
+    * table reads and rewrites one file. Per-file swaps are atomic; the
+    * statement is not cross-file transactional. */
   private def updateRewrite(tbl: String, sets: String, cond: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, when}
+    import org.apache.spark.sql.functions.expr
     import graft.sources.PartFileRewrite
     val parts = tbl.replace("`", "").split('.')
     require(parts.length == 3, s"UPDATE expects graft.<source>.<table>, got $tbl")
@@ -386,30 +358,10 @@ class GraftEngine(val spark: SparkSession) {
     if (table.buckets > 0)
       require(!assigns.keys.exists(c => table.keys.exists(_.equalsIgnoreCase(c))),
         s"UPDATE $tbl: cannot update bucket key columns; DELETE + INSERT instead")
-    val filters = PartFileRewrite.condFilters(spark, tbl, cond)
-    val (touched, _) = PartFileRewrite.touchedFiles(table, filters)
-    var affected = 0L
-    if (touched.nonEmpty) {
-      // match pre-pass: which touched files hold a matching row, and how
-      // many (the affected count — pruning is conservative, so every
-      // matching row lives in a touched file)
-      val perFile = PartFileRewrite.readFiles(spark, table, touched)
-        .filter(expr(cond))
-        .groupBy(col(PartFileRewrite.SrcCol)).count()
-        .collect() // metadata-sized: one row per file with matches
-      affected = perFile.map(_.getLong(1)).sum
-      val hit = perFile.map(_.getString(0)).toSet
-      val hitFiles = touched.filter(f => hit(f.getPath))
-      if (hitFiles.nonEmpty) {
-        val rows = PartFileRewrite.readFiles(spark, table, hitFiles)
-        val upd = rows.select(table.schema0.fieldNames.toSeq.map { c =>
-          assigns.collectFirst { case (ac, v) if ac.equalsIgnoreCase(c) =>
-            when(expr(cond), expr(substitute(v))).otherwise(col(c)).as(c)
-          }.getOrElse(col(c))
-        } :+ col(PartFileRewrite.SrcCol): _*)
-        PartFileRewrite.replaceFiles(table, upd, hitFiles, removeEmptied = false)
-      }
-    }
+    // prune with the conjuncts that translate; the whole condition decides
+    val affected = PartFileRewrite.update(spark, table,
+      PartFileRewrite.condFilters(spark, tbl, cond).flatten, expr(cond),
+      assigns.toSeq.map { case (c, v) => c -> expr(substitute(v)) })
     import spark.implicits._
     Seq(affected).toDF("affected_rows")
   }
@@ -422,31 +374,12 @@ class GraftEngine(val spark: SparkSession) {
   private def mongoWireUpdate(ep: graft.sources.MongoEndpoint,
       sets: String, cond: String, tbl: String): DataFrame = {
     import graft.protocol.Bson.BDoc
-    import graft.sources.{MongoClientLite, MongoDsl, PartFileRewrite}
-    // EXACT extraction: a conjunct without a filter form must ABORT the
-    // statement — the pruning-grade condFilters drops such conjuncts,
-    // which here would silently widen the mutated row set
-    val filters = PartFileRewrite.condFiltersExact(spark, tbl, cond)
-      .getOrElse(throw new IllegalArgumentException(
-        s"UPDATE $tbl: WHERE is outside the wire filter surface: $cond"))
-    val compiled = filters.map(MongoDsl.compile)
+    import graft.sources.{MongoClientLite, MongoDsl}
+    val compiled = wireFilters(tbl, cond).map(MongoDsl.compile)
     require(!compiled.exists(_.isEmpty),
       s"UPDATE $tbl: WHERE is outside the wire filter surface: $cond")
     val q = MongoDsl.compileAll(compiled.flatten)
-    val set = BDoc(SqlText.splitTopLevel(sets).map { assign =>
-      val Array(c, v) = assign.split("=", 2).map(_.trim)
-      val name = c.replace("`", "")
-      val i = ep.schema.fieldNames.indexWhere(_.equalsIgnoreCase(name))
-      require(i >= 0, s"UPDATE $tbl: unknown column $name")
-      // constant-fold the RHS (literal expressions only: the wire's $set
-      // carries values, not row-referencing expressions), CAST to the
-      // column type — a bare 1.5 folds to DecimalType/BigDecimal, which
-      // has no BSON form; the cast lands it as the column's double
-      val value = spark.sql(
-        s"SELECT CAST((${substitute(v)}) AS ${ep.schema.fields(i).dataType.sql})")
-        .collect()(0).get(0)
-      ep.schema.fields(i).name -> value
-    })
+    val set = BDoc(foldSets(sets, ep.schema, tbl))
     val client = new MongoClientLite(ep.spec.host, ep.spec.port, ep.spec.cfg)
     val n = try client.update(ep.spec.db, ep.spec.collection, q, set, multi = true)
       finally client.close()
@@ -454,10 +387,23 @@ class GraftEngine(val spark: SparkSession) {
     Seq(n.toLong).toDF("affected_rows")
   }
 
+  /** The WHERE of a wire UPDATE as DSv2 filters, EXACTLY: a conjunct
+    * without a filter form aborts the statement, since the filters ARE
+    * the mutated set there — dropping one would silently widen it. */
+  private def wireFilters(tbl: String, cond: String): Seq[org.apache.spark.sql.sources.Filter] = {
+    val filters = graft.sources.PartFileRewrite.condFilters(spark, tbl, cond)
+    if (filters.isEmpty || filters.exists(_.isEmpty))
+      throw new IllegalArgumentException(
+        s"UPDATE $tbl: WHERE is outside the wire filter surface: $cond")
+    filters.flatten
+  }
+
   /** Parse `SET a = v, b = v` into (column, constant-folded typed value)
     * pairs against a wire schema — shared by the wire-UPDATE paths.
     * RHS are literal expressions only (the wires carry values, not
-    * row-referencing expressions); each is CAST to its column type. */
+    * row-referencing expressions); each is CAST to its column type — a
+    * bare 1.5 folds to DecimalType/BigDecimal, which has no BSON form;
+    * the cast lands it as the column's double. */
   private def foldSets(sets: String, schema: StructType, tbl: String): Seq[(String, Any)] =
     SqlText.splitTopLevel(sets).map { assign =>
       val Array(c, v) = assign.split("=", 2).map(_.trim)
@@ -475,11 +421,8 @@ class GraftEngine(val spark: SparkSession) {
     * rendered form ABORT (never a widened mutation). */
   private def bqWireUpdate(ep: graft.sources.BqEndpoint,
       sets: String, cond: String, tbl: String): DataFrame = {
-    import graft.sources.{BqSql, HttpRestClient, PartFileRewrite}
-    val filters = PartFileRewrite.condFiltersExact(spark, tbl, cond)
-      .getOrElse(throw new IllegalArgumentException(
-        s"UPDATE $tbl: WHERE is outside the wire filter surface: $cond"))
-    val preds = filters.map(BqSql.render)
+    import graft.sources.{BqSql, HttpRestClient}
+    val preds = wireFilters(tbl, cond).map(BqSql.render)
     require(!preds.exists(_.isEmpty),
       s"UPDATE $tbl: WHERE is outside the wire filter surface: $cond")
     val setSql = foldSets(sets, ep.schema, tbl).map { case (c, v) =>
@@ -506,11 +449,8 @@ class GraftEngine(val spark: SparkSession) {
     * set, the same set any UPDATE must materialize to rewrite. */
   private def dsWireUpdate(ep: graft.sources.DsEndpoint,
       sets: String, cond: String, tbl: String): DataFrame = {
-    import graft.sources.{DsQuery, HttpRestClient, PartFileRewrite}
-    val filters = PartFileRewrite.condFiltersExact(spark, tbl, cond)
-      .getOrElse(throw new IllegalArgumentException(
-        s"UPDATE $tbl: WHERE is outside the wire filter surface: $cond"))
-    val (accepted, declined) = DsQuery.split(filters)
+    import graft.sources.{DsQuery, HttpRestClient}
+    val (accepted, declined) = DsQuery.split(wireFilters(tbl, cond))
     require(declined.isEmpty,
       s"UPDATE $tbl: WHERE is outside the wire filter surface: $cond")
     val keyCol = ep.keyCol.getOrElse(throw new IllegalArgumentException(

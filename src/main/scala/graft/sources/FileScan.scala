@@ -89,8 +89,10 @@ object FilterEval {
 
   // ---- evaluation -------------------------------------------------------
 
-  /** Normalize row/literal values to a comparable domain. */
-  private def norm(v: Any): Any = v match {
+  /** Normalize row/literal values to a comparable domain: two values
+    * compare equal under [[cmp]] exactly when their normal forms are equal
+    * (`==`), for values of one column type. */
+  private[sources] def norm(v: Any): Any = v match {
     case b: java.lang.Byte => java.lang.Long.valueOf(b.longValue())
     case s: java.lang.Short => java.lang.Long.valueOf(s.longValue())
     case i: java.lang.Integer => java.lang.Long.valueOf(i.longValue())

@@ -21,8 +21,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (dataux backends/files/filesource_test.go:258-304). Reads are DSv2 scans
   * with filter/column/limit pushdown ([[FileScanBuilder]]); writes are
   * append batch writes with a task-temp + driver-rename commit protocol
-  * ([[FileWriteBuilder]]); `DELETE WHERE` is a distributed file rewrite
-  * (reference: delete-by-where, backends/cassandra/sql_to_cql.go:368-394).
+  * ([[FileWriteBuilder]]). `DELETE WHERE`, like UPDATE and UPSERT, is
+  * one [[PartFileRewrite]] pass over the part files its key range can
+  * touch (reference: delete-by-where,
+  * backends/cassandra/sql_to_cql.go:368-394).
   *
   * Table schema comes from the sidecar when present, otherwise it is
   * inferred by sampling the head of the data files — the reference's
@@ -166,65 +168,11 @@ class FileTable(
       case f => acceptsFilter(f)
     }
 
-  /** Distributed rewrite: each task streams one file, keeps the rows the
-    * conjunction does NOT match, and writes a replacement; the driver then
-    * swaps replacements in. RDD-over-files is the right tool here — this is
-    * genuinely per-file imperative IO, not a dataflow computation. */
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    if (filters.exists(_.isInstanceOf[AlwaysFalse])) return
-    val allFiles = dataFiles()
-    if (allFiles.isEmpty) return
-    if (filters.forall(_.isInstanceOf[AlwaysTrue])) { // TRUNCATE
-      allFiles.foreach(_.delete())
-      return
-    }
-    // key-range file pruning: a file whose recorded [min, max] excludes
-    // every key the conjunction allows cannot contain a matching row, so
-    // a key-constrained DELETE rewrites O(intersecting files), not
-    // O(table) — the same sidecar short-circuit the read path uses
-    val files = keys.headOption
-      .flatMap(k => schema0.fields.find(_.name.equalsIgnoreCase(k)))
-      .map(f => KeyPrune.prune(allFiles, f.name, f.dataType, dir, filters.toSeq))
-      .getOrElse(allFiles)
-    if (files.isEmpty) return
-    val spark = SparkSession.active
-    val fmt = format
-    val schemaJson = schema0.json
-    val conjuncts = filters
-    val results = spark.sparkContext
-      .parallelize(files.map(_.getPath), files.size)
-      .map { path =>
-        val sch = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-        val cdc = FileCodec.forFormat(fmt)
-        val tmp = new File(path + ".rewrite")
-        var kept = 0L
-        val matches = conjuncts.map(FilterEval.compile(_, sch))
-        Using.resource(FileCodec.utf8Reader(new File(path))) { in =>
-          Using.resource(FileCodec.utf8Writer(tmp)) { out =>
-            cdc.writeHeader(out, sch)
-            cdc.reader(in, sch).foreach { row =>
-              val matched = matches.forall(_(row))
-              if (!matched) { cdc.write(out, row, sch); kept += 1 }
-            }
-          }
-        }
-        (path, tmp.getPath, kept)
-      }
-      .collect() // tiny: one (path, path, count) triple per file
-    results.foreach { case (orig, tmp, kept) =>
-      new File(orig).delete()
-      if (kept > 0) new File(tmp).renameTo(new File(orig))
-      else new File(tmp).delete()
-    }
-    // refresh sidecar row counts for the surviving rewritten files (range
-    // stays the recorded superset — conservative; bucket ids carry over)
-    val prior = KeyRanges.load(dir)
-    KeyRanges.merge(dir, results.collect {
-      case (orig, _, kept) if kept > 0 && prior.contains(new File(orig).getName) =>
-        val name = new File(orig).getName
-        name -> prior(name).copy(rows = kept)
-    }.toMap)
-  }
+  /** Delete-by-where is one [[PartFileRewrite]] pass whose hit rule is
+    * the conjunction of `filters`; `AlwaysTrue` alone is TRUNCATE. */
+  override def deleteWhere(filters: Array[Filter]): Unit =
+    if (!filters.exists(_.isInstanceOf[AlwaysFalse]))
+      PartFileRewrite.deleteWhere(this, filters.filterNot(_.isInstanceOf[AlwaysTrue]).toSeq)
 }
 
 object FileTable {
@@ -312,9 +260,9 @@ final case class FileMeta(min: String, max: String, rows: Long = -1L, bucket: In
   * backends/datastore/sql_to_datastore.go:70-150; LIKE 'p%' becomes a key
   * range, :478-489) — the scan prunes files whose range cannot hold any
   * requested key. Metadata is advisory and conservative: files without an
-  * entry always scan; a rewrite that removes rows leaves a superset range
-  * (still correct); the UPDATE per-file rewrite refreshes the entries of
-  * the files it replaces.
+  * entry always scan. Every [[PartFileRewrite]] commit (DELETE, UPDATE,
+  * UPSERT) records the fresh range and row count of each file it swaps
+  * and removes the entries of the files it deletes.
   */
 object KeyRanges {
 
@@ -341,9 +289,10 @@ object KeyRanges {
     }
   }
 
-  def merge(dir: File, entries: Map[String, FileMeta]): Unit = {
-    if (entries.isEmpty) return
-    val all = load(dir) ++ entries
+  /** Add or replace `entries` and remove the entries named in `drop`. */
+  def merge(dir: File, entries: Map[String, FileMeta], drop: Set[String] = Set.empty): Unit = {
+    if (entries.isEmpty && drop.isEmpty) return
+    val all = load(dir) -- drop ++ entries
     val root = mapper.createObjectNode()
     all.toSeq.sortBy(_._1).foreach { case (name, m) =>
       val o = root.putObject(name)

@@ -83,11 +83,7 @@ class FileBatchWrite(
       table.buckets)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    if (overwriteFilters.nonEmpty) {
-      if (overwriteFilters.forall(_.isInstanceOf[AlwaysTrue]))
-        table.dataFiles().foreach(_.delete())
-      else table.deleteWhere(overwriteFilters)
-    }
+    if (overwriteFilters.nonEmpty) table.deleteWhere(overwriteFilters)
     val entries = messages.flatMap {
       case FileCommitMessage(es) => es
       case null => Nil // empty partition

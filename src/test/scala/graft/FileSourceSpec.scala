@@ -41,6 +41,33 @@ class FileSourceSpec extends AnyFunSuite {
     spark.table(s"graft.fed.$name")
   }
 
+  /** The Spark jobs `body` launches and their tasks. A one-task marker
+    * job fences the asynchronous listener bus: events arrive in order, so
+    * once the marker's start is seen, every earlier job's has been. */
+  private def jobsOf(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "jobsOf-marker"
+    val sc = spark.sparkContext
+    var jobs, tasks = 0
+    @volatile var fenced = false
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          fenced = true
+        else if (!fenced) { jobs += 1; tasks += e.stageInfos.map(_.numTasks).sum }
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 10000
+      while (!fenced && System.currentTimeMillis() < deadline) Thread.sleep(5)
+      assert(fenced, "listener never saw the marker job")
+    } finally sc.removeSparkListener(l)
+    (jobs, tasks)
+  }
+
   private def scanOf(df: org.apache.spark.sql.DataFrame): FileScanImpl =
     df.queryExecution.optimizedPlan.collectFirst {
       case r: DataSourceV2ScanRelation => r.scan
@@ -689,8 +716,8 @@ class FileSourceSpec extends AnyFunSuite {
     }
     spark.sql("DROP TABLE graft.upsrc.items")
     eng.sql("DROP SOURCE upsrc")
-    // prefix-profile source declines IN: multi-row upsert must fall back
-    // to per-row conjunction deletes instead of failing
+    // prefix-profile source declines IN: a multi-row upsert must still
+    // replace by key instead of failing
     val pp = new File(sys.props("user.dir"), "target/graft-test/upsert-bt").getPath
     eng.sql(s"""CREATE SOURCE upbt WITH { "type": "csv", "path": "$pp", "pushdown": "prefix" }""")
     spark.sql("DROP TABLE IF EXISTS graft.upbt.rows")
@@ -741,10 +768,16 @@ class FileSourceSpec extends AnyFunSuite {
     assert(before.size == 8, s"expected 8 part files, got ${before.keySet}")
 
     // one-row UPDATE: exactly ONE part file changes, the others keep their
-    // names AND bytes (the KeyRanges sidecar pruned them out of the write)
-    val affected = eng.sql("UPDATE graft.updsrc.kv SET v = 'HIT' WHERE k = 15")
-      .collect()(0).getLong(0)
+    // names AND bytes (the KeyRanges sidecar pruned them out of the write),
+    // in ONE Spark job of ONE task: the BIGINT key's literal folds out of
+    // its cast, so pruning leaves one file, and no match pre-pass runs
+    var affected = -1L
+    val (jobs, tasks) = jobsOf {
+      affected = eng.sql("UPDATE graft.updsrc.kv SET v = 'HIT' WHERE k = 15")
+        .collect()(0).getLong(0)
+    }
     assert(affected == 1)
+    assert((jobs, tasks) == (1, 1), s"UPDATE ran $jobs jobs of $tasks tasks")
     val afterUpd = snap()
     assert(afterUpd.keySet == before.keySet)
     val changed = before.keySet.filter(n => before(n) != afterUpd(n))
@@ -766,11 +799,33 @@ class FileSourceSpec extends AnyFunSuite {
     assert((afterUpd.keySet -- afterDel.keySet).size == 1)
     assert(afterDel.forall { case (n, bytes) => afterUpd(n) == bytes })
     assert(spark.table("graft.updsrc.kv").count() == 7)
+
+    // a part file whose key range [100, 110] holds no 105: a DELETE of
+    // k = 105 prunes to it, finds no hit and leaves it as it was, inode
+    // and mtime included
+    spark.sql("INSERT INTO graft.updsrc.kv " +
+      "SELECT /*+ COALESCE(1) */ * FROM VALUES (100L, 'x'), (110L, 'y') AS t(k, v)")
+    val wide = FileTable.dataFiles(tdir, "csv").filterNot(f => afterDel.contains(f.getName))
+    assert(wide.size == 1, s"expected one new part file, got $wide")
+    def stamp(f: File) = {
+      val a = java.nio.file.Files.readAttributes(f.toPath,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      (a.fileKey(), a.lastModifiedTime())
+    }
+    val wideBefore = stamp(wide.head)
+    Thread.sleep(20) // a rewrite within the same mtime tick must still show
+    spark.sql("DELETE FROM graft.updsrc.kv WHERE k = 105")
+    assert(stamp(wide.head) == wideBefore, "a DELETE without a hit rewrote the file")
+    // a DELETE of that file's largest key shrinks its sidecar range
+    def range(f: File) = KeyRanges.load(tdir)(f.getName)
+    assert(range(wide.head).max == "110")
+    spark.sql("DELETE FROM graft.updsrc.kv WHERE k = 110")
+    assert((range(wide.head).min, range(wide.head).max) == ("100", "100"))
     spark.sql("DROP TABLE graft.updsrc.kv")
     eng.sql("DROP SOURCE updsrc")
 
-    // composite-key UPSERT (anti-join batch path): replaces matching keys
-    // in ONE rewrite job and leaves non-intersecting part files untouched
+    // composite-key UPSERT: replaces matching key tuples in ONE rewrite
+    // job and leaves non-intersecting part files untouched
     val pc = new File(sys.props("user.dir"), "target/graft-test/upd-prune-ck").getPath
     eng.sql(s"""CREATE SOURCE updck WITH { "type": "csv", "path": "$pc", "pushdown": "keys" }""")
     spark.sql("DROP TABLE IF EXISTS graft.updck.kv2")
@@ -794,6 +849,9 @@ class FileSourceSpec extends AnyFunSuite {
     val origChanged = beforeUp.keySet.filter(n =>
       !afterUp.get(n).contains(beforeUp(n)))
     assert(origChanged.size == 1, s"expected 1 rewritten file, got $origChanged")
+    // a NULL key part never matches: the row appends, (15, 'y') stays
+    eng.sql("UPSERT INTO graft.updck.kv2 VALUES (15, NULL, 5)")
+    assert(spark.table("graft.updck.kv2").filter(col("k1") === 15).count() == 2)
     spark.sql("DROP TABLE graft.updck.kv2")
     eng.sql("DROP SOURCE updck")
   }
