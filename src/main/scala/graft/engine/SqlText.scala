@@ -133,6 +133,9 @@ object SqlText {
     case t: java.sql.Timestamp => s"TIMESTAMP'$t'"
     case t: java.time.LocalDateTime => s"TIMESTAMP'${t.toString.replace('T', ' ')}'"
     case d: java.math.BigDecimal => d.toPlainString
+    // NaN and ±Infinity have no numeric literal form
+    case d: java.lang.Double if d.isNaN || d.isInfinite => s"CAST('$d' AS DOUBLE)"
+    case f: java.lang.Float if f.isNaN || f.isInfinite => s"CAST('$f' AS FLOAT)"
     case other => other.toString
   }
 }

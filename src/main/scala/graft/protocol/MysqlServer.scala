@@ -27,9 +27,10 @@ import MysqlWire._
   * session state in front of shared backends.
   *
   * Scale: the listener is control-plane only. Query execution is the
-  * engine's usual distributed plan; rows stream back through
-  * `toLocalIterator` one partition at a time, so the server never
-  * materializes a full resultset on the heap.
+  * engine's usual distributed plan, run by [[FrontDoorExec]] as one Spark
+  * job per window of at most `defaultParallelism` partitions; each
+  * window's rows go out in partition order before the next job starts, so
+  * the server holds at most one window's rows, never a full resultset.
   */
 final class MysqlServer(
     spark: SparkSession,
@@ -101,7 +102,7 @@ final class MysqlServer(
           case ComInitDb => io.write(encodeOk(0)); io.flush()
           case ComQuery =>
             val text = new String(cmd, 1, cmd.length - 1, UTF_8)
-            runQuery(io, engine, text)
+            respond(io, binary = false)(engine.sql(text))
           case ComStmtPrepare =>
             val text = new String(cmd, 1, cmd.length - 1, UTF_8)
             nextStmtId += 1
@@ -181,44 +182,42 @@ final class MysqlServer(
         io.write(encodeErr(1243, "HY000", s"Unknown prepared statement handler ($stmtId)"))
         io.flush()
       case Some((text, nParams)) =>
-        try {
-          val args: Seq[String] =
-            if (nParams == 0) Nil
-            else {
-              val bitmap = r.raw((nParams + 7) / 8)
-              val newBound = r.u8()
-              require(newBound == 1, "execute without bound parameter types")
-              // keep the flag byte: bit 0x80 of it marks UNSIGNED — a
-              // TINYINT param of 200 must not sign-extend to -56
-              val types = (0 until nParams).map { _ =>
-                val t = r.u16(); (t & 0xff, (t & 0x8000) != 0)
-              }
-              (0 until nParams).map { i =>
-                if ((bitmap(i / 8) & (1 << (i % 8))) != 0) "NULL"
-                else {
-                  val (tpe, unsigned) = types(i)
-                  SqlText.literal(MysqlWire.readBinaryValue(r, tpe, unsigned))
-                }
-              }
-            }
-          val bound = SqlText.bind(text, args)
-          val df = engine.sql(bound)
-          if (df.schema.isEmpty) { io.write(encodeOk(0)); io.flush() }
-          else writeResultSet(io, df, binary = true)
-        } catch {
-          case NonFatal(e) =>
-            val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
-            io.write(encodeErr(1064, "42000", msg.take(480)))
-            io.flush()
-        }
+        respond(io, binary = true)(engine.sql(SqlText.bind(text, boundArgs(r, nParams))))
     }
   }
 
-  private def runQuery(io: PacketIO, engine: GraftEngine, text: String): Unit =
+  /** The bound parameters of a COM_STMT_EXECUTE as SQL literal text. */
+  private def boundArgs(r: ByteReader, nParams: Int): Seq[String] =
+    if (nParams == 0) Nil
+    else {
+      val bitmap = r.raw((nParams + 7) / 8)
+      val newBound = r.u8()
+      require(newBound == 1, "execute without bound parameter types")
+      // keep the flag byte: bit 0x80 of it marks UNSIGNED — a
+      // TINYINT param of 200 must not sign-extend to -56
+      val types = (0 until nParams).map { _ =>
+        val t = r.u16(); (t & 0xff, (t & 0x8000) != 0)
+      }
+      (0 until nParams).map { i =>
+        if ((bitmap(i / 8) & (1 << (i % 8))) != 0) "NULL"
+        else {
+          val (tpe, unsigned) = types(i)
+          SqlText.literal(MysqlWire.readBinaryValue(r, tpe, unsigned))
+        }
+      }
+    }
+
+  /** The one answer path of COM_QUERY and COM_STMT_EXECUTE: a statement
+    * without columns is OK (DML reports its counts elsewhere, so affected
+    * rows stay 0 rather than force a second job), anything else a text or
+    * binary resultset. Any failure — parameter decode, planning, or a job
+    * failing after rows went out — ends in ERR 1064 and leaves the
+    * connection usable. */
+  private def respond(io: PacketIO, binary: Boolean)(run: => DataFrame): Unit =
     try {
-      val df = engine.sql(text)
-      if (df.schema.isEmpty) { io.write(encodeOk(affectedRows(df))); io.flush() }
-      else writeResultSet(io, df)
+      val df = run
+      if (df.schema.isEmpty) io.write(encodeOk(0)) else writeResultSet(io, df, binary)
+      io.flush()
     } catch {
       case NonFatal(e) =>
         val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
@@ -226,12 +225,7 @@ final class MysqlServer(
         io.flush()
     }
 
-  /** DML paths return an empty-schema frame; the engine reports counts via
-    * accumulators elsewhere — affected-rows 0 keeps OK semantics honest
-    * without forcing a second job. */
-  private def affectedRows(df: DataFrame): Long = 0L
-
-  private def writeResultSet(io: PacketIO, df0: DataFrame, binary: Boolean = false): Unit = {
+  private def writeResultSet(io: PacketIO, df0: DataFrame, binary: Boolean): Unit = {
     // complex columns ship as JSON text (the reference renders document
     // fields as JSON strings in resultsets, elasticsearch/source.go rows)
     val df = df0.schema.fields.foldLeft(df0) { (d, f) =>
@@ -260,9 +254,7 @@ final class MysqlServer(
     val dateFmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
     val tsFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
     val types = schema.fields.toIndexedSeq.map(f => typeCode(f.dataType))
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      val row = it.next()
+    FrontDoorExec.foreachRow(df) { row =>
       if (binary) {
         val vals: IndexedSeq[Option[Any]] = schema.fields.indices.map { i =>
           if (row.isNullAt(i)) None
@@ -296,7 +288,6 @@ final class MysqlServer(
       }
     }
     io.write(encodeEof())
-    io.flush()
   }
 
   private def defaultDisplayLength(dt: DataType): Long = dt match {

@@ -23,10 +23,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Datastore's query model is narrower than SQL and the accept rules
   * mirror it faithfully:
   *
-  *   - conjunctions of property filters only — no OR, NOT, IN, LIKE;
+  *   - conjunctions of property filters only — no OR, NOT, LIKE;
   *   - inequality (range) filters on AT MOST ONE property per query
   *     (the classic Datastore restriction): ranges on a second property
   *     decline and polyfill;
+  *   - a static `IN` pushes as the `IN` operator over an `arrayValue`
+  *     when every value has a query form and none is NULL; it declines
+  *     when a range on another property is pushed;
   *   - when an inequality property exists, the FIRST sort order must be
   *     that property — otherwise the sort is declined (kept in Spark);
   *   - equality on any property; `IS NULL` pushes as EQUAL NULL_VALUE
@@ -110,23 +113,38 @@ object DsQuery {
     case LessThanOrEqual(a, v) if v != null =>
       valueNode(v).map(_ => PropFilter(a, "LESS_THAN_OR_EQUAL", v))
     case IsNull(a) => Some(PropFilter(a, "EQUAL", null))
+    case In(a, vs) if vs.nonEmpty && vs.forall(v => v != null && valueNode(v).isDefined) =>
+      Some(PropFilter(a, "IN", vs.toSeq))
     case _ => None
   }
 
-  private def inequality(op: String): Boolean = op != "EQUAL"
+  /** A range operator: at most one property per query may carry them. */
+  def isRange(op: String): Boolean = op != "EQUAL" && op != "IN"
+
+  /** The `value` of a property filter: an `arrayValue` for `IN`. */
+  private def filterValue(f: PropFilter): JsonNode = f.value match {
+    case vs: Seq[_] if f.op == "IN" =>
+      val o = M.createObjectNode()
+      val arr = o.putObject("arrayValue").putArray("values")
+      vs.foreach(v => arr.add(valueNode(v).get))
+      o
+    case v => valueNode(v).get
+  }
 
   /** Split filters under Datastore's rules: conjunctive property
-    * filters, ranges on at most ONE property. */
+    * filters, ranges on at most ONE property, and an `IN` only when no
+    * range on another property is pushed. */
   def split(filters: Seq[Filter]): (Seq[PropFilter], Seq[Filter]) = {
     val parsed = filters.map(f => f -> compileOne(f))
     // choose the inequality property: the first seen keeps its ranges,
     // ranges on OTHER properties decline
     val ineqProp = parsed.collectFirst {
-      case (_, Some(p)) if inequality(p.op) => p.prop.toLowerCase
+      case (_, Some(p)) if isRange(p.op) => p.prop.toLowerCase
     }
     val (acc, dec) = parsed.partition {
-      case (_, Some(p)) =>
-        !inequality(p.op) || ineqProp.contains(p.prop.toLowerCase)
+      case (_, Some(p)) if isRange(p.op) || p.op == "IN" =>
+        ineqProp.forall(_ == p.prop.toLowerCase)
+      case (_, Some(_)) => true
       case (_, None) => false
     }
     (acc.flatMap(_._2), dec.map(_._1))
@@ -148,7 +166,7 @@ object DsQuery {
         val pf = o.putObject("propertyFilter")
         pf.putObject("property").put("name", f.prop)
         pf.put("op", f.op)
-        pf.set[JsonNode]("value", valueNode(f.value).get)
+        pf.set[JsonNode]("value", filterValue(f))
       }
       if (filters.size == 1) prop(fl, filters.head)
       else {
@@ -255,7 +273,7 @@ object DsQuery {
         }.toSeq
       }
     val ineqProps = pfs.collect {
-      case (p, op, _) if op != "EQUAL" => p.toLowerCase
+      case (p, op, _) if isRange(op) => p.toLowerCase
     }.distinct
     require(ineqProps.size <= 1,
       s"inequality filter is allowed on only one property, got: ${ineqProps.mkString(", ")}")
@@ -271,8 +289,12 @@ object DsQuery {
     var matched = rows.filter { r =>
       pfs.forall { case (p, op, vn) =>
         val i = idx(p)
-        val v = valueOf(vn, schema.fields(i).dataType)
-        if (v == null) op == "EQUAL" && r(i) == null
+        lazy val v = valueOf(vn, schema.fields(i).dataType)
+        if (op == "IN")
+          r(i) != null && vn.path("arrayValue").path("values").elements().asScala.exists { e =>
+            FilterEval.cmp(r(i), valueOf(e, schema.fields(i).dataType)).contains(0)
+          }
+        else if (v == null) op == "EQUAL" && r(i) == null
         else r(i) != null && FilterEval.cmp(r(i), v).exists { c =>
           op match {
             case "EQUAL" => c == 0
@@ -446,8 +468,8 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
     * slices, or None for one cursor stream. Because the API allows
     * inequality filters on only ONE property, a scan whose pushed
     * filters already range over a different property — or that carries
-    * a pushed sort — cannot take range injection; an EQUAL on the split
-    * key pins the scan to one targeted request (range shards would all
+    * a pushed sort — cannot take range injection; an EQUAL or IN on the
+    * split key pins the scan to one targeted request (range shards would all
     * be provably empty but one); a global aggregation is ONE row. On
     * one stream a pushed window (sort+limit+offset in the one runQuery)
     * is exact — FULLY delegated, Spark removes its own
@@ -456,8 +478,8 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
     * the scan, so the partition plan cannot disagree with it. */
   private def fanOut: Option[WireSplits] = ep.splits.filter { ws =>
     agg.isEmpty && orders.isEmpty &&
-      !accepted.exists(p => p.op != "EQUAL" && !p.prop.equalsIgnoreCase(ws.key)) &&
-      !accepted.exists(p => p.prop.equalsIgnoreCase(ws.key) && p.op == "EQUAL")
+      !accepted.exists(p => DsQuery.isRange(p.op) && !p.prop.equalsIgnoreCase(ws.key)) &&
+      !accepted.exists(p => p.prop.equalsIgnoreCase(ws.key) && !DsQuery.isRange(p.op))
   }.map(ws => ws.copy(points = WireFanout.thin(ws.points.toIndexedSeq,
     WireFanout.effective(ws.points.size + 1, hint)))).filter(_.points.nonEmpty)
 
@@ -486,7 +508,7 @@ class DsScanBuilder(ep: DsEndpoint, hint: Option[Int] = None) extends ScanBuilde
     val keys = PushedWindow.keys(so)(PushedWindow.byName(ep.schema.fieldNames.toSeq.map(n => n -> n)))
       .filter(_.forall(_.nullsLowest)).getOrElse(return false)
     val ineq = accepted.collectFirst {
-      case p if p.op != "EQUAL" => p.prop.toLowerCase
+      case p if DsQuery.isRange(p.op) => p.prop.toLowerCase
     }
     if (ineq.exists(p => !keys.headOption.exists(_.target.equalsIgnoreCase(p))))
       return false // first sort must be the inequality property
@@ -551,7 +573,7 @@ class DsScan(ep: DsEndpoint, required: StructType, queryBody: String,
     // already range-restricts the key (3VL: `key < v` never matches
     // null), so skip the wasted request in that case
     val keyRanged = accepted.exists(p =>
-      p.prop.equalsIgnoreCase(ws.key) && p.op != "EQUAL")
+      p.prop.equalsIgnoreCase(ws.key) && DsQuery.isRange(p.op))
     val arms =
       if (keyRanged) ranges
       else ranges :+ bodyFor(Seq(DsQuery.PropFilter(ws.key, "EQUAL", null)))

@@ -89,6 +89,8 @@ object FilterEval {
 
   // ---- evaluation -------------------------------------------------------
 
+  private val PositiveZero = java.lang.Double.valueOf(0.0)
+
   /** Normalize row/literal values to a comparable domain: two values
     * compare equal under [[cmp]] exactly when their normal forms are equal
     * (`==`), for values of one column type. */
@@ -97,8 +99,10 @@ object FilterEval {
     case s: java.lang.Short => java.lang.Long.valueOf(s.longValue())
     case i: java.lang.Integer => java.lang.Long.valueOf(i.longValue())
     case l: java.lang.Long => l
-    case f: java.lang.Float => java.lang.Double.valueOf(f.doubleValue())
-    case d: java.lang.Double => d
+    // SQL compares -0.0 equal to 0.0, `Double.compareTo` does not; adding
+    // +0.0 turns -0.0 into 0.0 and leaves every other value as it is
+    case f: java.lang.Float => java.lang.Double.valueOf(f.doubleValue() + 0.0)
+    case d: java.lang.Double => if (d.doubleValue() == 0.0) PositiveZero else d
     case d: java.math.BigDecimal => java.lang.Double.valueOf(d.doubleValue())
     case d: scala.math.BigDecimal => java.lang.Double.valueOf(d.toDouble)
     case t: java.sql.Timestamp => // floorDiv: pre-epoch values must not truncate toward zero

@@ -73,6 +73,7 @@ object LineCodec {
       case LongType => java.lang.Long.valueOf(cell.trim)
       case IntegerType => java.lang.Integer.valueOf(cell.trim)
       case ShortType => java.lang.Short.valueOf(cell.trim)
+      case ByteType => java.lang.Byte.valueOf(cell.trim)
       case DoubleType => java.lang.Double.valueOf(cell.trim)
       case FloatType => java.lang.Float.valueOf(cell.trim)
       case BooleanType => java.lang.Boolean.valueOf(cell.trim)

@@ -184,6 +184,37 @@ class DsSourceSpec extends AnyFunSuite {
       rows.count(_(1) != null))
   }
 
+  test("a static IN pushes as the IN operator and matches Spark over an unpushed read") {
+    val t = table("ds_in")
+    val fan = fanTable("ds_in_fan", Seq(100L, 200L, 300L))
+    // the oracle: every entity read with nothing pushed, filtered by Spark
+    val all = spark.createDataFrame(
+      java.util.Arrays.asList(spark.table(t).collect(): _*), schema)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    val cases = Seq(
+      col("id").isin(3L, 17L, 250L, 999L),
+      col("seg").isin("A", "B") && col("id") < 40L,
+      col("seg").isin("B") && col("bal").isin(4.5, 6.0, 7.5),
+      col("id").isin(5L, 6L) && col("ts") >= lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+    cases.foreach { c =>
+      assert(ids(spark.table(t).filter(c)) == ids(all.filter(c)), s"$c")
+      assert(ids(spark.table(fan).filter(c)) == ids(all.filter(c)), s"fanned: $c")
+    }
+    spark.table(t).filter(col("seg").isin("A", "B")).count()
+    val q = LoopbackRestServer.lastDsQuery.get()
+    assert(q.contains("\"IN\"") && q.contains("arrayValue"), s"the IN must ride the query: $q")
+    // an IN on the split key pins the scan like an EQUAL does
+    assert(spark.table(fan).filter(col("id").isin(42L, 250L)).rdd.getNumPartitions == 1)
+    // a NULL in the list, or a range on another property, keeps the IN in Spark
+    val (acc, dec) = DsQuery.split(Seq(In("id", Array(1L, null))))
+    assert(acc.isEmpty && dec.size == 1)
+    val (acc2, dec2) = DsQuery.split(Seq(GreaterThan("bal", 1.0), In("id", Array(1L, 2L))))
+    assert(acc2.map(_.op) == Seq("GREATER_THAN") && dec2 == Seq(In("id", Array(1L, 2L))))
+    val (acc3, _) = DsQuery.split(Seq(In("id", Array(1L, 2L)), LessThan("id", 9L)))
+    assert(acc3.map(_.op) == Seq("IN", "LESS_THAN"), "a range on the IN's own property keeps it")
+  }
+
   // ---- wire DML ----------------------------------------------------------
 
   private def writeTable(name: String): String = {

@@ -298,6 +298,129 @@ class MysqlWireSpec extends AnyFunSuite {
     } finally c.close()
   }
 
+  // ---- one job per window of partitions ----------------------------------
+
+  /** Runs `body` and returns the jobs of each SQL execution it started,
+    * counted once the listener bus has delivered every execution's end
+    * (an execution's jobs are posted before its end on the same queue). */
+  private def jobsPerExecution(body: => Unit): Map[Long, Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Long, Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => jobs.merge(id.toLong, 1, _ + _))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case end: SparkListenerSQLExecutionEnd => ended.add(end.executionId)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def settled = !jobs.isEmpty && jobs.keySet.stream.allMatch(ended.contains(_))
+      while (!settled && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.map { case (k, v) => k -> v }.toMap
+  }
+
+  test("a result runs as one job per window of defaultParallelism partitions") {
+    val c = connect()
+    try {
+      val width = spark.sparkContext.defaultParallelism
+      val parts = 2 * width + 2
+      val q = s"SELECT id FROM range(0, 200, 1, $parts)"
+      var rs: c.ResultSet = null
+      val jobs = jobsPerExecution { rs = c.select(q) }
+      assert(rs.rows.map(_.head.get.toLong) == (0L until 200L))
+      assert(jobs.size == 1, s"one SQL execution runs the result's jobs: $jobs")
+      assert(jobs.values.head == (parts + width - 1) / width,
+        s"$parts partitions at width $width")
+    } finally c.close()
+  }
+
+  test("an ORDER BY result over more partitions than defaultParallelism keeps global order") {
+    val c = connect()
+    val conf = spark.conf
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> conf.getOption(k))
+    try {
+      conf.set(keys(0), (3 * spark.sparkContext.defaultParallelism).toString)
+      conf.set(keys(1), "false")
+      val q = "SELECT id, (id * 7919) % 1000 AS k FROM range(0, 1000, 1, 5) ORDER BY k DESC, id"
+      assert(spark.sql(q).queryExecution.toRdd.getNumPartitions >
+        spark.sparkContext.defaultParallelism)
+      val want = spark.sql(q).collect().map(r => Vector(Some(r.getLong(0).toString),
+        Some(r.getLong(1).toString))).toVector
+      assert(c.select(q).rows == want)
+    } finally {
+      saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+      c.close()
+    }
+  }
+
+  test("empty and zero-partition results are well-formed resultsets") {
+    val c = connect()
+    try {
+      val empty = c.select("SELECT id FROM range(0, 100, 1, 6) WHERE id < 0")
+      assert(empty.columns.map(_.name) == Vector("id") && empty.rows.isEmpty)
+      val zeroParts = "SELECT id AS n FROM range(0, 10) WHERE false"
+      assert(spark.sql(zeroParts).queryExecution.toRdd.getNumPartitions == 0)
+      val zero = c.select(zeroParts)
+      assert(zero.columns.map(_.name) == Vector("n") && zero.rows.isEmpty)
+      val ok = c.stmtPrepare("SELECT id FROM range(0, 10) WHERE id > ?")
+      val bin = c.stmtExecute(ok.stmtId, Seq(100L)).toOption.get
+      assert(bin.columns.map(_.name) == Vector("id") && bin.rows.isEmpty)
+      assert(c.select("SELECT 1 AS one").rows == Vector(Vector(Some("1"))))
+    } finally c.close()
+  }
+
+  test("a job failing after rows went out ends in ERR 1064; the connection stays usable") {
+    val c = connect()
+    try {
+      val width = spark.sparkContext.defaultParallelism
+      val parts = 3 * width
+      val last = (parts - 1) * 10
+      val e = intercept[Exception] {
+        c.select(s"SELECT IF(id >= $last, raise_error('boom in the last window'), id) AS v " +
+          s"FROM range(0, ${parts * 10}, 1, $parts)")
+      }
+      assert(e.getMessage.contains("1064") && e.getMessage.contains("boom"), e.getMessage)
+      assert(c.select("SELECT 1 AS one").rows == Vector(Vector(Some("1"))))
+    } finally c.close()
+  }
+
+  test("QueryExecutionListener sees a front-door SELECT after its jobs ran, with scan rows") {
+    import org.apache.spark.sql.execution.{LeafExecNode, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // scan rows as they stand WHEN onSuccess fires, for plans reading lineitem
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.executedPlan.toString.contains("lineitem")) seen.add(qe.executedPlan.collect {
+          case leaf: LeafExecNode => leaf.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
+        }.sum)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val c = connect()
+    spark.listenerManager.register(l)
+    try {
+      assert(c.select("SELECT l_orderkey, l_linenumber FROM lineitem WHERE l_orderkey = 1")
+        .rows.nonEmpty)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (seen.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.size == 1, "onSuccess must fire once for the front-door SELECT")
+      assert(seen.peek() > 0, "the scan's numOutputRows must be in when onSuccess fires")
+    } finally {
+      spark.listenerManager.unregister(l)
+      c.close()
+    }
+  }
+
   test("binary protocol: COM_STMT_PREPARE/EXECUTE round-trips typed params and rows") {
     val c = connect()
     try {
