@@ -229,12 +229,7 @@ class GraftEngine(val spark: SparkSession) {
     // storage — but a file-backed source needs it operationally.
     case OptimizeStmt(tbl, n) if tbl.startsWith("graft.") =>
       import spark.implicits._
-      val parts = tbl.replace("`", "").split('.')
-      require(parts.length == 3, s"OPTIMIZE expects graft.<source>.<table>, got $tbl")
-      val src = graft.sources.SourceRegistry.get(parts(1))
-        .getOrElse(throw new IllegalArgumentException(s"unknown source ${parts(1)}"))
-      val table = graft.sources.FileTable.open(src, parts(2))
-        .getOrElse(throw new IllegalArgumentException(s"unknown table $tbl"))
+      val table = fileTable(tbl, "OPTIMIZE")
       val before = table.dataFiles().size
       val after = table.compact(spark, Option(n).map(_.toInt).getOrElse(1))
       Seq((tbl, before.toLong, after.toLong))
@@ -261,13 +256,24 @@ class GraftEngine(val spark: SparkSession) {
       })
     }
 
-  private def upsertRewrite(tbl: String, cols: Option[String], values: String): DataFrame = {
+  /** The (source, table) parts of a `graft.<source>.<table>` name. */
+  private def tableRef(tbl: String, verb: String): (String, String) = {
     val parts = tbl.replace("`", "").split('.')
-    require(parts.length == 3, s"UPSERT expects graft.<source>.<table>, got $tbl")
-    val src = graft.sources.SourceRegistry.get(parts(1))
-      .getOrElse(throw new IllegalArgumentException(s"unknown source ${parts(1)}"))
-    val table = graft.sources.FileTable.open(src, parts(2))
+    require(parts.length == 3, s"$verb expects graft.<source>.<table>, got $tbl")
+    (parts(1), parts(2))
+  }
+
+  /** The file table a `verb` statement names. */
+  private def fileTable(tbl: String, verb: String): graft.sources.FileTable = {
+    val (source, name) = tableRef(tbl, verb)
+    val src = graft.sources.SourceRegistry.get(source)
+      .getOrElse(throw new IllegalArgumentException(s"unknown source $source"))
+    graft.sources.FileTable.open(src, name)
       .getOrElse(throw new IllegalArgumentException(s"unknown table $tbl"))
+  }
+
+  private def upsertRewrite(tbl: String, cols: Option[String], values: String): DataFrame = {
+    val table = fileTable(tbl, "UPSERT")
     require(table.keys.nonEmpty,
       s"UPSERT needs declared key columns on $tbl (TBLPROPERTIES 'keys')")
     val colNames = cols.map(_.split(',').map(_.trim.replace("`", "")).toSeq)
@@ -276,28 +282,15 @@ class GraftEngine(val spark: SparkSession) {
       s"UPSERT column list must include the key columns ${table.keys.mkString(", ")}")
     val listed = spark.sql(
       s"SELECT * FROM (VALUES $values) AS t(${colNames.mkString(", ")})")
-    // pad unlisted columns with typed nulls BEFORE any delete happens, so
-    // a malformed upsert rejects up front instead of after removing rows
-    val incoming = spark.sql(s"SELECT * FROM $tbl LIMIT 0").columns
-      .foldLeft(listed) { (df, c) =>
-        if (colNames.exists(_.equalsIgnoreCase(c))) df
-        else df.withColumn(c,
-          org.apache.spark.sql.functions.lit(null)
-            .cast(table.schema0(c).dataType))
-      }
-    // the incoming keys, cast to the table's key types before any file is
-    // touched: a value that does not fit fails here, not after a delete
-    // (key list is literal VALUES text — driver-side by construction)
-    import org.apache.spark.sql.functions.col
-    val keyRows = incoming.select(table.keys.map(k => col(k).cast(
-      table.schema0.fields.find(_.name.equalsIgnoreCase(k)).get.dataType)): _*).collect()
-    // ONE part-file rewrite drops the existing rows whose key tuple equals
-    // an incoming one, over the files whose key range can hold one —
-    // replaces the reference's row-at-a-time Put with a single batched job
-    graft.sources.PartFileRewrite.deleteKeys(table, keyRows.map(_.toSeq).toSeq)
-    incoming.writeTo(tbl).append()
+    // an INSERT's typing (unlisted columns NULL), on the driver before any
+    // file is touched: a value the table cannot store fails here. The rows
+    // are literal VALUES text, so driver-sized by construction.
+    val rows = org.apache.spark.sql.graftbridge.PlanDataFrame
+      .asInserted(spark, tbl, listed).collect()
+    // one job and one commit replace the reference's row-at-a-time Put
+    graft.sources.PartFileRewrite.upsert(spark, table, rows.map(_.toSeq.toArray).toSeq)
     import spark.implicits._
-    Seq(keyRows.length.toLong).toDF("affected_rows")
+    Seq(rows.length.toLong).toDF("affected_rows")
   }
 
   /** UPDATE as ONE surgical part-file rewrite job (reference: per-key
@@ -310,9 +303,8 @@ class GraftEngine(val spark: SparkSession) {
   private def updateRewrite(tbl: String, sets: String, cond: String): DataFrame = {
     import org.apache.spark.sql.functions.expr
     import graft.sources.PartFileRewrite
-    val parts = tbl.replace("`", "").split('.')
-    require(parts.length == 3, s"UPDATE expects graft.<source>.<table>, got $tbl")
-    graft.sources.WireEndpoints.get(parts(1), parts(2)) match {
+    val (source, name) = tableRef(tbl, "UPDATE")
+    graft.sources.WireEndpoints.get(source, name) match {
       // Mongo-wire tables: UPDATE ships as ONE OP_MSG update command —
       // the WHERE compiles to a filter document, the SET to {$set: ...}
       // (literal RHS only; the wire has no row-referencing expressions).
@@ -337,10 +329,7 @@ class GraftEngine(val spark: SparkSession) {
             "(write the full row: INSERT is an upsert on the row key)")
       case _ => // every other kind takes the file path below
     }
-    val src = graft.sources.SourceRegistry.get(parts(1))
-      .getOrElse(throw new IllegalArgumentException(s"unknown source ${parts(1)}"))
-    val table = graft.sources.FileTable.open(src, parts(2))
-      .getOrElse(throw new IllegalArgumentException(s"unknown table $tbl"))
+    val table = fileTable(tbl, "UPDATE")
     // SQL UPDATE semantics: the WHERE condition and every RHS evaluate
     // against the ORIGINAL row, so all assignments go into ONE select —
     // sequential withColumn would let later assignments (and the

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.io.{BufferedReader, File, FileReader}
+import java.nio.file.{Files, StandardCopyOption}
 import java.util
 
 import scala.util.Using
@@ -19,11 +20,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Spark-native counterpart of the reference's file-source tables
   * (dataux backends/files/filesource_test.go:258-304). Reads are DSv2 scans
-  * with filter/column/limit pushdown ([[FileScanBuilder]]); writes are
-  * append batch writes with a task-temp + driver-rename commit protocol
-  * ([[FileWriteBuilder]]). `DELETE WHERE`, like UPDATE and UPSERT, is
-  * one [[PartFileRewrite]] pass over the part files its key range can
-  * touch (reference: delete-by-where,
+  * with filter/column/limit pushdown ([[FileScanBuilder]]). Every write
+  * streams its rows through the one executor-side [[PartFileSink]] into
+  * temps and lands in the one driver-side [[PartFileSink.commit]]: INSERT
+  * and TRUNCATE through [[FileWriteBuilder]]; `DELETE WHERE`, UPDATE and
+  * UPSERT as one [[PartFileRewrite]] pass over the part files their key
+  * range can touch (reference: delete-by-where,
   * backends/cassandra/sql_to_cql.go:368-394).
   *
   * Table schema comes from the sidecar when present, otherwise it is
@@ -105,15 +107,20 @@ class FileTable(
       Option(options.get("maxFilesPerTrigger")).map(_.toInt))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new FileWriteBuilder(this, dir.getPath, format, schema0, info.queryId())
+    new FileWriteBuilder(this, info.queryId())
 
   def dataFiles(): Seq[File] = FileTable.dataFiles(dir, codec.extension)
+
+  /** Schema index of the first declared key column, -1 when keyless: the
+    * column of the sidecar's key ranges and of bucket routing. */
+  def keyIdx: Int = keys.headOption
+    .map(k => schema0.fieldNames.indexWhere(_.equalsIgnoreCase(k))).getOrElse(-1)
 
   /** Compaction (OPTIMIZE): rewrite the table's accumulated part files as
     * `target` files. Two distributed passes — stage the rows to a temp
     * parquet dir (so the overwrite never reads the files it is deleting),
-    * then INSERT OVERWRITE back through the connector's own two-phase
-    * commit (readers see old files or new, never a mix). Keyed tables
+    * then INSERT OVERWRITE back through the connector's own commit, which
+    * renames the new files in and deletes the old ones. Keyed tables
     * compact range-partitioned on the key so the rebuilt sidecar keeps
     * pruning. NOT safe under an active STREAMING reader (rewrites violate
     * the append-only stream contract — the stream detects it and fails
@@ -260,9 +267,11 @@ final case class FileMeta(min: String, max: String, rows: Long = -1L, bucket: In
   * backends/datastore/sql_to_datastore.go:70-150; LIKE 'p%' becomes a key
   * range, :478-489) — the scan prunes files whose range cannot hold any
   * requested key. Metadata is advisory and conservative: files without an
-  * entry always scan. Every [[PartFileRewrite]] commit (DELETE, UPDATE,
-  * UPSERT) records the fresh range and row count of each file it swaps
-  * and removes the entries of the files it deletes.
+  * entry always scan. The one write commit ([[PartFileSink.commit]], for
+  * INSERT, TRUNCATE, DELETE, UPDATE and UPSERT alike) merges once: the
+  * fresh range and row count of each file it writes in, minus the entries
+  * of the files it deletes. Each merge renames a complete temp over the
+  * sidecar, so a concurrent [[load]] sees the old map or the new one.
   */
 object KeyRanges {
 
@@ -301,8 +310,11 @@ object KeyRanges {
       if (m.rows >= 0) o.put("rows", m.rows)
       if (m.bucket >= 0) o.put("bucket", m.bucket)
     }
-    Using.resource(FileCodec.utf8Writer(new File(dir, FileName)))(
-      _.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)))
+    val tmp = new File(dir, s"._keyranges-${java.util.UUID.randomUUID()}.tmp")
+    try {
+      Files.writeString(tmp.toPath, mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root))
+      Files.move(tmp.toPath, new File(dir, FileName).toPath, StandardCopyOption.ATOMIC_MOVE)
+    } finally tmp.delete()
   }
 }
 

@@ -1,57 +1,48 @@
 package graft.sources
 
 import java.io.{BufferedWriter, File}
+import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.{AlwaysTrue, Filter}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Append write path for [[FileTable]] — the connector's insert sink
   * (reference: per-backend `CreateMutator`/`Put` upserts,
   * dataux backends/cassandra/sql_to_cql.go:246-361).
   *
-  * Standard two-phase file commit: each task writes a hidden
-  * `.tmp-<query>-<partition>` file, the driver renames all temp files to
-  * visible `part-*` files in `commit()` and deletes them in `abort()`, so
-  * readers never observe a partial write. One output file per input
-  * partition preserves upstream parallelism — at cluster scale the table
-  * accumulates many part files, which is exactly what the one-partition-
-  * per-file scan side wants. Empty partitions produce no file.
+  * Standard two-phase file commit: each task writes its rows through
+  * [[PartFileSink]]s into hidden `.tmp-<query>-<partition>` files, and the
+  * driver lands them in the one [[PartFileSink.commit]] (renames into
+  * visible `part-*` files, one `_keyranges.json` write) or deletes them in
+  * `abort()`, so readers never observe a partial file. One output file per
+  * input partition preserves upstream parallelism — at cluster scale the
+  * table accumulates many part files, which is exactly what the one-
+  * partition-per-file scan side wants. Empty partitions produce no file.
   *
   * Bucketed tables (TBLPROPERTIES 'buckets' = N on a keyed table) route
   * each row to one of N bucket files per task by [[GraftBucket]] hash of
   * the first key column; the file's bucket id is recorded in the sidecar
   * and drives storage-partitioned joins on the scan side.
   */
-class FileWriteBuilder(
-    table: FileTable, dirPath: String, format: String,
-    schema: StructType, queryId: String)
-  extends WriteBuilder with SupportsOverwrite {
+class FileWriteBuilder(table: FileTable, queryId: String)
+  extends WriteBuilder with SupportsTruncate {
 
-  private var overwriteFilters: Array[Filter] = Array.empty
+  private var truncating = false
 
-  /** INSERT OVERWRITE / REPLACE TABLE: matching rows are removed in the
-    * driver-side commit (before the new part files become visible), so a
-    * reader sees either the old or the new data, never a mix of halves.
-    * Truncate (`AlwaysTrue`) deletes the old part files outright. */
-  override def overwrite(filters: Array[Filter]): WriteBuilder = {
-    val unsupported = filters.filterNot {
-      case _: AlwaysTrue => true
-      case f => table.acceptsFilter(f)
-    }
-    if (unsupported.nonEmpty)
-      throw new UnsupportedOperationException(
-        s"overwrite by ${unsupported.mkString(", ")} not supported")
-    overwriteFilters = filters
+  /** INSERT OVERWRITE / REPLACE TABLE / OPTIMIZE: the table's part files,
+    * listed at commit before the new files are renamed in, are deleted in
+    * the same commit. Not atomic for readers: one that lists the directory
+    * mid-commit can see both the old and the new files. */
+  override def truncate(): WriteBuilder = {
+    truncating = true
     this
   }
 
   override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new FileBatchWrite(table, dirPath, format, schema, queryId, overwriteFilters)
-    override def description(): String = s"GraftFileWrite format=$format dir=$dirPath"
+    override def toBatch: BatchWrite = new FileBatchWrite(table, queryId, truncating)
+    override def description(): String = s"GraftFileWrite format=${table.format} dir=${table.dir}"
   }
 }
 
@@ -68,50 +59,30 @@ final case class FileEntry(
 final case class FileCommitMessage(entries: Seq[FileEntry])
   extends WriterCommitMessage
 
-class FileBatchWrite(
-    table: FileTable, dirPath: String, format: String,
-    schema: StructType, queryId: String,
-    overwriteFilters: Array[Filter] = Array.empty)
+/** Driver side of an INSERT: every task's files land in the one
+  * [[PartFileSink.commit]], together with a TRUNCATE's deletions. */
+class FileBatchWrite(table: FileTable, queryId: String, truncate: Boolean)
   extends BatchWrite {
 
-  // index of the table's first declared key column (range metadata unit)
-  private val keyIdx: Int = table.keys.headOption
-    .map(k => schema.fieldNames.indexWhere(_.equalsIgnoreCase(k))).getOrElse(-1)
-
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new FileDataWriterFactory(dirPath, format, schema.json, queryId, keyIdx,
-      table.buckets)
+    new FileDataWriterFactory(table.dir.getPath, table.format, table.schema0.json, queryId,
+      table.keyIdx, table.buckets)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    if (overwriteFilters.nonEmpty) table.deleteWhere(overwriteFilters)
-    val entries = messages.flatMap {
-      case FileCommitMessage(es) => es
-      case null => Nil // empty partition
-    }
-    entries.foreach { e =>
-      val t = new File(e.tmpPath)
-      if (t.isFile && !t.renameTo(new File(new File(dirPath), e.finalName)))
-        throw new IllegalStateException(
-          s"commit rename failed: ${e.tmpPath} -> ${e.finalName}")
-    }
-    // record per-file metadata alongside the data (driver-side, after the
-    // renames): key ranges for get-by-key pruning, row counts for planner
-    // statistics, bucket ids for storage-partitioned joins
-    KeyRanges.merge(new File(dirPath), entries.map { e =>
-      e.finalName -> FileMeta(e.keyMin, e.keyMax, e.rows, e.bucket)
-    }.toMap)
-  }
+  // an empty partition's message is null
+  private def entries(messages: Array[WriterCommitMessage]): Seq[FileEntry] =
+    messages.toSeq.collect { case FileCommitMessage(es) => es }.flatten
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    PartFileSink.commit(table.dir, entries(messages),
+      emptied = if (truncate) table.dataFiles() else Nil)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case FileCommitMessage(es) => es.foreach(e => new File(e.tmpPath).delete())
-      case null =>
-    }
+    entries(messages).foreach(e => new File(e.tmpPath).delete())
 }
 
 class FileDataWriterFactory(
     dirPath: String, format: String, schemaJson: String, queryId: String,
-    keyIdx: Int = -1, buckets: Int = 0)
+    keyIdx: Int, buckets: Int)
   extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -119,66 +90,113 @@ class FileDataWriterFactory(
       taskId, keyIdx, buckets)
 }
 
+/** One task's output: one [[PartFileSink]] per bucket (a single one, -1,
+  * for unbucketed tables), opened by the bucket's first row. */
 class FileDataWriter(
     dirPath: String, format: String, schemaJson: String,
-    queryId: String, partitionId: Int, taskId: Long, keyIdx: Int = -1,
-    buckets: Int = 0)
+    queryId: String, partitionId: Int, taskId: Long, keyIdx: Int, buckets: Int)
   extends DataWriter[InternalRow] {
 
   private val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   private val codec = FileCodec.forFormat(format)
   private val toScala = schema.fields.map(f =>
     CatalystTypeConverters.createToScalaConverter(f.dataType))
+  private val sinks = scala.collection.mutable.LinkedHashMap.empty[Int, PartFileSink]
 
-  /** Per-output-file state, keyed by bucket id (single entry -1 for
-    * unbucketed tables). Writers open lazily: empty buckets write no file. */
-  private final class Sink(val bucket: Int) {
-    private val suffix = if (bucket >= 0) f"-b$bucket%04d" else ""
-    val tmp = new File(dirPath, f".tmp-$queryId-$partitionId%05d-$taskId$suffix")
-    val finalName = f"part-$queryId-$partitionId%05d$suffix.${codec.extension}"
-    var out: BufferedWriter = _
-    var keyMin: Any = null
-    var keyMax: Any = null
-    var rows = 0L
-  }
-  private val sinks = scala.collection.mutable.LinkedHashMap.empty[Int, Sink]
-
-  override def write(record: InternalRow): Unit = {
-    val ext = Array.tabulate[Any](schema.length) { i =>
+  override def write(record: InternalRow): Unit =
+    write(Array.tabulate[Any](schema.length) { i =>
       if (record.isNullAt(i)) null
       else toScala(i)(record.get(i, schema.fields(i).dataType))
-    }
+    })
+
+  /** Route one external-typed row to its bucket's file. */
+  def write(row: Array[Any]): Unit = {
     val bucket =
-      if (buckets > 0) GraftBucket.of(ext(keyIdx), buckets)
+      if (buckets > 0) GraftBucket.of(row(keyIdx), buckets)
       else -1
-    val s = sinks.getOrElseUpdate(bucket, new Sink(bucket))
-    if (s.out == null) {
-      s.tmp.getParentFile.mkdirs()
-      s.out = FileCodec.utf8Writer(s.tmp)
-      codec.writeHeader(s.out, schema)
-    }
-    if (keyIdx >= 0 && ext(keyIdx) != null) {
-      val k = ext(keyIdx)
-      if (s.keyMin == null || FilterEval.cmp(k, s.keyMin).exists(_ < 0)) s.keyMin = k
-      if (s.keyMax == null || FilterEval.cmp(k, s.keyMax).exists(_ > 0)) s.keyMax = k
-    }
-    s.rows += 1
-    codec.write(s.out, ext, schema)
+    sinks.getOrElseUpdate(bucket, {
+      val suffix = if (bucket >= 0) f"-b$bucket%04d" else ""
+      new PartFileSink(codec, schema, keyIdx,
+        new File(dirPath, f".tmp-$queryId-$partitionId%05d-$taskId$suffix"),
+        f"part-$queryId-$partitionId%05d$suffix.${codec.extension}", bucket)
+    }).write(row)
   }
 
-  override def commit(): WriterCommitMessage = {
-    val entries = sinks.values.filter(_.out != null).map { s =>
-      s.out.close(); s.out = null
-      FileEntry(s.tmp.getPath, s.finalName,
-        LineCodec.render(s.keyMin), LineCodec.render(s.keyMax), s.rows, s.bucket)
-    }.toSeq
-    if (entries.isEmpty) null else FileCommitMessage(entries)
-  }
+  /** Close every file this task wrote. */
+  def finish(): Seq[FileEntry] = sinks.values.flatMap(_.finish()).toSeq
+
+  override def commit(): WriterCommitMessage =
+    Option(finish()).filter(_.nonEmpty).map(FileCommitMessage).orNull
 
   override def abort(): Unit = close()
 
-  override def close(): Unit =
-    sinks.values.foreach { s =>
-      if (s.out != null) { s.out.close(); s.out = null; s.tmp.delete() }
+  override def close(): Unit = sinks.values.foreach(_.abort())
+}
+
+/** One part file written on an executor: the one sink behind every write
+  * to a [[FileTable]] — an INSERT task's files ([[FileDataWriter]]) and a
+  * [[PartFileRewrite]] pass's rewritten and appended files alike. The
+  * first row opens `tmp` and writes the codec header; each row moves the
+  * first key's min/max ([[FilterEval.cmp]]) and the row count. */
+final class PartFileSink(
+    codec: FileCodec, schema: StructType, keyIdx: Int,
+    tmp: File, finalName: String, bucket: Int) {
+
+  private var out: BufferedWriter = _
+  private var keyMin: Any = null
+  private var keyMax: Any = null
+  private var rows = 0L
+
+  def write(row: Array[Any]): Unit = {
+    if (out == null) {
+      tmp.getParentFile.mkdirs()
+      out = FileCodec.utf8Writer(tmp)
+      codec.writeHeader(out, schema)
     }
+    if (keyIdx >= 0 && row(keyIdx) != null) {
+      val k = row(keyIdx)
+      if (keyMin == null || FilterEval.cmp(k, keyMin).exists(_ < 0)) keyMin = k
+      if (keyMax == null || FilterEval.cmp(k, keyMax).exists(_ > 0)) keyMax = k
+    }
+    rows += 1
+    codec.write(out, row, schema)
+  }
+
+  /** Close the temp and describe it; None when no row was written (then
+    * no temp exists). */
+  def finish(): Option[FileEntry] =
+    if (out == null) None
+    else {
+      out.close(); out = null
+      Some(FileEntry(tmp.getPath, finalName,
+        LineCodec.render(keyMin), LineCodec.render(keyMax), rows, bucket))
+    }
+
+  /** Close and delete an unfinished temp. */
+  def abort(): Unit =
+    if (out != null) { out.close(); out = null; tmp.delete() }
+}
+
+object PartFileSink {
+
+  /** The one driver-side commit of every write to a [[FileTable]] in
+    * `dir`: each written file's temp moves into place (a new part file, or
+    * a rewritten one atomically replacing its original), then each emptied
+    * file is deleted, then `_keyranges.json` records the written files'
+    * ranges, row counts and buckets and drops the emptied files' entries,
+    * in one write. Every step is checked; the commit as a whole is not
+    * atomic (the connector has no transaction log). */
+  def commit(dir: File, written: Seq[FileEntry], emptied: Seq[File]): Unit = {
+    written.foreach { e =>
+      Files.move(new File(e.tmpPath).toPath, new File(dir, e.finalName).toPath,
+        StandardCopyOption.ATOMIC_MOVE)
+    }
+    emptied.foreach { f =>
+      if (!f.delete())
+        throw new IllegalStateException(s"commit could not delete ${f.getPath}")
+    }
+    KeyRanges.merge(dir, written.map { e =>
+      e.finalName -> FileMeta(e.keyMin, e.keyMax, e.rows, e.bucket)
+    }.toMap, drop = emptied.map(_.getName).toSet)
+  }
 }

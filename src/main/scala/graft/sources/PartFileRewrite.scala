@@ -25,14 +25,14 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
   *   2. One executor-side pass in one Spark job, one task per touched
   *      file: each decoded row carries its source file and a hit flag. A
   *      hit row is dropped (DELETE, UPSERT) or written with its new values
-  *      (UPDATE); every other row is copied, into a `<file>.gupd` temp.
-  *      Each file reports rows written, rows hit and the fresh min/max of
-  *      its first key; a file without a hit removes its temp.
-  *   3. One driver-side commit: a file with at least one hit is swapped
-  *      for its temp (checked delete + rename) or, left empty, deleted. A
-  *      file without a hit keeps its bytes and inode. The sidecar entries
-  *      of swapped files get their fresh ranges and row counts; those of
-  *      deleted files go.
+  *      (UPDATE); every other row is copied, through a [[PartFileSink]],
+  *      into a `<file>.gupd` temp. A file without a hit removes its temp.
+  *      UPSERT's incoming rows go to a new part file (one per bucket) in
+  *      one more task of the same job, as an INSERT task writes them.
+  *   3. One driver-side commit ([[PartFileSink.commit]]): a file with at
+  *      least one hit is replaced by its temp or, left empty, deleted; a
+  *      file without a hit keeps its bytes and inode; new files move into
+  *      place; `_keyranges.json` is written once.
   *
   * Each file swap is atomic; the statement as a whole is not transactional
   * (the connector has no transaction log, like the reference's backends).
@@ -105,10 +105,8 @@ object PartFileRewrite {
     * lives there. Keyless tables keep every file. */
   private def touchedFiles(table: FileTable, filters: Seq[Filter]): Seq[File] = {
     val files = table.dataFiles()
-    table.keys.headOption
-      .flatMap(k => table.schema0.fields.find(_.name.equalsIgnoreCase(k)))
-      .filter(_ => filters.nonEmpty)
-      .map(f => KeyPrune.prune(files, f.name, f.dataType, table.dir, filters))
+    KeyPrune.hookFor(table).filter(_ => filters.nonEmpty)
+      .map { case (k, dt, _) => KeyPrune.prune(files, k, dt, table.dir, filters) }
       .getOrElse(files)
   }
 
@@ -116,27 +114,34 @@ object PartFileRewrite {
     * the scan evaluates a pushed filter ([[FilterEval]]). No filter at
     * all is TRUNCATE: every part file goes, unread. */
   def deleteWhere(table: FileTable, filters: Seq[Filter]): Unit =
-    if (filters.isEmpty) commit(table, swapped = Nil, emptied = table.dataFiles())
+    if (filters.isEmpty) PartFileSink.commit(table.dir, Nil, emptied = table.dataFiles())
     else {
+      val touched = touchedFiles(table, filters)
       val sch = table.schema0
-      run(table, touchedFiles(table, filters), dropHits = true) { () =>
+      if (touched.nonEmpty) pass(table, scan(SparkSession.active, table, touched) { () =>
         val matches = filters.map(FilterEval.compile(_, sch))
         row => matches.forall(_(row))
-      }
+      }, dropHits = true)
     }
 
-  /** UPSERT's delete half: drop every row whose key tuple equals one of
-    * `keyRows` (values of the table's key types, in `table.keys` order).
-    * Parts compare the way [[FilterEval]] compares; a null part never
-    * matches. */
-  def deleteKeys(table: FileTable, keyRows: Seq[Seq[Any]]): Unit = {
-    val live = keyRows.filterNot(_.contains(null))
-    if (live.isEmpty) return
+  /** UPSERT: drop every row whose key tuple equals one of `incoming`'s and
+    * write `incoming` (rows of the table's schema, already typed as an
+    * INSERT stores them) to a new part file, one per bucket — one job, one
+    * commit. Key parts compare the way [[FilterEval]] compares; a null
+    * part never matches. */
+  def upsert(spark: SparkSession, table: FileTable, incoming: Seq[Array[Any]]): Unit = {
     val idx = table.keys.map(k => table.schema0.fieldNames.indexWhere(_.equalsIgnoreCase(k)))
+    val live = incoming.map(r => idx.map(r(_))).filterNot(_.contains(null))
     val wanted = live.map(_.map(FilterEval.norm)).toSet
-    val touched = touchedFiles(table,
+    val touched = if (live.isEmpty) Nil else touchedFiles(table,
       Seq(org.apache.spark.sql.sources.In(table.keys.head, live.map(_.head).distinct.toArray)))
-    run(table, touched, dropHits = true)(() => row => wanted(idx.map(i => FilterEval.norm(row(i)))))
+    val added = spark.sparkContext.parallelize(incoming, 1)
+      .map(row => (row, null: String, false))
+    pass(table,
+      if (touched.isEmpty) added
+      else scan(spark, table, touched)(() => row => wanted(idx.map(i => FilterEval.norm(row(i)))))
+        .union(added),
+      dropHits = true)
   }
 
   /** UPDATE: every row where `cond` holds (NULL is no hit, as in WHERE)
@@ -181,109 +186,66 @@ object PartFileRewrite {
         val isHit = hit()
         paths.flatMap { path =>
           val in = FileCodec.utf8Reader(new File(path))
-          val base = cdc.reader(in, sch)
-          new Iterator[(Array[Any], String, Boolean)] {
-            private var closed = false
-            def hasNext: Boolean = {
-              if (closed) return false
-              val h = base.hasNext
-              if (!h) { in.close(); closed = true }
-              h
-            }
-            def next(): (Array[Any], String, Boolean) = {
-              val row = base.next()
-              (row, path, isHit(row))
-            }
-          }
+          cdc.reader(in, sch).map(row => (row, path, isHit(row))) ++ { in.close(); Iterator.empty }
         }
       }
   }
 
-  private def run(table: FileTable, touched: Seq[File], dropHits: Boolean)(
-      hit: () => Array[Any] => Boolean): Long =
-    if (touched.isEmpty) 0L
-    else pass(table, scan(SparkSession.active, table, touched)(hit), dropHits)
+  /** One file's report from the executor pass: `src` is the touched file
+    * (null for a file of UPSERT's incoming rows), `hits` its hit rows,
+    * `entry` the written temp (None: no hit, or every row dropped). */
+  private final case class Outcome(src: String, hits: Long, entry: Option[FileEntry])
 
-  /** One touched file's report from the executor pass. */
-  private final case class Outcome(
-      path: String, written: Long, hits: Long, keyMin: String, keyMax: String)
-
-  /** The executor-side pass: stream each file's rows into its temp, then
-    * commit on the driver. Returns the number of hit rows. */
+  /** The executor-side pass: stream each touched file's rows into its
+    * temp and rows without a source into new part files, then commit on
+    * the driver. Returns the number of hit rows. */
   private def pass(
       table: FileTable, rows: RDD[(Array[Any], String, Boolean)], dropHits: Boolean): Long = {
     val fmt = table.format
     val schemaJson = table.schema0.json
-    val keyIdx = table.keys.headOption
-      .map(k => table.schema0.fieldNames.indexWhere(_.equalsIgnoreCase(k)))
-      .getOrElse(-1)
-    val outcomes = rows.mapPartitions { it =>
+    val keyIdx = table.keyIdx
+    val dirPath = table.dir.getPath
+    val buckets = table.buckets
+    val queryId = java.util.UUID.randomUUID().toString
+    val outcomes = rows.mapPartitionsWithIndex { (part, it) =>
       val sch = DataType.fromJson(schemaJson).asInstanceOf[StructType]
       val cdc = FileCodec.forFormat(fmt)
-      final class St(val path: String) {
-        val tmp = new File(path + TmpSuffix)
-        val out: java.io.BufferedWriter = FileCodec.utf8Writer(tmp)
-        cdc.writeHeader(out, sch)
-        var keyMin: Any = null
-        var keyMax: Any = null
-        var written = 0L
-        var hits = 0L
-      }
-      val open = mutable.LinkedHashMap.empty[String, St]
-      try {
-        it.foreach { case (row, path, hit) =>
-          val st = open.getOrElseUpdate(path, new St(path))
-          if (hit) st.hits += 1
-          if (!(hit && dropHits)) {
-            if (keyIdx >= 0 && row(keyIdx) != null) {
-              val k = row(keyIdx)
-              if (st.keyMin == null || FilterEval.cmp(k, st.keyMin).exists(_ < 0)) st.keyMin = k
-              if (st.keyMax == null || FilterEval.cmp(k, st.keyMax).exists(_ > 0)) st.keyMax = k
-            }
-            st.written += 1
-            cdc.write(st.out, row, sch)
-          }
+      val sinks = mutable.LinkedHashMap.empty[String, PartFileSink]
+      val hits = mutable.Map.empty[String, Long].withDefaultValue(0L)
+      lazy val added = new FileDataWriter(dirPath, fmt, schemaJson, queryId, part,
+        org.apache.spark.TaskContext.get().taskAttemptId(), keyIdx, buckets)
+      try it.foreach { case (row, path, hit) =>
+        if (path == null) added.write(row)
+        else {
+          val sink = sinks.getOrElseUpdate(path, new PartFileSink(cdc, sch, keyIdx,
+            new File(path + TmpSuffix), new File(path).getName, -1))
+          if (hit) hits(path) += 1
+          if (!(hit && dropHits)) sink.write(row)
         }
       } catch {
         case e: Throwable =>
-          open.values.foreach { st => st.out.close(); st.tmp.delete() }
+          sinks.values.foreach(_.abort())
+          added.abort()
           throw e
       }
-      open.values.map { st =>
-        st.out.close()
-        if (st.hits == 0 || st.written == 0) st.tmp.delete()
-        Outcome(st.path, st.written, st.hits,
-          LineCodec.render(st.keyMin), LineCodec.render(st.keyMax))
-      }.toList.iterator
-    }.collect() // metadata-sized: one outcome per touched file with rows
-    if (outcomes.groupBy(_.path).values.exists(_.length > 1)) {
-      outcomes.foreach(o => new File(o.path + TmpSuffix).delete())
+      (sinks.map { case (path, sink) =>
+        if (hits(path) == 0) sink.abort()
+        Outcome(path, hits(path), sink.finish())
+      } ++ added.finish().map(e => Outcome(null, 0L, Some(e)))).iterator
+    }.collect() // metadata-sized: one outcome per touched or written file
+    val rewritten = outcomes.filter(_.src != null)
+    if (rewritten.groupBy(_.src).values.exists(_.length > 1)) {
+      outcomes.flatMap(_.entry).foreach(e => new File(e.tmpPath).delete())
       throw new IllegalStateException("part-file rewrite rows crossed partitions " +
         "(a shuffle broke file alignment); aborting before any file is replaced")
     }
-    val (emptied, swapped) = outcomes.toSeq.filter(_.hits > 0).partition(_.written == 0)
-    commit(table, swapped, emptied.map(o => new File(o.path)))
-    outcomes.map(_.hits).sum
-  }
-
-  /** The driver-side commit: swap in the files that kept rows, delete the
-    * emptied ones, refresh the sidecar. */
-  private def commit(table: FileTable, swapped: Seq[Outcome], emptied: Seq[File]): Unit = {
-    swapped.foreach { o =>
-      val f = new File(o.path)
-      if (!f.delete() || !new File(o.path + TmpSuffix).renameTo(f))
-        throw new IllegalStateException(s"rewrite swap failed for ${o.path}")
-    }
-    emptied.foreach { f =>
-      if (!f.delete())
-        throw new IllegalStateException(s"rewrite could not delete emptied ${f.getPath}")
-    }
-    // rows stay in their file, so a swapped file keeps its bucket id
+    // rows stay in their file, so a rewritten file keeps its bucket id
     val prior = KeyRanges.load(table.dir)
-    KeyRanges.merge(table.dir, swapped.map { o =>
-      val name = new File(o.path).getName
-      name -> FileMeta(o.keyMin, o.keyMax, o.written,
-        prior.get(name).map(_.bucket).getOrElse(-1))
-    }.toMap, drop = emptied.map(_.getName).toSet)
+    PartFileSink.commit(table.dir,
+      outcomes.toSeq.flatMap(o => o.entry.map(e =>
+        if (o.src == null) e
+        else e.copy(bucket = prior.get(e.finalName).map(_.bucket).getOrElse(-1)))),
+      emptied = rewritten.toSeq.filter(o => o.hits > 0 && o.entry.isEmpty).map(o => new File(o.src)))
+    rewritten.map(_.hits).sum
   }
 }

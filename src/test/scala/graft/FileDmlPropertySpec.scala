@@ -20,14 +20,20 @@ import graft.sources._
   * STRING, a DATE and a composite (BIGINT, STRING) key. Every INSERT and
   * UPSERT adds part files, so the rows spread over many files and the
   * `_keyranges.json` sidecar decides which files a statement opens.
+  * Some UPSERTs carry a value the table cannot store (`'x'` into the
+  * BIGINT `n`): they must fail before any file changes. A bucketed table
+  * (`'buckets' = '4'`) runs the same sequences.
   *
   * After every statement:
   *   - the table holds exactly the model's rows, and UPDATE/UPSERT report
   *     the model's affected count;
-  *   - no rewrite temp (`.gupd`, `.rewrite`, `.tmp-*`) is left behind;
+  *   - no rewrite or sidecar temp (`.gupd`, `.rewrite`, `.tmp-*`,
+  *     `._keyranges*`) is left behind;
   *   - every remaining part file's sidecar range covers all of its keys
   *     (pruning soundness: a stale range that is too narrow would let a
-  *     later read or rewrite skip a file that holds a matching row).
+  *     later read or rewrite skip a file that holds a matching row);
+  *   - on a bucketed table, every part file's keys hash to the bucket its
+  *     sidecar entry records.
   *
   * DELETE conditions stay inside each profile's accept list, since a
   * declined DELETE is refused by Spark before it reaches the table. */
@@ -126,10 +132,11 @@ class FileDmlPropertySpec extends AnyFunSuite {
     M(k, k2, s"v${r.nextInt(1000)}",
       if (r.nextInt(8) == 0) None else Some(r.nextInt(100).toLong))
 
-  private def valuesSql(kind: Kind, rows: Seq[M]): String = rows.map { m =>
-    val n = m.n.map(_.toString).getOrElse("CAST(NULL AS BIGINT)")
-    if (kind.composite) s"(${kind.lit(m.k)}, '${m.k2}', '${m.v}', $n)"
-    else s"(${kind.lit(m.k)}, '${m.v}', $n)"
+  /** The rows as VALUES text; `n`, when given, replaces every `n` value. */
+  private def valuesSql(kind: Kind, rows: Seq[M], n: String = null): String = rows.map { m =>
+    val nv = Option(n).getOrElse(m.n.map(_.toString).getOrElse("CAST(NULL AS BIGINT)"))
+    if (kind.composite) s"(${kind.lit(m.k)}, '${m.k2}', '${m.v}', $nv)"
+    else s"(${kind.lit(m.k)}, '${m.v}', $nv)"
   }.mkString(", ")
 
   private def show(kind: Kind, m: M): Seq[String] =
@@ -144,10 +151,10 @@ class FileDmlPropertySpec extends AnyFunSuite {
     r.shuffle(all.filterNot(held).toList).take(n)
   }
 
-  private def checkFiles(kind: Kind, dir: File, ctx: String): Unit = {
+  private def checkFiles(kind: Kind, dir: File, buckets: Int, ctx: String): Unit = {
     val names = Option(dir.list()).getOrElse(Array.empty[String])
-    val temps = names.filter(n =>
-      n.endsWith(".gupd") || n.endsWith(".rewrite") || n.startsWith(".tmp-"))
+    val temps = names.filter(n => n.endsWith(".gupd") || n.endsWith(".rewrite") ||
+      n.startsWith(".tmp-") || n.startsWith("._keyranges"))
     assert(temps.isEmpty, s"$ctx: temps left behind: ${temps.mkString(", ")}")
     val schema = StructType.fromDDL(kind.ddl)
     val keyType = schema.fields(0).dataType
@@ -168,18 +175,28 @@ class FileDmlPropertySpec extends AnyFunSuite {
           assert(le(mn, k) && le(k, mx),
             s"$ctx: ${f.getName} holds key $k outside its sidecar range [$mn, $mx]")
         }
+        if (buckets > 0) keys.foreach { k =>
+          assert(GraftBucket.of(k, buckets) == m.bucket,
+            s"$ctx: ${f.getName} (bucket ${m.bucket}) holds key $k of bucket " +
+              GraftBucket.of(k, buckets))
+        }
       }
+      assert(buckets == 0 || ranges.contains(f.getName),
+        s"$ctx: bucketed ${f.getName} has no sidecar entry")
     }
   }
 
-  private def runSequence(profile: String, kind: Kind, seed: Long, steps: Int): Unit = {
+  private def runSequence(profile: String, kind: Kind, seed: Long, steps: Int,
+      buckets: Int = 0): Unit = {
     val eng = new GraftEngine(spark)
-    val src = s"dmlprop_${profile}_${kind.name}"
+    val src = s"dmlprop_${profile}_${kind.name}" + (if (buckets > 0) s"_b$buckets" else "")
     val path = new File(sys.props("user.dir"), s"target/graft-test/$src").getPath
     eng.sql(s"""CREATE SOURCE $src WITH { "type": "csv", "path": "$path", "pushdown": "$profile" }""")
     val t = s"graft.$src.t"
     spark.sql(s"DROP TABLE IF EXISTS $t")
-    spark.sql(s"CREATE TABLE $t (${kind.ddl}) TBLPROPERTIES ('keys' = '${kind.keysProp}')")
+    val bucketProp = if (buckets > 0) s", 'buckets' = '$buckets'" else ""
+    spark.sql(s"CREATE TABLE $t (${kind.ddl}) " +
+      s"TBLPROPERTIES ('keys' = '${kind.keysProp}'$bucketProp)")
     val dir = new File(path, "t")
     val r = new Random(seed)
     val model = ArrayBuffer.empty[M]
@@ -204,12 +221,20 @@ class FileDmlPropertySpec extends AnyFunSuite {
               .distinct
             if (keys.nonEmpty) {
               val rows = keys.map { case (k, k2) => randRow(r, k, k2) }
-              val sql = s"UPSERT INTO $t VALUES ${valuesSql(kind, rows)}"
-              val n = eng.sql(sql).collect()(0).getLong(0)
-              assert(n == rows.size, s"$ctx $sql: affected $n")
-              val ks = keys.toSet
-              model.filterInPlace(m => !ks((m.k, m.k2)))
-              model ++= rows
+              if (r.nextInt(4) == 0) {
+                // a non-key value the table cannot store: the statement
+                // fails whole, before any part file or sidecar changes
+                val sql = s"UPSERT INTO $t VALUES ${valuesSql(kind, rows, n = "'x'")}"
+                val e = intercept[Exception](eng.sql(sql).collect())
+                assert(e.getMessage.contains("CANNOT_SAFELY_CAST"), s"$ctx $sql: $e")
+              } else {
+                val sql = s"UPSERT INTO $t VALUES ${valuesSql(kind, rows)}"
+                val n = eng.sql(sql).collect()(0).getLong(0)
+                assert(n == rows.size, s"$ctx $sql: affected $n")
+                val ks = keys.toSet
+                model.filterInPlace(m => !ks((m.k, m.k2)))
+                model ++= rows
+              }
             }
           case 5 | 6 | 7 => // UPDATE: the WHERE and RHS see the original row
             val c = updateCond(r, kind, model.toSeq)
@@ -228,7 +253,7 @@ class FileDmlPropertySpec extends AnyFunSuite {
         val want = model.toSeq.map(show(kind, _))
         val order = Ordering.Implicits.seqOrdering[Seq, String]
         assert(got.sorted(order) == want.sorted(order), s"$ctx contents")
-        checkFiles(kind, dir, ctx)
+        checkFiles(kind, dir, buckets, ctx)
       }
       assert(FileTable.dataFiles(dir, "csv").size > 1, "rows never spread over part files")
     } finally {
@@ -241,6 +266,13 @@ class FileDmlPropertySpec extends AnyFunSuite {
        kind <- Seq(BigintKey, StringKey, DateKey, CompositeKey)) {
     test(s"keyed DML matches the model: profile=$profile key=${kind.name}") {
       Seq(11L, 29L).foreach(seed => runSequence(profile, kind, seed, 18))
+    }
+  }
+
+  // UPDATE never sets the key here, so it keeps every row in its bucket
+  for (kind <- Seq(BigintKey, StringKey)) {
+    test(s"bucketed keyed DML keeps every row in its recorded bucket: key=${kind.name}") {
+      Seq(11L, 29L).foreach(seed => runSequence("keys", kind, seed, 18, buckets = 4))
     }
   }
 }

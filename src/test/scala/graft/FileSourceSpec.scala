@@ -732,7 +732,7 @@ class FileSourceSpec extends AnyFunSuite {
     eng.sql("DROP SOURCE upbt")
   }
 
-  test("UPSERT replaces by a DATE key (the IN-list delete renders DATE literals)") {
+  test("UPSERT replaces by a DATE key (incoming DATE keys match the stored ones)") {
     val eng = new GraftEngine(spark)
     val p = new File(sys.props("user.dir"), "target/graft-test/upsert-date").getPath
     eng.sql(s"""CREATE SOURCE update_src WITH { "type": "csv", "path": "$p", "pushdown": "keys" }""")
@@ -854,6 +854,84 @@ class FileSourceSpec extends AnyFunSuite {
     assert(spark.table("graft.updck.kv2").filter(col("k1") === 15).count() == 2)
     spark.sql("DROP TABLE graft.updck.kv2")
     eng.sql("DROP SOURCE updck")
+  }
+
+  test("a keyed UPSERT is one job and one commit; a failed one changes no byte") {
+    val eng = new GraftEngine(spark)
+    val p = new File(sys.props("user.dir"), "target/graft-test/upsert-one").getPath
+    eng.sql(s"""CREATE SOURCE upone WITH { "type": "csv", "path": "$p", "pushdown": "keys" }""")
+    spark.sql("DROP TABLE IF EXISTS graft.upone.kv")
+    spark.sql("CREATE TABLE graft.upone.kv (k BIGINT, v STRING, n BIGINT) " +
+      "TBLPROPERTIES ('keys' = 'k')")
+    for (i <- 0 until 4)
+      spark.sql(s"INSERT INTO graft.upone.kv VALUES (${i * 10}, 'a$i', $i), (${i * 10 + 5}, 'b$i', $i)")
+    val tdir = new File(p, "kv")
+    // every file of the table, the sidecars included
+    def snap(): Map[String, Seq[Byte]] =
+      tdir.listFiles().map(f => f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    val parts = FileTable.dataFiles(tdir, "csv").map(_.getName).toSet
+    assert(parts.size == 8)
+
+    // a one-row UPSERT of a held key: the one-row file holding k = 15 is
+    // emptied and deleted, and the incoming row lands in one new part
+    // file, in ONE job of two tasks
+    var affected = -1L
+    val (jobs, tasks) = jobsOf {
+      affected = eng.sql("UPSERT INTO graft.upone.kv VALUES (15, 'U', 99)")
+        .collect()(0).getLong(0)
+    }
+    assert(affected == 1)
+    assert((jobs, tasks) == (1, 2), s"UPSERT ran $jobs jobs of $tasks tasks")
+    val after = FileTable.dataFiles(tdir, "csv").map(_.getName).toSet
+    assert((parts -- after).size == 1 && (after -- parts).size == 1, s"$parts -> $after")
+    val ranges = KeyRanges.load(tdir)
+    assert(ranges.keySet == after)
+    assert(ranges((after -- parts).head) == FileMeta("15", "15", 1, -1))
+    assert(spark.table("graft.upone.kv").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((0L, "a0"), (5L, "b0"), (10L, "a1"), (15L, "U"),
+        (20L, "a2"), (25L, "b2"), (30L, "a3"), (35L, "b3")))
+
+    // a value the table cannot store fails the statement before any
+    // file is touched: every part file and both sidecars keep their bytes
+    val before = snap()
+    val e = intercept[Exception](
+      eng.sql("UPSERT INTO graft.upone.kv VALUES (25, 'x', 'abc')").collect())
+    assert(e.getMessage.contains("CANNOT_SAFELY_CAST"), e.getMessage)
+    assert(snap() == before)
+    assert(spark.table("graft.upone.kv").filter(col("k") === 25)
+      .collect().map(_.getString(1)).toSeq == Seq("b2"))
+    spark.sql("DROP TABLE graft.upone.kv")
+    eng.sql("DROP SOURCE upone")
+  }
+
+  test("the key-range sidecar is replaced whole: a concurrent load sees the old map or the new") {
+    val dir = new File(sys.props("user.dir"), "target/graft-test/keyranges-race")
+    Option(dir.listFiles()).getOrElse(Array.empty[File]).foreach(_.delete())
+    dir.mkdirs()
+    def entries(rows: Long) = (0 until 3000).map { i =>
+      f"part-$i%05d.csv" -> FileMeta(s"k$i", s"k${i + 1}", rows, -1)
+    }.toMap
+    val (a, b) = (entries(1), entries(2))
+    KeyRanges.merge(dir, a)
+    @volatile var done = false
+    val loads, thrown, torn = new java.util.concurrent.atomic.AtomicInteger
+    val reader = new Thread(() =>
+      while (!done) {
+        try {
+          val m = KeyRanges.load(dir)
+          if (m != a && m != b) torn.incrementAndGet()
+        } catch { case _: Throwable => thrown.incrementAndGet() }
+        loads.incrementAndGet()
+      })
+    reader.start()
+    try (1 to 200).foreach(i => KeyRanges.merge(dir, if (i % 2 == 0) a else b))
+    finally { done = true; reader.join() }
+    assert(loads.get > 0)
+    assert((thrown.get, torn.get) == (0, 0),
+      s"of ${loads.get} loads, ${thrown.get} threw and ${torn.get} saw a partial map")
+    assert(KeyRanges.load(dir) == a)
+    assert(dir.list().toSet == Set(KeyRanges.FileName), dir.list().mkString(", "))
   }
 
   test("UPDATE accepts bracket-quoted identifiers (reference dialect)") {
