@@ -46,8 +46,45 @@ class GraftEngine(val spark: SparkSession) {
 
   import GraftEngine._
 
-  def sql(text0: String): DataFrame = {
-    val text = normalizeBrackets(text0); text match {
+  /** Runs one statement; keyed DML answers as a one-row `affected_rows`
+    * result. */
+  def sql(text: String): DataFrame = execute(text).fold(n => {
+    import spark.implicits._
+    Seq(n).toDF("affected_rows")
+  }, identity)
+
+  /** Runs one statement: `Left(affected rows)` for keyed UPDATE/UPSERT
+    * (MySQL answers DML with a count, not rows), else `Right(result)`. */
+  def execute(text: String): Either[Long, DataFrame] = normalizeBrackets(text) match {
+    // UPDATE on a connector table: read-modify-write rewrite (reference:
+    // datastore read-modify-write UPDATE, backends/datastore/
+    // datastore_test.go:398-486). Each rewritten part file is written to
+    // a temp and swapped in whole — never an in-place mutation a
+    // concurrent reader could half-see.
+    case UpdateStmt(tbl, sets, cond) if tbl.startsWith("graft.") =>
+      Left(updateRewrite(tbl, sets, substitute(cond)))
+
+    // UPSERT on a connector table with declared keys: rows whose key
+    // matches an existing row replace it, the rest append — the
+    // reference's per-backend `Put(key, vals)` upsert semantics
+    // (backends/cassandra/sql_to_cql.go:246-361, cass_test.go:484-599).
+    case UpsertStmt(tbl, cols, values) if tbl.startsWith("graft.") =>
+      Left(upsertRewrite(tbl, Option(cols), substitute(values)))
+
+    // EXECUTE name USING <expr>, ... of a PREPARE'd statement (below):
+    // positional ? binding, quote-safe.
+    case ExecuteStmt(name, args) =>
+      val body = prepared.getOrElse(name,
+        throw new IllegalArgumentException(s"unknown prepared statement: $name"))
+      val vals = Option(args).map(a => SqlText.splitTopLevel(substitute(a))).getOrElse(Seq.empty)
+        .map(v => SqlText.literal(spark.sql(s"SELECT ($v) AS v").collect()(0).get(0)))
+      execute(SqlText.bind(body, vals))
+
+    case other => Right(rows(other))
+  }
+
+  /** A statement that answers with rows, or with none. */
+  private def rows(text: String): DataFrame = text match {
     // the reference's statement-level distribution hint: `SELECT ...
     // WITH distributed=true, node_ct=2` (planner/sql_master.go:63-98
     // reads Stmt.With; backends/mongo/mgo_test.go:345,366 is the user
@@ -114,13 +151,6 @@ class GraftEngine(val spark: SparkSession) {
     case PrepareStmt(name, body) =>
       prepared.put(name, body.replace("''", "'"))
       spark.emptyDataFrame
-
-    case ExecuteStmt(name, args) =>
-      val body = prepared.getOrElse(name,
-        throw new IllegalArgumentException(s"unknown prepared statement: $name"))
-      val vals = Option(args).map(a => SqlText.splitTopLevel(substitute(a))).getOrElse(Seq.empty)
-        .map(v => SqlText.literal(spark.sql(s"SELECT ($v) AS v").collect()(0).get(0)))
-      sql(SqlText.bind(body, vals))
 
     case DeallocStmt(name) =>
       prepared.remove(name)
@@ -208,21 +238,6 @@ class GraftEngine(val spark: SparkSession) {
       ("default" +: graft.sources.SourceRegistry.all.map(_.name))
         .distinct.sorted.toDF("Database")
 
-    // UPDATE on a connector table: read-modify-write rewrite (reference:
-    // datastore read-modify-write UPDATE, backends/datastore/
-    // datastore_test.go:398-486). Each rewritten part file is written to
-    // a temp and swapped in whole — never an in-place mutation a
-    // concurrent reader could half-see.
-    case UpdateStmt(tbl, sets, cond) if tbl.startsWith("graft.") =>
-      updateRewrite(tbl, sets, substitute(cond))
-
-    // UPSERT on a connector table with declared keys: rows whose key
-    // matches an existing row replace it, the rest append — the
-    // reference's per-backend `Put(key, vals)` upsert semantics
-    // (backends/cassandra/sql_to_cql.go:246-361, cass_test.go:484-599).
-    case UpsertStmt(tbl, cols, values) if tbl.startsWith("graft.") =>
-      upsertRewrite(tbl, Option(cols), substitute(values))
-
     // Table maintenance: bin-pack a table's accumulated small part files
     // (every INSERT commit adds files) into `n` files. Delta-style
     // OPTIMIZE; the reference has no analogue — its backends own their
@@ -236,7 +251,7 @@ class GraftEngine(val spark: SparkSession) {
         .toDF("table", "files_before", "files_after")
 
     case other => spark.sql(substitute(other))
-  } }
+  }
 
   /** qlbridge-style bracket-quoted identifiers — the reference dialect
     * accepts `SET name = "x", [deleted] = true` (MSSQL-ish identity
@@ -272,7 +287,7 @@ class GraftEngine(val spark: SparkSession) {
       .getOrElse(throw new IllegalArgumentException(s"unknown table $tbl"))
   }
 
-  private def upsertRewrite(tbl: String, cols: Option[String], values: String): DataFrame = {
+  private def upsertRewrite(tbl: String, cols: Option[String], values: String): Long = {
     val table = fileTable(tbl, "UPSERT")
     require(table.keys.nonEmpty,
       s"UPSERT needs declared key columns on $tbl (TBLPROPERTIES 'keys')")
@@ -289,8 +304,7 @@ class GraftEngine(val spark: SparkSession) {
       .asInserted(spark, tbl, listed).collect()
     // one job and one commit replace the reference's row-at-a-time Put
     graft.sources.PartFileRewrite.upsert(spark, table, rows.map(_.toSeq.toArray).toSeq)
-    import spark.implicits._
-    Seq(rows.length.toLong).toDF("affected_rows")
+    rows.length.toLong
   }
 
   /** UPDATE as ONE surgical part-file rewrite job (reference: per-key
@@ -300,7 +314,7 @@ class GraftEngine(val spark: SparkSession) {
     * files where the condition hits, so a one-row UPDATE on a 100 TB keyed
     * table reads and rewrites one file. Per-file swaps are atomic; the
     * statement is not cross-file transactional. */
-  private def updateRewrite(tbl: String, sets: String, cond: String): DataFrame = {
+  private def updateRewrite(tbl: String, sets: String, cond: String): Long = {
     import org.apache.spark.sql.functions.expr
     import graft.sources.PartFileRewrite
     val (source, name) = tableRef(tbl, "UPDATE")
@@ -348,11 +362,9 @@ class GraftEngine(val spark: SparkSession) {
       require(!assigns.keys.exists(c => table.keys.exists(_.equalsIgnoreCase(c))),
         s"UPDATE $tbl: cannot update bucket key columns; DELETE + INSERT instead")
     // prune with the conjuncts that translate; the whole condition decides
-    val affected = PartFileRewrite.update(spark, table,
+    PartFileRewrite.update(spark, table,
       PartFileRewrite.condFilters(spark, tbl, cond).flatten, expr(cond),
       assigns.toSeq.map { case (c, v) => c -> expr(substitute(v)) })
-    import spark.implicits._
-    Seq(affected).toDF("affected_rows")
   }
 
   /** UPDATE over the Mongo wire: WHERE → filter document (via the same
@@ -361,7 +373,7 @@ class GraftEngine(val spark: SparkSession) {
     * with multi=true (reference: the Mongo backend's whole-row Put is
     * the same server-side mutation contract, sql_to_mgo.go). */
   private def mongoWireUpdate(ep: graft.sources.MongoEndpoint,
-      sets: String, cond: String, tbl: String): DataFrame = {
+      sets: String, cond: String, tbl: String): Long = {
     import graft.protocol.Bson.BDoc
     import graft.sources.{MongoClientLite, MongoDsl}
     val compiled = wireFilters(tbl, cond).map(MongoDsl.compile)
@@ -370,10 +382,8 @@ class GraftEngine(val spark: SparkSession) {
     val q = MongoDsl.compileAll(compiled.flatten)
     val set = BDoc(foldSets(sets, ep.schema, tbl))
     val client = new MongoClientLite(ep.spec.host, ep.spec.port, ep.spec.cfg)
-    val n = try client.update(ep.spec.db, ep.spec.collection, q, set, multi = true)
-      finally client.close()
-    import spark.implicits._
-    Seq(n.toLong).toDF("affected_rows")
+    try client.update(ep.spec.db, ep.spec.collection, q, set, multi = true).toLong
+    finally client.close()
   }
 
   /** The WHERE of a wire UPDATE as DSv2 filters, EXACTLY: a conjunct
@@ -409,7 +419,7 @@ class GraftEngine(val spark: SparkSession) {
     * standard-SQL DML statement shipped as a job. Conjuncts without a
     * rendered form ABORT (never a widened mutation). */
   private def bqWireUpdate(ep: graft.sources.BqEndpoint,
-      sets: String, cond: String, tbl: String): DataFrame = {
+      sets: String, cond: String, tbl: String): Long = {
     import graft.sources.{BqSql, HttpRestClient}
     val preds = wireFilters(tbl, cond).map(BqSql.render)
     require(!preds.exists(_.isEmpty),
@@ -426,8 +436,7 @@ class GraftEngine(val spark: SparkSession) {
       client.postJson(s"/bq/${ep.spec.table}/query",
         graft.sources.EsDsl.M.createObjectNode()
           .put("query", sql).toString))
-    import spark.implicits._
-    Seq(resp.path("numDmlAffectedRows").asText("0").toLong).toDF("affected_rows")
+    resp.path("numDmlAffectedRows").asText("0").toLong
   }
 
   /** UPDATE over the Datastore wire: read-modify-write. The WHERE must
@@ -437,7 +446,7 @@ class GraftEngine(val spark: SparkSession) {
     * getEntity-then-Put recipe. Driver-bounded by the WHERE-matched
     * set, the same set any UPDATE must materialize to rewrite. */
   private def dsWireUpdate(ep: graft.sources.DsEndpoint,
-      sets: String, cond: String, tbl: String): DataFrame = {
+      sets: String, cond: String, tbl: String): Long = {
     import graft.sources.{DsQuery, HttpRestClient}
     val (accepted, declined) = DsQuery.split(wireFilters(tbl, cond))
     require(declined.isEmpty,
@@ -471,8 +480,7 @@ class GraftEngine(val spark: SparkSession) {
       val client = new HttpRestClient(ep.spec.baseUrl, ep.spec.cfg)
       client.postJson(s"/ds/${ep.spec.kind}:commit", body.toString)
     }
-    import spark.implicits._
-    Seq(matched.length.toLong).toDF("affected_rows")
+    matched.length.toLong
   }
 
   /** Replace @@sysvars and @uservars with their literal values — but never

@@ -3,12 +3,13 @@ package graft.protocol
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
-import org.apache.spark.sql.execution.{FilterExec, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CommandResultExec, FilterExec, LocalTableScanExec,
+  OneRowRelationExec, ProjectExec, SQLExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 
@@ -28,41 +29,65 @@ import org.apache.spark.unsafe.Platform
   * are (that node is a leaf to `transform`); point lookups have no
   * exchange and so are not adaptive.
   *
-  * One job per window: the copy runs inside one SQL execution of the
-  * statement's `QueryExecution`, as one Spark job per window of at most
-  * `defaultParallelism` partitions. Each window's rows are handed over in
+  * Only the statement's own work: a plan whose rows are already on the
+  * driver — a command's result (`CommandResultExec`), a local relation
+  * (`LocalTableScanExec`), or a projection of foldable expressions over
+  * no table (`SELECT @@version_comment`) — answers from the driver and
+  * runs no Spark job. Any other plan runs, inside one SQL execution of
+  * the statement's `QueryExecution`, as one Spark job per window of at
+  * most `defaultParallelism` partitions; each task ships its partition's
+  * `UnsafeRow`s as bytes, and each window's rows are handed over in
   * partition order before the next job starts, so an ORDER BY result
   * keeps its global order and the driver holds at most one window's rows.
-  * Listeners see the statement's real jobs, and its scan metrics once
-  * they have run (the scan nodes are shared with the original plan).
+  * The job function is this object's own closure, so Spark's closure
+  * cleaner reads only this small class per job. Listeners see the
+  * statement's real jobs, and its scan metrics once they have run (the
+  * scan nodes are shared with the original plan).
   */
 object FrontDoorExec {
 
   private val Slotted: Set[DataType] = Set(IntegerType, LongType, ShortType, ByteType,
     DoubleType, FloatType, DateType, TimestampType)
 
-  /** Runs `df` and hands each row to `emit` in partition order. */
-  def foreachRow(df: DataFrame)(emit: Row => Unit): Unit = {
+  /** Runs `df` and hands each row to `emit` in partition order. The row
+    * instance may be reused for the next row. */
+  def foreachRow(df: DataFrame)(emit: InternalRow => Unit): Unit = {
     val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("collect")) {
-      val plan = stableLiterals(qe.executedPlan)
-      val rdd = plan.execute()
-      val sc = qe.sparkSession.sparkContext
-      val width = math.max(1, sc.defaultParallelism)
-      val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
-      val row = new UnsafeRow(plan.output.length)
-      (0 until rdd.getNumPartitions).grouped(width).foreach { window =>
-        sc.runJob(rdd, encode _, window).foreach { bytes =>
-          val in = ByteBuffer.wrap(bytes)
-          while (in.hasRemaining) {
-            val size = in.getInt()
-            row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + in.position(), size)
-            in.position(in.position() + size)
-            emit(toRow(row))
+      onDriver(qe.executedPlan) match {
+        case Some(rows) => rows.foreach(emit)
+        case None =>
+          val plan = stableLiterals(qe.executedPlan)
+          val rdd = plan.execute()
+          val sc = qe.sparkSession.sparkContext
+          val width = math.max(1, sc.defaultParallelism)
+          val row = new UnsafeRow(plan.output.length)
+          (0 until rdd.getNumPartitions).grouped(width).foreach { window =>
+            val parts = new Array[Array[Byte]](window.size)
+            sc.runJob(rdd, encodeTask, window, (i: Int, bytes: Array[Byte]) => parts(i) = bytes)
+            parts.foreach { bytes =>
+              val in = ByteBuffer.wrap(bytes)
+              while (in.hasRemaining) {
+                val size = in.getInt()
+                row.pointTo(bytes, Platform.BYTE_ARRAY_OFFSET + in.position(), size)
+                in.position(in.position() + size)
+                emit(row)
+              }
+            }
           }
-        }
       }
     }
+  }
+
+  /** The rows of a plan that already holds them on the driver; None when
+    * answering needs a job. */
+  private def onDriver(plan: SparkPlan): Option[Iterator[InternalRow]] = plan match {
+    case p @ (_: CommandResultExec | _: LocalTableScanExec) => Some(p.executeCollect().iterator)
+    case WholeStageCodegenExec(p) => onDriver(p)
+    case ProjectExec(exprs, _: OneRowRelationExec)
+        if exprs.forall { case Alias(e, _) => e.foldable; case e => e.foldable } =>
+      Some(Iterator.single(InternalRow.fromSeq(exprs.map(_.eval()))))
+    case _ => None
   }
 
   /** `plan` with the primitive literals of its filter conditions moved
@@ -77,6 +102,8 @@ object FrontDoorExec {
       }
       if (cond eq f.condition) f else f.copy(condition = cond)
   }
+
+  private val encodeTask = (_: TaskContext, rows: Iterator[InternalRow]) => encode(rows)
 
   /** One partition's rows as size-prefixed `UnsafeRow` bytes (a physical
     * plan's rows are `UnsafeRow`s, as Spark's own collect assumes). */

@@ -2,11 +2,15 @@ package graft.protocol
 
 import java.net.{InetAddress, ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.time.{LocalDate, LocalDateTime}
+import java.time.format.DateTimeFormatter
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions.{col, to_json}
 import org.apache.spark.sql.types._
 
@@ -28,9 +32,10 @@ import MysqlWire._
   *
   * Scale: the listener is control-plane only. Query execution is the
   * engine's usual distributed plan, run by [[FrontDoorExec]] as one Spark
-  * job per window of at most `defaultParallelism` partitions; each
-  * window's rows go out in partition order before the next job starts, so
-  * the server holds at most one window's rows, never a full resultset.
+  * job per window of at most `defaultParallelism` partitions (none when
+  * the rows are already on the driver); each window's rows go out in
+  * partition order before the next job starts, so the server holds at
+  * most one window's rows, never a full resultset.
   */
 final class MysqlServer(
     spark: SparkSession,
@@ -41,6 +46,7 @@ final class MysqlServer(
   @volatile private var running = false
   private val connIds = new AtomicLong(0)
   private val rng = new java.security.SecureRandom()
+  private val tsFormat = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
 
   def port: Int = server.getLocalPort
 
@@ -102,7 +108,7 @@ final class MysqlServer(
           case ComInitDb => io.write(encodeOk(0)); io.flush()
           case ComQuery =>
             val text = new String(cmd, 1, cmd.length - 1, UTF_8)
-            respond(io, binary = false)(engine.sql(text))
+            respond(io, binary = false)(engine.execute(text))
           case ComStmtPrepare =>
             val text = new String(cmd, 1, cmd.length - 1, UTF_8)
             nextStmtId += 1
@@ -182,7 +188,7 @@ final class MysqlServer(
         io.write(encodeErr(1243, "HY000", s"Unknown prepared statement handler ($stmtId)"))
         io.flush()
       case Some((text, nParams)) =>
-        respond(io, binary = true)(engine.sql(SqlText.bind(text, boundArgs(r, nParams))))
+        respond(io, binary = true)(engine.execute(SqlText.bind(text, boundArgs(r, nParams))))
     }
   }
 
@@ -207,16 +213,20 @@ final class MysqlServer(
       }
     }
 
-  /** The one answer path of COM_QUERY and COM_STMT_EXECUTE: a statement
-    * without columns is OK (DML reports its counts elsewhere, so affected
-    * rows stay 0 rather than force a second job), anything else a text or
-    * binary resultset. Any failure — parameter decode, planning, or a job
-    * failing after rows went out — ends in ERR 1064 and leaves the
-    * connection usable. */
-  private def respond(io: PacketIO, binary: Boolean)(run: => DataFrame): Unit =
+  /** The one answer path of COM_QUERY and COM_STMT_EXECUTE: keyed
+    * UPDATE/UPSERT answer OK carrying their affected rows, a statement
+    * without columns OK with none (INSERT and DELETE report their counts
+    * elsewhere, so they stay 0 rather than force a second job), anything
+    * else a text or binary resultset. Any failure — parameter decode,
+    * planning, or a job failing after rows went out — ends in ERR 1064
+    * and leaves the connection usable. */
+  private def respond(io: PacketIO, binary: Boolean)(run: => Either[Long, DataFrame]): Unit =
     try {
-      val df = run
-      if (df.schema.isEmpty) io.write(encodeOk(0)) else writeResultSet(io, df, binary)
+      run match {
+        case Left(affected) => io.write(encodeOk(affected))
+        case Right(df) if df.schema.isEmpty => io.write(encodeOk(0))
+        case Right(df) => writeResultSet(io, df, binary)
+      }
       io.flush()
     } catch {
       case NonFatal(e) =>
@@ -251,43 +261,75 @@ final class MysqlServer(
         })))
     }
     io.write(encodeEof())
-    val dateFmt = java.time.format.DateTimeFormatter.ISO_LOCAL_DATE
-    val tsFmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
-    val types = schema.fields.toIndexedSeq.map(f => typeCode(f.dataType))
-    FrontDoorExec.foreachRow(df) { row =>
-      if (binary) {
-        val vals: IndexedSeq[Option[Any]] = schema.fields.indices.map { i =>
-          if (row.isNullAt(i)) None
-          else Some(schema.fields(i).dataType match {
-            case DateType => row.getAs[java.sql.Date](i).toLocalDate
-            // render in the engine's session zone (UTC), NOT the JVM
-            // default — Timestamp.toLocalDateTime would shift wire
-            // results on any non-UTC host
-            case TimestampType => row.getAs[java.sql.Timestamp](i).toInstant
-              .atOffset(java.time.ZoneOffset.UTC).toLocalDateTime
-            case _ => row.get(i)
-          })
-        }
-        io.write(encodeBinaryRow(types, vals))
-      } else {
-        val vals: Seq[Option[Array[Byte]]] = schema.fields.indices.map { i =>
-          if (row.isNullAt(i)) None
-          else Some(schema.fields(i).dataType match {
-            case BooleanType => (if (row.getBoolean(i)) "1" else "0").getBytes(UTF_8)
-            case BinaryType => row.getAs[Array[Byte]](i)
-            case DateType => dateFmt.format(row.getAs[java.sql.Date](i).toLocalDate).getBytes(UTF_8)
-            case TimestampType =>
-              tsFmt.format(row.getAs[java.sql.Timestamp](i).toInstant
-                .atOffset(java.time.ZoneOffset.UTC)).getBytes(UTF_8)
-            case TimestampNTZType =>
-              tsFmt.format(row.getAs[java.time.LocalDateTime](i)).getBytes(UTF_8)
-            case _ => String.valueOf(row.get(i)).getBytes(UTF_8)
-          })
-        }
-        io.write(encodeTextRow(vals))
-      }
-    }
+    val encode = rowEncoder(schema, binary)
+    FrontDoorExec.foreachRow(df)(row => io.write(encode(row)))
     io.write(encodeEof())
+  }
+
+  /** One result row as a text- or binary-protocol row packet, read straight
+    * off the `InternalRow`: text is a lenenc string per value (0xfb for
+    * NULL); binary is a 0x00 header, the NULL bitmap with its 2-bit
+    * offset, then the non-NULL values in column order. */
+  private def rowEncoder(schema: StructType, binary: Boolean): InternalRow => Array[Byte] = {
+    val cells = schema.fields.map(f => cellWriter(f.dataType, binary))
+    val n = cells.length
+    row => {
+      val w = new ByteWriter
+      if (binary) {
+        val bitmap = new Array[Byte]((n + 7 + 2) / 8)
+        var i = 0
+        while (i < n) {
+          if (row.isNullAt(i)) bitmap((i + 2) / 8) = (bitmap((i + 2) / 8) | (1 << ((i + 2) % 8))).toByte
+          i += 1
+        }
+        w.u8(0x00).raw(bitmap)
+      }
+      var i = 0
+      while (i < n) {
+        if (!row.isNullAt(i)) cells(i)(w, row, i) else if (!binary) w.u8(0xfb)
+        i += 1
+      }
+      w.bytes
+    }
+  }
+
+  /** How one non-NULL value of type `dt` goes on the wire. Dates and
+    * timestamps render in the engine's session zone (UTC): a TIMESTAMP's
+    * micros are its UTC wall clock, like a TIMESTAMP_NTZ's. */
+  private def cellWriter(dt: DataType, binary: Boolean): (ByteWriter, InternalRow, Int) => Unit = {
+    def text(f: (InternalRow, Int) => String): (ByteWriter, InternalRow, Int) => Unit =
+      (w, r, i) => w.lenencStr(f(r, i))
+    def wall(micros: Long): LocalDateTime = DateTimeUtils.microsToLocalDateTime(micros)
+    (dt, binary) match {
+      case (BooleanType, false) => text((r, i) => if (r.getBoolean(i)) "1" else "0")
+      case (BooleanType, true) => (w, r, i) => w.u8(if (r.getBoolean(i)) 1 else 0)
+      case (ByteType, false) => text(_.getByte(_).toString)
+      case (ByteType, true) => (w, r, i) => w.u8(r.getByte(i))
+      case (ShortType, false) => text(_.getShort(_).toString)
+      case (ShortType, true) => (w, r, i) => w.u16(r.getShort(i))
+      case (IntegerType, false) => text(_.getInt(_).toString)
+      case (IntegerType, true) => (w, r, i) => w.u32(r.getInt(i) & 0xffffffffL)
+      case (LongType, false) => text(_.getLong(_).toString)
+      case (LongType, true) => (w, r, i) => w.u64(r.getLong(i))
+      case (FloatType, false) => text(_.getFloat(_).toString)
+      case (FloatType, true) => (w, r, i) =>
+        w.u32(java.lang.Float.floatToIntBits(r.getFloat(i)) & 0xffffffffL)
+      case (DoubleType, false) => text(_.getDouble(_).toString)
+      case (DoubleType, true) => (w, r, i) => w.u64(java.lang.Double.doubleToLongBits(r.getDouble(i)))
+      case (d: DecimalType, _) => text(_.getDecimal(_, d.precision, d.scale).toJavaBigDecimal.toString)
+      case (_: StringType, _) => (w, r, i) => w.lenencBytes(r.getUTF8String(i).getBytes)
+      case (BinaryType, _) => (w, r, i) => w.lenencBytes(r.getBinary(i))
+      case (DateType, false) =>
+        text((r, i) => DateTimeFormatter.ISO_LOCAL_DATE.format(LocalDate.ofEpochDay(r.getInt(i))))
+      case (DateType, true) => (w, r, i) =>
+        writeBinaryValue(w, TypeDate, LocalDate.ofEpochDay(r.getInt(i)))
+      case (TimestampType | TimestampNTZType, false) => text((r, i) => tsFormat.format(wall(r.getLong(i))))
+      case (TimestampType | TimestampNTZType, true) => (w, r, i) =>
+        writeBinaryValue(w, TypeDatetime, wall(r.getLong(i)))
+      case _ => // the rest as the text of its external value
+        val external = CatalystTypeConverters.createToScalaConverter(dt)
+        text((r, i) => String.valueOf(external(r.get(i, dt))))
+    }
   }
 
   private def defaultDisplayLength(dt: DataType): Long = dt match {
@@ -309,6 +351,7 @@ final class MysqlServer(
   * [[graft.sources.LoopbackRestServer]]. */
 object MysqlServer {
   val Password = "graft"
+
   @volatile private var inst: MysqlServer = _
 
   def ensureStarted(spark: SparkSession): Int = synchronized {

@@ -816,10 +816,14 @@ object Federation {
     // "dynamic filtering"): the broadcast dim side's distinct join keys
     // flow back into the Mongo scan BEFORE partition planning and ship
     // as a `$in` ANDed onto the find filter (SupportsRuntimeV2Filtering;
-    // wire-asserted in MongoSourceSpec) — at 100 TB this turns a full
-    // fact-collection stream into a dim-sized one. Correctness never
-    // depends on it: the join re-checks every key, and the scan declines
-    // non-wire-exact types or key sets beyond the 10k cap.
+    // wire-asserted in MongoSourceSpec). It fires here because both of
+    // Spark's preconditions hold: the dim side is a parquet scan that
+    // keeps a residual Filter, and the `broadcast` hint fixes the join
+    // strategy at plan time. A SQL join between two wire tables meets
+    // neither (pushed filters leave no Filter; wire scans report no
+    // size), so it runs as a sort-merge join with no runtime filter.
+    // Correctness never depends on it: the join re-checks every key, and
+    // the scan declines non-wire-exact types or key sets beyond the 10k cap.
     GQuery(
       "q_src_join_dynfilter",
       """SELECT o.o_orderkey, o.o_custkey, c.c_name,

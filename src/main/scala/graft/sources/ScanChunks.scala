@@ -17,54 +17,56 @@ final case class FileChunk(path: String, start: Long, length: Long) {
 /** Key-range partition fan-out for the file connector (reference: the
   * planner splits one logical source scan into partition-parallel fragments,
   * dataux planner/sql_master.go:75-98, and injects per-partition key ranges
-  * into the backend query, backends/mongo/sql_to_mgo.go:189-210).
-  *
-  * Two mechanisms, mirroring Spark's own `FilePartition` planning so the
-  * connector degrades to exactly the built-in behavior:
+  * into the backend query, backends/mongo/sql_to_mgo.go:189-210). Two
+  * mechanisms:
   *   - large JSONL files split at line boundaries into byte-range chunks
   *     (one record per line, so any offset resolves to the next newline —
   *     the Hadoop LineRecordReader convention). CSV never splits: quoted
   *     embedded newlines make byte offsets ambiguous without a sync scan.
-  *   - small chunks bin-pack into shared partitions, each chunk costed at
-  *     `length + openCostInBytes`, capped at `maxSplitBytes` =
-  *     min(maxPartitionBytes, max(openCost, totalBytes / parallelism)).
+  *   - chunks (costed `length + openCostInBytes`) pack largest first into
+  *     the least-loaded of `parallelism` partitions, or of
+  *     ⌈total cost / maxPartitionBytes⌉ when that is more (never more
+  *     than the chunks): no partition exceeds maxPartitionBytes plus one
+  *     chunk, and near-equal files fill one wave of equal tasks.
   *
   * At 100 TB this is the difference between a 100 GB single-file table
   * scanning on one task and scanning on ~800.
   */
 object ScanChunks {
 
-  /** Plan files into partitions of chunks. Deterministic (file order in,
-    * first-fit packing); every byte of every file lands in exactly one
-    * chunk. */
+  /** [[plan]] under the session's file confs and default parallelism. */
   def plan(files: Seq[String], splittable: Boolean): Seq[Seq[FileChunk]] = {
     val conf = org.apache.spark.sql.internal.SQLConf.get
-    val maxPartBytes = conf.filesMaxPartitionBytes
-    val openCost = conf.filesOpenCostInBytes
-    val parallelism =
-      math.max(1, SparkSession.active.sparkContext.defaultParallelism)
-    val sizes = files.map(f => new File(f).length())
-    val totalBytes = sizes.sum + files.size * openCost
-    val maxSplit = math.min(maxPartBytes,
-      math.max(openCost, totalBytes / parallelism))
+    plan(files.map(f => f -> new File(f).length()), splittable, conf.filesMaxPartitionBytes,
+      conf.filesOpenCostInBytes, math.max(1, SparkSession.active.sparkContext.defaultParallelism))
+  }
 
-    val chunks = files.zip(sizes).flatMap { case (p, len) =>
+  /** Plan `(path, length)` files into partitions of chunks, large splittable
+    * ones split at Spark's `maxSplitBytes`. Every byte lands in exactly one
+    * chunk and partition; deterministic (ties go to the earlier chunk and
+    * the lower partition, which keeps its chunks in input order). */
+  def plan(files: Seq[(String, Long)], splittable: Boolean, maxPartBytes: Long,
+      openCost: Long, parallelism: Int): Seq[Seq[FileChunk]] = {
+    val maxSplit = math.min(maxPartBytes,
+      math.max(openCost, files.map(_._2 + openCost).sum / parallelism))
+    val chunks = files.flatMap { case (p, len) =>
       if (splittable && maxSplit > 0 && len > maxSplit)
         (0L until len by maxSplit).map(s => FileChunk(p, s, math.min(maxSplit, len - s)))
       else Seq(FileChunk(p, 0L, len))
+    }.toIndexedSeq
+    val total = chunks.map(_.length + openCost).sum
+    val bins = math.min(chunks.size.toLong,
+      math.max(parallelism.toLong, (total + maxPartBytes - 1) / maxPartBytes)).toInt
+    val load = new Array[Long](bins)
+    val members = Array.fill(bins)(ArrayBuffer.empty[Int])
+    val free = new java.util.PriorityQueue[Int](Ordering.by((b: Int) => (load(b), b)))
+    (0 until bins).foreach(free.add)
+    chunks.indices.sortBy(i => -chunks(i).length).foreach { i =>
+      val b = free.poll()
+      members(b) += i; load(b) += chunks(i).length + openCost
+      free.add(b)
     }
-    val parts = ArrayBuffer.empty[Seq[FileChunk]]
-    val cur = ArrayBuffer.empty[FileChunk]
-    var curBytes = 0L
-    chunks.foreach { c =>
-      val cost = c.length + openCost
-      if (cur.nonEmpty && curBytes + cost > maxSplit) {
-        parts += cur.toSeq; cur.clear(); curBytes = 0L
-      }
-      cur += c; curBytes += cost
-    }
-    if (cur.nonEmpty) parts += cur.toSeq
-    parts.toSeq
+    members.toSeq.map(_.sorted.map(chunks).toSeq)
   }
 
   /** Records of one partition's chunk list through `codec`. */
@@ -93,8 +95,7 @@ object ScanChunks {
       private var cur: Iterator[T] = Iterator.empty
       private var handle: AutoCloseable = null
 
-      private def closeCur(): Unit =
-        if (handle != null) { handle.close(); handle = null }
+      private def closeCur(): Unit = if (handle != null) { handle.close(); handle = null }
 
       @scala.annotation.tailrec
       private def ensure(): Boolean =
@@ -102,10 +103,8 @@ object ScanChunks {
         else if (i >= chunks.size) { closeCur(); false }
         else {
           closeCur()
-          val c = chunks(i); i += 1
-          val (items, h) = read(c)
-          handle = h
-          cur = items
+          val (items, h) = read(chunks(i))
+          i += 1; handle = h; cur = items
           ensure()
         }
 

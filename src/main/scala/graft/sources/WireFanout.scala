@@ -80,18 +80,19 @@ trait WireScanTable
   * analogue of the reference's `Table.Partition{Keys, Partitions}`. */
 final case class WireSplits(key: String, points: Seq[Any])
 
-/** Runtime semi-join reduction (dynamic filtering) for the wire scans.
-  * When a scan probes a broadcast equi-join, Spark's dynamic-pruning
-  * pass collects the BUILD side's distinct join keys and hands them back
-  * as `col IN (...)` BEFORE partition planning; the scan ANDs them onto
-  * its shipped request (Mongo `$in`, ES `terms`, CQL partition-key `IN`,
-  * BigTable `rowKeys`, BQ rendered `IN`), so the server only streams
-  * rows that can survive the join — Trino's "dynamic filtering" shape,
-  * and the lever that turns a 100 TB federated fact scan into a
-  * dim-sized one. Purely an optimization: the join re-checks every key,
-  * so declining a predicate (a non-literal or unconvertible key, a key
-  * the backend cannot render exactly, a set beyond the cap) is always
-  * safe; pruning only ever applies the EXACT key set.
+/** Runtime semi-join reduction (dynamic filtering) for the wire scans:
+  * Spark's dynamic-pruning pass hands a probe-side scan the build side's
+  * distinct join keys as `col IN (...)` BEFORE partition planning, and
+  * the scan ANDs them onto its request (Mongo `$in`, ES `terms`, CQL
+  * partition-key `IN`, BigTable `rowKeys`, BQ rendered `IN`), so the
+  * server streams only rows that can survive the join. Spark inserts it
+  * only when the build side keeps a residual `Filter` and the join is a
+  * broadcast chosen at plan time. Fully pushed filters leave no `Filter`
+  * and wire scans report no size, so a SQL join of two wire tables is a
+  * sort-merge join without it. Purely an optimization: the join re-checks
+  * every key, so declining a predicate (a non-literal or unconvertible
+  * key, a key the backend cannot render exactly, a set beyond the cap)
+  * is always safe; pruning only ever applies the EXACT key set.
   *
   * The one soundness rule: a scan that delegated an ORDERED window (a
   * pushed sort or offset, with Spark's own Sort/Limit/Offset removed or

@@ -466,6 +466,95 @@ class MysqlWireSpec extends AnyFunSuite {
     } finally c.close()
   }
 
+  // ---- only the statement's own work -------------------------------------
+
+  /** The jobs and tasks `body` ran, counted once the listener bus has
+    * delivered a sentinel job started after it (one queue, in order). */
+  private def jobsAndTasks(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.sentinel") != null)) sentinel.countDown()
+        else if (sentinel.getCount > 0) jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (sentinel.getCount > 0) tasks.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setLocalProperty("graft.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.sentinel", null)
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    (jobs.get, tasks.get)
+  }
+
+  test("metadata statements answer from the driver: no Spark job") {
+    val c = connect()
+    try {
+      Seq("SHOW TABLES", "DESCRIBE lineitem", "SELECT @@version_comment",
+        "SHOW VARIABLES LIKE 'version%'").foreach { q =>
+        var rs: c.ResultSet = null
+        assert(jobsAndTasks { rs = c.select(q) }._1 == 0, q)
+        assert(rs.rows.nonEmpty, q)
+      }
+    } finally c.close()
+  }
+
+  /** A keyed CSV-source table `graft.<src>.kv` over a fresh directory. */
+  private def keyedTable(src: String, c: MysqlClient): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft-$src").toFile
+    c.query(s"""CREATE SOURCE $src WITH {"type": "csv", "path": "$dir"}""")
+    val t = s"graft.$src.kv"
+    c.query(s"CREATE TABLE $t (k BIGINT, v STRING) TBLPROPERTIES ('keys' = 'k')")
+    c.query(s"INSERT INTO $t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    t
+  }
+
+  test("keyed UPDATE and UPSERT answer OK with the affected rows; UPSERT runs only its write job") {
+    val c = connect()
+    try {
+      val t = keyedTable("fd_dml", c)
+      var ok: Either[Ok, c.ResultSet] = null
+      assert(jobsAndTasks { ok = c.query(s"UPSERT INTO $t VALUES (3, 'z'), (4, 'd')") }._1 == 1)
+      assert(ok.left.toOption.map(_.affected) == Some(2L))
+      assert(c.query(s"UPDATE $t SET v = 'y' WHERE k >= 2").left.toOption.map(_.affected) == Some(3L))
+      val prep = c.stmtPrepare(s"UPDATE $t SET v = ? WHERE k = ?")
+      assert(c.stmtExecute(prep.stmtId, Seq("w", 9L)).left.toOption.map(_.affected) == Some(0L))
+      assert(c.select(s"SELECT k, v FROM $t ORDER BY k").rows.map(_.flatten) ==
+        Vector(Vector("1", "a"), Vector("2", "y"), Vector("3", "y"), Vector("4", "y")))
+      // in process the engine still answers with a one-row result
+      val engine = new graft.engine.GraftEngine(spark)
+      assert(engine.sql(s"UPSERT INTO $t VALUES (5, 'e')").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    } finally c.close()
+  }
+
+  test("a read of 4 near-equal CSV files per core is one job of one task per core") {
+    val c = connect()
+    try {
+      val width = spark.sparkContext.defaultParallelism
+      val dir = java.nio.file.Files.createTempDirectory("graft-fd-csv").toFile
+      c.query(s"""CREATE SOURCE fd_csv WITH {"type": "csv", "path": "$dir"}""")
+      c.query("CREATE TABLE graft.fd_csv.parts (id BIGINT, pad STRING)")
+      // slowly shrinking files: first-fit against total / width packs
+      // the first bin one file short and spills into a second job
+      val tdir = new java.io.File(dir, "parts")
+      (0 until 4 * width).foreach { f =>
+        val rows = (0 until 400 - f).map(i => s"${f * 1000 + i},${"x" * 40}")
+        java.nio.file.Files.write(new java.io.File(tdir, f"part-$f%03d.csv").toPath,
+          rows.mkString("id,pad\n", "\n", "\n").getBytes("UTF-8"))
+      }
+      var rs: c.ResultSet = null
+      val (jobs, tasks) = jobsAndTasks { rs = c.select("SELECT id FROM graft.fd_csv.parts") }
+      assert(rs.rows.length == (0 until 4 * width).map(400 - _).sum)
+      assert((jobs, tasks) == (1, width))
+    } finally c.close()
+  }
+
   test("an unknown command byte gets ERR 1047, not a hang") {
     Tables.registerAll(spark, sfDir)
     val port = MysqlServer.ensureStarted(spark)

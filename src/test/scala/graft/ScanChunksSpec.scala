@@ -17,7 +17,9 @@ import graft.sources._
   *     records at any boundary);
   *   - a single large JSONL file scans as multiple partitions;
   *   - many small files bin-pack into fewer partitions;
-  *   - CSV (quoted embedded newlines) never byte-splits.
+  *   - CSV (quoted embedded newlines) never byte-splits;
+  *   - seeded plans: every byte in exactly one chunk, the partition count
+  *     rule, the per-partition bound of balanced packing, determinism.
   */
 class ScanChunksSpec extends AnyFunSuite {
 
@@ -123,5 +125,48 @@ class ScanChunksSpec extends AnyFunSuite {
       assert(df.count() == 2000)
     }
     SourceRegistry.drop("pack_src")
+  }
+
+  test("seeded plans: every byte once, the partition rule, the load bound, determinism") {
+    val r = new scala.util.Random(12)
+    for (round <- 0 until 400) {
+      val files = (0 until 1 + r.nextInt(40)).map(i => s"/t/f$i" -> (r.nextInt(4) match {
+        case 0 => r.nextInt(100).toLong
+        case 1 => r.nextInt(100000).toLong
+        case 2 => 1000000L + r.nextInt(2000)
+        case _ => r.nextLong(64L << 20)
+      }))
+      val splittable = r.nextBoolean()
+      val maxPart = Seq(1L << 20, 16L << 20, 128L << 20)(r.nextInt(3))
+      val openCost = Seq(0L, 4L << 10, 4L << 20)(r.nextInt(3))
+      val par = 1 + r.nextInt(16)
+      val plan = ScanChunks.plan(files, splittable, maxPart, openCost, par)
+      val ctx = s"round $round: $par cores, maxPart $maxPart, openCost $openCost, $files"
+      val chunks = plan.flatten
+      val byFile = chunks.groupBy(_.path)
+      files.foreach { case (p, len) =>
+        val cs = byFile.getOrElse(p, Nil).sortBy(_.start)
+        val ends = cs.scanLeft(0L)((at, c) => { assert(c.start == at, ctx); at + c.length })
+        assert(cs.nonEmpty && ends.last == len, ctx)
+        if (!splittable) assert(cs.size == 1, ctx)
+      }
+      val cost = (c: FileChunk) => c.length + openCost
+      val total = chunks.map(cost).sum
+      val rule = if (total <= par * maxPart) par.toLong else (total + maxPart - 1) / maxPart
+      assert(plan.size == math.min(rule, chunks.size.toLong), ctx)
+      assert(plan.forall(_.nonEmpty), ctx)
+      assert(plan.forall(_.map(cost).sum <= maxPart + chunks.map(cost).max), ctx)
+      assert(ScanChunks.plan(files, splittable, maxPart, openCost, par) == plan, ctx)
+    }
+  }
+
+  test("eight near-equal CSV part files pack 4 + 4 on two cores") {
+    // the staged orders_csv part files; first-fit packed them 4 + 3 + 1
+    val sizes = Seq(1117145L, 1117005L, 1117706L, 1117848L, 1117780L, 1116806L, 1118524L, 1117335L)
+    val files = sizes.zipWithIndex.map { case (n, i) => s"/orders_csv/part-$i.csv" -> n }
+    val plan = ScanChunks.plan(files, splittable = false, maxPartBytes = 128L << 20,
+      openCost = 4L << 20, parallelism = 2)
+    assert(plan.map(_.size) == Seq(4, 4))
+    assert(plan.flatten.map(_.path).sorted == files.map(_._1).sorted)
   }
 }
