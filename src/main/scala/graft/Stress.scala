@@ -136,7 +136,7 @@ object Stress {
           val (h, p) = LoopbackMongoServer.ensureStarted()
           WireEndpoints.register(MongoEndpoint("stresswire", coll, wireSchema,
             MongoEndpointSpec(h, p, LoopbackMongoServer.Db, coll,
-              MongoClientConfig(batchSize = 1024)),
+              WireClientConfig(pageSize = 1024)),
             splits = Some(WireSplits("doc_id", pts))))
           if (SourceRegistry.get("stresswire").isEmpty)
             SourceRegistry.register(SourceDef("stresswire",
@@ -165,7 +165,7 @@ object Stress {
           val slices = math.max(1, seed.length / WireStride)
           WireEndpoints.register(EsEndpoint("stresswirees", idx, wireSchema,
             EsEndpointSpec(base, idx,
-              HttpRestConfig(pageSize = 1024, retryBackoffMs = 5), slices = slices)))
+              WireClientConfig(pageSize = 1024, retryBackoffMs = 5), slices = slices)))
           if (SourceRegistry.get("stresswirees").isEmpty)
             SourceRegistry.register(SourceDef("stresswirees",
               new java.io.File(sys.props("user.dir"),

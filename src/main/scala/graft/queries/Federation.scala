@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.core.{GQuery, Tables}
 import graft.engine.GraftEngine
 import graft.sources.{BqEndpoint, BqEndpointSpec, BtEndpoint, BtEndpointSpec,
-  CqlClientConfig, CqlEndpoint, CqlEndpointSpec, DsEndpoint, DsEndpointSpec,
-  EsDiscovery, EsEndpoint, EsEndpointSpec, FedData, HttpRestClient,
-  HttpRestConfig, LoopbackCqlServer, LoopbackMongoServer, LoopbackRestServer,
-  MongoClientConfig, MongoEndpoint, MongoEndpointSpec, SourceRegistry,
-  WireEndpoints}
+  CqlEndpoint, CqlEndpointSpec, DsEndpoint, DsEndpointSpec, EsDiscovery,
+  EsEndpoint, EsEndpointSpec, FedData, HttpRestClient, LoopbackCqlServer,
+  LoopbackMongoServer, LoopbackRestServer, MongoEndpoint, MongoEndpointSpec,
+  SourceRegistry, WireClientConfig, WireEndpoints}
 
 /** Federation surface: queries over the DSv2 file connector
   * (graft.sources.*) — the Spark-native equivalent of the reference's
@@ -576,7 +575,7 @@ object Federation {
         val url = LoopbackRestServer.ensureStarted()
         val meta = EsDiscovery.mappingMeta(new HttpRestClient(url), "customer_txt")
         WireEndpoints.register(EsEndpoint(FedData.EsSourceName, "customer_txt",
-          meta.schema, EsEndpointSpec(url, "customer_txt", HttpRestConfig()),
+          meta.schema, EsEndpointSpec(url, "customer_txt", WireClientConfig()),
           analyzed = meta.analyzed))
       }
       s.table(s"$C.${FedData.EsSourceName}.customer_txt")
@@ -1584,7 +1583,7 @@ object Federation {
       val (host, port) = LoopbackMongoServer.ensureStarted()
       WireEndpoints.register(MongoEndpoint(FedData.MongoSourceName, "dml_mongo",
         schema, MongoEndpointSpec(host, port, LoopbackMongoServer.Db,
-          "dml_mongo", MongoClientConfig())))
+          "dml_mongo", WireClientConfig(pageSize = 256))))
       val t = s"$C.${FedData.MongoSourceName}.dml_mongo"
       s.sql(s"INSERT INTO $t VALUES (1, 'alpha', 10, 1.5), (2, 'beta', 20, 0.5), " +
         "(3, 'gamma', 30, 3.5)")
@@ -1664,7 +1663,7 @@ object Federation {
       val (host, port) = LoopbackCqlServer.ensureStarted()
       WireEndpoints.register(CqlEndpoint(FedData.CqlSourceName, "dml_cql",
         schema, Seq("seg"), Seq("k"),
-        CqlEndpointSpec(host, port, "dml_cql", CqlClientConfig())))
+        CqlEndpointSpec(host, port, "dml_cql", WireClientConfig(pageSize = 256))))
       val t = s"$C.${FedData.CqlSourceName}.dml_cql"
       s.sql(s"INSERT INTO $t VALUES ('a', 1, 'alpha', 10), ('a', 2, 'beta', 20), " +
         "('b', 3, 'gamma', 30)")
@@ -1694,7 +1693,7 @@ object Federation {
       LoopbackRestServer.register("dml_bq", schema, Seq.empty)
       val baseUrl = LoopbackRestServer.ensureStarted()
       WireEndpoints.register(BqEndpoint(FedData.BqSourceName, "dml_bq", schema,
-        BqEndpointSpec(baseUrl, "dml_bq", HttpRestConfig())))
+        BqEndpointSpec(baseUrl, "dml_bq", WireClientConfig())))
       val t = s"$C.${FedData.BqSourceName}.dml_bq"
       s.sql(s"INSERT INTO $t VALUES (1, 'alpha', 10, 1.5), (2, 'beta', 20, 0.5), " +
         "(3, 'gamma', 30, 3.5)")
@@ -1725,7 +1724,7 @@ object Federation {
       LoopbackRestServer.registerDs("dml_ds", schema, "item_id", Seq.empty)
       val baseUrl = LoopbackRestServer.ensureStarted()
       WireEndpoints.register(DsEndpoint(FedData.DsSourceName, "dml_ds", schema,
-        DsEndpointSpec(baseUrl, "dml_ds", HttpRestConfig()),
+        DsEndpointSpec(baseUrl, "dml_ds", WireClientConfig()),
         keyCol = Some("item_id")))
       val t = s"$C.${FedData.DsSourceName}.dml_ds"
       s.sql(s"INSERT INTO $t VALUES (1, 'alpha', 10, 1.5), (2, 'beta', 20, 0.5), " +
@@ -1761,7 +1760,7 @@ object Federation {
       LoopbackRestServer.registerBt("dml_bt", schema, "k", Seq.empty)
       val baseUrl = LoopbackRestServer.ensureStarted()
       WireEndpoints.register(BtEndpoint(FedData.BtSourceName, "dml_bt", schema, "k",
-        BtEndpointSpec(baseUrl, "dml_bt", "k", HttpRestConfig())))
+        BtEndpointSpec(baseUrl, "dml_bt", "k", WireClientConfig())))
       val t = s"$C.${FedData.BtSourceName}.dml_bt"
       s.sql(s"INSERT INTO $t VALUES ('a', 'alpha', 10), ('b', 'beta', 20), " +
         "('c', 'gamma', 30)")

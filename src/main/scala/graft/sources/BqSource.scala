@@ -21,7 +21,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (`backends/bigquery/sql_to_bq.go:72-104`; results page back through
   * the jobs API). Here the pushed DSv2 plan is RENDERED to SQL text
   * ([[BqSql]]), POSTed to the loopback warehouse's `/bq/query` endpoint,
-  * which PARSES it back ([[BqSql.parse]] — a real recursive-descent
+  * which PARSES it back ([[BqEval.parse]] — a real recursive-descent
   * predicate parser, not a string match), executes it over its rows with
   * the engine's 3VL semantics, and answers the BQ REST response shape
   * (string-encoded cells, `pageToken` paging). The Spark plan left
@@ -86,520 +86,13 @@ object BqSql {
     case _ => None
   }
 
-  // ---- parsing (server side) --------------------------------------------
-
-  final case class Agg(kind: String, col: String) // kind: count_star|count|min|max|sum|avg
   /** One ORDER BY item; the target is the column reference. */
   type Order = SortKey[String]
   val Order = SortKey
-
-  /** One parsed two-table join (the full-statement passthrough identity:
-    * `sql_to_bq.go:72-104` re-renders whatever statement it gets, joins
-    * included). `leftKey`/`rightKey` are alias-qualified; `onExtra` is an
-    * optional extra conjunct in the ON clause — the null-extended side's
-    * pre-join filters ride there, because under an OUTER join a WHERE on
-    * that side would wrongly drop null-extended rows. */
-  final case class Join(kind: String, // inner|left|right
-      rightTable: String, leftAlias: String, rightAlias: String,
-      leftKey: String, rightKey: String, onExtra: Option[Filter])
-
-  final case class Stmt(cols: Seq[String], aggs: Seq[(Agg, String)], table: String,
-      where: Option[Filter], groupBy: Seq[String], orderBy: Seq[Order],
-      limit: Int, offset: Int, join: Option[Join] = None)
-
-  def parse(sql: String): Stmt = new Parser(sql).parseStmt()
-
-  /** A parsed DML statement (BigQuery standard-SQL DML; the service —
-    * unlike the reference, which never implemented BQ deletes — answers
-    * UPDATE/DELETE as jobs with `numDmlAffectedRows`). */
-  final case class Dml(kind: String, table: String,
-      sets: Seq[(String, Any)], where: Filter)
-
-  def isDml(sql: String): Boolean = {
-    val t = sql.trim.toUpperCase
-    t.startsWith("UPDATE") || t.startsWith("DELETE")
-  }
-
-  def parseDml(sql: String): Dml = new Parser(sql).parseDml()
-
-  /** Recursive-descent parser for the rendered dialect — the warehouse's
-    * front door. Grammar:
-    *   SELECT item (, item)* FROM ident [WHERE pred] [GROUP BY ident*]
-    *     [ORDER BY ident [DESC|ASC] [NULLS FIRST|LAST] *] [LIMIT n] [OFFSET n]
-    *   item := ident | agg(ident|*) AS alias
-    *   pred := or-tree of comparisons / IN / LIKE / IS [NOT] NULL with parens
-    */
-  private final class Parser(s: String) {
-    private var i = 0
-    private def ws(): Unit = { while (i < s.length && s.charAt(i).isWhitespace) i += 1 }
-    private def peekWord: String = {
-      ws(); val j = i
-      var k = j
-      while (k < s.length && (s.charAt(k).isLetterOrDigit || s.charAt(k) == '_')) k += 1
-      s.substring(j, k)
-    }
-    private def eatWord(w: String): Boolean = {
-      ws()
-      if (peekWord.equalsIgnoreCase(w)) { i += w.length; true } else false
-    }
-    private def expectWord(w: String): Unit =
-      if (!eatWord(w)) fail(s"expected $w")
-    private def eatChar(c: Char): Boolean = {
-      ws(); if (i < s.length && s.charAt(i) == c) { i += 1; true } else false
-    }
-    private def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"parse error at ${i}: $msg in [$s]")
-
-    private def ident(): String = {
-      ws(); val j = i
-      while (i < s.length && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-      if (i == j) fail("expected identifier")
-      // one optional qualifier dot: `alias.column` (join statements)
-      if (i < s.length && s.charAt(i) == '.' && i + 1 < s.length &&
-          (s.charAt(i + 1).isLetter || s.charAt(i + 1) == '_')) {
-        i += 1
-        while (i < s.length && (s.charAt(i).isLetterOrDigit || s.charAt(i) == '_')) i += 1
-      }
-      s.substring(j, i)
-    }
-
-    private def stringLit(): String = {
-      val sb = new StringBuilder
-      if (!eatChar('\'')) fail("expected string")
-      while (i < s.length && s.charAt(i) != '\'') {
-        if (s.charAt(i) == '\\' && i + 1 < s.length) { sb.append(s.charAt(i + 1)); i += 2 }
-        else { sb.append(s.charAt(i)); i += 1 }
-      }
-      if (!eatChar('\'')) fail("unterminated string")
-      sb.toString
-    }
-
-    private def literal(): Any = {
-      ws()
-      if (i < s.length && s.charAt(i) == '\'') return stringLit()
-      val w = peekWord
-      if (w.equalsIgnoreCase("TRUE")) { i += w.length; return true: java.lang.Boolean }
-      if (w.equalsIgnoreCase("FALSE")) { i += w.length; return false: java.lang.Boolean }
-      if (w.equalsIgnoreCase("TIMESTAMP")) {
-        i += w.length
-        return java.sql.Timestamp.valueOf(stringLit())
-      }
-      // number — including scientific notation with a signed exponent
-      // (Double.toString renders 1e-4 as "1.0E-4")
-      val j = i
-      if (i < s.length && (s.charAt(i) == '-' || s.charAt(i) == '+')) i += 1
-      while (i < s.length && {
-        val c = s.charAt(i)
-        c.isDigit || c == '.' || c == 'E' || c == 'e' ||
-          ((c == '-' || c == '+') && i > j &&
-            (s.charAt(i - 1) == 'E' || s.charAt(i - 1) == 'e'))
-      }) i += 1
-      if (i == j) fail("expected literal")
-      val raw = s.substring(j, i)
-      if (raw.contains('.') || raw.toLowerCase.contains('e')) raw.toDouble: java.lang.Double
-      else raw.toLong: java.lang.Long
-    }
-
-    // precedence: OR < AND < NOT < atom
-    def pred(): Filter = {
-      var left = andPred()
-      while (eatWord("OR")) left = Or(left, andPred())
-      left
-    }
-    private def andPred(): Filter = {
-      var left = notPred()
-      while (eatWord("AND")) left = And(left, notPred())
-      left
-    }
-    private def notPred(): Filter =
-      if (eatWord("NOT")) Not(notPred()) else atom()
-    private def atom(): Filter = {
-      ws()
-      if (eatChar('(')) { val p = pred(); if (!eatChar(')')) fail("expected )"); return p }
-      val w = peekWord
-      if (w.equalsIgnoreCase("TRUE")) { i += w.length; return AlwaysTrue() }
-      if (w.equalsIgnoreCase("FALSE")) { i += w.length; return AlwaysFalse() }
-      val a = ident()
-      ws()
-      if (eatWord("IS")) {
-        val not = eatWord("NOT")
-        expectWord("NULL")
-        return if (not) IsNotNull(a) else IsNull(a)
-      }
-      if (eatWord("IN")) {
-        if (!eatChar('(')) fail("expected (")
-        val vs = Seq.newBuilder[Any]
-        vs += literal()
-        while (eatChar(',')) vs += literal()
-        if (!eatChar(')')) fail("expected )")
-        return In(a, vs.result().toArray)
-      }
-      if (eatWord("LIKE")) {
-        // stringLit has already consumed ONE escape level; the renderer
-        // doubles LIKE-meta escapes so at this level escaped meta still
-        // reads \% \_ \\ while anchors are BARE %.
-        val body = stringLit()
-        // char-walk unescape ('\' takes the next char literally) — a
-        // String.replace chain mishandles "\\%" (escaped \ + anchor)
-        def unesc(x: String): String = {
-          val sb = new StringBuilder
-          var k = 0
-          while (k < x.length) {
-            if (x.charAt(k) == '\\' && k + 1 < x.length) { sb.append(x.charAt(k + 1)); k += 2 }
-            else { sb.append(x.charAt(k)); k += 1 }
-          }
-          sb.toString
-        }
-        // Anchor classification BEFORE unescaping: a leading % is always
-        // an anchor (nothing can precede it); a trailing % is an anchor
-        // only if preceded by an EVEN number of backslashes (odd = it is
-        // the renderer's escaped literal %, e.g. ends-with "x%").
-        val startsAnchor = body.startsWith("%")
-        val endsAnchor = body.endsWith("%") && {
-          var k = body.length - 2; var n = 0
-          while (k >= 0 && body.charAt(k) == '\\') { n += 1; k -= 1 }
-          n % 2 == 0
-        }
-        if (startsAnchor && endsAnchor && body.length >= 2)
-          return StringContains(a, unesc(body.substring(1, body.length - 1)))
-        if (endsAnchor) return StringStartsWith(a, unesc(body.dropRight(1)))
-        if (startsAnchor) return StringEndsWith(a, unesc(body.drop(1)))
-        fail(s"unsupported LIKE pattern $body")
-      }
-      val op =
-        if (eatChar('=')) "="
-        else if (eatChar('<')) { if (eatChar('=')) "<=" else if (eatChar('>')) "<>" else "<" }
-        else if (eatChar('>')) { if (eatChar('=')) ">=" else ">" }
-        else fail("expected comparison operator")
-      val v = literal()
-      op match {
-        case "=" => EqualTo(a, v)
-        case "<>" => Not(EqualTo(a, v))
-        case "<" => LessThan(a, v)
-        case "<=" => LessThanOrEqual(a, v)
-        case ">" => GreaterThan(a, v)
-        case ">=" => GreaterThanOrEqual(a, v)
-      }
-    }
-
-    private def selectItem(): Either[String, (Agg, String)] = {
-      ws()
-      val w = peekWord.toLowerCase
-      if (Set("count", "min", "max", "sum", "avg")(w)) {
-        i += w.length
-        if (!eatChar('(')) fail("expected (")
-        val arg = { ws(); if (eatChar('*')) "*" else ident() }
-        if (!eatChar(')')) fail("expected )")
-        expectWord("AS")
-        val alias = ident()
-        val kind = if (w == "count" && arg == "*") "count_star" else w
-        Right((Agg(kind, arg), alias))
-      } else Left(ident())
-    }
-
-    def parseStmt(): Stmt = {
-      expectWord("SELECT")
-      val items = Seq.newBuilder[Either[String, (Agg, String)]]
-      items += selectItem()
-      while (eatChar(',')) items += selectItem()
-      expectWord("FROM")
-      val table = ident()
-      val keywords = Set("WHERE", "GROUP", "ORDER", "LIMIT", "OFFSET",
-        "JOIN", "INNER", "LEFT", "RIGHT", "ON")
-      def maybeAlias(): Option[String] = {
-        val w = peekWord
-        if (w.isEmpty || keywords.contains(w.toUpperCase)) None
-        else { i += w.length; Some(w) }
-      }
-      val leftAlias = maybeAlias()
-      val join: Option[Join] = {
-        val kind =
-          if (eatWord("LEFT")) { eatWord("OUTER"); expectWord("JOIN"); Some("left") }
-          else if (eatWord("RIGHT")) { eatWord("OUTER"); expectWord("JOIN"); Some("right") }
-          else if (eatWord("INNER")) { expectWord("JOIN"); Some("inner") }
-          else if (eatWord("JOIN")) Some("inner")
-          else None
-        kind.map { k =>
-          val rt = ident()
-          val ra = maybeAlias().getOrElse(fail("join requires a right alias"))
-          expectWord("ON")
-          val lk = ident()
-          if (!eatChar('=')) fail("expected = in ON clause")
-          val rk = ident()
-          val extra = if (eatWord("AND")) Some(pred()) else None
-          Join(k, rt, leftAlias.getOrElse(fail("join requires a left alias")),
-            ra, lk, rk, extra)
-        }
-      }
-      val where = if (eatWord("WHERE")) Some(pred()) else None
-      val groupBy = if (eatWord("GROUP")) {
-        expectWord("BY")
-        val gs = Seq.newBuilder[String]
-        gs += ident()
-        while (eatChar(',')) gs += ident()
-        gs.result()
-      } else Nil
-      val orderBy = if (eatWord("ORDER")) {
-        expectWord("BY")
-        def one(): Order = {
-          val c = ident()
-          val desc = if (eatWord("DESC")) true else { eatWord("ASC"); false }
-          val nf = if (eatWord("NULLS")) {
-            if (eatWord("FIRST")) true else { expectWord("LAST"); false }
-          } else !desc // engine defaults: ASC => NULLS FIRST, DESC => NULLS LAST
-          Order(c, desc, nf)
-        }
-        val os = Seq.newBuilder[Order]
-        os += one()
-        while (eatChar(',')) os += one()
-        os.result()
-      } else Nil
-      val limit = if (eatWord("LIMIT")) literal().asInstanceOf[java.lang.Long].toInt else -1
-      val offset = if (eatWord("OFFSET")) literal().asInstanceOf[java.lang.Long].toInt else 0
-      ws()
-      if (i != s.length) fail("trailing input")
-      val its = items.result()
-      Stmt(its.collect { case Left(c) => c },
-        its.collect { case Right(a) => a },
-        table, where, groupBy, orderBy, limit, offset, join)
-    }
-
-    /** `UPDATE t SET c = lit, ... WHERE pred` / `DELETE FROM t WHERE
-      * pred`. WHERE is REQUIRED — the real service rejects DML without
-      * one (`WHERE TRUE` is the explicit opt-in to a full mutation). */
-    def parseDml(): Dml = {
-      if (eatWord("DELETE")) {
-        expectWord("FROM")
-        val table = ident()
-        if (!eatWord("WHERE"))
-          fail("DELETE must have a WHERE clause; use WHERE TRUE to delete all rows")
-        val w = pred()
-        ws(); if (i != s.length) fail("trailing input")
-        Dml("delete", table, Nil, w)
-      } else {
-        expectWord("UPDATE")
-        val table = ident()
-        expectWord("SET")
-        val sets = Seq.newBuilder[(String, Any)]
-        def one(): Unit = {
-          val c = ident()
-          if (!eatChar('=')) fail("expected =")
-          ws()
-          sets += (c -> (if (eatWord("NULL")) null else literal()))
-        }
-        one()
-        while (eatChar(',')) one()
-        if (!eatWord("WHERE"))
-          fail("UPDATE must have a WHERE clause; use WHERE TRUE to update all rows")
-        val w = pred()
-        ws(); if (i != s.length) fail("trailing input")
-        Dml("update", table, sets.result(), w)
-      }
-    }
-  }
-
-  /** Apply a DML statement; returns (new rows, affected count). */
-  def executeDml(dml: Dml, schema: StructType, rows: Seq[Array[Any]])
-      : (Seq[Array[Any]], Long) = {
-    val hit = FilterEval.compile(dml.where, schema)
-    dml.kind match {
-      case "delete" =>
-        val kept = rows.filterNot(hit)
-        (kept, (rows.size - kept.size).toLong)
-      case "update" =>
-        val setIdx = dml.sets.map { case (c, v) =>
-          val k = schema.fieldNames.indexWhere(_.equalsIgnoreCase(c))
-          require(k >= 0, s"unknown column $c")
-          // literals arrive as Long/Double/String/Boolean/Timestamp —
-          // coerce integer literals into narrower integer columns
-          val coerced = (v, schema.fields(k).dataType) match {
-            case (l: java.lang.Long, IntegerType) => Int.box(l.toInt)
-            case (l: java.lang.Long, ShortType) => Short.box(l.toShort)
-            case (l: java.lang.Long, DoubleType) => Double.box(l.toDouble)
-            case (d: java.lang.Double, FloatType) => Float.box(d.toFloat)
-            case _ => v
-          }
-          k -> coerced
-        }
-        var n = 0L
-        val next = rows.map { r =>
-          if (!hit(r)) r
-          else {
-            n += 1
-            val copy = r.clone()
-            setIdx.foreach { case (k, v) => copy(k) = v }
-            copy
-          }
-        }
-        (next, n)
-    }
-  }
-
-  // ---- execution (the warehouse) ----------------------------------------
-
-  /** Execute a parsed statement over external-typed rows — filters with
-    * the engine's 3VL evaluator, exact integer aggregation, engine null
-    * ordering. Returns (column names, column types, rows). */
-  def execute(stmt: Stmt, schema: StructType, rows: Seq[Array[Any]])
-      : (Seq[String], Seq[DataType], Seq[Seq[Any]]) = {
-    def idx(c: String): Int = {
-      val k = schema.fieldNames.indexWhere(_.equalsIgnoreCase(c))
-      require(k >= 0, s"unknown column $c")
-      k
-    }
-    val filtered = stmt.where match {
-      case Some(f) => rows.filter(FilterEval.compile(f, schema))
-      case None => rows
-    }
-    def integral(i: Int) = schema.fields(i).dataType match {
-      case ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    def aggValue(a: Agg, group: Seq[Array[Any]]): (Any, DataType) = a.kind match {
-      case "count_star" => (group.size.toLong, LongType)
-      case "count" =>
-        val i = idx(a.col); (group.count(_(i) != null).toLong, LongType)
-      case "min" | "max" =>
-        val i = idx(a.col)
-        val vs = group.map(_(i)).filter(_ != null)
-        val dt = schema.fields(i).dataType
-        if (vs.isEmpty) (null, dt)
-        else {
-          val picked = vs.reduce { (x, y) =>
-            val c = FilterEval.cmp(x, y).getOrElse(0)
-            if (a.kind == "min") { if (c <= 0) x else y } else { if (c >= 0) x else y }
-          }
-          (picked, dt)
-        }
-      case "sum" =>
-        val i = idx(a.col)
-        val vs = group.map(_(i)).filter(_ != null)
-        if (integral(i))
-          (if (vs.isEmpty) null else vs.map(_.asInstanceOf[Number].longValue()).sum, LongType)
-        else
-          (if (vs.isEmpty) null else vs.map(_.asInstanceOf[Number].doubleValue()).sum, DoubleType)
-      case "avg" =>
-        val i = idx(a.col)
-        val vs = group.map(_(i)).filter(_ != null)
-        if (vs.isEmpty) (null, DoubleType)
-        else if (integral(i)) // exact integer sum, ONE IEEE division
-          (vs.map(_.asInstanceOf[Number].longValue()).sum.toDouble / vs.size, DoubleType)
-        else (vs.map(_.asInstanceOf[Number].doubleValue()).sum / vs.size, DoubleType)
-    }
-
-    // ORDER BY items resolved to row positions, in the shared comparator
-    def sortBy[R](rows: Seq[R], position: String => Int)(get: (R, Int) => Any): Seq[R] =
-      rows.sorted(PushedWindow.ordering(
-        stmt.orderBy.map(o => o.copy(target = position(o.target))))(get))
-
-    val isAgg = stmt.aggs.nonEmpty || stmt.groupBy.nonEmpty
-    // non-agg ORDER BY resolves against the INPUT schema and sorts the
-    // rows BEFORE projection (SQL scoping — the key need not be
-    // projected; a pushed join's qualified `ORDER BY t0.x` rides here)
-    val preSorted =
-      if (isAgg || stmt.orderBy.isEmpty) filtered
-      else sortBy(filtered, idx)(_(_))
-
-    val (names, types, out): (Seq[String], Seq[DataType], Seq[Seq[Any]]) =
-      if (isAgg) {
-        val gIdx = stmt.groupBy.map(idx)
-        val groups: Seq[(Seq[Any], Seq[Array[Any]])] =
-          if (gIdx.isEmpty) Seq((Nil, filtered))
-          else filtered.groupBy(r => gIdx.map(r(_)): Seq[Any]).toSeq
-        val aggTypes = stmt.aggs.map { case (a, _) =>
-          aggValue(a, filtered.take(0))._2
-        }
-        (stmt.groupBy ++ stmt.aggs.map(_._2),
-          gIdx.map(schema.fields(_).dataType) ++ aggTypes,
-          groups.map { case (keys, g) => keys ++ stmt.aggs.map(x => aggValue(x._1, g)._1) })
-      } else {
-        val cIdx = stmt.cols.map(idx)
-        (stmt.cols.map(c => schema.fieldNames(idx(c))),
-          cIdx.map(schema.fields(_).dataType),
-          preSorted.map(r => cIdx.map(r(_))))
-      }
-
-    // agg ORDER BY (TopN over a pushed aggregate) names OUTPUT columns
-    val sorted = if (!isAgg || stmt.orderBy.isEmpty) out else {
-      sortBy(out, { c =>
-        val k = names.indexWhere(_.equalsIgnoreCase(c))
-        require(k >= 0, s"ORDER BY references unknown output $c")
-        k
-      })(_(_))
-    }
-    val windowed = sorted.slice(stmt.offset,
-      if (stmt.limit >= 0) stmt.offset + stmt.limit else sorted.size)
-    (names, types, windowed)
-  }
-
-  /** Execute a two-table join statement: hash-join the registered rows
-    * (SQL key equality — null keys never match; the ON extra conjunct
-    * gates match candidacy, so a null-extended side's pre-join filters
-    * behave exactly like a filtered subquery), then run the remaining
-    * clauses over the joined virtual table whose columns carry their
-    * alias-qualified names. */
-  def executeJoin(stmt: Stmt, left: (StructType, Seq[Array[Any]]),
-      right: (StructType, Seq[Array[Any]]))
-      : (Seq[String], Seq[DataType], Seq[Seq[Any]]) = {
-    val j = stmt.join.get
-    val (ls, lr) = left
-    val (rs, rr) = right
-    val virt = StructType(
-      ls.fields.map(f => StructField(s"${j.leftAlias}.${f.name}", f.dataType, nullable = true)) ++
-        rs.fields.map(f => StructField(s"${j.rightAlias}.${f.name}", f.dataType, nullable = true)))
-    def local(schema: StructType, alias: String, q: String): Int = {
-      require(q.toLowerCase.startsWith(alias.toLowerCase + "."),
-        s"ON key $q is not under alias $alias")
-      val col = q.substring(alias.length + 1)
-      val k = schema.fieldNames.indexWhere(_.equalsIgnoreCase(col))
-      require(k >= 0, s"unknown join key $q")
-      k
-    }
-    // the ON clause may name the keys in either order
-    val (lq, rq) =
-      if (j.leftKey.toLowerCase.startsWith(j.leftAlias.toLowerCase + "."))
-        (j.leftKey, j.rightKey)
-      else (j.rightKey, j.leftKey)
-    val lk = local(ls, j.leftAlias, lq)
-    val rk = local(rs, j.rightAlias, rq)
-    // numeric keys hash by widened value so INT32/INT64 sides still meet
-    def norm(v: Any): Any = v match {
-      case n @ (_: java.lang.Short | _: java.lang.Integer | _: java.lang.Long) =>
-        n.asInstanceOf[Number].longValue(): java.lang.Long
-      case n @ (_: java.lang.Float | _: java.lang.Double) =>
-        n.asInstanceOf[Number].doubleValue(): java.lang.Double
-      case x => x
-    }
-    val onExtra = j.onExtra.map(FilterEval.compile(_, virt))
-    def accepts(row: Array[Any]): Boolean = onExtra.forall(_(row))
-    val nullsL = Array.fill[Any](ls.fields.length)(null)
-    val nullsR = Array.fill[Any](rs.fields.length)(null)
-    val joined: Seq[Array[Any]] = j.kind match {
-      case "right" =>
-        val byKey = lr.filter(_(lk) != null).groupBy(r => norm(r(lk)))
-        rr.flatMap { r =>
-          val hits =
-            if (r(rk) == null) Nil
-            else byKey.getOrElse(norm(r(rk)), Nil).map(l => l ++ r).filter(accepts)
-          if (hits.nonEmpty) hits else Seq(nullsL ++ r)
-        }
-      case kind =>
-        val byKey = rr.filter(_(rk) != null).groupBy(r => norm(r(rk)))
-        lr.flatMap { l =>
-          val hits =
-            if (l(lk) == null) Nil
-            else byKey.getOrElse(norm(l(lk)), Nil).map(r => l ++ r).filter(accepts)
-          if (hits.nonEmpty) hits
-          else if (kind == "left") Seq(l ++ nullsR)
-          else Nil
-        }
-    }
-    execute(stmt.copy(join = None, table = "__joined"), virt, joined)
-  }
 }
 
 /** Serializable BQ endpoint pointer. */
-final case class BqEndpointSpec(baseUrl: String, table: String, cfg: HttpRestConfig)
+final case class BqEndpointSpec(baseUrl: String, table: String, cfg: WireClientConfig)
 
 final case class BqEndpoint(source: String, table: String, schema: StructType,
     spec: BqEndpointSpec, splits: Option[WireSplits] = None) extends WireEndpoint {

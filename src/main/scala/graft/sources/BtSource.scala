@@ -228,7 +228,7 @@ object BtQuery {
 
 /** Serializable BigTable endpoint pointer. */
 final case class BtEndpointSpec(baseUrl: String, table: String, keyCol: String,
-    cfg: HttpRestConfig)
+    cfg: WireClientConfig)
 
 final case class BtEndpoint(source: String, table: String, schema: StructType,
     keyCol: String, spec: BtEndpointSpec, fanout: Int = 1) extends WireEndpoint {

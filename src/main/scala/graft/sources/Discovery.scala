@@ -329,7 +329,7 @@ object BtDiscovery {
   /** Tables (and each one's row-key qualifier) from the admin-shaped
     * tables.list. Real BigTable row keys are positional; the qualifier
     * mapping is connector metadata the fixture exports in the listing. */
-  def listTables(baseUrl: String, cfg: HttpRestConfig = HttpRestConfig())
+  def listTables(baseUrl: String, cfg: WireClientConfig = WireClientConfig())
       : Seq[(String, String)] = {
     val client = new HttpRestClient(baseUrl, cfg)
     EsDsl.M.readTree(client.get("/bt/", Map.empty))
@@ -369,7 +369,7 @@ object DsDiscovery {
     * (the real service's metadata query). Real DS keys ride entity.key;
     * which property models the key is connector metadata the fixture
     * exports as `keyProperty`. */
-  def listKinds(baseUrl: String, cfg: HttpRestConfig = HttpRestConfig())
+  def listKinds(baseUrl: String, cfg: WireClientConfig = WireClientConfig())
       : Seq[(String, String)] = {
     val client = new HttpRestClient(baseUrl, cfg)
     val resp = EsDsl.M.readTree(
@@ -528,17 +528,17 @@ object WireSources {
 
   private def listAll(d: WireSourceDef): Seq[String] = d.protocol match {
     case "es" =>
-      EsDiscovery.listIndices(new HttpRestClient(d.prop("url"), restCfg(d)))
+      EsDiscovery.listIndices(new HttpRestClient(d.prop("url"), clientCfg(d)))
     case "mongo" => MongoDiscovery.listCollections(mongoSpec(d, ""))
     case "cassandra" =>
       CqlDiscovery.listTables(cqlSpec(d, ""), d.props.getOrElse("keyspace", "graft"))
-    case "bigquery" => BqDiscovery.listTables(d.prop("url"), restCfg(d))
-    case "datastore" => DsDiscovery.listKinds(d.prop("url"), restCfg(d)).map(_._1)
-    case "bigtable" => BtDiscovery.listTables(d.prop("url"), restCfg(d)).map(_._1)
+    case "bigquery" => BqDiscovery.listTables(d.prop("url"), clientCfg(d))
+    case "datastore" => DsDiscovery.listKinds(d.prop("url"), clientCfg(d)).map(_._1)
+    case "bigtable" => BtDiscovery.listTables(d.prop("url"), clientCfg(d)).map(_._1)
     case "kube" => KubeTables.All.keys.toSeq.sorted // fixed typed surface
       // (url validated at registration like every connection prop)
     case "rest" =>
-      RestDiscovery.listApis(new HttpRestClient(d.prop("url"), restCfg(d)))
+      RestDiscovery.listApis(new HttpRestClient(d.prop("url"), clientCfg(d)))
         .map(_._1)
     case other => throw new IllegalArgumentException(s"unknown protocol $other")
   }
@@ -551,10 +551,10 @@ object WireSources {
     if (!listTables(d).exists(_.equalsIgnoreCase(table))) return false
     d.protocol match {
       case "es" =>
-        val client = new HttpRestClient(d.prop("url"), restCfg(d))
+        val client = new HttpRestClient(d.prop("url"), clientCfg(d))
         val meta = EsDiscovery.mappingMeta(client, table)
         WireEndpoints.register(EsEndpoint(d.name, table, meta.schema,
-          EsEndpointSpec(d.prop("url"), table, restCfg(d),
+          EsEndpointSpec(d.prop("url"), table, clientCfg(d),
             slices = d.intProp("fanout", 1),
             paging = d.props.getOrElse("paging", EsEndpointSpec.DefaultPaging)),
           analyzed = meta.analyzed))
@@ -586,29 +586,29 @@ object WireSources {
           meta.partitionKeys, meta.clusteringKeys, spec,
           fanout = d.intProp("fanout", 1)))
       case "bigquery" =>
-        val spec = BqEndpointSpec(d.prop("url"), table, restCfg(d))
+        val spec = BqEndpointSpec(d.prop("url"), table, clientCfg(d))
         WireEndpoints.register(BqEndpoint(d.name, table,
           BqDiscovery.tableSchema(spec), spec))
       case "datastore" =>
-        val keyProp = DsDiscovery.listKinds(d.prop("url"), restCfg(d))
+        val keyProp = DsDiscovery.listKinds(d.prop("url"), clientCfg(d))
           .find(_._1.equalsIgnoreCase(table)).map(_._2).getOrElse("")
-        val spec = DsEndpointSpec(d.prop("url"), table.toLowerCase, restCfg(d))
+        val spec = DsEndpointSpec(d.prop("url"), table.toLowerCase, clientCfg(d))
         WireEndpoints.register(DsEndpoint(d.name, table.toLowerCase,
           DsDiscovery.inferSchema(spec), spec,
           keyCol = Some(keyProp).filter(_.nonEmpty)))
       case "bigtable" =>
-        val rowKey = BtDiscovery.listTables(d.prop("url"), restCfg(d))
+        val rowKey = BtDiscovery.listTables(d.prop("url"), clientCfg(d))
           .find(_._1.equalsIgnoreCase(table)).map(_._2)
           .getOrElse(throw new IllegalStateException(s"listed BT table $table vanished"))
-        val spec = BtEndpointSpec(d.prop("url"), table.toLowerCase, rowKey, restCfg(d))
+        val spec = BtEndpointSpec(d.prop("url"), table.toLowerCase, rowKey, clientCfg(d))
         WireEndpoints.register(BtEndpoint(d.name, table.toLowerCase,
           BtDiscovery.inferSchema(spec), rowKey, spec,
           fanout = d.intProp("fanout", 1)))
       case "kube" =>
         WireEndpoints.register(KubeEndpoint(d.name, table.toLowerCase,
-          KubeEndpointSpec(d.prop("url"), table.toLowerCase, restCfg(d))))
+          KubeEndpointSpec(d.prop("url"), table.toLowerCase, clientCfg(d))))
       case "rest" =>
-        val client = new HttpRestClient(d.prop("url"), restCfg(d))
+        val client = new HttpRestClient(d.prop("url"), clientCfg(d))
         val api = RestDiscovery.listApis(client)
           .find(_._1.equalsIgnoreCase(table))
         val params = api.map(_._2).getOrElse(Set.empty)
@@ -659,22 +659,21 @@ object WireSources {
         .filter(k => schema.fieldNames.exists(_.equalsIgnoreCase(k)))
     }
 
-  private def restCfg(d: WireSourceDef) =
-    HttpRestConfig(pageSize = d.intProp("page_size", 512))
+  /** The one client config of every protocol: `page_size` rows a page. */
+  private def clientCfg(d: WireSourceDef) =
+    WireClientConfig(pageSize = d.intProp("page_size", 512))
   private def mongoSpec(d: WireSourceDef, coll: String) =
     MongoEndpointSpec(d.prop("host"), d.intProp("port", 27017),
-      d.props.getOrElse("db", "graft"), coll,
-      MongoClientConfig(batchSize = d.intProp("page_size", 512)))
+      d.props.getOrElse("db", "graft"), coll, clientCfg(d))
   private def cqlSpec(d: WireSourceDef, table: String) =
-    CqlEndpointSpec(d.prop("host"), d.intProp("port", 9042), table,
-      CqlClientConfig(pageSize = d.intProp("page_size", 512)))
+    CqlEndpointSpec(d.prop("host"), d.intProp("port", 9042), table, clientCfg(d))
 }
 
 /** BigQuery discovery: the tables.get schema resource. */
 object BqDiscovery {
 
   /** Table ids from the tables.list resource. */
-  def listTables(baseUrl: String, cfg: HttpRestConfig = HttpRestConfig())
+  def listTables(baseUrl: String, cfg: WireClientConfig = WireClientConfig())
       : Seq[String] = {
     val client = new HttpRestClient(baseUrl, cfg)
     EsDsl.M.readTree(client.get("/bq/", Map.empty))

@@ -327,7 +327,7 @@ object DsQuery {
 }
 
 /** Serializable Datastore endpoint pointer. */
-final case class DsEndpointSpec(baseUrl: String, kind: String, cfg: HttpRestConfig)
+final case class DsEndpointSpec(baseUrl: String, kind: String, cfg: WireClientConfig)
 
 final case class DsEndpoint(source: String, table: String, schema: StructType,
     spec: DsEndpointSpec, splits: Option[WireSplits] = None,

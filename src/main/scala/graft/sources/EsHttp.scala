@@ -295,7 +295,7 @@ object EsDsl {
   *   - `"scroll"`: the legacy sliced-scroll path (server-held cursor;
   *     continuations must not retry) with from/size for single-stream
   *     reads — kept for pre-PIT clusters (< ES 7.10). */
-final case class EsEndpointSpec(baseUrl: String, table: String, cfg: HttpRestConfig,
+final case class EsEndpointSpec(baseUrl: String, table: String, cfg: WireClientConfig,
     slices: Int = 1, cardinalityThreshold: Int = 40000,
     paging: String = EsEndpointSpec.DefaultPaging,
     /** Buckets per composite-aggregation page (after_key cursor). */

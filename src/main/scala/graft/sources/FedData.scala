@@ -207,7 +207,7 @@ object FedData {
           new HttpRestClient(baseUrl), "customer_es")
         WireEndpoints.register(EsEndpoint(EsSourceName, "customer_es", discovered,
           // slices=4: hit scans fan out 4-way via sliced scroll
-          EsEndpointSpec(baseUrl, "customer_es", HttpRestConfig(pageSize = 512),
+          EsEndpointSpec(baseUrl, "customer_es", WireClientConfig(pageSize = 512),
             slices = 4)))
       }
       // deep-pagination ES fixture: the ORDERS table (the biggest wire
@@ -225,7 +225,7 @@ object FedData {
         val discovered = EsDiscovery.mappingSchema(
           new HttpRestClient(baseUrl), "orders_es")
         WireEndpoints.register(EsEndpoint(EsSourceName, "orders_es", discovered,
-          EsEndpointSpec(baseUrl, "orders_es", HttpRestConfig(pageSize = 512),
+          EsEndpointSpec(baseUrl, "orders_es", WireClientConfig(pageSize = 512),
             slices = 4, paging = "pit")))
       }
       // Mongo-protocol source: the orders table behind a loopback mongod
@@ -242,7 +242,7 @@ object FedData {
         LoopbackMongoServer.register("orders_mongo", orders.schema, rows.toSeq)
         val (host, port) = LoopbackMongoServer.ensureStarted()
         val spec = MongoEndpointSpec(host, port, LoopbackMongoServer.Db,
-          "orders_mongo", MongoClientConfig(batchSize = 512))
+          "orders_mongo", WireClientConfig(pageSize = 512))
         // schema DISCOVERED by sampling documents through a real OP_MSG
         // `find` and switching on BSON runtime types (mgo_source.go:
         // 269-311) — no declared schema reaches the endpoint
@@ -273,7 +273,7 @@ object FedData {
           rows = rows.toSeq)
         val (host, port) = LoopbackCqlServer.ensureStarted()
         val spec = CqlEndpointSpec(host, port, "customer_cql",
-          CqlClientConfig(pageSize = 512))
+          WireClientConfig(pageSize = 512))
         // schema + key structure DISCOVERED from system_schema.columns
         // over the same native protocol as data queries (the reference
         // reads gocql.TableMetadata, cassandra/source.go:185-239)
@@ -299,7 +299,7 @@ object FedData {
           rows = rows.toSeq)
         val (host, port) = LoopbackCqlServer.ensureStarted()
         val spec = CqlEndpointSpec(host, port, "customer_tags_cql",
-          CqlClientConfig(pageSize = 512))
+          WireClientConfig(pageSize = 512))
         val meta = CqlDiscovery.tableMeta(spec, "customer_tags_cql")
         WireEndpoints.register(CqlEndpoint(CqlSourceName, "customer_tags_cql",
           meta.schema, meta.partitionKeys, meta.clusteringKeys, spec,
@@ -315,7 +315,7 @@ object FedData {
         val rows = orders.collect().map(_.toSeq.toArray)
         LoopbackRestServer.registerBq("orders_bqw", orders.schema, rows.toSeq)
         val baseUrl = LoopbackRestServer.ensureStarted()
-        val spec = BqEndpointSpec(baseUrl, "orders_bqw", HttpRestConfig(pageSize = 512))
+        val spec = BqEndpointSpec(baseUrl, "orders_bqw", WireClientConfig(pageSize = 512))
         // schema DISCOVERED from the tables.get resource (the real
         // service's schema surface); BQ's INT64-only integer vocabulary
         // means integer columns discover as bigint — the service's truth
@@ -334,7 +334,7 @@ object FedData {
         val rows = customer.collect().map(_.toSeq.toArray)
         LoopbackRestServer.registerBq("customer_bqw", customer.schema, rows.toSeq)
         val baseUrl = LoopbackRestServer.ensureStarted()
-        val spec = BqEndpointSpec(baseUrl, "customer_bqw", HttpRestConfig(pageSize = 512))
+        val spec = BqEndpointSpec(baseUrl, "customer_bqw", WireClientConfig(pageSize = 512))
         val discovered = BqDiscovery.tableSchema(spec)
         WireEndpoints.register(BqEndpoint(BqSourceName, "customer_bqw", discovered, spec))
       }
@@ -352,7 +352,7 @@ object FedData {
         val rows = events.collect().map(_.toSeq.toArray)
         LoopbackRestServer.registerDs("events_ds", events.schema, "event_id", rows.toSeq)
         val baseUrl = LoopbackRestServer.ensureStarted()
-        val spec = DsEndpointSpec(baseUrl, "events_ds", HttpRestConfig(pageSize = 512))
+        val spec = DsEndpointSpec(baseUrl, "events_ds", WireClientConfig(pageSize = 512))
         // schema DISCOVERED by sampling typed entity values through a
         // real :runQuery (integerValue/doubleValue/timestampValue kinds
         // map to types; DS integers are int64)
@@ -414,7 +414,7 @@ object FedData {
         val baseUrl = LoopbackRestServer.ensureStarted()
         Seq("pods", "nodes", "services").foreach(res =>
           WireEndpoints.register(KubeEndpoint(KubeSourceName, res,
-            KubeEndpointSpec(baseUrl, res, HttpRestConfig(pageSize = 512)))))
+            KubeEndpointSpec(baseUrl, res, WireClientConfig(pageSize = 512)))))
       }
       // BigTable-protocol source: customer keyed on c_name behind the
       // data API's :readRows shape — row-key equality/prefix/range
@@ -429,7 +429,7 @@ object FedData {
           rows.toSeq)
         val baseUrl = LoopbackRestServer.ensureStarted()
         val spec = BtEndpointSpec(baseUrl, "customer_btw", "c_name",
-          HttpRestConfig(pageSize = 512))
+          WireClientConfig(pageSize = 512))
         // schema DISCOVERED by scanning sampled cells with type
         // detection (bigtable/source.go:193-251): one :readRows page,
         // each qualifier's cells through the text widen lattice
@@ -452,7 +452,7 @@ object FedData {
         val discovered = EsDiscovery.mappingSchema(
           new HttpRestClient(baseUrl), "customer_esdoc")
         WireEndpoints.register(EsEndpoint(EsSourceName, "customer_esdoc", discovered,
-          EsEndpointSpec(baseUrl, "customer_esdoc", HttpRestConfig(pageSize = 512),
+          EsEndpointSpec(baseUrl, "customer_esdoc", WireClientConfig(pageSize = 512),
             slices = 4)))
       }
       // Mongo collection registered with NO declared schema: field types
@@ -466,7 +466,7 @@ object FedData {
         LoopbackMongoServer.register("nation_mongo", nation.schema, rows.toSeq)
         val (host, port) = LoopbackMongoServer.ensureStarted()
         val spec = MongoEndpointSpec(host, port, LoopbackMongoServer.Db,
-          "nation_mongo", MongoClientConfig(batchSize = 512))
+          "nation_mongo", WireClientConfig(pageSize = 512))
         WireEndpoints.register(MongoEndpoint(MongoSourceName, "nation_mongo",
           MongoDiscovery.inferSchema(spec), spec))
       }
@@ -476,7 +476,7 @@ object FedData {
         LoopbackMongoServer.register("part_mongo", part.schema, rows.toSeq)
         val (host, port) = LoopbackMongoServer.ensureStarted()
         val spec = MongoEndpointSpec(host, port, LoopbackMongoServer.Db,
-          "part_mongo", MongoClientConfig(batchSize = 512))
+          "part_mongo", WireClientConfig(pageSize = 512))
         // split metadata read off the SERVER's own splitVector command
         // (not derived fixture-side) — the same path CREATE SOURCE
         // discovery rides; chunk size small enough that every sf yields
@@ -498,7 +498,7 @@ object FedData {
         LoopbackMongoServer.register("customer_mgdoc", docs.schema, rows.toSeq)
         val (host, port) = LoopbackMongoServer.ensureStarted()
         val spec = MongoEndpointSpec(host, port, LoopbackMongoServer.Db,
-          "customer_mgdoc", MongoClientConfig(batchSize = 512))
+          "customer_mgdoc", WireClientConfig(pageSize = 512))
         WireEndpoints.register(MongoEndpoint(MongoSourceName, "customer_mgdoc",
           MongoDiscovery.inferSchema(spec), spec,
           splits = Some(WireSplits("c_custkey",
@@ -520,7 +520,7 @@ object FedData {
         LoopbackRestServer.registerBt("part_btd", part.schema, "row_key", rows.toSeq)
         val baseUrl = LoopbackRestServer.ensureStarted()
         val spec = BtEndpointSpec(baseUrl, "part_btd", "row_key",
-          HttpRestConfig(pageSize = 512))
+          WireClientConfig(pageSize = 512))
         WireEndpoints.register(BtEndpoint(BtSourceName, "part_btd",
           BtDiscovery.inferSchema(spec), "row_key", spec, fanout = 4))
       }

@@ -30,7 +30,7 @@ class WireBatchWrite(factory: DataWriterFactory)
   * Executor-safe: the factory carries plain strings/config and builds
   * its own pooled client per task.
   */
-abstract class HttpBatchWriterFactory(baseUrl: String, cfg: HttpRestConfig,
+abstract class HttpBatchWriterFactory(baseUrl: String, cfg: WireClientConfig,
     schemaJson: String) extends DataWriterFactory {
 
   /** Render and POST one buffered batch (rows are external-typed). */

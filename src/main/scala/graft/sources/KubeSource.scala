@@ -2,12 +2,8 @@ package graft.sources
 
 import java.util
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.node.ObjectNode
-import com.sun.net.httpserver.HttpExchange
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -108,147 +104,6 @@ object KubeTables {
     Seq(Pods, Nodes, Services).map(r => r.resource -> r).toMap
 }
 
-/** The loopback API server's resource store + list handler — the
-  * stand-in for a real apiserver. Rows are flat (schema-shaped); the
-  * handler renders them into the API's nested documents and applies
-  * fieldSelector / labelSelector / limit exactly as the service would:
-  * unsupported fieldSelector keys answer 400 Bad Request. */
-object LoopbackKubeServer {
-
-  private val M = EsDsl.M
-  private val store = TrieMap.empty[String, Seq[Array[Any]]]
-
-  /** Seed a resource's objects (fixture-bounded: cluster metadata). */
-  def register(resource: String, rows: Seq[Array[Any]]): Unit =
-    store.put(resource.toLowerCase, rows)
-
-  def handle(ex: HttpExchange): Unit = try {
-    LoopbackRestServer.served.incrementAndGet()
-    val path = ex.getRequestURI.getPath.stripPrefix("/k8s/")
-    if (!path.startsWith("api/v1/")) { respond(ex, 404, "unknown API group"); return }
-    val resource = path.stripPrefix("api/v1/").toLowerCase
-    (KubeTables.All.get(resource), store.get(resource)) match {
-      case (Some(res), Some(rows)) =>
-        val q = parseQuery(ex.getRequestURI.getRawQuery)
-        LoopbackRestServer.lastParams.set(q)
-        val fieldSel = q.get("fieldSelector").map(parseSelector).getOrElse(Nil)
-        val labelSel = q.get("labelSelector").map(parseSelector).getOrElse(Nil)
-        // the real API rejects unsupported field selectors outright.
-        // (plain if, no return-from-closure: a NonLocalReturnControl
-        // would be swallowed by the catch-all below and double-respond)
-        val badSel = fieldSel.find(s => !res.fieldSelectors.contains(s._1))
-        if (badSel.isDefined) {
-          respond(ex, 400,
-            s"""{"kind":"Status","code":400,"message":"field label not supported: ${badSel.get._1}"}""")
-          return
-        }
-        val li = res.schema.fieldNames.indexWhere(_.equalsIgnoreCase("labels"))
-        val matched = rows.filter { r =>
-          fieldSel.forall { case (k, v) =>
-            val col = res.fieldSelectors(k)
-            val i = res.schema.fieldNames.indexWhere(_.equalsIgnoreCase(col))
-            r(i) != null && String.valueOf(r(i)) == v
-          } && labelSel.forall { case (k, v) =>
-            r(li) != null && {
-              val labels = M.readTree(String.valueOf(r(li)))
-              labels.path(k).asText("") == v
-            }
-          }
-        }
-        // the real API validates query params up front (a malformed
-        // `limit` answers 400 with a Status object, never a 500); also
-        // note the real list API treats `limit` as a PAGE size paired
-        // with a `continue` token — the loopback truncates instead (no
-        // continue token), a fixture simplification a future pagination
-        // gate must not assume.
-        val limitRaw = q.get("limit")
-        if (limitRaw.exists(_.toIntOption.isEmpty)) {
-          respond(ex, 400,
-            s"""{"kind":"Status","code":400,"message":"invalid value for limit: ${limitRaw.get}"}""")
-          return
-        }
-        val limited = limitRaw.flatMap(_.toIntOption) match {
-          case Some(n) if n > 0 => matched.take(n)
-          case _ => matched
-        }
-        val resp = M.createObjectNode()
-        resp.put("kind", resource.capitalize.stripSuffix("s") + "List")
-        resp.put("apiVersion", "v1")
-        val items = resp.putArray("items")
-        limited.foreach(r => items.add(render(res, r)))
-        respond(ex, 200, resp.toString)
-      case _ => respond(ex, 404, s"the server could not find the requested resource $resource")
-    }
-  } catch {
-    case e: Throwable => respond(ex, 500, s"server error: $e")
-  }
-
-  /** Flat row -> the API's nested {metadata, spec, status} document. */
-  private def render(res: KubeTables.KubeResource, r: Array[Any]): ObjectNode = {
-    val o = M.createObjectNode()
-    res.schema.fields.zipWithIndex.foreach { case (f, i) =>
-      if (r(i) != null) {
-        val target =
-          if (f.name == "kind") o
-          else {
-            val sec = res.sectionOf(f.name)
-            if (o.has(sec)) o.path(sec).asInstanceOf[ObjectNode]
-            else o.putObject(sec)
-          }
-        (f.name, r(i)) match {
-          case ("labels", v) => // labels is a JSON object on the wire
-            target.set[JsonNode]("labels", M.readTree(String.valueOf(v)))
-          case (n, b: java.lang.Boolean) => target.put(n, b.booleanValue())
-          case (n, v) => target.put(n, LineCodec.render(v))
-        }
-      }
-    }
-    o
-  }
-
-  /** Split a selector string on UNESCAPED commas and each term on its
-    * first unescaped '=', then unescape — the real API's selector
-    * grammar accepts `\,` `\=` `\\` inside values, so an equality on
-    * a value containing a comma survives the trip (the client escapes,
-    * this is the inverse). */
-  private def parseSelector(s: String): Seq[(String, String)] = {
-    val terms = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) { cur.append(c).append(s.charAt(i + 1)); i += 2 }
-      else if (c == ',') { terms += cur.toString; cur.clear(); i += 1 }
-      else { cur.append(c); i += 1 }
-    }
-    terms += cur.toString
-    def unesc(t: String): String = {
-      val b = new StringBuilder; var j = 0
-      while (j < t.length) {
-        if (t.charAt(j) == '\\' && j + 1 < t.length) { b.append(t.charAt(j + 1)); j += 2 }
-        else { b.append(t.charAt(j)); j += 1 }
-      }
-      b.toString
-    }
-    terms.toSeq.filter(_.nonEmpty).map { term =>
-      var j = 0; var cut = -1
-      while (j < term.length && cut < 0) {
-        if (term.charAt(j) == '\\') j += 2
-        else if (term.charAt(j) == '=') cut = j
-        else j += 1
-      }
-      if (cut < 0) (unesc(term).trim, "")
-      else (unesc(term.take(cut)).trim, unesc(term.drop(cut + 1)).trim)
-    }
-  }
-
-  private def parseQuery(raw: String): Map[String, String] =
-    LoopbackRestServer.parseQuery(raw)
-
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit =
-    LoopbackRestServer.respond(ex, code, body, contentType = "application/json")
-}
-
 /** Selector-value escaping shared by the scan description and the
   * reader's request builder. */
 private[sources] object KubeSel {
@@ -264,7 +119,7 @@ private[sources] object KubeSel {
 
 /** Serializable kube endpoint pointer. */
 final case class KubeEndpointSpec(baseUrl: String, resource: String,
-    cfg: HttpRestConfig)
+    cfg: WireClientConfig)
 
 final case class KubeEndpoint(source: String, table: String,
     spec: KubeEndpointSpec) extends WireEndpoint {

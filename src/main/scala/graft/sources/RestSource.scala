@@ -47,7 +47,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * EXECUTOR in its own JVM to construct a client and fetch pages without
   * the driver's in-memory registry (the registry lookup only works when
   * executors share the driver JVM — local mode). */
-final case class HttpEndpointSpec(baseUrl: String, path: String, cfg: HttpRestConfig)
+final case class HttpEndpointSpec(baseUrl: String, path: String, cfg: WireClientConfig)
 
 final case class RestEndpoint(
     source: String,

@@ -30,13 +30,13 @@ class AggPushdownMatrixSpec extends AnyFunSuite {
     StructField("c_bool", BooleanType), StructField("c_ts", TimestampType),
     StructField("c_date", DateType)))
 
-  private val http = HttpRestConfig()
+  private val http = WireClientConfig()
   private val fileDir =
     new java.io.File(sys.props("user.dir"), "target/graft-test/aggmatrix").getPath
 
   private val cql: () => SupportsPushDownAggregates = () => new CqlScanBuilder(
     CqlEndpoint("q", "t", schema, Seq("c_int"), Seq("c_long"),
-      CqlEndpointSpec("127.0.0.1", 1, "t", CqlClientConfig())))
+      CqlEndpointSpec("127.0.0.1", 1, "t", WireClientConfig(pageSize = 256))))
 
   private def file(profile: String): SupportsPushDownAggregates =
     new FileScanBuilder(new FileTable(
@@ -47,7 +47,7 @@ class AggPushdownMatrixSpec extends AnyFunSuite {
     * partition key is `c_int` and its clustering key `c_long`. */
   private val builders: Seq[(String, () => SupportsPushDownAggregates)] = Seq(
     "mongo" -> (() => new MongoScanBuilder(MongoEndpoint("m", "t", schema,
-      MongoEndpointSpec("127.0.0.1", 1, "db", "t", MongoClientConfig())))),
+      MongoEndpointSpec("127.0.0.1", 1, "db", "t", WireClientConfig(pageSize = 256))))),
     "es" -> (() => new EsScanBuilder(EsEndpoint("e", "t", schema,
       EsEndpointSpec("http://127.0.0.1:1", "t", http), Map("c_str" -> None)))),
     "es_approx" -> (() => new EsScanBuilder(EsEndpoint("e", "t", schema,

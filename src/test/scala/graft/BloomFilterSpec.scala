@@ -14,12 +14,7 @@ import graft.functions.{BloomRuntime, HashFunctions}
   */
 class BloomFilterSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bloom-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   private val NumBits = 1L << 17
   private val K = 7

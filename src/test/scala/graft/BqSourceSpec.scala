@@ -16,13 +16,7 @@ import graft.sources._
   * consumed), and fault injection through the shared REST client. */
 class BqSourceSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("seg", StringType),
@@ -39,7 +33,7 @@ class BqSourceSpec extends AnyFunSuite {
     LoopbackRestServer.failNext.set(0)
     LoopbackRestServer.delayMs.set(0)
     WireEndpoints.register(BqEndpoint("bqtest", name, tSchema,
-      BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
+      BqEndpointSpec(baseUrl, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("bqtest").isEmpty)
       SourceRegistry.register(SourceDef("bqtest",
         new java.io.File(sys.props("user.dir"), "target/graft-test/bqtest").getPath,
@@ -113,7 +107,7 @@ class BqSourceSpec extends AnyFunSuite {
   }
 
   test("full statements parse: aggregates, group, order, limit, offset") {
-    val stmt = BqSql.parse(
+    val stmt = BqEval.parse(
       "SELECT seg, count(*) AS n, sum(id) AS s FROM t " +
         "WHERE (seg = 'A' OR bal > 10.5) AND id IS NOT NULL " +
         "GROUP BY seg ORDER BY seg ASC NULLS FIRST LIMIT 5 OFFSET 2")
@@ -123,10 +117,10 @@ class BqSourceSpec extends AnyFunSuite {
   }
 
   test("warehouse execution: exact integer aggregation and null ordering") {
-    val stmt = BqSql.parse(
+    val stmt = BqEval.parse(
       "SELECT seg, count(*) AS n, sum(id) AS s, avg(id) AS a FROM t " +
         "GROUP BY seg ORDER BY seg ASC NULLS FIRST")
-    val (names, _, out) = BqSql.execute(stmt, schema, rows)
+    val (names, _, out) = BqEval.execute(stmt, schema, rows)
     assert(names == Seq("seg", "n", "s", "a"))
     assert(out.head.head == null, "NULLS FIRST must order the null segment first")
     val aRow = out(1) // seg 'A'
@@ -231,7 +225,7 @@ class BqSourceSpec extends AnyFunSuite {
     LoopbackRestServer.register(name, schema, rows)
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(BqEndpoint("bqtest", name, schema,
-      BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
+      BqEndpointSpec(baseUrl, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", points))))
     if (SourceRegistry.get("bqtest").isEmpty)
       SourceRegistry.register(SourceDef("bqtest",
@@ -248,7 +242,7 @@ class BqSourceSpec extends AnyFunSuite {
     LoopbackRestServer.register(name, schema, Seq.empty)
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(BqEndpoint("bqtest", name, schema,
-      BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
+      BqEndpointSpec(baseUrl, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     val t = s"${SourceRegistry.CatalogName}.bqtest.$name"
     spark.sql(s"INSERT INTO $t VALUES (1, 'A', 'one', 1.0), (2, 'B', 'two', 2.0), " +
@@ -270,7 +264,7 @@ class BqSourceSpec extends AnyFunSuite {
     val name = "wrq2"
     LoopbackRestServer.register(name, schema, rows.take(5))
     val baseUrl = LoopbackRestServer.ensureStarted()
-    val client = new HttpRestClient(baseUrl, HttpRestConfig(maxRetries = 0))
+    val client = new HttpRestClient(baseUrl, WireClientConfig(maxRetries = 0))
     intercept[Exception](client.postJson(s"/bq/$name/query",
       """{"query":"DELETE FROM wrq2"}"""))
     // the rows are untouched after the refused statement
@@ -285,7 +279,7 @@ class BqSourceSpec extends AnyFunSuite {
     LoopbackRestServer.register(name, schema, Seq.empty)
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(BqEndpoint("bqtest", name, schema,
-      BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
+      BqEndpointSpec(baseUrl, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     val t = s"${SourceRegistry.CatalogName}.bqtest.$name"
     spark.sql(s"INSERT INTO $t VALUES (1, 'A', 'one', 1.0)")
@@ -357,7 +351,7 @@ class BqSourceSpec extends AnyFunSuite {
     LoopbackRestServer.register(name, dimSchema, dimRows)
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(BqEndpoint("bqtest", name, dimSchema,
-      BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
+      BqEndpointSpec(baseUrl, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     s"${SourceRegistry.CatalogName}.bqtest.$name"
   }
@@ -607,5 +601,5 @@ class BqSourceSpec extends AnyFunSuite {
 /** Test-only access to the predicate sub-parser. */
 final class BqSqlTestHook(predSql: String) {
   val parsed: Filter =
-    BqSql.parse(s"SELECT id FROM t WHERE $predSql").where.get
+    BqEval.parse(s"SELECT id FROM t WHERE $predSql").where.get
 }

@@ -14,13 +14,7 @@ import graft.sources._
   * scan-resume contract past the service chunk cap. */
 class BtSourceSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   private val schema = StructType(Seq(
     StructField("k", StringType), StructField("id", LongType),
@@ -36,7 +30,7 @@ class BtSourceSpec extends AnyFunSuite {
     LoopbackRestServer.failNext.set(0)
     WireEndpoints.register(BtEndpoint("bttest", name, schema, "k",
       BtEndpointSpec(baseUrl, name, "k",
-        HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("bttest").isEmpty)
       SourceRegistry.register(SourceDef("bttest",
         new java.io.File(sys.props("user.dir"), "target/graft-test/bttest").getPath,
@@ -167,7 +161,7 @@ class BtSourceSpec extends AnyFunSuite {
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(BtEndpoint("bttest", name, schema, "k",
       BtEndpointSpec(baseUrl, name, "k",
-        HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     s"${SourceRegistry.CatalogName}.bttest.$name"
   }
@@ -225,7 +219,7 @@ class BtSourceSpec extends AnyFunSuite {
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(BtEndpoint("bttest", name, schema, "k",
       BtEndpointSpec(baseUrl, name, "k",
-        HttpRestConfig(pageSize = 64, retryBackoffMs = 5)), fanout = fanout))
+        WireClientConfig(pageSize = 64, retryBackoffMs = 5)), fanout = fanout))
     SourceRegistry.ensureCatalog(spark)
     s"${SourceRegistry.CatalogName}.bttest.$name"
   }

@@ -19,13 +19,7 @@ import graft.sources._
   * retry under injected aborts, and DSv2 pushdown over a live socket. */
 class CqlSourceSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   // partition key: seg; clustering: id
   private val schema = StructType(Seq(
@@ -38,7 +32,7 @@ class CqlSourceSpec extends AnyFunSuite {
       java.sql.Timestamp.valueOf(s"2024-01-${(i % 28 + 1).formatted("%02d")} 00:00:00"))
   }
 
-  private def client(cfg: CqlClientConfig = CqlClientConfig(retryBackoffMs = 5, pageSize = 64)) = {
+  private def client(cfg: WireClientConfig = WireClientConfig(retryBackoffMs = 5, pageSize = 64)) = {
     val (host, port) = LoopbackCqlServer.ensureStarted()
     new CqlClientLite(host, port, cfg)
   }
@@ -48,7 +42,7 @@ class CqlSourceSpec extends AnyFunSuite {
     val (host, port) = LoopbackCqlServer.ensureStarted()
     LoopbackCqlServer.failNext.set(0)
     WireEndpoints.register(CqlEndpoint("cqltest", name, schema, Seq("seg"), Seq("id"),
-      CqlEndpointSpec(host, port, name, CqlClientConfig(pageSize = 64, retryBackoffMs = 5))))
+      CqlEndpointSpec(host, port, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("cqltest").isEmpty)
       SourceRegistry.register(SourceDef("cqltest",
         new java.io.File(sys.props("user.dir"), "target/graft-test/cqltest").getPath,
@@ -85,7 +79,7 @@ class CqlSourceSpec extends AnyFunSuite {
     LoopbackCqlServer.register("coll_cql", cschema, Seq("seg"), Seq("id"), crows)
     val (host, port) = LoopbackCqlServer.ensureStarted()
     val spec = CqlEndpointSpec(host, port, "coll_cql",
-      CqlClientConfig(pageSize = 32, retryBackoffMs = 5))
+      WireClientConfig(pageSize = 32, retryBackoffMs = 5))
     // discovery parses "list<text>" / "map<text, bigint>" names
     val meta = CqlDiscovery.tableMeta(spec, "coll_cql")
     assert(meta.schema("tags").dataType ==
@@ -364,7 +358,7 @@ class CqlSourceSpec extends AnyFunSuite {
     LoopbackCqlServer.register(name, schema, Seq("seg"), Seq("id"), rows)
     val (host, port) = LoopbackCqlServer.ensureStarted()
     WireEndpoints.register(CqlEndpoint("cqltest", name, schema, Seq("seg"), Seq("id"),
-      CqlEndpointSpec(host, port, name, CqlClientConfig(pageSize = 64, retryBackoffMs = 5)),
+      CqlEndpointSpec(host, port, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       fanout = fanout))
     SourceRegistry.ensureCatalog(spark)
     s"${SourceRegistry.CatalogName}.cqltest.$name"
@@ -466,7 +460,7 @@ class CqlSourceSpec extends AnyFunSuite {
     LoopbackCqlServer.register("agg1", schema, Seq("seg"), Seq("id"), rows)
     val (host, port) = LoopbackCqlServer.ensureStarted()
     WireEndpoints.register(CqlEndpoint("cqltest", "agg1", schema, Seq("seg"), Seq("id"),
-      CqlEndpointSpec(host, port, "agg1", CqlClientConfig(pageSize = 64, retryBackoffMs = 5)),
+      CqlEndpointSpec(host, port, "agg1", WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       fanout = 4))
     SourceRegistry.ensureCatalog(spark)
     val df = spark.table(s"${SourceRegistry.CatalogName}.cqltest.agg1")
@@ -498,7 +492,7 @@ class CqlSourceSpec extends AnyFunSuite {
     LoopbackCqlServer.register("agg2", schema, Seq("seg"), Seq("id"), rows)
     val (host, port) = LoopbackCqlServer.ensureStarted()
     WireEndpoints.register(CqlEndpoint("cqltest", "agg2", schema, Seq("seg"), Seq("id"),
-      CqlEndpointSpec(host, port, "agg2", CqlClientConfig(pageSize = 64, retryBackoffMs = 5)),
+      CqlEndpointSpec(host, port, "agg2", WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       fanout = 4))
     SourceRegistry.ensureCatalog(spark)
     val df = spark.table(s"${SourceRegistry.CatalogName}.cqltest.agg2")
@@ -517,7 +511,7 @@ class CqlSourceSpec extends AnyFunSuite {
     LoopbackCqlServer.register("agg3", s2, Seq("seg"), Seq("id"), rs)
     val (host, port) = LoopbackCqlServer.ensureStarted()
     WireEndpoints.register(CqlEndpoint("cqltest", "agg3", s2, Seq("seg"), Seq("id"),
-      CqlEndpointSpec(host, port, "agg3", CqlClientConfig(retryBackoffMs = 5))))
+      CqlEndpointSpec(host, port, "agg3", WireClientConfig(pageSize = 256, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     val df = spark.table(s"${SourceRegistry.CatalogName}.cqltest.agg3")
       .groupBy("seg")

@@ -11,12 +11,7 @@ import graft.functions.{HashFunctions, TextHash}
   * expression. */
 class DeflateSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   test("the signal points the right way: repetition compresses, prose doesn't") {
     val repetitive = "spam " * 400                       // 2000 bytes

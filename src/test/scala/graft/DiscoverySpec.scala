@@ -122,7 +122,7 @@ class DiscoverySpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     val names = MongoDiscovery.listCollections(
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "disc_coll",
-        MongoClientConfig(retryBackoffMs = 5)))
+        WireClientConfig(pageSize = 256, retryBackoffMs = 5)))
     assert(names.contains("disc_coll"))
   }
 
@@ -135,7 +135,7 @@ class DiscoverySpec extends AnyFunSuite {
     LoopbackMongoServer.register("disc_samp", schema, rows)
     val (host, port) = LoopbackMongoServer.ensureStarted()
     val spec = MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "disc_samp",
-      MongoClientConfig(batchSize = 16, retryBackoffMs = 5))
+      WireClientConfig(pageSize = 16, retryBackoffMs = 5))
     val s8 = MongoDiscovery.inferSchema(spec, sampleN = 8)
     val s64 = MongoDiscovery.inferSchema(spec, sampleN = 64)
     assert(s8 == s64) // stability: more documents must not flip types
@@ -158,7 +158,7 @@ class DiscoverySpec extends AnyFunSuite {
     LoopbackCqlServer.register("disc_cql", schema, Seq("seg"), Seq("id", "sub"),
       Seq(Array[Any]("A", 1L, 2, 3.0)))
     val (host, port) = LoopbackCqlServer.ensureStarted()
-    val spec = CqlEndpointSpec(host, port, "disc_cql", CqlClientConfig(pageSize = 64))
+    val spec = CqlEndpointSpec(host, port, "disc_cql", WireClientConfig(pageSize = 64))
     assert(CqlDiscovery.listTables(spec).contains("disc_cql"))
     val meta = CqlDiscovery.tableMeta(spec, "disc_cql")
     assert(meta.schema("seg").dataType == StringType)
@@ -179,7 +179,7 @@ class DiscoverySpec extends AnyFunSuite {
     LoopbackCqlServer.register("disc'quoted", schema, Seq("k"), Nil,
       Seq(Array[Any]("a", 1L)))
     val (host, port) = LoopbackCqlServer.ensureStarted()
-    val spec = CqlEndpointSpec(host, port, "disc'quoted", CqlClientConfig(pageSize = 64))
+    val spec = CqlEndpointSpec(host, port, "disc'quoted", WireClientConfig(pageSize = 64))
     assert(CqlDiscovery.listTables(spec).contains("disc'quoted"))
     val meta = CqlDiscovery.tableMeta(spec, "disc'quoted")
     assert(meta.schema.fieldNames.toSeq == Seq("k", "v"))
@@ -198,7 +198,7 @@ class DiscoverySpec extends AnyFunSuite {
       Array[Any]("b", 2L, 2.5, false, "not-a-number"))
     LoopbackRestServer.registerBt("disc_bt", schema, "k", rows)
     val spec = BtEndpointSpec(LoopbackRestServer.ensureStarted(), "disc_bt", "k",
-      HttpRestConfig(pageSize = 64))
+      WireClientConfig(pageSize = 64))
     val s = BtDiscovery.inferSchema(spec)
     assert(s("n").dataType == LongType)
     assert(s("d").dataType == DoubleType)
@@ -225,7 +225,7 @@ class DiscoverySpec extends AnyFunSuite {
     LoopbackRestServer.registerDs("disc_ds", schema, "event_id",
       (0L until 50L).map(i => Array[Any](i, s"k$i", i * 0.1, i % 2 == 0)))
     val spec = DsEndpointSpec(LoopbackRestServer.ensureStarted(), "disc_ds",
-      HttpRestConfig(pageSize = 64))
+      WireClientConfig(pageSize = 64))
     val s = DsDiscovery.inferSchema(spec, sampleN = 16)
     assert(s("event_id").dataType == LongType) // DS integers are int64
     assert(s("kind").dataType == StringType)
@@ -239,7 +239,7 @@ class DiscoverySpec extends AnyFunSuite {
       StructField("price", DoubleType)))
     LoopbackRestServer.register("disc_bq", schema, Seq(Array[Any](1, "x", 2.0)))
     val spec = BqEndpointSpec(LoopbackRestServer.ensureStarted(), "disc_bq",
-      HttpRestConfig(pageSize = 64))
+      WireClientConfig(pageSize = 64))
     val s = BqDiscovery.tableSchema(spec)
     assert(s("id").dataType == LongType) // INTEGER -> bigint: the service's truth
     assert(s("name").dataType == StringType)

@@ -16,13 +16,7 @@ import graft.sources._
   * pushdown (filters/order/limit in one :runQuery) over a live socket. */
 class DsSourceSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("seg", StringType),
@@ -38,7 +32,7 @@ class DsSourceSpec extends AnyFunSuite {
     val baseUrl = LoopbackRestServer.ensureStarted()
     LoopbackRestServer.failNext.set(0)
     WireEndpoints.register(DsEndpoint("dstest", name, schema,
-      DsEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
+      DsEndpointSpec(baseUrl, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("dstest").isEmpty)
       SourceRegistry.register(SourceDef("dstest",
         new java.io.File(sys.props("user.dir"), "target/graft-test/dstest").getPath,
@@ -66,7 +60,7 @@ class DsSourceSpec extends AnyFunSuite {
   test("the service rejects a second inequality property (enforced decline)") {
     LoopbackRestServer.register("ds0", schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    val client = new HttpRestClient(base, HttpRestConfig(retryBackoffMs = 5))
+    val client = new HttpRestClient(base, WireClientConfig(retryBackoffMs = 5))
     val body = DsQuery.queryJson("ds0", Nil,
       Seq(DsQuery.PropFilter("bal", "GREATER_THAN", 1.0: java.lang.Double),
         DsQuery.PropFilter("id", "LESS_THAN", 10L: java.lang.Long)),
@@ -221,7 +215,7 @@ class DsSourceSpec extends AnyFunSuite {
     LoopbackRestServer.registerDs(name, schema, "id", Seq.empty)
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(DsEndpoint("dstest", name, schema,
-      DsEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
+      DsEndpointSpec(baseUrl, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       keyCol = Some("id")))
     SourceRegistry.ensureCatalog(spark)
     s"${SourceRegistry.CatalogName}.dstest.$name"
@@ -290,7 +284,7 @@ class DsSourceSpec extends AnyFunSuite {
     LoopbackRestServer.register(name, schema, rows)
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(DsEndpoint("dstest", name, schema,
-      DsEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
+      DsEndpointSpec(baseUrl, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", points))))
     SourceRegistry.ensureCatalog(spark)
     s"${SourceRegistry.CatalogName}.dstest.$name"
@@ -319,7 +313,7 @@ class DsSourceSpec extends AnyFunSuite {
     LoopbackRestServer.registerDs("ntzds", ntzSchema, "id", ntzRows)
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(DsEndpoint("dstest", "ntzds", ntzSchema,
-      DsEndpointSpec(baseUrl, "ntzds", HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
+      DsEndpointSpec(baseUrl, "ntzds", WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       keyCol = Some("id")))
     SourceRegistry.ensureCatalog(spark)
     val t = s"${SourceRegistry.CatalogName}.dstest.ntzds"
@@ -339,7 +333,7 @@ class DsSourceSpec extends AnyFunSuite {
     LoopbackRestServer.register("fan3", schema, rowsN)
     val baseUrl = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(DsEndpoint("dstest", "fan3", schema,
-      DsEndpointSpec(baseUrl, "fan3", HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
+      DsEndpointSpec(baseUrl, "fan3", WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", Seq(100L, 200L, 300L)))))
     SourceRegistry.ensureCatalog(spark)
     val t = s"${SourceRegistry.CatalogName}.dstest.fan3"
@@ -442,7 +436,7 @@ class DsSourceSpec extends AnyFunSuite {
   test("the server enforces the aggregation cap with the real 400 shape") {
     LoopbackRestServer.register("dsagg4", schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    val c = new HttpRestClient(base, HttpRestConfig(retryBackoffMs = 5))
+    val c = new HttpRestClient(base, WireClientConfig(retryBackoffMs = 5))
     val aggs = (0 until 6).map(i => ("count", "")).toSeq
     val body = DsQuery.aggregationJson("dsagg4", Nil, Nil,
       Seq.fill(6)((AggFn.CountStar, "")))

@@ -15,13 +15,7 @@ import graft.sources._
   * on the `_search` path. */
 class EsHttpSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("seg", StringType),
@@ -37,7 +31,7 @@ class EsHttpSpec extends AnyFunSuite {
     LoopbackRestServer.failNext.set(0)
     LoopbackRestServer.delayMs.set(0)
     WireEndpoints.register(EsEndpoint("estest", name, schema,
-      EsEndpointSpec(base, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5))))
+      EsEndpointSpec(base, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("estest").isEmpty)
       SourceRegistry.register(SourceDef("estest",
         new java.io.File(sys.props("user.dir"), "target/graft-test/estest").getPath,
@@ -174,7 +168,7 @@ class EsHttpSpec extends AnyFunSuite {
     LoopbackRestServer.register("es_card_ex", schema, rows)
     val base = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(EsEndpoint("estest", "es_card_ex", schema,
-      EsEndpointSpec(base, "es_card_ex", HttpRestConfig(pageSize = 64, retryBackoffMs = 5),
+      EsEndpointSpec(base, "es_card_ex", WireClientConfig(pageSize = 64, retryBackoffMs = 5),
         cardinalityThreshold = 5)))
     if (SourceRegistry.get("estest").isEmpty)
       SourceRegistry.register(SourceDef("estest",
@@ -244,7 +238,7 @@ class EsHttpSpec extends AnyFunSuite {
     LoopbackRestServer.register(name, schema, rows)
     val base = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(EsEndpoint("estest", name, schema,
-      EsEndpointSpec(base, name, HttpRestConfig(pageSize = pageSize, retryBackoffMs = 5),
+      EsEndpointSpec(base, name, WireClientConfig(pageSize = pageSize, retryBackoffMs = 5),
         slices = slices, paging = paging)))
     if (SourceRegistry.get("estest").isEmpty)
       SourceRegistry.register(SourceDef("estest",
@@ -298,7 +292,7 @@ class EsHttpSpec extends AnyFunSuite {
     val name = "sl3"
     LoopbackRestServer.register(name, schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    val client = new HttpRestClient(base, HttpRestConfig(maxRetries = 0))
+    val client = new HttpRestClient(base, WireClientConfig(maxRetries = 0))
     intercept[Exception](client.postJson(s"/es/$name/_search",
       """{"slice":{"id":5,"max":4},"size":10}"""))
   }
@@ -308,7 +302,7 @@ class EsHttpSpec extends AnyFunSuite {
     val name = "sl4"
     LoopbackRestServer.register(name, schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    val client = new HttpRestClient(base, HttpRestConfig(maxRetries = 0))
+    val client = new HttpRestClient(base, WireClientConfig(maxRetries = 0))
     // real ES 400s `slice` in a plain from/size _search ...
     val e = intercept[Exception](client.postJson(s"/es/$name/_search",
       """{"slice":{"id":0,"max":2},"size":10}"""))
@@ -401,7 +395,7 @@ class EsHttpSpec extends AnyFunSuite {
     val name = "pit_snap"
     LoopbackRestServer.register(name, schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    val client = new HttpRestClient(base, HttpRestConfig(maxRetries = 0))
+    val client = new HttpRestClient(base, WireClientConfig(maxRetries = 0))
     val M = EsDsl.M
     val pid = M.readTree(client.postJson(s"/es/$name/_pit", "",
       Map("keep_alive" -> "1m"))).path("id").asText()
@@ -476,7 +470,7 @@ class EsHttpSpec extends AnyFunSuite {
     val name = "pit_ttl"
     LoopbackRestServer.register(name, schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    val client = new HttpRestClient(base, HttpRestConfig(maxRetries = 0))
+    val client = new HttpRestClient(base, WireClientConfig(maxRetries = 0))
     val M = EsDsl.M
     // 2s: wide enough that open->first-search can't spuriously lapse
     // under CI load (GC/JIT pauses), short enough to test expiry fast
@@ -496,7 +490,7 @@ class EsHttpSpec extends AnyFunSuite {
   test("paging is validated at construction, not at first failing scan") {
     val base = LoopbackRestServer.ensureStarted()
     val e = intercept[IllegalArgumentException](
-      EsEndpointSpec(base, "whatever", HttpRestConfig(), paging = "PIT"))
+      EsEndpointSpec(base, "whatever", WireClientConfig(), paging = "PIT"))
     assert(e.getMessage.contains("paging must be one of"))
   }
 
@@ -504,7 +498,7 @@ class EsHttpSpec extends AnyFunSuite {
     val name = "pit_contract"
     LoopbackRestServer.register(name, schema, rows)
     val base = LoopbackRestServer.ensureStarted()
-    val client = new HttpRestClient(base, HttpRestConfig(maxRetries = 0))
+    val client = new HttpRestClient(base, WireClientConfig(maxRetries = 0))
     val M = EsDsl.M
     // open requires keep_alive
     val e0 = intercept[Exception](client.postJson(s"/es/$name/_pit", ""))
@@ -547,7 +541,7 @@ class EsHttpSpec extends AnyFunSuite {
     val base = LoopbackRestServer.ensureStarted()
     val meta = EsDiscovery.mappingMeta(new HttpRestClient(base), name)
     WireEndpoints.register(EsEndpoint("estest", name, meta.schema,
-      EsEndpointSpec(base, name, HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
+      EsEndpointSpec(base, name, WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       analyzed = meta.analyzed))
     if (SourceRegistry.get("estest").isEmpty)
       SourceRegistry.register(SourceDef("estest",
@@ -623,7 +617,7 @@ class EsHttpSpec extends AnyFunSuite {
     LoopbackRestServer.registerEsText("txt5", txtSchema, txtRows,
       Map("title" -> true, "body" -> false))
     val client = new HttpRestClient(LoopbackRestServer.ensureStarted(),
-      HttpRestConfig(maxRetries = 0))
+      WireClientConfig(maxRetries = 0))
     val e = intercept[java.io.IOException](client.postJson("/es/txt5/_search",
       """{"size":0,"aggs":{"by":{"terms":{"field":"body"}}}}"""))
     assert(e.getMessage.contains("Text fields are not optimised"), e.getMessage)
@@ -691,7 +685,7 @@ class EsHttpSpec extends AnyFunSuite {
     val base = LoopbackRestServer.ensureStarted()
     val meta = EsDiscovery.mappingMeta(new HttpRestClient(base), "nst1")
     WireEndpoints.register(EsEndpoint("estest", "nst1", meta.schema,
-      EsEndpointSpec(base, "nst1", HttpRestConfig(pageSize = 64, retryBackoffMs = 5)),
+      EsEndpointSpec(base, "nst1", WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       analyzed = meta.analyzed))
     if (SourceRegistry.get("estest").isEmpty)
       SourceRegistry.register(SourceDef("estest",
@@ -730,7 +724,7 @@ class EsHttpSpec extends AnyFunSuite {
     val base = LoopbackRestServer.ensureStarted()
     // page size 2 over 6 groups forces THREE after_key round-trips
     WireEndpoints.register(EsEndpoint("estest", "comp1", s2,
-      EsEndpointSpec(base, "comp1", HttpRestConfig(retryBackoffMs = 5),
+      EsEndpointSpec(base, "comp1", WireClientConfig(retryBackoffMs = 5),
         compositePageSize = 2)))
     SourceRegistry.ensureCatalog(spark)
     val served0 = LoopbackRestServer.served.get()
@@ -791,7 +785,7 @@ class EsHttpSpec extends AnyFunSuite {
     LoopbackRestServer.register("aggtopn1", s2, rs)
     val base = LoopbackRestServer.ensureStarted()
     WireEndpoints.register(EsEndpoint("estest", "aggtopn1", s2,
-      EsEndpointSpec(base, "aggtopn1", HttpRestConfig(retryBackoffMs = 5),
+      EsEndpointSpec(base, "aggtopn1", WireClientConfig(retryBackoffMs = 5),
         compositePageSize = 2)))
     SourceRegistry.ensureCatalog(spark)
     val served0 = LoopbackRestServer.served.get()

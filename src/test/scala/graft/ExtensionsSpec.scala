@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   test("GraftExtensions applies cleanly to a fresh SparkSessionExtensions") {
     // reflective zero-arg instantiation — exactly what the

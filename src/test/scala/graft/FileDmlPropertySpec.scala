@@ -40,13 +40,7 @@ import graft.sources._
 class FileDmlPropertySpec extends AnyFunSuite {
   import FileDmlPropertySpec._
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   private sealed abstract class Kind(val name: String, val composite: Boolean) {
     def keyType: String

@@ -12,12 +12,7 @@ import graft.functions.HashFunctions
   * scripts, ill-formed sequences. */
 class FixTextSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private def fix(s: String): (String, Boolean) = {
     import spark.implicits._

@@ -27,13 +27,7 @@ import graft.protocol.{FrontDoorExec, LiteralSlot, MysqlClient, MysqlServer}
   */
 class FrontDoorLiteralSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("frontdoor-literal-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("k", IntegerType),

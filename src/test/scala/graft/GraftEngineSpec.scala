@@ -8,13 +8,7 @@ import graft.engine.GraftEngine
 
 class GraftEngineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   lazy val engine: GraftEngine = {
     Tables.registerAll(spark, "/root/testdata/sf0.001")
@@ -68,7 +62,7 @@ class GraftEngineSpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     WireEndpoints.register(MongoEndpoint("mongotest", "hint_fan", schema,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "hint_fan",
-        MongoClientConfig(batchSize = 64, retryBackoffMs = 5)),
+        WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", Seq(50L, 100L, 150L, 200L, 250L)))))
     if (SourceRegistry.get("mongotest").isEmpty)
       SourceRegistry.register(SourceDef("mongotest",

@@ -12,20 +12,14 @@ import graft.sources._
   * schema inference over the wire. */
 class HttpRestSpec extends AnyFunSuite {
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("grp", LongType),
     StructField("name", StringType), StructField("score", DoubleType)))
   private val rows: Seq[Array[Any]] = (0L until 300L).map(i =>
     Array[Any](i, i % 7, s"name_$i", i * 0.5))
 
-  private def freshClient(cfg: HttpRestConfig = HttpRestConfig()) = {
+  private def freshClient(cfg: WireClientConfig = WireClientConfig()) = {
     LoopbackRestServer.register("items", schema, rows)
     val base = LoopbackRestServer.ensureStarted()
     LoopbackRestServer.failNext.set(0)
@@ -35,7 +29,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("paged scan returns every row across multiple HTTP pages") {
-    val client = freshClient(HttpRestConfig(pageSize = 50))
+    val client = freshClient(WireClientConfig(pageSize = 50))
     val served0 = LoopbackRestServer.served.get()
     val lines = client.pagedLines("/t/items", Map.empty).toSeq
     assert(lines.size == 300)
@@ -45,7 +39,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("responses ride gzip when large; tiny bodies stay plain") {
-    val client = freshClient(HttpRestConfig(pageSize = 200))
+    val client = freshClient(WireClientConfig(pageSize = 200))
     val gz0 = LoopbackRestServer.gzipServed.get()
     // a 200-row JSON page is far above the gzip floor: the server must
     // compress it and the client must inflate it transparently
@@ -62,7 +56,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("equality params filter server-side; limit stops fetching early") {
-    val client = freshClient(HttpRestConfig(pageSize = 10))
+    val client = freshClient(WireClientConfig(pageSize = 10))
     val lines = client.pagedLines("/t/items", Map("grp" -> "3")).toSeq
     assert(lines.size == rows.count(r => r(1) == 3L))
     assert(LoopbackRestServer.lastParams.get().get("grp").contains("3"))
@@ -73,7 +67,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("transient 5xx failures retry with backoff and recover") {
-    val client = freshClient(HttpRestConfig(pageSize = 500, retryBackoffMs = 5))
+    val client = freshClient(WireClientConfig(pageSize = 500, retryBackoffMs = 5))
     LoopbackRestServer.failNext.set(2)
     val r0 = client.retries.get()
     assert(client.pagedLines("/t/items", Map.empty).size == 300)
@@ -81,7 +75,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("persistent failure surfaces after maxRetries; 4xx fails fast") {
-    val client = freshClient(HttpRestConfig(maxRetries = 2, retryBackoffMs = 5))
+    val client = freshClient(WireClientConfig(maxRetries = 2, retryBackoffMs = 5))
     LoopbackRestServer.failNext.set(10)
     val e = intercept[java.io.IOException](client.get("/t/items", Map.empty))
     assert(e.getMessage.contains("after 3 attempts"))
@@ -93,8 +87,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("hung backend times out, retries, then recovers when latency clears") {
-    val client = freshClient(HttpRestConfig(
-      requestTimeoutMs = 150, maxRetries = 4, retryBackoffMs = 120))
+    val client = freshClient(WireClientConfig(requestTimeoutMs = 150, maxRetries = 4, retryBackoffMs = 120))
     LoopbackRestServer.delayMs.set(1000)
     // clear the injected latency while the client is backing off: the
     // retry loop must recover instead of failing the scan
@@ -209,7 +202,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("filterql server enforces: 3VL on the wire, 400s on bad statements") {
-    val client = freshClient(HttpRestConfig(maxRetries = 1))
+    val client = freshClient(WireClientConfig(maxRetries = 1))
     val nullable = StructType(Seq(
       StructField("id", LongType), StructField("tag", StringType)))
     val nrows: Seq[Array[Any]] = Seq(
@@ -247,7 +240,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("sliced scan over a filterql listing tiles the FILTERED rows exactly once") {
-    val client = freshClient(HttpRestConfig(pageSize = 16))
+    val client = freshClient(WireClientConfig(pageSize = 16))
     LoopbackRestServer.registerRestApi("seg_sliced", schema, Set.empty,
       rows, filterQl = true)
     val q = Map("filterql" -> """AND ( grp >= 2, grp <= 4, id < 200 )""")
@@ -275,7 +268,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("sliced paging covers every row exactly once; limit caps per slice") {
-    val client = freshClient(HttpRestConfig(pageSize = 32))
+    val client = freshClient(WireClientConfig(pageSize = 32))
     // 300 rows over 4 strided slices of 32-row pages
     val slices = (0 until 4).map(i =>
       client.pagedLinesSliced("/t/items", Map.empty, i, 4).toSeq)
@@ -289,7 +282,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("server page caps: sequential paging resumes losslessly, sliced fails loudly") {
-    val client = freshClient(HttpRestConfig(pageSize = 32))
+    val client = freshClient(WireClientConfig(pageSize = 32))
     LoopbackRestServer.pageCap.set(10)
     try {
       // sequential paging advances by the RECEIVED count: a server that
@@ -309,7 +302,7 @@ class HttpRestSpec extends AnyFunSuite {
   }
 
   test("REST scan fan-out: slices tile the scan, node_ct hint overrides") {
-    val client = freshClient(HttpRestConfig(pageSize = 32))
+    val client = freshClient(WireClientConfig(pageSize = 32))
     LoopbackRestServer.register("kv_fan", schema, rows)
     RestEndpoints.registerHttp("api_live", "kv_fan", Set("grp"),
       client, "/t/kv_fan", Some(schema), slices = 3)
@@ -371,7 +364,7 @@ class HttpRestSpec extends AnyFunSuite {
     val baseUrl = LoopbackRestServer.ensureStarted()
     Seq("pods", "nodes", "services").foreach(res =>
       WireEndpoints.register(KubeEndpoint("k8stest", res,
-        KubeEndpointSpec(baseUrl, res, HttpRestConfig(retryBackoffMs = 5)))))
+        KubeEndpointSpec(baseUrl, res, WireClientConfig(retryBackoffMs = 5)))))
     if (SourceRegistry.get("k8stest").isEmpty)
       SourceRegistry.register(SourceDef("k8stest",
         new java.io.File(sys.props("user.dir"), "target/graft-test/k8stest").getPath,
@@ -392,6 +385,25 @@ class HttpRestSpec extends AnyFunSuite {
     val sel = LoopbackRestServer.lastParams.get().getOrElse("fieldSelector", "")
     assert(sel.contains("metadata.namespace=default") &&
       sel.contains("status.phase=Running"), sel)
+  }
+
+  test("kube route: an injected 500 retries once and the scan loses no row") {
+    val ns = kubeFixture()
+    val served0 = LoopbackRestServer.served.get()
+    LoopbackRestServer.failNext.set(1)
+    try {
+      // the scan's one list request fails once and its retry answers
+      assert(spark.table(s"$ns.pods").collect().length == 30)
+      assert(LoopbackRestServer.served.get() - served0 == 2)
+      assert(LoopbackRestServer.failNext.get() == 0)
+      // the same path on a client whose counters the spec can read
+      val client = freshClient(WireClientConfig(retryBackoffMs = 5))
+      LoopbackRestServer.failNext.set(1)
+      val resp = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(client.get("/k8s/api/v1/pods", Map.empty))
+      assert(resp.path("items").size() == 30)
+      assert(client.retries.get() == 1)
+    } finally LoopbackRestServer.failNext.set(0)
   }
 
   test("non-selector predicates polyfill; nodes and services read typed") {

@@ -19,13 +19,7 @@ import graft.sources._
   * projection/sort/limit pushdown over a live socket. */
 class MongoSourceSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("seg", StringType),
@@ -35,7 +29,7 @@ class MongoSourceSpec extends AnyFunSuite {
       s"name_${i}_x", i * 1.5)
   }
 
-  private def client(cfg: MongoClientConfig = MongoClientConfig(retryBackoffMs = 5)) = {
+  private def client(cfg: WireClientConfig = WireClientConfig(pageSize = 256, retryBackoffMs = 5)) = {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     new MongoClientLite(host, port, cfg)
   }
@@ -47,7 +41,7 @@ class MongoSourceSpec extends AnyFunSuite {
     LoopbackMongoServer.delayMs.set(0)
     WireEndpoints.register(MongoEndpoint("mongotest", name, schema,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, name,
-        MongoClientConfig(batchSize = 64, retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     if (SourceRegistry.get("mongotest").isEmpty)
       SourceRegistry.register(SourceDef("mongotest",
         new java.io.File(sys.props("user.dir"), "target/graft-test/mongotest").getPath,
@@ -66,7 +60,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     WireEndpoints.register(MongoEndpoint("mongotest", name, schema,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, name,
-        MongoClientConfig(batchSize = 64, retryBackoffMs = 5)),
+        WireClientConfig(pageSize = 64, retryBackoffMs = 5)),
       splits = Some(WireSplits("id", splitPoints))))
     if (SourceRegistry.get("mongotest").isEmpty)
       SourceRegistry.register(SourceDef("mongotest",
@@ -88,7 +82,7 @@ class MongoSourceSpec extends AnyFunSuite {
       "post-hello commands must actually arrive OP_COMPRESSED")
     c.close()
     // a client that does not offer compression stays plain end-to-end
-    val plain = client(MongoClientConfig(retryBackoffMs = 5, compress = false))
+    val plain = client(WireClientConfig(pageSize = 256, retryBackoffMs = 5, compress = false))
     val comp1 = LoopbackMongoServer.compressedServed.get()
     assert(plain.find(LoopbackMongoServer.Db, name,
       graft.protocol.Bson.BDoc.empty).size == rows.size)
@@ -113,7 +107,7 @@ class MongoSourceSpec extends AnyFunSuite {
     LoopbackMongoServer.register("nested_docs", nested, nrows)
     val (host, port) = LoopbackMongoServer.ensureStarted()
     val spec = MongoEndpointSpec(host, port, LoopbackMongoServer.Db,
-      "nested_docs", MongoClientConfig(batchSize = 16, retryBackoffMs = 5))
+      "nested_docs", WireClientConfig(pageSize = 16, retryBackoffMs = 5))
     // discovery recurses BDoc values into struct columns, arrays widen
     val disc = MongoDiscovery.inferSchema(spec)
     assert(disc("profile").dataType.asInstanceOf[StructType]("bal").dataType == DoubleType)
@@ -376,7 +370,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     WireEndpoints.register(MongoEndpoint("mongotest", "ntz1", ntzSchema,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "ntz1",
-        MongoClientConfig(batchSize = 64, retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     val t = s"${SourceRegistry.CatalogName}.mongotest.ntz1"
     // full-row read (the warmup shape): values come back as the same
@@ -592,7 +586,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     WireEndpoints.register(MongoEndpoint("mongotest", "agg2", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "agg2",
-        MongoClientConfig(retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 256, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     val df = spark.table(s"${SourceRegistry.CatalogName}.mongotest.agg2")
       .groupBy("seg")
@@ -621,7 +615,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     WireEndpoints.register(MongoEndpoint("mongotest", "aggovf", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "aggovf",
-        MongoClientConfig(retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 256, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     val df = spark.table(s"${SourceRegistry.CatalogName}.mongotest.aggovf")
       .groupBy("seg").agg(sum("v").as("sum_v"))
@@ -680,7 +674,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     WireEndpoints.register(MongoEndpoint("mongotest", "jltopn_right", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "jltopn_right",
-        MongoClientConfig(retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 256, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     withJoinPushdown {
       val served0 = LoopbackMongoServer.served.get()
@@ -742,7 +736,7 @@ class MongoSourceSpec extends AnyFunSuite {
 
   test("a pipeline or a one-range fan-out is one request: its window is exact") {
     val ep = MongoEndpoint("m", "t", schema,
-      MongoEndpointSpec("127.0.0.1", 1, "db", "t", MongoClientConfig()),
+      MongoEndpointSpec("127.0.0.1", 1, "db", "t", WireClientConfig(pageSize = 256)),
       Some(WireSplits("id", Seq(100L, 200L, 300L))))
     val fanned = new MongoScanBuilder(ep)
     assert(fanned.pushLimit(5) && fanned.isPartiallyPushed() && !fanned.pushOffset(2))
@@ -885,7 +879,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     WireEndpoints.register(MongoEndpoint("mongotest", "jl_right", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "jl_right",
-        MongoClientConfig(retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 256, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     withJoinPushdown {
       val served0 = LoopbackMongoServer.served.get()
@@ -915,7 +909,7 @@ class MongoSourceSpec extends AnyFunSuite {
     WireEndpoints.register(MongoEndpoint("mongotest", "jl_right2",
       StructType(Seq(StructField("dim_id", LongType), StructField("label", StringType))),
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "jl_right2",
-        MongoClientConfig(retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 256, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     withJoinPushdown {
       val df = spark.table(t1)
@@ -973,7 +967,7 @@ class MongoSourceSpec extends AnyFunSuite {
     Seq(("jro_left", s1), ("jro_right", s2)).foreach { case (n, sch) =>
       WireEndpoints.register(MongoEndpoint("mongotest", n, sch,
         MongoEndpointSpec(host, port, LoopbackMongoServer.Db, n,
-          MongoClientConfig(retryBackoffMs = 5))))
+          WireClientConfig(pageSize = 256, retryBackoffMs = 5))))
     }
     if (SourceRegistry.get("mongotest").isEmpty)
       SourceRegistry.register(SourceDef("mongotest",
@@ -1020,7 +1014,7 @@ class MongoSourceSpec extends AnyFunSuite {
     Seq(("jlo_left", s1), ("jlo_right", s2)).foreach { case (n, sch) =>
       WireEndpoints.register(MongoEndpoint("mongotest", n, sch,
         MongoEndpointSpec(host, port, LoopbackMongoServer.Db, n,
-          MongoClientConfig(retryBackoffMs = 5))))
+          WireClientConfig(pageSize = 256, retryBackoffMs = 5))))
     }
     if (SourceRegistry.get("mongotest").isEmpty)
       SourceRegistry.register(SourceDef("mongotest",
@@ -1059,7 +1053,7 @@ class MongoSourceSpec extends AnyFunSuite {
     val (host, port) = LoopbackMongoServer.ensureStarted()
     WireEndpoints.register(MongoEndpoint("mongotest", "jlagg_right", s2,
       MongoEndpointSpec(host, port, LoopbackMongoServer.Db, "jlagg_right",
-        MongoClientConfig(retryBackoffMs = 5))))
+        WireClientConfig(pageSize = 256, retryBackoffMs = 5))))
     SourceRegistry.ensureCatalog(spark)
     withJoinPushdown {
       val served0 = LoopbackMongoServer.served.get()

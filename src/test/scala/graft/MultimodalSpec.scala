@@ -11,13 +11,7 @@ import graft.multimodal.Multimodal.MediaRow
   * preservation, null handling, and stub determinism. */
 class MultimodalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   private def media(n: Int) = {
     import spark.implicits._

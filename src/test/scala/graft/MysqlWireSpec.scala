@@ -16,13 +16,7 @@ import graft.protocol.MysqlWire._
   */
 class MysqlWireSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("mysql-wire-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -269,7 +263,7 @@ class MysqlWireSpec extends AnyFunSuite {
       "mysqlmongo", "wire_two", schema,
       graft.sources.MongoEndpointSpec(host, mport,
         graft.sources.LoopbackMongoServer.Db, "wire_two",
-        graft.sources.MongoClientConfig())))
+        graft.sources.WireClientConfig(pageSize = 256))))
     if (graft.sources.SourceRegistry.get("mysqlmongo").isEmpty)
       graft.sources.SourceRegistry.register(graft.sources.SourceDef("mysqlmongo",
         new java.io.File(sys.props("user.dir"), "target/graft-test/mysqlmongo").getPath,

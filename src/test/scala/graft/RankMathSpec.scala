@@ -13,12 +13,7 @@ import graft.queries.RankMath
   * bucket 2, sizes 4,4,3,3). */
 class RankMathSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   test("closed-form ntile equals window NTILE for all n mod k classes") {
     import spark.implicits._

@@ -22,13 +22,7 @@ class ScaleTechniquesSpec extends AnyFunSuite {
   // so no builder confs here: anything this suite needs is set at
   // runtime inside the test and restored — builder confs would either
   // be ignored (session already exists) or leak into other suites.
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   private val sfDir = "/root/testdata/sf0.001"
 

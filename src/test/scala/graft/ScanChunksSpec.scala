@@ -23,13 +23,7 @@ import graft.sources._
   */
 class ScanChunksSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   private def withConfs(confs: (String, String)*)(body: => Unit): Unit = {
     val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }

@@ -14,13 +14,7 @@ import graft.streaming.Streams.Event
   * the horizon, and custom keyed state via flatMapGroupsWithState. */
 class StreamsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   private def ts(sec: Int) = new Timestamp(sec * 1000L)
 

@@ -13,13 +13,7 @@ import graft.multimodal.Multimodal.MediaRow
   * decoded payloads end to end. */
 class SynthMediaSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   private val sfDir = "/root/testdata/sf0.001"
 

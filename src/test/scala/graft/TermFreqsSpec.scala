@@ -11,12 +11,7 @@ import graft.functions.HashFunctions
   * O(distinct×tokens) higher-order-function shape it replaced). */
 class TermFreqsSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.session
 
   private def freqs(text: String): Map[String, Long] = {
     import spark.implicits._

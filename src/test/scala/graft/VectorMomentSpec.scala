@@ -14,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class VectorMomentSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = TestSpark.session
 
   test("pairIndex enumerates exactly the SQL flattening order") {
     import scala.jdk.CollectionConverters._

@@ -34,14 +34,14 @@ class WindowPushdownMatrixSpec extends AnyFunSuite {
     StructField("seg", StringType), StructField("v", LongType),
     StructField("txt", StringType)))
 
-  private val http = HttpRestConfig()
+  private val http = WireClientConfig()
   private val splits = Some(WireSplits("id", Seq(10L, 20L, 30L)))
   private val fileDir =
     new java.io.File(sys.props("user.dir"), "target/graft-test/windowmatrix").getPath
 
   private def mongo(sp: Option[WireSplits]): ScanBuilder = new MongoScanBuilder(
     MongoEndpoint("m", "t", schema,
-      MongoEndpointSpec("127.0.0.1", 1, "db", "t", MongoClientConfig()), sp))
+      MongoEndpointSpec("127.0.0.1", 1, "db", "t", WireClientConfig(pageSize = 256)), sp))
   /** `seg` is analyzed text with a keyword sub-field, `txt` without one. */
   private def es(): ScanBuilder = new EsScanBuilder(EsEndpoint("e", "t", schema,
     EsEndpointSpec("http://127.0.0.1:1", "t", http),
@@ -49,7 +49,7 @@ class WindowPushdownMatrixSpec extends AnyFunSuite {
   /** Partition key `k`; clustering keys `id`, `v`. */
   private def cql(): ScanBuilder = new CqlScanBuilder(
     CqlEndpoint("q", "t", schema, Seq("k"), Seq("id", "v"),
-      CqlEndpointSpec("127.0.0.1", 1, "t", CqlClientConfig())))
+      CqlEndpointSpec("127.0.0.1", 1, "t", WireClientConfig(pageSize = 256))))
   private def bq(): ScanBuilder = new BqScanBuilder(BqEndpoint("b", "t", schema,
     BqEndpointSpec("http://127.0.0.1:1", "t", http)))
   private def ds(sp: Option[WireSplits]): ScanBuilder = new DsScanBuilder(

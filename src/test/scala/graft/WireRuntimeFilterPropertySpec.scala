@@ -24,13 +24,7 @@ import graft.sources._
 class WireRuntimeFilterPropertySpec extends AnyFunSuite {
   import WireRuntimeFilterPropertySpec._
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   private def seg(rnd: java.util.Random): Any =
     if (rnd.nextInt(5) == 0) null else "S" + ('A' + rnd.nextInt(4)).toChar
@@ -63,7 +57,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
         LoopbackMongoServer.delayMs.set(0)
         WireEndpoints.register(MongoEndpoint("mongotest", name, schema,
           MongoEndpointSpec(host, port, LoopbackMongoServer.Db, name,
-            MongoClientConfig(batchSize = 64, retryBackoffMs = 5))))
+            WireClientConfig(pageSize = 64, retryBackoffMs = 5))))
         catalogTable("mongotest", "mongo", name)
       }),
     Backend("es", 20260824L, 14, idSegV, idSegVRow, "id", identity,
@@ -71,7 +65,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
         LoopbackRestServer.register(name, schema, rows)
         val base = LoopbackRestServer.ensureStarted()
         WireEndpoints.register(EsEndpoint("estest", name, schema,
-          EsEndpointSpec(base, name, HttpRestConfig(pageSize = 16, retryBackoffMs = 5))))
+          EsEndpointSpec(base, name, WireClientConfig(pageSize = 16, retryBackoffMs = 5))))
         catalogTable("estest", "es", name)
       }),
     Backend("bigtable", 20260825L, 14,
@@ -85,7 +79,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
         LoopbackRestServer.failNext.set(0)
         WireEndpoints.register(BtEndpoint("bttest", name, schema, "k",
           BtEndpointSpec(baseUrl, name, "k",
-            HttpRestConfig(pageSize = 16, retryBackoffMs = 5))))
+            WireClientConfig(pageSize = 16, retryBackoffMs = 5))))
         catalogTable("bttest", "bt", name)
       }),
     // partition key id (three rows per partition), clustering key ck
@@ -100,7 +94,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
         LoopbackCqlServer.failNext.set(0)
         WireEndpoints.register(CqlEndpoint("cqltest", name, schema, Seq("id"), Seq("ck"),
           CqlEndpointSpec(host, port, name,
-            CqlClientConfig(pageSize = 16, retryBackoffMs = 5))))
+            WireClientConfig(pageSize = 16, retryBackoffMs = 5))))
         catalogTable("cqltest", "cql", name)
       }),
     Backend("bq", 20260827L, 14, idSegV, idSegVRow, "id", identity,
@@ -108,7 +102,7 @@ class WireRuntimeFilterPropertySpec extends AnyFunSuite {
         LoopbackRestServer.registerBq(name, schema, rows)
         val baseUrl = LoopbackRestServer.ensureStarted()
         WireEndpoints.register(BqEndpoint("bqtest", name, schema,
-          BqEndpointSpec(baseUrl, name, HttpRestConfig(pageSize = 16, retryBackoffMs = 5))))
+          BqEndpointSpec(baseUrl, name, WireClientConfig(pageSize = 16, retryBackoffMs = 5))))
         catalogTable("bqtest", "bq", name)
       }))
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -51,18 +51,34 @@ import graft.sources._
   * key) exists to preserve; an off-by-one in either bound duplicates or
   * drops a row at some page boundary.
   *
+  * BigQuery's pushed joins: random fact/dim corpora (duplicate join keys
+  * on both sides, null keys that must NOT meet under SQL equality,
+  * null-extended outer rows) flow through random INNER/LEFT/RIGHT
+  * single-key equi-joins composed with a random head — plain
+  * projection, an aggregate over the join, or an ordered window over the
+  * join — at page sizes small enough that every result pages through
+  * pageToken reads of the materialized job. The wire answer must equal
+  * the SAME Spark query over local copies of the corpora
+  * (engine-as-oracle), and the join must have LEFT the engine (no Join
+  * node) in every iteration.
+  *
+  * ES's composite-aggregation pager: for arbitrary null-bearing corpora,
+  * composite page sizes down to a single bucket per response (an
+  * after_key resume per bucket), sort directions and null placements,
+  * the reader's after_key drain must produce exactly the grouped result
+  * a direct model computes — every group once, NULL groups via
+  * missing_bucket — and under a pushed ordered window the
+  * early-terminated page walk must still surface the complete top-n
+  * prefix. COMPLETE pushdown is asserted per iteration (no engine
+  * aggregate), so a pager defect cannot hide behind an engine-side
+  * re-aggregation.
+  *
   * The connector specs pin the wire shape; this pins the window
   * semantics across the rule space around it. */
 class WireWindowPropertySpec extends AnyFunSuite {
   import WireWindowPropertySpec._
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = TestSpark.session
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("seg", StringType),
@@ -78,7 +94,7 @@ class WireWindowPropertySpec extends AnyFunSuite {
     s"${SourceRegistry.CatalogName}.$source.$name"
   }
 
-  private def http(page: Int) = HttpRestConfig(pageSize = page, retryBackoffMs = 5)
+  private def http(page: Int) = WireClientConfig(pageSize = page, retryBackoffMs = 5)
 
   private val windowDraws = Seq(
     ("mongo", 20260818L, WindowDraw("mongowprop", pageMin = 8, pageSpread = 57, filters = 4,
@@ -89,7 +105,7 @@ class WireWindowPropertySpec extends AnyFunSuite {
         LoopbackMongoServer.delayMs.set(0)
         WireEndpoints.register(MongoEndpoint("mongotest", name, schema,
           MongoEndpointSpec(host, port, LoopbackMongoServer.Db, name,
-            MongoClientConfig(batchSize = batch, retryBackoffMs = 5))))
+            WireClientConfig(pageSize = batch, retryBackoffMs = 5))))
         catalogTable("mongotest", "mongo", name)
       })),
     ("ds", 20260819L, WindowDraw("dswprop", pageMin = 8, pageSpread = 57, filters = 4,
@@ -223,7 +239,7 @@ class WireWindowPropertySpec extends AnyFunSuite {
     WireEndpoints.register(CqlEndpoint("cqltest", name, cqlSchema,
       Seq("seg"), Seq("ck1", "ck2"),
       CqlEndpointSpec(host, port, name,
-        CqlClientConfig(pageSize = pageSize, retryBackoffMs = 5))))
+        WireClientConfig(pageSize = pageSize, retryBackoffMs = 5))))
     catalogTable("cqltest", "cql", name)
   }
 
@@ -380,6 +396,188 @@ class WireWindowPropertySpec extends AnyFunSuite {
     Case(Seq(fwd, rev), Seq(rows.sorted, rows.sorted.reverse), s"cap=$cap")
   }
 
+  // ---- BigQuery: pushed joins against the engine as oracle ----------------
+
+  private val factSchema = StructType(Seq(
+    StructField("uid", LongType), StructField("id", LongType),
+    StructField("bal", LongType)))
+  private val dimSchema = StructType(Seq(
+    StructField("dim_id", LongType), StructField("label", StringType)))
+
+  private def factCorpus(rnd: java.util.Random, n: Int): Seq[Array[Any]] =
+    (0L until n.toLong).map { i =>
+      Array[Any](i,
+        if (rnd.nextInt(8) == 0) null else java.lang.Long.valueOf(rnd.nextInt(20).toLong),
+        rnd.nextInt(100).toLong)
+    }
+
+  /** Unique labels; duplicate and null dim_ids. */
+  private def dimCorpus(rnd: java.util.Random, n: Int): Seq[Array[Any]] =
+    (0L until n.toLong).map { i =>
+      Array[Any](
+        if (rnd.nextInt(8) == 0) null else java.lang.Long.valueOf(rnd.nextInt(20).toLong),
+        s"L$i")
+    }
+
+  private def bqTable(name: String, schema: StructType, rows: Seq[Array[Any]],
+      pageSize: Int): String = {
+    LoopbackRestServer.registerBq(name, schema, rows)
+    val baseUrl = LoopbackRestServer.ensureStarted()
+    WireEndpoints.register(BqEndpoint("bqtest", name, schema,
+      BqEndpointSpec(baseUrl, name, http(pageSize))))
+    catalogTable("bqtest", "bq", name)
+  }
+
+  private def local(schema: StructType, rows: Seq[Array[Any]]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => Row.fromSeq(r.toSeq)): _*), schema)
+
+  private def canon(rows: Array[Row]): Seq[Seq[String]] =
+    rows.map(_.toSeq.map(v => if (v == null) "<NULL>" else v.toString)).toSeq
+
+  private def bqJoinCase(rnd: java.util.Random, iter: Int): Case = {
+    val key = "spark.sql.optimizer.datasourceV2JoinPushdown"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try {
+      val facts = factCorpus(rnd, 30 + rnd.nextInt(60))
+      val dims = dimCorpus(rnd, 6 + rnd.nextInt(12))
+      val pageSize = 4 + rnd.nextInt(13)
+      val ft = bqTable(s"bqprop_f$iter", factSchema, facts, pageSize)
+      val dt = bqTable(s"bqprop_d$iter", dimSchema, dims, pageSize)
+      val joinType = Seq("inner", "left", "right")(rnd.nextInt(3))
+      val balCut = rnd.nextInt(100).toLong
+      val arm = rnd.nextInt(3)
+
+      // the window draw happens ONCE so wire and oracle see the same n
+      val frozenLimit = 1 + rnd.nextInt(25)
+      def build(fact: DataFrame, dim: DataFrame): DataFrame = {
+        val j = fact.filter(col("bal") < balCut)
+          .join(dim, col("id") === col("dim_id"), joinType)
+        arm match {
+          case 0 => j.select("uid", "id", "bal", "label")
+          case 1 => j.groupBy("label")
+            .agg(count(lit(1)).as("n"), sum("bal").as("s"))
+          case 2 => j.orderBy(col("uid").asc, col("label").asc)
+            .limit(frozenLimit).select("uid", "label", "bal")
+        }
+      }
+
+      val wire = build(spark.table(ft), spark.table(dt))
+      val plan = wire.queryExecution.executedPlan.toString
+      assert(!plan.contains("Join"),
+        s"iter $iter $joinType arm=$arm: the join must leave the engine:\n$plan")
+      val got = canon(wire.collect())
+      val want = canon(build(local(factSchema, facts), local(dimSchema, dims)).collect())
+      // only the ordered window (arm 2) has a defined row order
+      def order(rows: Seq[Seq[String]]) =
+        if (arm == 2) rows else rows.sortBy(_.mkString("|"))
+      Case(order(got), order(want), s"$joinType arm=$arm pageSize=$pageSize")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  // ---- ES: the composite-aggregation pager ---------------------------------
+
+  private val compSchema = StructType(Seq(
+    StructField("seg", StringType), StructField("cat", LongType),
+    StructField("v", LongType)))
+
+  /** One group row the model and the collected result both reduce to. */
+  private case class G(seg: String, cat: java.lang.Long,
+      n: Long, sumV: java.lang.Long, nV: Long)
+
+  private def compTable(name: String, rows: Seq[Array[Any]], pageSize: Int): String = {
+    LoopbackRestServer.register(name, compSchema, rows)
+    val base = LoopbackRestServer.ensureStarted()
+    WireEndpoints.register(EsEndpoint("estest", name, compSchema,
+      EsEndpointSpec(base, name, WireClientConfig(retryBackoffMs = 5),
+        compositePageSize = pageSize)))
+    catalogTable("estest", "es", name)
+  }
+
+  private def compCorpus(rnd: java.util.Random, n: Int): Seq[Array[Any]] = Seq.fill(n) {
+    Array[Any](
+      if (rnd.nextInt(6) == 0) null else ("A" + ('A' + rnd.nextInt(4)).toChar),
+      if (rnd.nextInt(6) == 0) null else java.lang.Long.valueOf(rnd.nextInt(4).toLong),
+      if (rnd.nextInt(8) == 0) null else java.lang.Long.valueOf(rnd.nextInt(100).toLong))
+  }
+
+  private def compModel(rows: Seq[Array[Any]]): Seq[G] =
+    rows.groupBy(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[java.lang.Long]))
+      .map { case ((s, c), grp) =>
+        val vs = grp.map(_(2)).collect { case v: java.lang.Long => v.longValue() }
+        G(s, c, grp.size.toLong,
+          if (vs.isEmpty) null else java.lang.Long.valueOf(vs.sum), vs.size.toLong)
+      }.toSeq
+
+  /** The comparator Spark's ORDER BY applies to the group keys. */
+  private def compCmp(a: G, b: G, dirs: Seq[(Boolean, Boolean)]): Int = {
+    val c0 = cmpOne(a.seg, b.seg, Key("seg", dirs(0)._1, dirs(0)._2))
+    if (c0 != 0) c0 else cmpOne(a.cat, b.cat, Key("cat", dirs(1)._1, dirs(1)._2))
+  }
+
+  private def compOrd(c: String, d: (Boolean, Boolean)): Column =
+    sortCol(Key(c, d._1, d._2))
+
+  /** Collects a grouped result as groups. */
+  private def compGroups(df: DataFrame): Seq[G] =
+    df.collect().map(r => G(
+      if (r.isNullAt(0)) null else r.getString(0),
+      if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1)),
+      r.getLong(2),
+      if (r.isNullAt(3)) null else java.lang.Long.valueOf(r.getLong(3)),
+      r.getLong(4))).toSeq
+
+  private def compGrouped(tbl: String): DataFrame =
+    spark.table(tbl).groupBy("seg", "cat")
+      .agg(count(lit(1)).as("n"), sum("v").as("sum_v"), count("v").as("n_v"))
+
+  private def compDrainCase(rnd: java.util.Random, iter: Int): Case = {
+    val rows = compCorpus(rnd, 40 + rnd.nextInt(160))
+    // page sizes down to 1 force an after_key resume per bucket
+    val pageSize = 1 + rnd.nextInt(5)
+    val grouped = compGrouped(compTable(s"compprop$iter", rows, pageSize))
+    val want = compModel(rows)
+
+    val windowed = rnd.nextBoolean()
+    val df =
+      if (!windowed) grouped
+      else {
+        val dirs = Seq.fill(2)((rnd.nextBoolean(), rnd.nextBoolean()))
+        val n = 1 + rnd.nextInt(want.size + 2)
+        grouped.orderBy(compOrd("seg", dirs(0)), compOrd("cat", dirs(1))).limit(n)
+      }
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("HashAggregate") && !plan.contains("SortAggregate"),
+      s"iter $iter: COMPLETE pushdown must leave no engine aggregate:\n$plan")
+    val got = compGroups(df)
+    if (!windowed)
+      // exhaustive after_key walk: every group exactly once
+      Case(got.sortBy(_.toString), want.sortBy(_.toString), s"pageSize=$pageSize")
+    else {
+      // aggregates exact and no boundary duplicate: every returned group
+      // is a model group, once; the strict ordered-prefix property is the
+      // next phase's job
+      val model = want.toSet
+      Case(got, got.distinct.filter(model), s"windowed pageSize=$pageSize")
+    }
+  }
+
+  private def compWindowCase(rnd: java.util.Random, iter: Int): Case = {
+    val rows = compCorpus(rnd, 60 + rnd.nextInt(100))
+    val pageSize = 1 + rnd.nextInt(4)
+    val tbl = compTable(s"comppropw$iter", rows, pageSize)
+    val dirs = Seq.fill(2)((rnd.nextBoolean(), rnd.nextBoolean()))
+    val want = compModel(rows).sortWith((a, b) => compCmp(a, b, dirs) < 0)
+    val n = 1 + rnd.nextInt(want.size)
+    val got = compGroups(compGrouped(tbl)
+      .orderBy(compOrd("seg", dirs(0)), compOrd("cat", dirs(1))).limit(n))
+    Case(got, want.take(n), s"pageSize=$pageSize dirs=$dirs n=$n")
+  }
+
   private val backends: Seq[Backend] =
     windowDraws.map { case (name, seed, d) =>
       Backend(name, seed, Seq(Phase("random windows equal the model", 30, windowCase(d))))
@@ -389,7 +587,12 @@ class WireWindowPropertySpec extends AnyFunSuite {
       Backend("bt", 20260816L, Seq(
         Phase("windowed drains equal the one-shot model at every page boundary", 400,
           btWindowCase),
-        Phase("forward and reversed full drains are exact mirrors", 100, btMirrorCase))))
+        Phase("forward and reversed full drains are exact mirrors", 100, btMirrorCase))),
+      Backend("bq-join", 20260822L, Seq(Phase(
+        "random join compositions equal the engine-as-oracle result", 18, bqJoinCase))),
+      Backend("es-composite", 20260817L, Seq(
+        Phase("drains equal the grouped model at every page size", 24, compDrainCase),
+        Phase("an ordered window never loses a prefix group", 12, compWindowCase))))
 
   for (b <- backends) {
     val rnd = new java.util.Random(b.seed)
